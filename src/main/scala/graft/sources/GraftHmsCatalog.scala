@@ -101,9 +101,9 @@ object HmsBridge {
           // once and retry the call. NOTE the retry re-executes f
           // blindly, so every f routed through here must be IDEMPOTENT
           // against its own half-applied first attempt — the mirroring
-          // ops are (create tolerates AlreadyExists, drop tolerates
-          // NoSuchObject, alter re-derives the same target state from
-          // the current schema; reads are trivially idempotent).
+          // ops are (create tolerates AlreadyExists for its own entry,
+          // drop tolerates NoSuchObject, alter re-derives the same target
+          // state from the current schema; reads are trivially idempotent).
           cachedClients.remove(key, raw)
           try raw.close() catch { case _: Throwable => }
           val fresh = cachedClients.computeIfAbsent(key, _ => client(opts))
@@ -209,10 +209,21 @@ object HmsBridge {
     t.setParameters(params)
     // idempotent under withClient's transport retry: if the transport
     // dropped AFTER the server applied our first createTable, the
-    // retried call finds the entry this very call just created (same
-    // content) — success, not an error
+    // retried call finds the entry this very call just created — a
+    // graft entry for this very path. Any other entry under the name
+    // (a Hive table, another graft table) is not ours to adopt.
     try c.createTable(t)
-    catch { case _: org.apache.hadoop.hive.metastore.api.AlreadyExistsException => () }
+    catch { case _: org.apache.hadoop.hive.metastore.api.AlreadyExistsException =>
+      val params = Option(c.getTable(db, name).getParameters)
+        .map(_.asScala.toMap).getOrElse(Map.empty[String, String])
+      if (!params.get(TableTypeParam).contains(TableTypeValue) ||
+          !params.get(PathParam).contains(gt.path))
+        throw new IllegalStateException(
+          s"HMS already holds $db.$name as a foreign entry " +
+            s"($TableTypeParam=${params.getOrElse(TableTypeParam, "<unset>")}, " +
+            s"$PathParam=${params.getOrElse(PathParam, "<unset>")}); " +
+            s"refusing to mirror the graft table at ${gt.path} over it")
+    }
   }
 
   /** Re-derive the HMS entry from the table's CURRENT schema (column

@@ -1064,13 +1064,13 @@ final class GraftTable private (
     * non-indexable format) are never pruned here. Fails open. */
   private def secIndexPrune(
       snap: Snapshot,
+      sch: TableSchema,
       entries: Seq[ManifestEntry],
       cond: org.apache.spark.sql.catalyst.expressions.Expression): Seq[ManifestEntry] = {
     import org.apache.spark.sql.catalyst.expressions._
     val files = snap.secIndex.getOrElse(Seq.empty)
     if (files.isEmpty || entries.isEmpty || !entries.exists(_.file.secIndexed))
       return entries
-    val sch = schema
     // only probe columns the index FULLY covers (snapshot-recorded):
     // a column added to the option after files were indexed has no
     // rows for those files — probing it would wrongly prune them.
@@ -2523,9 +2523,12 @@ final class GraftTable private (
     MergeEngine.merge(raw, sch).filter(filterCond)
   }
 
-  /** cached driver-side reader factory per schema version (building
-    * one costs a broadcast; lookups reuse it) */
+  /** cached driver-side reader factories per schema version (building
+    * one costs a broadcast; lookups reuse it): full rows, and the probe
+    * projection of key, sequence and meta columns */
   private val localFactoryCache = scala.collection.concurrent.TrieMap
+    .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
+  private val localProbeFactoryCache = scala.collection.concurrent.TrieMap
     .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
 
   /** Per-file decoded key→best-row maps for the local lookup fast
@@ -2536,14 +2539,19 @@ final class GraftTable private (
     * a file scan (~58 ms → µs for hot buckets under the KV service).
     * Files never change after commit, so entries never invalidate;
     * bounds: at most `lookup.cache-max-files` maps (LRU), and only
-    * files with ≤ `lookup.cache-max-file-rows` rows are cached (bigger
-    * files stream, same result). */
+    * files with ≤ `lookup.cache-max-file-rows` rows are cached. A
+    * bigger file is probed on its key and sequence columns instead and
+    * decodes in full only the one row that wins (see [[localLookup]]). */
   private lazy val lookupCacheMaxFiles: Int =
     schema.options.getOrElse("lookup.cache-max-files", "32").toInt
   private lazy val lookupCacheMaxRows: Long =
     schema.options.getOrElse("lookup.cache-max-file-rows", "65536").toLong
   private[graft] val lookupCacheHits = new java.util.concurrent.atomic.AtomicLong
   private[graft] val lookupCacheMisses = new java.util.concurrent.atomic.AtomicLong
+  /** Key-column scans of files over the cache limit, and full-row
+    * fetches of a winning row from such a file. */
+  private[graft] val lookupProbeScans = new java.util.concurrent.atomic.AtomicLong
+  private[graft] val lookupRowFetches = new java.util.concurrent.atomic.AtomicLong
   private val lookupMapCache = new java.util.LinkedHashMap[
       String, Map[Seq[Any], (org.apache.spark.sql.catalyst.InternalRow, Long, Any, Byte)]](
       16, 0.75f, true) {
@@ -2553,16 +2561,6 @@ final class GraftTable private (
       size > lookupCacheMaxFiles
   }
 
-  /** Driver-LOCAL point lookup: reads the key's bucket files on the
-    * driver thread through the same vectorized reader — NO Spark job,
-    * millisecond latency instead of a scheduled stage (reference:
-    * LocalTableQuery.java:64 + paimon-service KV lookups; this is the
-    * per-bucket local reader serving the lookup-join role).
-    *
-    * Fast path: fixed-bucket deduplicate-engine parquet PK tables on
-    * the current schema without deletion vectors; anything else falls
-    * back to the distributed [[lookup]]. Merge semantics mirror
-    * MergeEngine's (sequence.field, _graft_seq) ordering. */
   /** The key's fixed-bucket id computed by DRIVER arithmetic — the
     * same xxhash64(seed 42) fold and floorMod the write path's
     * `pmod(xxhash64(pk...), buckets)` produces, with no per-call
@@ -2584,9 +2582,32 @@ final class GraftTable private (
   def pkBucketFor(keyValues: Map[String, Any]): Option[Int] =
     directPkBucket(schema, keyValues)
 
+  /** Driver-LOCAL point lookup: reads the key's bucket files on the
+    * driver thread through the same vectorized reader — NO Spark job,
+    * millisecond latency instead of a scheduled stage (reference:
+    * LocalTableQuery.java:64 + paimon-service KV lookups; this is the
+    * per-bucket local reader serving the lookup-join role).
+    *
+    * Each file of the bucket answers on its own: one within
+    * `lookup.cache-max-file-rows` from its cached decoded map, a bigger
+    * one (after a stats/index check) by a probe that reads only the
+    * key, sequence and meta columns and records where the key's best
+    * version sits. When the overall winner came from a probe, only that
+    * row is decoded in full — fetched from its file by position and
+    * re-checked against what the probe saw.
+    *
+    * Fast path: fixed-bucket deduplicate-engine parquet PK tables on
+    * the current schema without deletion vectors; anything else falls
+    * back to the distributed [[lookup]]. Merge semantics mirror
+    * MergeEngine's (sequence.field, _graft_seq) ordering. */
   def localLookup(keyValues: Map[String, Any]): Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{
+      And, AttributeReference, Cast, EqualTo, Expression, Literal}
+    // one schema for the whole call: a concurrent ALTER must not mix
+    // versions between the guards, the pruning and the row layout
     val sch = schema
-    if (!isPrimaryKeyTable || sch.isDynamicBucket ||
+    if (sch.primaryKeys.isEmpty || sch.isDynamicBucket ||
       sch.mergeEngine != "deduplicate")
       return lookup(keyValues).collect().toSeq
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
@@ -2595,47 +2616,80 @@ final class GraftTable private (
     // old-layout files (mid-rescale) survive the narrowing so the
     // schema-mismatch fallback below can see them and route the
     // lookup through the distributed path
-    val bucketEntries = visibleEntries(sm.liveEntries(snap))
+    val bucketEntries = visibleEntries(sm.liveEntries(snap), sch)
       .filter(e => bucket.forall(_ == e.bucket) || bucketLayoutDiffers(sch, e))
     if (bucketEntries.isEmpty) return Seq.empty
     if (bucketEntries.exists(e => e.file.schemaId != sch.id ||
       !e.file.fileName.endsWith(".parquet") || e.file.dvFile.isDefined))
       return lookup(keyValues).collect().toSeq
-    // big (uncacheable) files: pay one Catalyst analysis for stats
-    // pruning, it may skip whole file scans. Cacheable files skip it —
-    // the decoded map answers in O(1) anyway.
-    val candidates =
-      if (bucketEntries.forall(_.file.rowCount <= lookupCacheMaxRows)) bucketEntries
-      else {
-        val filterCond = sch.primaryKeys
-          .map(k => col(k) === lit(keyValues(k))).reduce(_ && _)
-        pruneEntries(snap, filterCond).filter(e => bucket.forall(_ == e.bucket))
-      }
-    if (candidates.isEmpty) return Seq.empty
+    val st = sch.toStruct
     val partSchema = StructType(
-      struct.fields.filter(f => sch.partitionKeys.contains(f.name)))
+      st.fields.filter(f => sch.partitionKeys.contains(f.name)))
     val readData = StructType(
-      struct.fields.filterNot(f => sch.partitionKeys.contains(f.name)) ++
+      st.fields.filterNot(f => sch.partitionKeys.contains(f.name)) ++
         Seq(StructField(SeqCol, LongType, nullable = false),
           StructField(KindCol, ByteType, nullable = false)))
-    val outSchema = StructType(readData.fields ++ partSchema.fields)
+    val probeCols = (sch.primaryKeys ++ sch.sequenceFields :+ SeqCol :+ KindCol).toSet
+    val probeData = StructType(readData.fields.filter(f => probeCols(f.name)))
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val keyInternal = sch.primaryKeys.map { k =>
+      CatalystTypeConverters.createToCatalystConverter(st(k).dataType)(keyValues(k))
+    }.toArray
+    // files over the cache limit: a stats/index check on the key may
+    // skip their probes. The key conjunction is built directly — a
+    // Catalyst analysis of it costs ~10 ms and never prunes more.
+    val big = bucketEntries.filter(_.file.rowCount > lookupCacheMaxRows)
+    val probed: Set[String] =
+      if (big.isEmpty) Set.empty
+      else {
+        val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+        val keyCond = sch.primaryKeys.flatMap { k =>
+          val dt = st(k).dataType
+          // a literal that does not convert to the column type drops
+          // its conjunct: less pruning, never a wrong answer
+          scala.util.Try {
+            val l = Literal(keyValues(k))
+            if (l.dataType == dt) l else Literal(Cast(l, dt, tz).eval(), dt)
+          }.toOption.map(l => EqualTo(AttributeReference(k, dt)(), l): Expression)
+        }.reduceOption(And)
+        pruneAnalyzed(snap, sch, big, keyCond).map(_.file.fileName).toSet
+      }
+    val candidates = bucketEntries.filter(e =>
+      e.file.rowCount <= lookupCacheMaxRows || probed(e.file.fileName))
+    if (candidates.isEmpty) return Seq.empty
+    val seqFieldTypes = sch.sequenceFields.map(f => st(f).dataType).toArray
+    val sfOrderings = seqFieldTypes.map(dt =>
+      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+        .asInstanceOf[Ordering[Any]])
+    // ordinals of the key, sequence and meta columns in one reader's
+    // output (data columns, then partition columns)
+    class Layout(data: StructType) {
+      val out = StructType(data.fields ++ partSchema.fields)
+      private val keyOrds = sch.primaryKeys.map(out.fieldIndex).toArray
+      private val keyTypes = keyOrds.map(out.fields(_).dataType)
+      private val sfOrds = sch.sequenceFields.map(out.fieldIndex).toArray
+      val seqOrd = out.fieldIndex(SeqCol)
+      val kindOrd = out.fieldIndex(KindCol)
+      def keyOf(row: InternalRow): Seq[Any] =
+        keyOrds.indices.map(i => row.get(keyOrds(i), keyTypes(i)))
+      def matches(row: InternalRow): Boolean = {
+        var i = 0
+        while (i < keyOrds.length) {
+          val v = row.get(keyOrds(i), keyTypes(i))
+          if (v == null || v != keyInternal(i)) return false
+          i += 1
+        }
+        true
+      }
+      def sfOf(row: InternalRow): Any =
+        if (sfOrds.isEmpty) null
+        else sfOrds.indices.map(i =>
+          if (row.isNullAt(sfOrds(i))) null else row.get(sfOrds(i), seqFieldTypes(i)))
+    }
+    val full = new Layout(readData)
     val factory = localFactoryCache.getOrElseUpdate(sch.id,
       graft.sources.GraftScanUtil.readerFactory(
         spark, readData, readData, partSchema, Array.empty))
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    val keyOrds = sch.primaryKeys.map(outSchema.fieldIndex).toArray
-    val keyTypes = keyOrds.map(outSchema.fields(_).dataType)
-    val keyInternal = sch.primaryKeys.zip(keyTypes).map { case (k, dt) =>
-      CatalystTypeConverters.createToCatalystConverter(dt)(keyValues(k))
-    }.toArray
-    val seqOrd = outSchema.fieldIndex(SeqCol)
-    val kindOrd = outSchema.fieldIndex(KindCol)
-    val seqFields = sch.sequenceFields.map(f =>
-      (outSchema.fieldIndex(f), outSchema.fields(outSchema.fieldIndex(f)).dataType))
-    val sfOrderings = seqFields.map { case (_, dt) =>
-      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
-        .asInstanceOf[Ordering[Any]]
-    }.toArray
     // sequence.field.sort-order=descending: the SMALLEST sequence wins
     // here too, or the point lookup would disagree with table scans.
     // The flip applies per COMPONENT after null handling (nulls stay
@@ -2661,91 +2715,117 @@ final class GraftTable private (
       }
       0
     }
-    // (sequence-fields…, _graft_seq) preorder shared by the streaming
-    // and cached paths (nulls smallest, like the struct max semantics)
+    // (sequence-fields…, _graft_seq) preorder shared by the cached and
+    // probed files (nulls smallest, like the struct max semantics)
     def betterThan(sf: Any, s: Long, bSf: Any, bSeq: Long, hasBest: Boolean): Boolean =
       !hasBest || {
-        if (seqFields.isEmpty) s > bSeq
+        if (seqFieldTypes.isEmpty) s > bSeq
         else {
           val c = compareSf(bSf.asInstanceOf[Seq[Any]], sf.asInstanceOf[Seq[Any]])
           c < 0 || (c == 0 && s > bSeq)
         }
       }
-    def sfOf(row: org.apache.spark.sql.catalyst.InternalRow): Any =
-      if (seqFields.isEmpty) null
-      else seqFields.map { case (o, dt) =>
-        if (row.isNullAt(o)) null else row.get(o, dt)
-      }
-    def scanFile(e: ManifestEntry)(
-        onRow: org.apache.spark.sql.catalyst.InternalRow => Unit): Unit = {
-      val pf = graft.sources.GraftScanUtil.partitionedFile(path, e, partSchema)
-      val reader = factory.createReader(
-        org.apache.spark.sql.execution.datasources.FilePartition(0, Array(pf)))
+    def openReader(
+        f: org.apache.spark.sql.connector.read.PartitionReaderFactory, e: ManifestEntry) =
+      f.createReader(org.apache.spark.sql.execution.datasources.FilePartition(0,
+        Array(graft.sources.GraftScanUtil.partitionedFile(path, e, partSchema))))
+    def scanFile(f: org.apache.spark.sql.connector.read.PartitionReaderFactory,
+        e: ManifestEntry)(onRow: InternalRow => Unit): Unit = {
+      val reader = openReader(f, e)
       try { while (reader.next()) onRow(reader.get()) } finally reader.close()
     }
-    var best: org.apache.spark.sql.catalyst.InternalRow = null
+    // the best version so far: its decoded row when a cached map gave
+    // it, else the probed file and row position it sits at
+    var found = false
+    var best: InternalRow = null
+    var bestFile: ManifestEntry = null
+    var bestPos = -1L
     var bestSeq = Long.MinValue
     var bestSf: Any = null
-    def offer(row: org.apache.spark.sql.catalyst.InternalRow, s: Long, sf: Any): Unit =
-      if (betterThan(sf, s, bestSf, bestSeq, best != null)) {
-        best = row; bestSeq = s; bestSf = sf
+    var bestKind: Byte = 0
+    def offer(row: InternalRow, e: ManifestEntry, pos: Long,
+        s: Long, sf: Any, kind: Byte): Unit =
+      if (betterThan(sf, s, bestSf, bestSeq, found)) {
+        found = true; best = row; bestFile = e; bestPos = pos
+        bestSeq = s; bestSf = sf; bestKind = kind
       }
-    if (candidates.forall(_.file.rowCount <= lookupCacheMaxRows)) {
-      // cached path: decode each candidate file ONCE into a key→best
-      // map (immutable files, LRU-bounded), then probe by hash
-      val probe: Seq[Any] = keyInternal.toSeq
-      candidates.foreach { e =>
+    lazy val probe = new Layout(probeData)
+    lazy val probeFactory = localProbeFactoryCache.getOrElseUpdate(sch.id,
+      graft.sources.GraftScanUtil.readerFactory(
+        spark, readData, probeData, partSchema, Array.empty))
+    val probeKey: Seq[Any] = keyInternal.toSeq
+    candidates.foreach { e =>
+      if (e.file.rowCount <= lookupCacheMaxRows) {
+        // decode the file ONCE into a key→best map (immutable files,
+        // LRU-bounded), then answer by hash
         val mapKey = s"${sch.id}/${e.file.fileName}"
         val fileMap = this.synchronized(Option(lookupMapCache.get(mapKey))) match {
           case Some(m) => lookupCacheHits.incrementAndGet(); m
           case None =>
             lookupCacheMisses.incrementAndGet()
             val m = scala.collection.mutable.HashMap.empty[
-              Seq[Any], (org.apache.spark.sql.catalyst.InternalRow, Long, Any, Byte)]
-            scanFile(e) { r0 =>
+              Seq[Any], (InternalRow, Long, Any, Byte)]
+            scanFile(factory, e) { r0 =>
               // copy FIRST: vectorized rows alias batch memory
               val row = r0.copy()
-              val k: Seq[Any] = keyOrds.indices
-                .map(i => row.get(keyOrds(i), keyTypes(i)))
-              val s = row.getLong(seqOrd)
-              val sf = sfOf(row)
+              val k = full.keyOf(row)
+              val s = row.getLong(full.seqOrd)
+              val sf = full.sfOf(row)
               val keep = m.get(k) match {
                 case Some((_, bs, bsf, _)) => betterThan(sf, s, bsf, bs, hasBest = true)
                 case None => true
               }
-              if (keep) m(k) = (row, s, sf, row.getByte(kindOrd))
+              if (keep) m(k) = (row, s, sf, row.getByte(full.kindOrd))
             }
             val imm = m.toMap
             this.synchronized(lookupMapCache.put(mapKey, imm))
             imm
         }
-        fileMap.get(probe).foreach { case (row, s, sf, _) => offer(row, s, sf) }
-      }
-    } else candidates.foreach { e =>
-      scanFile(e) { row =>
-        var matches = true
-        var i = 0
-        while (i < keyOrds.length && matches) {
-          val v = row.get(keyOrds(i), keyTypes(i))
-          matches = v != null && v == keyInternal(i)
-          i += 1
+        fileMap.get(probeKey).foreach { case (row, s, sf, kind) =>
+          offer(row, e, -1L, s, sf, kind)
         }
-        if (matches) {
-          val s = row.getLong(seqOrd)
-          val sf = sfOf(row)
-          if (betterThan(sf, s, bestSf, bestSeq, best != null)) {
-            best = row.copy(); bestSeq = s; bestSf = sf
+      } else {
+        lookupProbeScans.incrementAndGet()
+        var pos = 0L
+        scanFile(probeFactory, e) { r =>
+          if (probe.matches(r)) {
+            // copy: sequence-field values may alias batch memory
+            val row = r.copy()
+            offer(null, e, pos, row.getLong(probe.seqOrd), probe.sfOf(row),
+              row.getByte(probe.kindOrd))
           }
+          pos += 1
         }
       }
     }
-    if (best == null || best.getByte(kindOrd) == KindDelete ||
-        best.getByte(kindOrd) == KindUpdateBefore) return Seq.empty
-    val conv = CatalystTypeConverters.createToScalaConverter(outSchema)
-    val full = conv(best).asInstanceOf[org.apache.spark.sql.Row]
-    val byName = outSchema.fieldNames.zipWithIndex.toMap
+    if (!found || bestKind == KindDelete || bestKind == KindUpdateBefore)
+      return Seq.empty
+    val winner =
+      if (best != null) best
+      else {
+        // the probe and this reader see the same file with no filters,
+        // so row positions agree; next() steps past rows without
+        // converting them, and only the target row is copied out
+        lookupRowFetches.incrementAndGet()
+        val reader = openReader(factory, bestFile)
+        val row = try {
+          var i = -1L
+          while (i < bestPos && reader.next()) i += 1
+          if (i == bestPos) reader.get().copy() else null
+        } finally reader.close()
+        if (row == null || !full.matches(row) || row.getLong(full.seqOrd) != bestSeq ||
+            full.sfOf(row) != bestSf || row.getByte(full.kindOrd) != bestKind)
+          throw new IllegalStateException(
+            s"point lookup: row $bestPos of ${bestFile.file.fileName} does not hold " +
+              s"the version its key probe found (key ${probeKey.mkString(",")}, " +
+              s"_graft_seq $bestSeq)")
+        row
+      }
+    val conv = CatalystTypeConverters.createToScalaConverter(full.out)
+    val out = conv(winner).asInstanceOf[org.apache.spark.sql.Row]
+    val byName = full.out.fieldNames.zipWithIndex.toMap
     Seq(org.apache.spark.sql.Row.fromSeq(
-      struct.fieldNames.toSeq.map(n => full.get(byName(n)))))
+      st.fieldNames.toSeq.map(n => out.get(byName(n)))))
   }
 
   /** Time travel: VERSION AS OF. */
@@ -3179,7 +3259,11 @@ final class GraftTable private (
     * PostponeUtils.getKnownNumBuckets reads only real buckets).
     * Metadata views ($files, $buckets) intentionally bypass this. */
   private[graft] def visibleEntries(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    if (!schema.isPostponeBucket) entries
+    visibleEntries(entries, schema)
+
+  private def visibleEntries(
+      entries: Seq[ManifestEntry], sch: TableSchema): Seq[ManifestEntry] =
+    if (!sch.isPostponeBucket) entries
     else entries.filter(_.bucket != GraftTable.PostponeBucket)
 
   private[graft] def mergedFromEntries(entries: Seq[ManifestEntry]): DataFrame =
@@ -3722,7 +3806,6 @@ final class GraftTable private (
     * same reason). */
   private[graft] def pruneEntries(snap: Snapshot, filter: Column): Seq[ManifestEntry] = {
     val sch = schema
-    val entries = visibleEntries(sm.liveEntries(snap))
     // resolve the Column against the table schema to get a Catalyst
     // expression with typed attributes/literals. Constant-fold the
     // analyzed condition first: literal-side expressions like
@@ -3730,13 +3813,23 @@ final class GraftTable private (
     // RuntimeReplaceables, which StatsFilter's `r.foldable` guards
     // would otherwise pass over (no pruning). Folding on a one-row
     // wrapper plan turns them into plain Literals.
-    val analyzedCond0 = emptyDf().filter(filter).queryExecution.analyzed.collectFirst {
+    val analyzed = emptyDf().filter(filter).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.map(c => invertStringTransforms(foldConstants(c)))
+    pruneAnalyzed(snap, sch, visibleEntries(sm.liveEntries(snap), sch), analyzed)
+  }
+
+  /** The rules half of [[pruneEntries]]: the `entries` an analyzed
+    * condition over `sch`'s columns may match (None keeps them all). */
+  private def pruneAnalyzed(
+      snap: Snapshot, sch: TableSchema, entries: Seq[ManifestEntry],
+      analyzedCond0: Option[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Seq[ManifestEntry] = {
     // file stats/indexes describe the STORED values; a column-patch
     // overlay can change any value, so conjuncts touching a patched
-    // column must not prune (they still filter post-overlay rows)
-    val patchedCols = colPatchesOf(Some(snap)).keySet
+    // column must not prune (they still filter post-overlay rows). A
+    // patch of a dropped column is inert: no conjunct can name it.
+    val patchedCols = snap.colPatches.getOrElse(Map.empty).keySet
     val analyzedCond =
       if (patchedCols.isEmpty) analyzedCond0
       else analyzedCond0.flatMap { c =>
@@ -3745,7 +3838,7 @@ final class GraftTable private (
         kept.reduceOption(org.apache.spark.sql.catalyst.expressions.And)
       }
     val cond = analyzedCond.flatMap { c =>
-      if (!isPrimaryKeyTable) Some(c)
+      if (sch.primaryKeys.isEmpty) Some(c)
       else {
         // partition columns are prune-safe when they are part of the
         // primary key — or when the global cross-partition index is
@@ -3768,12 +3861,12 @@ final class GraftTable private (
     // global secondary index first: one bounded lookup can collapse
     // the candidate set before any per-file stats/sidecar evaluation
     val candidates = cond match {
-      case Some(c) => secIndexPrune(snap, entries, c)
+      case Some(c) => secIndexPrune(snap, sch, entries, c)
       case None => entries
     }
     cond match {
       case None => candidates
-      case Some(c) if candidates.size >= distributedPruneThreshold =>
+      case Some(c) if candidates.size >= distributedPruneThreshold(sch) =>
         pruneDistributed(candidates, c, sch)
       case Some(c) =>
         // fail-open on evaluator errors (a broken index sidecar must
@@ -3802,8 +3895,8 @@ final class GraftTable private (
     * (millions of files) a sequential driver loop with per-file sidecar
     * round-trips is THE planning bottleneck (reference: parallel
     * manifest-entry scan in SnapshotReaderImpl.java:85). */
-  private def distributedPruneThreshold: Int =
-    schema.options.getOrElse("manifest.distributed-prune.file-count", "2048").toInt
+  private def distributedPruneThreshold(sch: TableSchema): Int =
+    sch.options.getOrElse("manifest.distributed-prune.file-count", "2048").toInt
 
   private def pruneDistributed(
       entries: Seq[ManifestEntry],

@@ -465,4 +465,50 @@ class HmsCatalogSpec extends AnyFunSuite {
     assert(err.getMessage.contains("collides") ||
       Option(err.getCause).exists(_.getMessage.contains("collides")), err.toString)
   }
+
+  test("a foreign HMS entry under the table's name is refused, not adopted") {
+    registerCatalog()
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS hcat.fe")
+    HmsBridge.ensureDatabase(hmsOpts, "fe")
+    val c = HmsBridge.client(hmsOpts)
+    try {
+      // a plain Hive table already owns fe.hive_t
+      val foreign = new org.apache.hadoop.hive.metastore.api.Table()
+      foreign.setDbName("fe")
+      foreign.setTableName("hive_t")
+      foreign.setTableType("EXTERNAL_TABLE")
+      val sd = new org.apache.hadoop.hive.metastore.api.StorageDescriptor()
+      sd.setCols(java.util.Collections.singletonList(
+        new org.apache.hadoop.hive.metastore.api.FieldSchema("x", "int", null)))
+      sd.setLocation(Files.createTempDirectory("graft-hms-foreign").toString)
+      val serde = new org.apache.hadoop.hive.metastore.api.SerDeInfo()
+      serde.setParameters(new java.util.HashMap[String, String]())
+      sd.setSerdeInfo(serde)
+      foreign.setSd(sd)
+      foreign.setParameters(new java.util.HashMap[String, String]())
+      foreign.setPartitionKeys(java.util.Collections.emptyList())
+      c.createTable(foreign)
+      val err = intercept[Exception] {
+        spark.sql("CREATE TABLE hcat.fe.hive_t (k BIGINT, v STRING)")
+      }
+      def msgs(t: Throwable): Seq[String] =
+        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
+      assert(msgs(err).exists(_.contains("foreign entry")), err.toString)
+      // the Hive entry is untouched
+      val still = c.getTable("fe", "hive_t")
+      assert(still.getParameters.get("table_type") == null)
+      assert(still.getSd.getCols.asScala.map(_.getName).toSeq == Seq("x"))
+    } finally c.close()
+    // a GRAFT entry for ANOTHER path is foreign too; the same path is
+    // this table's own entry (a retried create) and is accepted
+    val sch = StructType(Seq(StructField("k", LongType, nullable = false)))
+    val a = GraftTable.create(spark, Files.createTempDirectory("graft-hms-a").toString + "/t", sch)
+    val b = GraftTable.create(spark, Files.createTempDirectory("graft-hms-b").toString + "/t", sch)
+    HmsBridge.mirrorCreate(hmsOpts, "fe", "shared", a)
+    HmsBridge.mirrorCreate(hmsOpts, "fe", "shared", a)
+    val other = intercept[IllegalStateException](
+      HmsBridge.mirrorCreate(hmsOpts, "fe", "shared", b))
+    assert(other.getMessage.contains(a.path), other.getMessage)
+    assert(HmsBridge.tablePath(hmsOpts, "fe", "shared").contains(a.path))
+  }
 }
