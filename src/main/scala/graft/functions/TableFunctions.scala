@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * `bucket`, `max_pt`. */
 object TableFunctions {
 
-  /** Bucket id a row would be written to — the same hash the writer
-    * uses, usable for bucket-aligned repartitioning and joins. */
+  /** Bucket id a row would be written to, usable for bucket-aligned
+    * repartitioning and joins. The hash is defined once, in
+    * [[graft.table.Buckets]]; pass the key columns in the table's
+    * declared order and declared types. */
   def bucket(numBuckets: Int, keyCols: Column*): Column =
-    pmod(xxhash64(keyCols: _*), lit(numBuckets)).cast("int")
+    graft.table.Buckets.column(keyCols, numBuckets)
 
   /** Latest non-empty partition value of a partition column
     * (reference: max_pt — answered from manifests, no data read). */

@@ -9,8 +9,9 @@ import org.apache.spark.sql.types._
   * .../catalog/functions/PaimonFunctions.scala:44-52 — `bucket`,
   * `max_pt`, resolved through Spark's FunctionCatalog).
   *
-  * `SELECT <cat>.sys.bucket(16, k)` — the same xxhash64-pmod the
-  * writer uses, for bucket-aligned repartitioning/joins from SQL;
+  * `SELECT <cat>.sys.bucket(16, k)` — the writer's bucket id
+  * ([[graft.table.Buckets]]), for bucket-aligned repartitioning/joins
+  * from SQL;
   * `SELECT <cat>.sys.max_pt('db.t', 'dt')` — latest non-empty
   * partition value, answered from manifests alone. */
 object GraftFunctions {
@@ -49,7 +50,7 @@ object GraftFunctions {
     /** Types Spark's xxhash64 hashes natively — anything else would
       * force a CAST that changes the hash input and silently disagrees
       * with the writer's bucket routing. */
-    private def hashable(dt: DataType): Boolean = dt match {
+    private[graft] def hashable(dt: DataType): Boolean = dt match {
       case BooleanType | ByteType | ShortType | IntegerType | LongType |
            FloatType | DoubleType | DateType | TimestampType |
            TimestampNTZType | StringType | BinaryType => true
@@ -74,22 +75,14 @@ object GraftFunctions {
         // stable identity for storage-partitioned-join compatibility
         // checks (the default getCanonicalName is null for anon classes)
         override def canonicalName(): String = "graft.sys.bucket"
-        override def produceResult(input: InternalRow): Int = {
-          val n = input.getInt(0)
-          // EXACTLY the writer's hash: Spark's xxhash64 expression over
-          // the key columns in order — per-type hashing, seed 42,
-          // chained, nulls skipped (GraftTable.writeKinded bucketing)
-          var h = 42L
-          var i = 0
-          while (i < keyTypes.length) {
-            if (!input.isNullAt(i + 1)) {
-              h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-                .hash(input.get(i + 1, keyTypes(i)), keyTypes(i), h)
-            }
-            i += 1
-          }
-          ((h % n) + n).toInt % n
-        }
+        // the writer's hash over the keys in the types they arrive in
+        // (graft.table.Buckets — the writer casts to declared types)
+        override def produceResult(input: InternalRow): Int =
+          graft.table.Buckets.of(graft.table.Buckets.fold(
+            keyTypes.indices.map(i =>
+              if (input.isNullAt(i + 1)) null else input.get(i + 1, keyTypes(i))),
+            keyTypes),
+            input.getInt(0))
       }
     }
   }

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.table.GraftTable
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.types._
 
 /** Networked KV lookup service (reference: paimon-service — a
   * KvQueryServer serving LocalTableQuery point lookups to remote
@@ -38,23 +37,6 @@ object GraftLookupService {
     /** Lookups this instance actually SERVED (sharding spec surface:
       * proves a shard only receives its own buckets' traffic). */
     def served: Long = servedCount.get()
-  }
-
-  /** Coerce a query-string value to the primary-key column's type. */
-  private[sources] def coerce(s: String, dt: DataType): Any = dt match {
-    case LongType => s.toLong
-    case IntegerType => s.toInt
-    case ShortType => s.toShort
-    case ByteType => s.toByte
-    case StringType => s
-    case DoubleType => s.toDouble
-    case FloatType => s.toFloat
-    case BooleanType => s.toBoolean
-    case _: DecimalType => BigDecimal(s)
-    case DateType => java.sql.Date.valueOf(s)
-    case TimestampType => java.sql.Timestamp.valueOf(s)
-    case other => throw new IllegalArgumentException(
-      s"unsupported key type for HTTP lookup: $other")
   }
 
   /** Row values → JSON-encodable structures (nested rows to objects,
@@ -145,9 +127,9 @@ object GraftLookupService {
                   respond(x, 400, graft.core.Json.write(Map(
                     "error" -> s"must bind exactly the primary key: ${pk.mkString(",")}")))
                 else {
-                  val fields = sch.toStruct
-                  val keyValues = pk.map(k =>
-                    k -> coerce(params(k), fields(k).dataType)).toMap
+                  // query-string values are cast to the key types by the
+                  // lookup itself (graft.table.Buckets.coerce)
+                  val keyValues: Map[String, Any] = params
                   val owner = shard.flatMap { case (_, n) =>
                     table.pkBucketFor(keyValues)
                       .map(b => java.lang.Math.floorMod(b, n))
@@ -158,7 +140,7 @@ object GraftLookupService {
                   else {
                     // top-level rows from the local fast path carry no
                     // schema — name them from the table's struct
-                    val names = fields.fieldNames.toSeq
+                    val names = sch.toStruct.fieldNames.toSeq
                     val rows = table.localLookup(keyValues)
                       .map(r => names.zip(r.toSeq.map(jsonable)).toMap)
                     servedCount.incrementAndGet()
@@ -194,16 +176,12 @@ object GraftLookupService {
 object GraftLookupRouter {
 
   /** Which of `numShards` servers owns this key. String key values
-    * coerce by the table's declared types (same rules as the HTTP
-    * endpoint). Dynamic-bucket tables have no computable hash bucket
+    * are cast to the table's declared key types, as on the HTTP
+    * endpoint. Dynamic-bucket tables have no computable hash bucket
     * — every shard can serve them, so route to shard 0. */
   def shardFor(gt: GraftTable, keys: Map[String, String], numShards: Int): Int = {
     require(numShards > 0, s"bad shard count $numShards")
-    val fields = gt.schema.toStruct
-    val typed = keys.map { case (k, v) =>
-      k -> GraftLookupService.coerce(v, fields(k).dataType) }
-    gt.pkBucketFor(typed)
-      .map(b => java.lang.Math.floorMod(b, numShards)).getOrElse(0)
+    gt.pkBucketFor(keys).map(b => java.lang.Math.floorMod(b, numShards)).getOrElse(0)
   }
 
   /** Route + lookup in one call against a fleet of shard URIs (index

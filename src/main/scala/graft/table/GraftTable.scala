@@ -383,7 +383,6 @@ final class GraftTable private (
       overwrite: Boolean = false): Long = {
     require(isPrimaryKeyTable, "kinded writes require a primary-key table")
     val sch = schema
-    val pk = sch.primaryKeys
     // length semantics enforced HERE, on the shared kinded commit path,
     // so CDC applyChanges and MERGE INTO store the same padded CHAR
     // values as write()/overwrite() — unpadded variants of a CHAR
@@ -404,13 +403,10 @@ final class GraftTable private (
       if (sch.isPostponeBucket) withArrival
       else MergeEngine.preMergeBatch(withArrival, sch, "__arrival")
     val base = nextSeq()
-    // HASH_FIXED bucketing: co-locate each bucket in one task so a
-    // bucket maps to one file per commit (reference:
-    // PaimonSparkWriter.scala:312 repartition-by-bucket).
-    // HASH_DYNAMIC (bucket = -1) routes through the index-preserving
-    // assigner instead.
-    // dynamic-bucket assignment counts the batch, so pin it for the
-    // duration of the write and release it after the commit
+    // fixed buckets route by Buckets.route, one task (one file per
+    // commit) per bucket; HASH_DYNAMIC (bucket = -1) goes through the
+    // index-preserving assigner, which counts the batch, so pin it for
+    // the duration of the write and release it after the commit
     var pinned: Seq[DataFrame] = Seq.empty
     var dynUpdate: Option[Seq[String] => Seq[String]] = None
     var globalUpdate: Option[Seq[String] => Seq[String]] = None
@@ -443,12 +439,8 @@ final class GraftTable private (
           .withColumn(SeqCol, lit(base) + col("__arrival"))
           .drop("__arrival")
           .withColumn("__bucket", lit(GraftTable.PostponeBucket))
-      } else preMerged
-        .withColumn(SeqCol, lit(base))
-        .withColumn("__bucket",
-          pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-            lit(sch.numBuckets)).cast("int"))
-        .repartition(sch.numBuckets, col("__bucket"))
+      } else Buckets.route(preMerged.withColumn(SeqCol, lit(base)),
+        sch, sch.bucketKeys, sch.numBuckets)
     val deletesFor: Seq[ManifestEntry] => Seq[ManifestEntry] = added => {
       if (!overwrite) Seq.empty
       else {
@@ -499,17 +491,21 @@ final class GraftTable private (
     sch.primaryKeys.map(k => struct.fields(struct.fieldIndex(k))) :+
       StructField("__bucket", IntegerType, nullable = false))
 
+  /** The (pk → bucket) index rows of the sidecar `files` (none: empty). */
+  private def readDynIndex(files: Seq[String], sch: TableSchema): DataFrame =
+    if (files.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dynIndexStruct(sch))
+    else spark.read.schema(dynIndexStruct(sch)).parquet(files.map(f => s"$path/$f"): _*)
+      .select(dynIndexStruct(sch).fieldNames.map(col).toIndexedSeq: _*)
+
   /** The persisted (pk → bucket) index of a dynamic-bucket table, if
     * sidecars exist. */
   private[graft] def dynIndexDf: Option[DataFrame] =
-    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map(files =>
-      spark.read.schema(dynIndexStruct(schema))
-        .parquet(files.map(f => s"$path/$f"): _*)
-        .select(dynIndexStruct(schema).fieldNames.map(col).toIndexedSeq: _*))
+    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map(readDynIndex(_, schema))
 
   /** The index pruned to the sidecars that can hold `keyValues`'s entry
     * — the point-lookup path: the key's `__p`/`__r` scope tokens are
-    * computed with driver arithmetic (the same xxhash64 seed-42 fold as
+    * computed on the driver by [[Buckets.bucketOf]] (the same hash as
     * the Catalyst expressions that laid the files down), so a lookup in
     * a billion-key table opens O(deltas + one range) of index state. */
   private def dynIndexDfFor(keyValues: Map[String, Any]): Option[DataFrame] = {
@@ -518,44 +514,16 @@ final class GraftTable private (
       // tokens use the modulus the sidecars were written with (their
       // directory pin); unpinnable layouts read everything
       val toks = pinnedDynRanges(files, sch).flatMap { ranges =>
-        driverHashFold(sch, sch.primaryKeys, keyValues).map { kh =>
-          val r = java.lang.Math.floorMod(kh, ranges.toLong).toInt
+        Buckets.bucketOf(sch, sch.primaryKeys, keyValues, ranges).map { r =>
           val p =
             if (dynPartitionScoped(sch))
-              driverHashFold(sch, sch.partitionKeys, keyValues).map(ph =>
-                java.lang.Math.floorMod(ph, GraftTable.DynPartScopes.toLong).toInt)
+              Buckets.bucketOf(sch, sch.partitionKeys, keyValues, GraftTable.DynPartScopes)
             else None
           Set((p, r))
         }
       }
-      val pruned = toks.fold(files)(pruneDynIndexFiles(files, _))
-      if (pruned.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dynIndexStruct(sch))
-      else spark.read.schema(dynIndexStruct(sch))
-        .parquet(pruned.map(f => s"$path/$f"): _*)
-        .select(dynIndexStruct(sch).fieldNames.map(col).toIndexedSeq: _*)
+      readDynIndex(toks.fold(files)(pruneDynIndexFiles(files, _)), sch)
     }
-  }
-
-  /** Driver-side mirror of `xxhash64(cols…)` — the same seed-42 fold
-    * Catalyst evaluates, shared by the fixed-bucket fast path and the
-    * dynamic-index scope tokens so the two can never drift. None on
-    * any null value (callers must then fall back to the unpruned
-    * path — Catalyst's hash SKIPS nulls, a mismatch would under-read). */
-  private def driverHashFold(
-      sch: TableSchema, cols: Seq[String],
-      keyValues: Map[String, Any]): Option[Long] = {
-    val st = sch.toStruct
-    var h = 42L
-    cols.foreach { k =>
-      val dt = st(k).dataType
-      val v = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToCatalystConverter(dt)(keyValues(k))
-      if (v == null) return None
-      h = org.apache.spark.sql.catalyst.expressions.XxHash64Function.hash(v, dt, h)
-    }
-    Some(h)
   }
 
   /** Dynamic bucket assignment (bucket = -1): a key KEEPS the bucket
@@ -593,8 +561,7 @@ final class GraftTable private (
       math.ceil((liveRows + batchRows).toDouble /
         sch.dynamicBucketTargetRows).toInt).max(initial).max(1)
     val nTotal = maxBuckets.fold(grown)(m => math.min(grown, math.max(m, maxBucket + 1)))
-    val freshBucket =
-      pmod(xxhash64(pk.map(col).toIndexedSeq: _*), lit(nTotal)).cast("int")
+    val freshBucket = Buckets.column(sch, pk, nTotal)
     val pkCols = pk.map(col).toIndexedSeq
     // partition/range scoping pays a partitionBy shuffle per rewrite and
     // a token job per probe — worth it exactly when the index is big
@@ -607,8 +574,7 @@ final class GraftTable private (
       // empty table: every key is new; the first index write is the
       // batch's own assignment, laid down partition/range-scoped so
       // later commits can prune their probes against it
-      val out = batch.withColumn("__bucket", freshBucket)
-        .repartition(nTotal, col("__bucket")).persist()
+      val out = Buckets.route(batch.withColumn("__bucket", freshBucket), nTotal).persist()
       val files = writeDynIndexFiles(
         out.select((pkCols :+ col("__bucket")).toIndexedSeq: _*),
         scoped = scopeRewrites, sch)
@@ -654,17 +620,8 @@ final class GraftTable private (
       }
     lastDynProbeFiles = probeFiles
     val idx0 =
-      if (prevFiles.nonEmpty) {
-        // every batch key may be new → zero matching sidecars
-        val base =
-          if (probeFiles.isEmpty)
-            spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dynIndexStruct(sch))
-          else spark.read.schema(dynIndexStruct(sch))
-            .parquet(probeFiles.map(f => s"$path/$f"): _*)
-            .select(dynIndexStruct(sch).fieldNames.map(col).toIndexedSeq: _*)
-        base.withColumnRenamed("__bucket", "__existing_bucket")
-      }
+      if (prevFiles.nonEmpty) // every batch key may be new → zero matching sidecars
+        readDynIndex(probeFiles, sch).withColumnRenamed("__bucket", "__existing_bucket")
       else readRaw(live) // one-time bootstrap for pre-index tables
         .select((pkCols :+ col("__bucket").as("__existing_bucket")).toIndexedSeq: _*)
         .groupBy(pkCols: _*)
@@ -675,7 +632,7 @@ final class GraftTable private (
       .persist()
     val newKeys = joined.filter(col("__existing_bucket").isNull)
       .select((pkCols :+ col("__bucket")).toIndexedSeq: _*)
-    val out = joined.drop("__existing_bucket").repartition(nTotal, col("__bucket"))
+    val out = Buckets.route(joined.drop("__existing_bucket"), nTotal)
     if (needFull) {
       val full = idx
         .select((pkCols :+ col("__existing_bucket").as("__bucket")).toIndexedSeq: _*)
@@ -803,9 +760,6 @@ final class GraftTable private (
     val prevFiles = snap.flatMap(_.globalIndex).getOrElse(Seq.empty)
     val live = snap.map(sm.liveEntries).getOrElse(Seq.empty)
     val trigger = sch.options.getOrElse("global-index.compact-trigger", "32").toInt
-    val bucketCol =
-      pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-        lit(sch.numBuckets)).cast("int")
     val batchGseq: Column = sch.sequenceFields match {
       case Seq() => lit(base)
       case Seq(s) => col(s)
@@ -868,8 +822,7 @@ final class GraftTable private (
         val retractions = joined.filter(movedPred).select(retractSel: _*)
         (dataOut.unionByName(retractions), Seq(joined))
     }
-    val out = unioned.withColumn("__bucket", bucketCol)
-      .repartition(sch.numBuckets, col("__bucket"))
+    val out = Buckets.route(unioned, sch, sch.bucketKeys, sch.numBuckets)
 
     val needFull = prevFiles.isEmpty || prevFiles.size >= trigger
     if (needFull) {
@@ -1394,15 +1347,12 @@ final class GraftTable private (
     * can never change partitions and its index entry is always findable
     * under the batch row's partition) and `__r` (the key's hash-range,
     * `dynamic-bucket.index.ranges` buckets, default 8). Both are small
-    * ints so the directory tokens are stable and driver arithmetic can
-    * mirror them exactly (same xxhash64 seed-42 fold as the bucket
-    * hash). */
+    * ints so the directory tokens are stable and [[Buckets.bucketOf]]
+    * can mirror them on the driver. */
   private def dynScopeCols(sch: TableSchema, ranges: Int): Seq[(String, Column)] = {
-    val r = "__r" -> pmod(xxhash64(sch.primaryKeys.map(col).toIndexedSeq: _*),
-      lit(ranges)).cast("int")
+    val r = "__r" -> Buckets.column(sch, sch.primaryKeys, ranges)
     if (dynPartitionScoped(sch))
-      Seq("__p" -> pmod(xxhash64(sch.partitionKeys.map(col).toIndexedSeq: _*),
-        lit(GraftTable.DynPartScopes)).cast("int"), r)
+      Seq("__p" -> Buckets.column(sch, sch.partitionKeys, GraftTable.DynPartScopes), r)
     else Seq(r)
   }
 
@@ -1519,24 +1469,15 @@ final class GraftTable private (
     // through the bucketed scan (reference: BucketMode HASH_FIXED
     // without a primary key). clustering.columns then sorts WITHIN
     // each bucket (the global range-cluster would undo the routing).
+    val (routed, partitionBy) = routeAppendBuckets(pre, sch)
     val out =
       if (!sch.isBucketedAppend) clusterForWrite(pre, sch)
-      else {
-        val routed = pre
-          .withColumn("__bucket",
-            pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-              lit(sch.numBuckets)).cast("int"))
-          .repartition(sch.numBuckets, col("__bucket"))
-        sch.options.get("clustering.columns")
-          .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-          .filter(_.nonEmpty) match {
-          case Some(cs) => routed.sortWithinPartitions(cs.map(col): _*)
-          case None => routed
-        }
+      else sch.options.get("clustering.columns")
+        .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
+        .filter(_.nonEmpty) match {
+        case Some(cs) => routed.sortWithinPartitions(cs.map(col): _*)
+        case None => routed
       }
-    val partitionBy =
-      if (sch.isBucketedAppend) sch.partitionKeys :+ "__bucket"
-      else sch.partitionKeys
     // partitions live before an overwrite commit — captured inside the
     // deletes closure (which runs under the commit) so the post-commit
     // HMS drop mirror diffs the exact set the overwrite replaced
@@ -2296,12 +2237,13 @@ final class GraftTable private (
     * THEIR rows live, and pruning them would lose rows, not time. */
   private def bucketNarrow(
       entries: Seq[ManifestEntry], filter: Column): Seq[ManifestEntry] =
-    pkEqualityBucket(filter) match {
-      case Some(b) =>
-        entries.filter(e => e.bucket == b || e.bucket < 0 ||
-          bucketLayoutDiffers(schema, e))
-      case None => entries
-    }
+    pkEqualityBucket(filter).fold(entries)(b => entries.filter(mayHoldBucket(schema, Set(b))))
+
+  /** Whether `e` can hold rows of the buckets in `bs`: files of those
+    * buckets, staged/unassigned buckets (< 0), and files written under
+    * a different bucket layout (see [[bucketLayoutDiffers]]). */
+  private def mayHoldBucket(sch: TableSchema, bs: Int => Boolean)(e: ManifestEntry): Boolean =
+    bs(e.bucket) || e.bucket < 0 || bucketLayoutDiffers(sch, e)
 
   /** True when `e` was written under a DIFFERENT bucket layout than
     * the current schema's (bucket count or bucket-key changed, e.g. a
@@ -2492,6 +2434,8 @@ final class GraftTable private (
     require(isPrimaryKeyTable, "lookup requires a primary-key table")
     val sch = schema
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
+    // before any planning, so a key value of the wrong type fails here
+    val bucket = directPkBucket(sch, keyValues)
     val filterCond = sch.primaryKeys
       .map(k => col(k) === lit(keyValues(k))).reduce(_ && _)
     val snap = sm.latestSnapshot().getOrElse(return emptyDf())
@@ -2508,17 +2452,7 @@ final class GraftTable private (
           }
         case None => pruned // pre-index table: stats pruning only
       }
-      else {
-        val keyDf = emptyDf().sparkSession.range(1).select(
-          sch.primaryKeys.map(k => lit(keyValues(k)).as(k)).toIndexedSeq: _*)
-        val bucket = keyDf.select(
-          pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-            lit(sch.effectiveBuckets)).cast("int").as("b")).head.getInt(0)
-        // files written under a different bucket layout (mid-rescale)
-        // survive — the current hash doesn't locate their rows
-        pruned.filter(e => e.bucket == bucket || e.bucket < 0 ||
-          bucketLayoutDiffers(sch, e))
-      }
+      else bucket.fold(pruned)(b => pruned.filter(mayHoldBucket(sch, Set(b))))
     val raw = readRaw(entries)
     MergeEngine.merge(raw, sch).filter(filterCond)
   }
@@ -2561,18 +2495,16 @@ final class GraftTable private (
       size > lookupCacheMaxFiles
   }
 
-  /** The key's fixed-bucket id computed by DRIVER arithmetic — the
-    * same xxhash64(seed 42) fold and floorMod the write path's
-    * `pmod(xxhash64(pk...), buckets)` produces, with no per-call
-    * Catalyst analysis (the analysis in [[pkEqualityBucket]] /
-    * [[pruneEntries]] costs ~10-50 ms, which dominated KV-service
-    * lookup latency). None for dynamic buckets or null keys. */
+  /** The key's fixed-bucket id computed on the driver by
+    * [[Buckets.bucketOf]], with no Spark job and no Catalyst analysis
+    * (the analysis in [[pkEqualityBucket]] / [[pruneEntries]] costs
+    * ~10-50 ms, which dominated KV-service lookup latency). None for
+    * dynamic buckets or null keys; throws on a key value that is not
+    * of its column's type. */
   private def directPkBucket(
-      sch: TableSchema, keyValues: Map[String, Any]): Option[Int] = {
-    if (sch.isDynamicBucket) return None
-    driverHashFold(sch, sch.bucketKeys, keyValues)
-      .map(h => java.lang.Math.floorMod(h, sch.effectiveBuckets.toLong).toInt)
-  }
+      sch: TableSchema, keyValues: Map[String, Any]): Option[Int] =
+    if (sch.isDynamicBucket) None
+    else Buckets.bucketOf(sch, sch.bucketKeys, keyValues, sch.effectiveBuckets)
 
   /** The fixed bucket a fully-bound primary key hashes to — the
     * routing basis for bucket-sharded serving (reference:
@@ -2603,7 +2535,7 @@ final class GraftTable private (
   def localLookup(keyValues: Map[String, Any]): Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, Cast, EqualTo, Expression, Literal}
+      And, AttributeReference, EqualTo, Expression, Literal}
     // one schema for the whole call: a concurrent ALTER must not mix
     // versions between the guards, the pruning and the row layout
     val sch = schema
@@ -2616,8 +2548,8 @@ final class GraftTable private (
     // old-layout files (mid-rescale) survive the narrowing so the
     // schema-mismatch fallback below can see them and route the
     // lookup through the distributed path
-    val bucketEntries = visibleEntries(sm.liveEntries(snap), sch)
-      .filter(e => bucket.forall(_ == e.bucket) || bucketLayoutDiffers(sch, e))
+    val visible = visibleEntries(sm.liveEntries(snap), sch)
+    val bucketEntries = bucket.fold(visible)(b => visible.filter(mayHoldBucket(sch, Set(b))))
     if (bucketEntries.isEmpty) return Seq.empty
     if (bucketEntries.exists(e => e.file.schemaId != sch.id ||
       !e.file.fileName.endsWith(".parquet") || e.file.dvFile.isDefined))
@@ -2633,7 +2565,7 @@ final class GraftTable private (
     val probeData = StructType(readData.fields.filter(f => probeCols(f.name)))
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     val keyInternal = sch.primaryKeys.map { k =>
-      CatalystTypeConverters.createToCatalystConverter(st(k).dataType)(keyValues(k))
+      Buckets.coerce(k, keyValues(k), st(k).dataType)
     }.toArray
     // files over the cache limit: a stats/index check on the key may
     // skip their probes. The key conjunction is built directly — a
@@ -2642,15 +2574,10 @@ final class GraftTable private (
     val probed: Set[String] =
       if (big.isEmpty) Set.empty
       else {
-        val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-        val keyCond = sch.primaryKeys.flatMap { k =>
-          val dt = st(k).dataType
-          // a literal that does not convert to the column type drops
-          // its conjunct: less pruning, never a wrong answer
-          scala.util.Try {
-            val l = Literal(keyValues(k))
-            if (l.dataType == dt) l else Literal(Cast(l, dt, tz).eval(), dt)
-          }.toOption.map(l => EqualTo(AttributeReference(k, dt)(), l): Expression)
+        val keyCond = sch.primaryKeys.zip(keyInternal).collect {
+          case (k, v) if v != null =>
+            val dt = st(k).dataType
+            EqualTo(AttributeReference(k, dt)(), Literal(v, dt)): Expression
         }.reduceOption(And)
         pruneAnalyzed(snap, sch, big, keyCond).map(_.file.fileName).toSet
       }
@@ -4232,8 +4159,7 @@ final class GraftTable private (
           // forbids bucket-key, so bucketKeys = pk there; rescale of a
           // bucket-key table re-routes by the SAME columns the writer
           // used)
-          pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-            lit(sch.effectiveBuckets)).cast("int"))
+          Buckets.column(sch, sch.bucketKeys, sch.effectiveBuckets))
       } else readAppendData(old) // applies deletion vectors before rewrite
     val partitionBy =
       if (isPrimaryKeyTable) sch.partitionKeys :+ "__bucket" else sch.partitionKeys
@@ -5576,11 +5502,11 @@ final class GraftTable private (
     // files written under an older bucket count/key set)
     mergedFromEntries(planEntries(cond)).filter(cond)
 
-  /** Bucket id implied by PK-equality conjuncts (fixed-bucket tables):
-    * mirrors the writer's xxhash64-pmod exactly — per-type hash, seed
-    * 42, chained over primary keys in declared order. */
+  /** Bucket id implied by equality conjuncts on every bucket key
+    * (fixed-bucket tables), by [[Buckets.bucketOf]]. A value that does
+    * not cast to its key's type narrows nothing. */
   private[graft] def pkEqualityBucket(cond: Column): Option[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal, XxHash64Function}
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
     val sch = schema
     if (sch.isDynamicBucket) return None
     // hashing zero columns would "prune" to bucket hash(seed)=42%n —
@@ -5598,14 +5524,9 @@ final class GraftTable private (
     // equality on the BUCKET KEYS alone suffices — with bucket-key ⊂
     // primary key this prunes queries that bind only the distribution
     // columns, which the full-pk requirement used to miss
-    if (!bk.forall(k => eq.get(k).exists(_.value != null))) return None
-    var h = 42L
-    bk.foreach { k =>
-      val l = eq(k)
-      h = XxHash64Function.hash(l.value, l.dataType, h)
-    }
-    val n = sch.effectiveBuckets
-    Some((((h % n) + n) % n).toInt)
+    if (!bk.forall(eq.contains)) return None
+    try Buckets.bucketOf(sch, bk, eq, sch.effectiveBuckets)
+    catch { case _: IllegalArgumentException => None }
   }
 
   /** A DELETE whose predicate only touches partition columns can be
@@ -5964,8 +5885,6 @@ final class GraftTable private (
       commitIdentifier = -1L, _ => replaced.map(_.copy(kind = "DELETE")))
   }
 
-  /** Copy-on-write rewrite of the files that contain rows matching
-    * `touchCond`; untouched files are carried over unchanged. */
   /** Route an append frame back to its fixed buckets when the table
     * is bucketed-append — EVERY append commit path must do this, or a
     * rewrite would strand rows in bucket-0 files that bucket-equality
@@ -5973,12 +5892,11 @@ final class GraftTable private (
   private def routeAppendBuckets(
       df: DataFrame, sch: TableSchema): (DataFrame, Seq[String]) =
     if (!sch.isBucketedAppend) (df, sch.partitionKeys)
-    else (df.withColumn("__bucket",
-        pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-          lit(sch.numBuckets)).cast("int"))
-        .repartition(sch.numBuckets, col("__bucket")),
+    else (Buckets.route(df, sch, sch.bucketKeys, sch.numBuckets),
       sch.partitionKeys :+ "__bucket")
 
+  /** Copy-on-write rewrite of the files that contain rows matching
+    * `touchCond`; untouched files are carried over unchanged. */
   private def rewriteFiles(touchCond: Column, transform: DataFrame => DataFrame): Long = {
     require(!rowTracking, "copy-on-write rewrite would reassign _ROW_ID; " +
       s"enable ${DeletionVectors.OptionEnabled} for row-level changes on row-tracking tables")
@@ -6110,32 +6028,27 @@ final class GraftTable private (
     * MergeIntoPaimonTable.findTouchedFiles /
     * PrimaryKeyPartialLookupTable.java:60): only buckets the source's
     * keys hash into (fixed buckets) or are index-assigned to (dynamic
-    * buckets) can contain matches, so a reader joins just those files.
-    * The one job this runs collects BUCKET IDS (bounded by the bucket
+    * buckets) can contain matches, so a reader joins just those files
+    * (plus any [[mayHoldBucket]] keeps, e.g. mid-rescale files). The
+    * one job this runs collects BUCKET IDS (bounded by the bucket
     * count), never rows. */
   private[graft] def entriesForKeys(src: DataFrame): Seq[ManifestEntry] = {
     val sch = schema
     val pk = sch.primaryKeys
     require(pk.nonEmpty, "key-pruned reads require a primary-key table")
     val liveNow = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-    if (sch.isDynamicBucket) {
-      // a key's bucket is index-assigned, not hash-derivable — but
-      // the persisted index answers which buckets hold source keys
-      // (source keys absent from the index can't match any target)
-      dynIndexDf match {
-        case Some(idx) =>
-          val srcBuckets = src.select(pk.map(col).toIndexedSeq: _*)
-            .join(idx, pk).select("__bucket")
-            .distinct().collect().map(_.getInt(0)).toSet
-          liveNow.filter(e => srcBuckets.contains(e.bucket))
-        case None => liveNow // pre-index table
-      }
-    } else {
-      val srcBuckets = src
-        .select(pmod(xxhash64(sch.bucketKeys.map(col).toIndexedSeq: _*),
-          lit(sch.effectiveBuckets)).cast("int").as("__b"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      liveNow.filter(e => srcBuckets.contains(e.bucket))
+    // dynamic buckets: a key's bucket is index-assigned, not hash-
+    // derivable — but the persisted index answers which buckets hold
+    // source keys (source keys absent from it can't match any target;
+    // a pre-index table reads everything). Fixed buckets: the hash of
+    // the source's key columns, cast to the table's key types.
+    val bucketIds =
+      if (!sch.isDynamicBucket)
+        Some(src.select(Buckets.column(sch, sch.bucketKeys, sch.effectiveBuckets)))
+      else dynIndexDf.map(idx =>
+        src.select(pk.map(col).toIndexedSeq: _*).join(idx, pk).select("__bucket"))
+    bucketIds.fold(liveNow) { ids =>
+      liveNow.filter(mayHoldBucket(sch, ids.distinct().collect().map(_.getInt(0)).toSet))
     }
   }
 

@@ -193,4 +193,185 @@ class BucketKeySpec extends AnyFunSuite {
     assert(t.scan(col("id") === 7L).inputFiles.length <
       t.scan(lit(true)).inputFiles.length)
   }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val r = f
+      Thread.sleep(500) // listener events arrive asynchronously
+      (r, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val longKeyed = StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("v", StringType, nullable = true)))
+
+  private def longKeyTable(): GraftTable = {
+    val t = GraftTable.create(spark, tmp(), longKeyed,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "4"))
+    t.write(spark.createDataFrame(
+      (0L until 40L).map(i => Row(i, s"v$i")).asJava, longKeyed))
+    t
+  }
+
+  test("key values of another type than the declared key type: INT keys of " +
+    "a BIGINT table find their rows, MERGE INTO deletes, uncastable values throw") {
+    val t = longKeyTable()
+    (0 until 40).foreach { i =>
+      val asInt = Map[String, Any]("k" -> i)
+      val asLong = Map[String, Any]("k" -> i.toLong)
+      assert(t.pkBucketFor(asInt) == t.pkBucketFor(asLong), s"pkBucketFor($i)")
+      assert(t.lookup(asInt).collect().map(_.toString).toSeq ==
+        t.lookup(asLong).collect().map(_.toString).toSeq, s"lookup($i)")
+      assert(t.localLookup(asInt).map(_.toString) ==
+        t.localLookup(asLong).map(_.toString), s"localLookup($i)")
+      assert(t.localLookup(asInt).map(_.getString(1)) == Seq(s"v$i"))
+    }
+    // a value with no exact BIGINT form is an error naming the key and
+    // its type, never a silent miss
+    Seq[Any]("abc", 5.5).foreach { bad =>
+      val m = Map[String, Any]("k" -> bad)
+      Seq[() => Any](() => t.lookup(m), () => t.localLookup(m), () => t.pkBucketFor(m))
+        .foreach { call =>
+          val e = intercept[IllegalArgumentException](call())
+          assert(e.getMessage.contains("k") && e.getMessage.contains("BIGINT"),
+            e.getMessage)
+        }
+    }
+    // an INT-typed MERGE INTO source matches its BIGINT target row
+    val intKeyed = StructType(Seq(
+      StructField("k", IntegerType, nullable = false),
+      StructField("v", StringType, nullable = true)))
+    t.mergeInto(spark.createDataFrame(Seq(Row(5, "x")).asJava, intKeyed),
+      whenMatchedDelete = Some(lit(true)))
+    assert(t.read.filter(col("k") === 5L).count() == 0L, "the delete became an insert")
+    assert(t.read.count() == 39L)
+    assert(t.localLookup(Map("k" -> 5)).isEmpty)
+  }
+
+  test("MERGE INTO keeps target files of an OLDER bucket layout: matched " +
+    "deletes mid-rescale still delete") {
+    val t = GraftTable.create(spark, tmp(), longKeyed,
+      primaryKeys = Seq("k"), options = Map("bucket" -> "2"))
+    t.write(spark.createDataFrame(
+      (0L until 20L).map(i => Row(i, s"v$i")).asJava, longKeyed))
+    // a rescale whose compact never landed: the schema says 8 buckets,
+    // every live file was hashed under 2
+    val sch0 = t.schema
+    t.sm.writeSchema(sch0.copy(id = sch0.id + 1,
+      options = sch0.options.updated("bucket", "8")))
+    val t2 = GraftTable.load(spark, t.path)
+    t2.mergeInto(spark.createDataFrame(
+      (0L until 20L by 2).map(i => Row(i, "x")).asJava, longKeyed),
+      whenMatchedDelete = Some(lit(true)))
+    assert(t2.read.filter(col("v") === "x").count() == 0L, "a delete became an insert")
+    assert(t2.read.count() == 10L)
+  }
+
+  test("lookup() finds the key's bucket on the driver: no Spark job before " +
+    "its action") {
+    val t = longKeyTable()
+    val (df, jobs) = jobsDuring(t.lookup(Map("k" -> 7L)))
+    assert(jobs == 0, s"lookup ran $jobs Spark job(s) before its action")
+    assert(df.collect().map(_.getString(1)).toSeq == Seq("v7"))
+  }
+
+  test("one bucket function: the writer's manifest bucket, TableFunctions.bucket, " +
+    "SQL sys.bucket and pkBucketFor agree for every hashable key type") {
+    import graft.sources.GraftFunctions.BucketFunction
+    spark.conf.set("spark.sql.catalog.graft_bkf", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.graft_bkf.warehouse",
+      Files.createTempDirectory("graft-bkf-wh").toString)
+    val ts = (s: String) => java.sql.Timestamp.valueOf(s)
+    val ntz = (s: String) => java.time.LocalDateTime.parse(s)
+    val single: Seq[(DataType, Seq[Any])] = Seq(
+      BooleanType -> Seq(true, false),
+      ByteType -> Seq[Byte](0, 1, -7, 42, 127, -128),
+      ShortType -> Seq[Short](0, 1, -7, 420, 32767, -32768),
+      IntegerType -> Seq(0, 1, -7, 42, Int.MaxValue, Int.MinValue),
+      LongType -> Seq(0L, 1L, -7L, 42L, Long.MaxValue, 1L << 40),
+      FloatType -> Seq(0.0f, 1.5f, -7.25f, 1e20f, Float.MinPositiveValue),
+      DoubleType -> Seq(0.0, 1.5, -7.25, 1e300, Double.MinPositiveValue),
+      DecimalType(10, 2) -> Seq("0", "1.50", "-7.25", "12345678.99").map(new java.math.BigDecimal(_)),
+      DecimalType(24, 4) -> Seq("0", "1.5", "-7.25", "12345678901234567890.1234").map(new java.math.BigDecimal(_)),
+      DateType -> Seq("1970-01-01", "1999-12-31", "2024-02-29", "1900-01-01").map(java.sql.Date.valueOf),
+      TimestampType -> Seq("1970-01-01 00:00:00", "2024-02-29 12:34:56.789").map(ts),
+      TimestampNTZType -> Seq("1970-01-01T00:00:00", "2024-02-29T12:34:56.789").map(ntz),
+      StringType -> Seq("", "a", "alpha", "ünïcode", "x" * 100),
+      BinaryType -> Seq(Array[Byte](), Array[Byte](1), Array[Byte](1, 2, 3), "xyz".getBytes))
+    assert(single.map(_._1).forall(BucketFunction.hashable))
+    case class Case(name: String, sch: StructType, pk: Seq[String],
+        bucketKey: Option[String], rows: Seq[Row])
+    val cases = single.map { case (dt, vs) =>
+      Case(dt.sql, StructType(Seq(StructField("k", dt, nullable = false),
+        StructField("v", IntegerType, nullable = true))), Seq("k"), None,
+        vs.zipWithIndex.map { case (v, i) => Row(v, i) })
+    } ++ Seq(
+      Case("composite (STRING, BIGINT, DATE)", StructType(Seq(
+        StructField("s", StringType, nullable = false),
+        StructField("l", LongType, nullable = false),
+        StructField("d", DateType, nullable = false),
+        StructField("v", IntegerType, nullable = true))), Seq("s", "l", "d"), None,
+        (0 until 12).map(i => Row(s"s${i % 3}", i.toLong * 1000003L,
+          java.sql.Date.valueOf(s"2024-01-${10 + i}"), i))),
+      Case("bucket-key (s) of pk (s, l)", StructType(Seq(
+        StructField("s", StringType, nullable = false),
+        StructField("l", LongType, nullable = false),
+        StructField("v", IntegerType, nullable = true))), Seq("s", "l"), Some("s"),
+        (0 until 12).map(i => Row(s"region-$i", i.toLong, i))))
+    cases.foreach { c =>
+      val opts = Map("bucket" -> "4") ++ c.bucketKey.map("bucket-key" -> _)
+      val t = GraftTable.create(spark, tmp(), c.sch, primaryKeys = c.pk, options = opts)
+      val src = spark.createDataFrame(c.rows.asJava, c.sch)
+      t.write(src)
+      val bk = t.schema.bucketKeys
+      // each row is identified by its distinct `v`; maps are v → bucket
+      val written = t.sm.latestSnapshot().map(t.sm.liveEntries).get.flatMap { e =>
+        t.readRaw(Seq(e)).collect().map(r => r.getInt(r.fieldIndex("v")) -> e.bucket)
+      }.toMap
+      val fromColumn = src.select(col("v"),
+        graft.functions.TableFunctions.bucket(4, bk.map(col): _*))
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      src.createOrReplaceTempView("bkf_src")
+      val fromSql = spark.sql(
+        s"SELECT v, graft_bkf.sys.bucket(4, ${bk.mkString(", ")}) FROM bkf_src")
+        .collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
+      val fromDriver = c.rows.map { r =>
+        r.getInt(c.sch.fieldIndex("v")) ->
+          t.pkBucketFor(c.pk.map(k => k -> r.get(c.sch.fieldIndex(k))).toMap).get
+      }.toMap
+      assert(written.size == c.rows.size, s"${c.name}: ${written.size} rows written")
+      assert(fromColumn == written, s"${c.name}: TableFunctions.bucket $fromColumn vs $written")
+      assert(fromSql == written, s"${c.name}: sys.bucket $fromSql vs $written")
+      assert(fromDriver == written, s"${c.name}: pkBucketFor $fromDriver vs $written")
+    }
+  }
+
+  test("the bucket hash is spelled out once: no xxhash64 outside Buckets in " +
+    "the table, sources and functions packages") {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the project root (no $root)")
+    val offenders = Seq("table", "sources", "functions").flatMap { pkg =>
+      Files.walk(root.resolve(pkg)).iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") &&
+          p.getFileName.toString != "Buckets.scala")
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if line.contains("xxhash64(") ||
+              line.contains("XxHash64Function") => s"$p:${i + 1}: ${line.trim}"
+          }
+        }.toSeq
+    }
+    assert(offenders.isEmpty,
+      s"bucket hash copies outside graft.table.Buckets:\n${offenders.mkString("\n")}")
+  }
 }
