@@ -152,6 +152,10 @@ object GraftLookupService {
           }
         }
       } catch {
+        // a key value with no exact form in the key type (Buckets.coerce)
+        // is the caller's error, not the server's
+        case e: IllegalArgumentException =>
+          respond(x, 400, graft.core.Json.write(Map("error" -> e.getMessage)))
         case e: Exception =>
           respond(x, 500, graft.core.Json.write(Map("error" -> e.toString)))
       }

@@ -2457,13 +2457,23 @@ final class GraftTable private (
     MergeEngine.merge(raw, sch).filter(filterCond)
   }
 
-  /** cached driver-side reader factories per schema version (building
-    * one costs a broadcast; lookups reuse it): full rows, and the probe
-    * projection of key, sequence and meta columns */
+  /** cached reader factories per schema version (building one costs a
+    * broadcast; lookups reuse it): full rows, and the probe projection
+    * of key, sequence and meta columns, both opened on the driver; and
+    * full rows for the lookup changelog's tasks, never opened on the
+    * driver (a factory that has read a file holds its reader's state
+    * and no longer serializes) */
   private val localFactoryCache = scala.collection.concurrent.TrieMap
     .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
   private val localProbeFactoryCache = scala.collection.concurrent.TrieMap
     .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
+  private val taskFactoryCache = scala.collection.concurrent.TrieMap
+    .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
+  /** [[BucketRead]] per schema version: building one parses every
+    * column type, which a point lookup must not pay per call */
+  private val bucketReads = scala.collection.concurrent.TrieMap.empty[Long, BucketRead]
+  private def bucketRead(sch: TableSchema): BucketRead =
+    bucketReads.getOrElseUpdate(sch.id, new BucketRead(sch))
 
   /** Per-file decoded key→best-row maps for the local lookup fast
     * path — the reference's lookup CACHE (FileStoreLookupTable /
@@ -2486,6 +2496,9 @@ final class GraftTable private (
     * fetches of a winning row from such a file. */
   private[graft] val lookupProbeScans = new java.util.concurrent.atomic.AtomicLong
   private[graft] val lookupRowFetches = new java.util.concurrent.atomic.AtomicLong
+  /** Commits whose lookup changelog was built inside the write's
+    * per-bucket tasks (the rest ran the distributed state diff). */
+  private[graft] val bucketLocalChangelogs = new java.util.concurrent.atomic.AtomicLong
   private val lookupMapCache = new java.util.LinkedHashMap[
       String, Map[Seq[Any], (org.apache.spark.sql.catalyst.InternalRow, Long, Any, Byte)]](
       16, 0.75f, true) {
@@ -2505,6 +2518,26 @@ final class GraftTable private (
       sch: TableSchema, keyValues: Map[String, Any]): Option[Int] =
     if (sch.isDynamicBucket) None
     else Buckets.bucketOf(sch, sch.bucketKeys, keyValues, sch.effectiveBuckets)
+
+  /** Can one bucket's files, read on their own, give a key's merged
+    * version? The gate of both bucket-local readers, the point lookup
+    * ([[localLookup]]) and the lookup changelog ([[buildChangelog]]):
+    * a deduplicate primary-key table in fixed buckets (not dynamic,
+    * postpone or cross-partition) without blob columns, deletion
+    * vectors or BINARY key columns (their values match by content,
+    * which the readers' hashed keys do not), and `entries` all parquet
+    * files of `sch` (so of its bucket layout too). Anything else takes
+    * the distributed path. */
+  private def bucketLocal(
+      sch: TableSchema, entries: Seq[ManifestEntry] = Seq.empty): Boolean =
+    sch.primaryKeys.nonEmpty && !sch.isDynamicBucket && !sch.isPostponeBucket &&
+      !isCrossPartition(sch) && sch.mergeEngine == "deduplicate" &&
+      graft.sources.BlobStorage.blobColumns(sch.options).isEmpty &&
+      !sch.options.get(DeletionVectors.OptionEnabled).contains("true") &&
+      !bucketRead(sch).struct.fields.exists(f =>
+        f.dataType == BinaryType && sch.primaryKeys.contains(f.name)) &&
+      entries.forall(e => e.file.schemaId == sch.id &&
+        e.file.fileName.endsWith(".parquet") && e.file.dvFile.isEmpty)
 
   /** The fixed bucket a fully-bound primary key hashes to — the
     * routing basis for bucket-sharded serving (reference:
@@ -2528,10 +2561,10 @@ final class GraftTable private (
     * row is decoded in full — fetched from its file by position and
     * re-checked against what the probe saw.
     *
-    * Fast path: fixed-bucket deduplicate-engine parquet PK tables on
-    * the current schema without deletion vectors; anything else falls
-    * back to the distributed [[lookup]]. Merge semantics mirror
-    * MergeEngine's (sequence.field, _graft_seq) ordering. */
+    * Fast path: tables and files inside the [[bucketLocal]] gate;
+    * anything else falls back to the distributed [[lookup]]. Merge
+    * semantics mirror MergeEngine's (sequence.field, _graft_seq)
+    * ordering ([[VersionOrder]]). */
   def localLookup(keyValues: Map[String, Any]): Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.{
@@ -2539,9 +2572,7 @@ final class GraftTable private (
     // one schema for the whole call: a concurrent ALTER must not mix
     // versions between the guards, the pruning and the row layout
     val sch = schema
-    if (sch.primaryKeys.isEmpty || sch.isDynamicBucket ||
-      sch.mergeEngine != "deduplicate")
-      return lookup(keyValues).collect().toSeq
+    if (!bucketLocal(sch)) return lookup(keyValues).collect().toSeq
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
     val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
     val bucket = directPkBucket(sch, keyValues)
@@ -2551,18 +2582,10 @@ final class GraftTable private (
     val visible = visibleEntries(sm.liveEntries(snap), sch)
     val bucketEntries = bucket.fold(visible)(b => visible.filter(mayHoldBucket(sch, Set(b))))
     if (bucketEntries.isEmpty) return Seq.empty
-    if (bucketEntries.exists(e => e.file.schemaId != sch.id ||
-      !e.file.fileName.endsWith(".parquet") || e.file.dvFile.isDefined))
-      return lookup(keyValues).collect().toSeq
-    val st = sch.toStruct
-    val partSchema = StructType(
-      st.fields.filter(f => sch.partitionKeys.contains(f.name)))
-    val readData = StructType(
-      st.fields.filterNot(f => sch.partitionKeys.contains(f.name)) ++
-        Seq(StructField(SeqCol, LongType, nullable = false),
-          StructField(KindCol, ByteType, nullable = false)))
-    val probeCols = (sch.primaryKeys ++ sch.sequenceFields :+ SeqCol :+ KindCol).toSet
-    val probeData = StructType(readData.fields.filter(f => probeCols(f.name)))
+    if (!bucketLocal(sch, bucketEntries)) return lookup(keyValues).collect().toSeq
+    val read = bucketRead(sch)
+    val st = read.struct
+    import read.{partSchema, readData, probeData}
     import org.apache.spark.sql.catalyst.CatalystTypeConverters
     val keyInternal = sch.primaryKeys.map { k =>
       Buckets.coerce(k, keyValues(k), st(k).dataType)
@@ -2584,74 +2607,11 @@ final class GraftTable private (
     val candidates = bucketEntries.filter(e =>
       e.file.rowCount <= lookupCacheMaxRows || probed(e.file.fileName))
     if (candidates.isEmpty) return Seq.empty
-    val seqFieldTypes = sch.sequenceFields.map(f => st(f).dataType).toArray
-    val sfOrderings = seqFieldTypes.map(dt =>
-      org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
-        .asInstanceOf[Ordering[Any]])
-    // ordinals of the key, sequence and meta columns in one reader's
-    // output (data columns, then partition columns)
-    class Layout(data: StructType) {
-      val out = StructType(data.fields ++ partSchema.fields)
-      private val keyOrds = sch.primaryKeys.map(out.fieldIndex).toArray
-      private val keyTypes = keyOrds.map(out.fields(_).dataType)
-      private val sfOrds = sch.sequenceFields.map(out.fieldIndex).toArray
-      val seqOrd = out.fieldIndex(SeqCol)
-      val kindOrd = out.fieldIndex(KindCol)
-      def keyOf(row: InternalRow): Seq[Any] =
-        keyOrds.indices.map(i => row.get(keyOrds(i), keyTypes(i)))
-      def matches(row: InternalRow): Boolean = {
-        var i = 0
-        while (i < keyOrds.length) {
-          val v = row.get(keyOrds(i), keyTypes(i))
-          if (v == null || v != keyInternal(i)) return false
-          i += 1
-        }
-        true
-      }
-      def sfOf(row: InternalRow): Any =
-        if (sfOrds.isEmpty) null
-        else sfOrds.indices.map(i =>
-          if (row.isNullAt(sfOrds(i))) null else row.get(sfOrds(i), seqFieldTypes(i)))
-    }
-    val full = new Layout(readData)
+    val full = read.readerLayout(readData)
     val factory = localFactoryCache.getOrElseUpdate(sch.id,
       graft.sources.GraftScanUtil.readerFactory(
         spark, readData, readData, partSchema, Array.empty))
-    // sequence.field.sort-order=descending: the SMALLEST sequence wins
-    // here too, or the point lookup would disagree with table scans.
-    // The flip applies per COMPONENT after null handling (nulls stay
-    // smallest in both directions) — exactly MergeEngine's inverted-
-    // field struct ordering.
-    val descFlip =
-      sch.options.get("sequence.field.sort-order").contains("descending")
-    // lexicographic compare of sequence-field vectors (Seq[Any] with
-    // per-element nulls); single-field tables are the 1-element case
-    def compareSf(a: Seq[Any], b: Seq[Any]): Int = {
-      var i = 0
-      while (i < sfOrderings.length) {
-        val c = (a(i), b(i)) match {
-          case (null, null) => 0
-          case (null, _) => -1
-          case (_, null) => 1
-          case (x, y) =>
-            val c0 = sfOrderings(i).compare(x, y)
-            if (descFlip) -c0 else c0
-        }
-        if (c != 0) return c
-        i += 1
-      }
-      0
-    }
-    // (sequence-fields…, _graft_seq) preorder shared by the cached and
-    // probed files (nulls smallest, like the struct max semantics)
-    def betterThan(sf: Any, s: Long, bSf: Any, bSeq: Long, hasBest: Boolean): Boolean =
-      !hasBest || {
-        if (seqFieldTypes.isEmpty) s > bSeq
-        else {
-          val c = compareSf(bSf.asInstanceOf[Seq[Any]], sf.asInstanceOf[Seq[Any]])
-          c < 0 || (c == 0 && s > bSeq)
-        }
-      }
+    import read.order.betterThan
     def openReader(
         f: org.apache.spark.sql.connector.read.PartitionReaderFactory, e: ManifestEntry) =
       f.createReader(org.apache.spark.sql.execution.datasources.FilePartition(0,
@@ -2676,7 +2636,7 @@ final class GraftTable private (
         found = true; best = row; bestFile = e; bestPos = pos
         bestSeq = s; bestSf = sf; bestKind = kind
       }
-    lazy val probe = new Layout(probeData)
+    lazy val probe = read.readerLayout(probeData)
     lazy val probeFactory = localProbeFactoryCache.getOrElseUpdate(sch.id,
       graft.sources.GraftScanUtil.readerFactory(
         spark, readData, probeData, partSchema, Array.empty))
@@ -2715,7 +2675,7 @@ final class GraftTable private (
         lookupProbeScans.incrementAndGet()
         var pos = 0L
         scanFile(probeFactory, e) { r =>
-          if (probe.matches(r)) {
+          if (probe.matches(r, keyInternal)) {
             // copy: sequence-field values may alias batch memory
             val row = r.copy()
             offer(null, e, pos, row.getLong(probe.seqOrd), probe.sfOf(row),
@@ -2740,7 +2700,7 @@ final class GraftTable private (
           while (i < bestPos && reader.next()) i += 1
           if (i == bestPos) reader.get().copy() else null
         } finally reader.close()
-        if (row == null || !full.matches(row) || row.getLong(full.seqOrd) != bestSeq ||
+        if (row == null || !full.matches(row, keyInternal) || row.getLong(full.seqOrd) != bestSeq ||
             full.sfOf(row) != bestSf || row.getByte(full.kindOrd) != bestKind)
           throw new IllegalStateException(
             s"point lookup: row $bestPos of ${bestFile.file.fileName} does not hold " +
@@ -5652,11 +5612,7 @@ final class GraftTable private (
   private def stateDiff(before0: DataFrame, after: DataFrame): DataFrame = {
     val pk = schema.primaryKeys
     val cols = struct.fieldNames
-    val ignore = schema.options
-      .get("changelog-producer.row-deduplicate-ignore-fields")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val cmp = cols.filterNot(c => ignore.contains(c) && !pk.contains(c))
+    val cmp = LookupChangelog.comparedColumns(schema)
     val before = before0.select(cols.map(c => col(c).as(s"__b_$c")).toIndexedSeq: _*)
     val joined = after.join(before,
       pk.map(k => col(k) === col(s"__b_$k")).reduce(_ && _), "full_outer")
@@ -5682,14 +5638,35 @@ final class GraftTable private (
   }
 
   /** Persisted per-commit changelog (changelog-producer = lookup):
-    * before committing a PK batch, diff the pre-image state of the
-    * batch's keys (bucket-pruned + semi-joined, never a full scan)
-    * against the post-merge state and write the exact -U/+U/+I/-D rows
-    * as changelog files; incremental readers then serve them directly
-    * instead of re-deriving (reference:
-    * LookupChangelogMergeFunctionWrapper / LookupMergeTreeCompactRewriter
-    * — the lookup cost is paid once at write time). */
+    * before committing a PK batch, find the pre-image of each of the
+    * batch's keys and write the exact -U/+U/+I/-D rows as changelog
+    * files; incremental readers then serve them directly instead of
+    * re-deriving (reference: LookupChangelogMergeFunctionWrapper /
+    * LookupMergeTreeCompactRewriter — the lookup cost is paid once at
+    * write time).
+    *
+    * Within the [[bucketLocal]] gate (checked on every live file) the
+    * routed batch's own per-bucket tasks look the keys up in their
+    * buckets' files ([[LookupChangelog.diff]]): no bucket collect, no
+    * listing, no merge and no join. Other tables diff the pre-image
+    * state of the batch's keys (bucket-pruned + semi-joined, never a
+    * full scan) against the post-merge state. */
   private def buildChangelog(sch: TableSchema, out: DataFrame): Option[String] = {
+    val live = visibleEntries(
+      sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty), sch)
+    if (bucketLocal(sch, live)) {
+      bucketLocalChangelogs.incrementAndGet()
+      val read = bucketRead(sch)
+      val files = live.map { e =>
+        val f = graft.sources.GraftScanUtil.partitionedFile(path, e, read.partSchema)
+        (f.partitionValues.toSeq(read.partSchema).toVector: Seq[Any], e.bucket) -> f
+      }.groupMap(_._1)(_._2)
+      val factory = taskFactoryCache.getOrElseUpdate(sch.id,
+        graft.sources.GraftScanUtil.readerFactory(
+          spark, read.readData, read.readData, read.partSchema, Array.empty))
+      return persistChangelog(
+        LookupChangelog.diff(spark, out, sch, read, factory, files), sch)
+    }
     val pk = sch.primaryKeys
     val batchKeys = out.select(pk.map(col).toIndexedSeq: _*).distinct()
     val buckets = out.select("__bucket").distinct().collect().map(_.getInt(0)).toSet

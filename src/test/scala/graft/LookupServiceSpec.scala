@@ -127,6 +127,17 @@ class LookupServiceSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a key value of the wrong type is a 400 naming the key, not a 500") {
+    seed()
+    val e = intercept[RuntimeException](GraftLookupClient.lookup(
+      server.uri, "kv-secret", "db", "users", Map("id" -> "abc")))
+    assert(e.getMessage.contains("(400)"), e.getMessage)
+    assert(e.getMessage.contains("id"), e.getMessage)
+    // a well-typed lookup on the same service still answers
+    assert(GraftLookupClient.lookup(
+      server.uri, "kv-secret", "db", "users", Map("id" -> "20")).size == 1)
+  }
+
   test("bucket-sharded fleet: the router sends each key to the shard owning " +
     "its bucket, every shard serves ONLY its buckets, misroutes get 421") {
     import graft.sources.GraftLookupRouter
