@@ -159,33 +159,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true") // g30 uses TIME(p)
-      .config("spark.sql.adaptive.enabled", "true")
-      // bytes-first AQE coalescing (r17): Spark's own docs recommend
-      // parallelismFirst=false in production so post-shuffle partitions
-      // respect advisoryPartitionSizeInBytes instead of being split to
-      // chase idle cores — fewer, right-sized reduce tasks at EVERY
-      // scale (measured −25% on p06 here, neutral-to-positive
-      // elsewhere; not a local[32]-specific tune)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // aggressive cleaner cadence: benched queries create broadcasts/
-      // shuffles that otherwise only clean up on rare full GCs and
-      // skew later measurements with memory pressure
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      // multi-commit gates are job storms; the async status-store queue
-      // overflows under them (ElementTrackingStore errors in r6) and its
-      // backlog steals cycles from the measured queries
-      .config("spark.appStatusStore.asyncTracking.enable", "false")
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "30000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val sfName = sfDir.split('/').lastOption.getOrElse(sfDir)
     val bands = loadBands(sfName)
     // warm-up: one untimed query JITs the parquet reader, codegen and

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling main (not shipped API): times one or more gates under
   * the EXACT bench session config, N repetitions each, and prints
   * per-repetition wall seconds plus Spark job/stage counts — the
@@ -20,22 +18,7 @@ object Profile {
     val reps = if (pos.length > 1) pos(1).toInt else 3
     val sfDir = if (pos.length > 2) pos(2)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.timeType.enabled", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.appStatusStore.asyncTracking.enable", "false")
-      .config("spark.scheduler.listenerbus.eventqueue.capacity", "30000")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
 
     // job/stage/task counters via listener — how many Spark jobs a gate
     // fires is the first-order cost driver at gate scale. With -v, each

@@ -29,13 +29,13 @@ final class SnapshotManager(
 
   def onCommit(hook: Long => Unit): Unit = afterCommit = hook
 
-  /** CAS retry budget when commit() is called without an explicit
-    * maxRetries — the table layer points this at the CURRENT schema's
-    * `commit.max-retries` so a setOption takes effect without a
-    * reload (reference: CoreOptions COMMIT_MAX_RETRIES, default 20). */
-  @volatile var commitMaxRetriesProvider: () => Int = () => 20
+  /** CAS retry budget of the current schema when commit() is called
+    * without an explicit maxRetries (reference: CoreOptions
+    * COMMIT_MAX_RETRIES, default 20). */
+  def commitMaxRetries: Int = maxRetriesOf(latestOptions)
 
-  def commitMaxRetries: Int = commitMaxRetriesProvider()
+  private def maxRetriesOf(opts: Map[String, String]): Int =
+    opts.get("commit.max-retries").map(_.toInt).getOrElse(20)
 
   /** Branches keep an independent snapshot chain under
     * branch/<name>/snapshot, sharing schema/manifest/data with main
@@ -76,8 +76,17 @@ final class SnapshotManager(
 
   // ---- schema ---------------------------------------------------------
 
-  def writeSchema(schema: TableSchema): Unit =
-    io.writeString(s"$schemaDir/schema-${schema.id}.json", Json.write(schema))
+  /** Schema versions are write-once: of two handles that change the
+    * table from the same version, the second fails instead of silently
+    * replacing the first one's change. A create whose response was
+    * lost reads back as this very content and counts as written. */
+  def writeSchema(schema: TableSchema): Unit = {
+    val path = s"$schemaDir/schema-${schema.id}.json"
+    val json = Json.write(schema)
+    if (!io.tryCreateAtomic(path, json) && io.readString(path) != json)
+      throw new IllegalStateException(s"schema-${schema.id}.json already exists: a " +
+        "concurrent schema change won; reload the table and retry")
+  }
 
   def latestSchema(): Option[TableSchema] = {
     val ids = io.list(schemaDir)
@@ -93,8 +102,15 @@ final class SnapshotManager(
     if (id < 0) None else Some(schema(id))
   }
 
-  def schema(id: Long): TableSchema =
-    Json.read(io.readString(s"$schemaDir/schema-$id.json"), classOf[TableSchema])
+  private def latestOptions: Map[String, String] =
+    latestSchema().fold(Map.empty[String, String])(_.options)
+
+  /** Parsed schema versions by id — write-once files, like manifests,
+    * so each is read and parsed once per manager. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[Long, TableSchema]()
+
+  def schema(id: Long): TableSchema = schemas.computeIfAbsent(id, i =>
+    Json.read(io.readString(s"$schemaDir/schema-$i.json"), classOf[TableSchema]))
 
   // ---- snapshots ------------------------------------------------------
 
@@ -173,13 +189,6 @@ final class SnapshotManager(
 
   // ---- manifests ------------------------------------------------------
 
-  /** Manifest data format: parquet (columnar, compressed, cheap to
-    * decode and distributable — the scale path) or json (debuggable
-    * with plain tools). Readers switch on the file extension, so both
-    * formats coexist within one table across the option flipping. */
-  private def manifestFormat: String =
-    latestSchema().flatMap(_.options.get("manifest.format")).getOrElse("parquet")
-
   /** Manifests are immutable once written — cache decoded entries
     * (bounded: with manifest compaction the live set is O(1) files). */
   private val manifestCache =
@@ -212,23 +221,12 @@ final class SnapshotManager(
     } catch { case _: Exception => 0L }
   }
 
-  /** Schema options for manifest encoding, cached ~2 s: writeManifest
-    * runs several times per commit and a schema-dir listing per call
-    * measurably inflates commit-heavy workloads (g31 +3 s); manifest
-    * knobs tolerate a seconds-stale read — they shape ENCODING, not
-    * correctness. */
-  @volatile private var manifestOptsCache: (Long, Map[String, String]) =
-    (0L, Map.empty)
-  private def manifestOpts: Map[String, String] = {
-    val now = System.currentTimeMillis()
-    if (now - manifestOptsCache._1 > 2000)
-      manifestOptsCache =
-        (now, latestSchema().map(_.options).getOrElse(Map.empty))
-    manifestOptsCache._2
-  }
-
-  def writeManifest(entries0: Seq[ManifestEntry]): String = {
-    val opts = manifestOpts
+  /** Write `entries0` as one manifest encoded per the schema options
+    * `opts`. `manifest.format` is parquet (columnar, compressed, cheap
+    * to decode and distributable — the scale path) or json (debuggable
+    * with plain tools); readers switch on the file extension, so both
+    * formats coexist within one table across the option flipping. */
+  def writeManifest(entries0: Seq[ManifestEntry], opts: Map[String, String]): String = {
     // `manifest.delete-file-drop-stats` (reference: the same key):
     // DELETE entries are matched by file name only — their stats are
     // dead weight; opt-in for old-reader compatibility like the
@@ -240,7 +238,7 @@ final class SnapshotManager(
             e.copy(file = e.file.copy(stats = Map.empty))
           else e)
       else entries0
-    if (manifestFormat == "json") {
+    if (opts.get("manifest.format").contains("json")) {
       val name = s"manifest-${UUID.randomUUID()}.json"
       io.writeString(s"$manifestDir/$name", Json.write(Manifest(entries)))
       name
@@ -257,25 +255,26 @@ final class SnapshotManager(
     * — one giant manifest serializes planning IO; chunks read in
     * parallel). Unset → one file. Chunk count comes from a trial
     * encode, so the bound tracks the real encoded size. */
-  def writeManifestChunked(entries: Seq[ManifestEntry]): Seq[String] = {
-    val target = manifestOpts.get("manifest.target-file-size")
+  private def writeManifestChunked(
+      entries: Seq[ManifestEntry], opts: Map[String, String]): Seq[String] = {
+    val target = opts.get("manifest.target-file-size")
       .map(Meta.parseBytes)
     target match {
-      case None => Seq(writeManifest(entries))
-      case Some(t) if entries.isEmpty => Seq(writeManifest(entries))
-      case Some(t) if manifestFormat == "json" =>
+      case None => Seq(writeManifest(entries, opts))
+      case Some(t) if entries.isEmpty => Seq(writeManifest(entries, opts))
+      case Some(t) if opts.get("manifest.format").contains("json") =>
         // chunking is parquet-only; skip the (parquet) trial encode
-        Seq(writeManifest(entries))
+        Seq(writeManifest(entries, opts))
       case Some(t) =>
-        val codec = manifestOpts.getOrElse("manifest.compression", "snappy")
+        val codec = opts.getOrElse("manifest.compression", "snappy")
         val whole = ManifestIO.encode(entries, codec)
         if (whole.length <= t)
-          Seq(writeManifest(entries))
+          Seq(writeManifest(entries, opts))
         else {
           val chunks = math.min(entries.size,
             math.ceil(whole.length.toDouble / t).toInt)
           val per = math.ceil(entries.size.toDouble / chunks).toInt
-          entries.grouped(per).map(writeManifest).toSeq
+          entries.grouped(per).map(writeManifest(_, opts)).toSeq
         }
     }
   }
@@ -326,12 +325,13 @@ final class SnapshotManager(
     val latest = latestSnapshot().getOrElse(return None)
     val manifests = readManifestList(latest.manifestList)
     if (manifests.size <= 1) return None
-    val listName = writeManifestList(writeManifestChunked(foldEntries(manifests)))
+    val opts = latestOptions
+    val listName = writeManifestList(writeManifestChunked(foldEntries(manifests), opts))
     val snap = latest.copy(
       id = latest.id + 1,
       commitKind = "COMPACT",
       commitIdentifier = -1L,
-      commitUser = Some(effectiveCommitUser),
+      commitUser = Some(effectiveCommitUser(opts)),
       timeMillis = System.currentTimeMillis(),
       manifestList = listName,
       deltaManifest = None,
@@ -354,24 +354,12 @@ final class SnapshotManager(
     } else None // lost the CAS to a concurrent writer: caller may retry
   }
 
-  /** Manifest-list size that triggers a merge at commit time
-    * (reference: CoreOptions manifest.merge-min-count +
-    * ManifestFileMerger.merge — without this, planning metadata grows
-    * O(all commits ever) and expiration can never reclaim it). */
-  private def manifestMergeMinCount: Int =
-    latestSchema().flatMap(_.options.get("manifest.merge-min-count"))
-      .map(_.toInt).getOrElse(30)
-
   /** Writer identity stamped on every snapshot this manager commits
     * (reference: Snapshot.commitUser — one UUID per writer instance;
     * `commit.user-prefix` prepends a deployment-chosen label so
-    * operators can attribute commits in $snapshots). Resolved lazily
-    * so the table's schema/options exist by first commit. */
-  private lazy val resolvedCommitUser: String = {
-    val base = java.util.UUID.randomUUID().toString
-    latestSchema().flatMap(_.options.get("commit.user-prefix"))
-      .map(p => s"$p-$base").getOrElse(base)
-  }
+    * operators can attribute commits in $snapshots), taken from the
+    * options of the schema a commit carries. */
+  private val instanceUser = java.util.UUID.randomUUID().toString
 
   /** Pinned writer identity for commitIdentifier DEDUP scoping
     * (reference: FileStoreCommitImpl filters committed snapshots by
@@ -382,8 +370,9 @@ final class SnapshotManager(
     * commits. Unset, commits stamp the per-instance UUID. */
   @volatile private var commitUserOverride: Option[String] = None
   def setCommitUser(user: String): Unit = { commitUserOverride = Some(user) }
-  private def effectiveCommitUser: String =
-    commitUserOverride.getOrElse(resolvedCommitUser)
+  private def effectiveCommitUser(opts: Map[String, String]): String =
+    commitUserOverride.getOrElse(
+      opts.get("commit.user-prefix").fold(instanceUser)(p => s"$p-$instanceUser"))
 
   // ---- commit ---------------------------------------------------------
 
@@ -431,24 +420,25 @@ final class SnapshotManager(
     // without row tracking the delta manifest is attempt-invariant and
     // written once; with it the entries depend on the CAS base, so the
     // manifest is (re)written inside the loop when the base moves
-    // (manifests orphaned by lost races are swept by remove_orphan_files)
-    var manifestName: String = if (assignRowIds) null else writeManifest(entries)
+    // (manifests orphaned by lost races are swept by remove_orphan_files).
+    // Every option the commit honours comes from the schema version it
+    // commits — resolved ONCE, not per lost race.
+    val opts = schema(schemaId).options
+    val user = effectiveCommitUser(opts)
+    var manifestName: String = if (assignRowIds) null else writeManifest(entries, opts)
     var manifestBase: Long = -1L
     val deltaRows = entries.iterator
       .map(e => if (e.kind == "ADD") e.file.rowCount else -e.file.rowCount)
       .sum
-    val effRetries = if (maxRetries > 0) maxRetries else commitMaxRetriesProvider()
-    // retry-wait bounds resolved ONCE — re-reading the schema on every
-    // lost race would add IO exactly when the store is contended
-    val retryOpts = latestSchema().map(_.options).getOrElse(Map.empty)
-    val retryMinWait = retryOpts.get("commit.min-retry-wait")
+    val effRetries = if (maxRetries > 0) maxRetries else maxRetriesOf(opts)
+    val retryMinWait = opts.get("commit.min-retry-wait")
       .map(Meta.parseDurationMillis).getOrElse(10L)
-    val retryMaxWait = retryOpts.get("commit.max-retry-wait")
+    val retryMaxWait = opts.get("commit.max-retry-wait")
       .map(Meta.parseDurationMillis).getOrElse(10000L)
     // `commit.timeout` (reference: CoreOptions COMMIT_TIMEOUT): total
     // wall-clock budget across retries — whichever of the count cap and
     // the time budget trips first ends the loop. Unset = count only.
-    val timeoutAt = retryOpts.get("commit.timeout")
+    val timeoutAt = opts.get("commit.timeout")
       .map(Meta.parseDurationMillis)
       .map(System.currentTimeMillis() + _)
     var attempt = 0
@@ -469,7 +459,7 @@ final class SnapshotManager(
           if (e.kind == "ADD" && e.file.firstRowId.isEmpty)
             e.copy(file = e.file.copy(firstRowId = Some(assigned(e.file.fileName))))
           else e
-        })
+        }, opts)
         manifestBase = rowIdBase
       } else if (assignRowIds) {
         rowIdNext = rowIdBase + entries.iterator
@@ -486,7 +476,6 @@ final class SnapshotManager(
       // same-user snapshot at or below the incoming identifier decides
       // — O(other-writers' tail), never O(history) point reads.
       if (commitIdentifier >= 0) {
-        val user = effectiveCommitUser
         val it = snapshotIds.sorted.reverseIterator.map(snapshot)
           .filter(_.commitUser.contains(user))
           .dropWhile(_.commitIdentifier > commitIdentifier)
@@ -511,9 +500,8 @@ final class SnapshotManager(
       // checks the whole history. Opt-in, so a malformed value fails
       // LOUDLY: silently disabling a safety interlock is worse than a
       // refused commit.
-      latestSchema().flatMap(_.options.get("commit.strict-mode.last-safe-snapshot"))
+      opts.get("commit.strict-mode.last-safe-snapshot")
         .map(_.trim.toLong).foreach { safe =>
-          val user = effectiveCommitUser
           ((safe + 1) until nextId).foreach { id =>
             snapshotIfExists(id)
               .filterNot(_.commitUser.contains(user)).foreach { s =>
@@ -542,24 +530,27 @@ final class SnapshotManager(
       // (`manifest.full-compaction-threshold-size` — a FEW huge
       // manifests hurt planning as much as many small ones; sizes come
       // from a stat, never a read)
-      val bytesThreshold = manifestOpts
+      val bytesThreshold = opts
         .get("manifest.full-compaction-threshold-size")
         .map(Meta.parseBytes)
       def overBytes = bytesThreshold.exists { th =>
         fullList.iterator.map(manifestSize).sum > th
       }
+      // manifest.merge-min-count (reference: ManifestFileMerger.merge —
+      // without it planning metadata grows O(all commits ever) and
+      // expiration can never reclaim it)
+      val mergeMinCount = opts.get("manifest.merge-min-count").map(_.toInt).getOrElse(30)
       val manifests =
-        if (fullList.size < manifestMergeMinCount && commitKind != "COMPACT"
-            && !overBytes)
+        if (fullList.size < mergeMinCount && commitKind != "COMPACT" && !overBytes)
           fullList
-        else writeManifestChunked(foldEntries(fullList))
+        else writeManifestChunked(foldEntries(fullList), opts)
       val listName = writeManifestList(manifests)
       val snap = Snapshot(
         id = nextId,
         schemaId = schemaId,
         commitKind = commitKind,
         commitIdentifier = commitIdentifier,
-        commitUser = Some(effectiveCommitUser),
+        commitUser = Some(user),
         timeMillis = System.currentTimeMillis(),
         manifestList = listName,
         deltaManifest = Some(manifestName),
@@ -647,9 +638,6 @@ final class SnapshotManager(
       else s"commit failed after $effRetries retries")
   }
 
-  /** Drop snapshots older than the `retain` most recent ones and any
-    * data/manifest files no surviving snapshot references.
-    * (reference: ExpireSnapshotsImpl.java:49) */
   private def retainedDir = branch match {
     case Some(b) => s"$tablePath/branch/$b/changelog-retained"
     case None => s"$tablePath/changelog-retained"
@@ -664,17 +652,15 @@ final class SnapshotManager(
 
   /** Whether the schema options enable the decoupled changelog
     * lifetime; (maxCount, maxAgeMillis). */
-  private def changelogRetention: (Option[Int], Option[Long]) = {
-    val opts = latestSchema().map(_.options).getOrElse(Map.empty)
+  private def changelogRetention(opts: Map[String, String]): (Option[Int], Option[Long]) =
     (opts.get("changelog.num-retained.max").map(_.toInt),
       opts.get("changelog.time-retained").map(Meta.parseDurationMillis))
-  }
 
   /** Drop retained changelogs past the caps; delete their manifests
     * and files (exact-changelog files are referenced by nothing
     * else once the snapshot itself is gone). */
-  private def trimRetainedChangelogs(): Unit = {
-    val (maxN, maxAge) = changelogRetention
+  private def trimRetainedChangelogs(opts: Map[String, String]): Unit = {
+    val (maxN, maxAge) = changelogRetention(opts)
     val all = retainedChangelogs
     val cutoff = maxAge.map(System.currentTimeMillis() - _)
     val overCount = maxN.map(n => math.max(0, all.size - n)).getOrElse(0)
@@ -682,9 +668,7 @@ final class SnapshotManager(
     // CHANGELOG_NUM_RETAINED_MIN): the time cutoff never trims below
     // this floor — a lagging reader keeps at least min changelogs even
     // when they aged out
-    val minKeep = latestSchema()
-      .flatMap(_.options.get("changelog.num-retained.min"))
-      .map(_.toInt).getOrElse(0)
+    val minKeep = opts.get("changelog.num-retained.min").map(_.toInt).getOrElse(0)
     val drop = all.zipWithIndex.filter { case (r, i) =>
       i < overCount ||
         (cutoff.exists(r.timeMillis < _) && i < all.size - minKeep)
@@ -699,7 +683,11 @@ final class SnapshotManager(
     }
   }
 
-  def expireSnapshots(retain: Int): Seq[Long] = {
+  /** Drop snapshots older than the `retain` most recent ones and any
+    * data/manifest files no surviving snapshot references, under the
+    * table options `opts` (default: the current schema's).
+    * (reference: ExpireSnapshotsImpl.java:49) */
+  def expireSnapshots(retain: Int, opts: Map[String, String] = latestOptions): Seq[Long] = {
     val ids = snapshotIds
     if (ids.size <= retain) return Seq.empty
     // registered consumers still need snapshots after their offset
@@ -720,7 +708,7 @@ final class SnapshotManager(
       // (e.g. '10s') must degrade to unlimited with a WARN — throwing
       // here would wedge every subsequent write to the table. CREATE
       // also validates the option up front (GraftTable.create).
-      latestSchema().flatMap(_.options.get("snapshot.expire.limit"))
+      opts.get("snapshot.expire.limit")
         .flatMap { v =>
           val parsed = scala.util.Try(v.trim.toInt).toOption
           if (parsed.isEmpty)
@@ -755,7 +743,7 @@ final class SnapshotManager(
     // pairs outlive them when changelog retention is configured —
     // record them, protect their manifests/files from this sweep, then
     // trim by the changelog's own caps
-    val (clMaxN, clMaxAge) = changelogRetention
+    val (clMaxN, clMaxAge) = changelogRetention(opts)
     val clRetainOn = clMaxN.isDefined || clMaxAge.isDefined
     val clProtect: (Set[String], Set[String]) =
       if (!clRetainOn) (Set.empty, Set.empty)
@@ -794,7 +782,7 @@ final class SnapshotManager(
     deletedFiles.foreach(f => io.delete(s"$tablePath/$f"))
     dropManifests.filterNot(m => liveManifests.contains(m) || clProtect._2.contains(m))
       .foreach(m => io.delete(s"$manifestDir/$m"))
-    if (clRetainOn) trimRetainedChangelogs()
+    if (clRetainOn) trimRetainedChangelogs(opts)
     // `snapshot.clean-empty-directories`: partition directories whose
     // last data file this expire removed get swept (reference:
     // CoreOptions SNAPSHOT_CLEAN_EMPTY_DIRECTORIES — off by default;
@@ -802,8 +790,7 @@ final class SnapshotManager(
     // staging into one, so the sweep only removes ACTUALLY-empty dirs
     // and ignores failures). Only the parent dirs of just-deleted
     // files are examined — never a full table walk.
-    if (latestSchema().exists(_.options.get("snapshot.clean-empty-directories")
-        .contains("true"))) {
+    if (opts.get("snapshot.clean-empty-directories").contains("true")) {
       deletedFiles.flatMap { f =>
         val i = f.lastIndexOf('/')
         if (i <= 0) None else Some(f.substring(0, i))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Meta.TableSchema
 import graft.table.GraftTable
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog._
@@ -134,11 +135,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .toArray
   }
 
-  private def loadGraft(ident: Identifier): GraftTable = {
-    if (!GraftTable.exists(tablePath(ident)))
+  /** Metadata IO of the tables this catalog loads. */
+  protected def fileIO: graft.core.FileIO = new graft.core.LocalFileIO
+
+  private def loadGraft(ident: Identifier): GraftTable =
+    try GraftTable.load(spark, tablePath(ident), fileIO)
+    catch { case _: IllegalArgumentException =>
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    GraftTable.load(spark, tablePath(ident))
-  }
+    }
 
   private def formatMarkerPath(ident: Identifier): java.nio.file.Path =
     java.nio.file.Paths.get(tablePath(ident), "format-table.json")
@@ -280,10 +284,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       if (suffix.startsWith("branch_")) {
         val bName = suffix.stripPrefix("branch_")
         require(gt.branches.contains(bName), s"no such branch: $bName")
-        val bt = gt.branchTable(bName)
-        return if (bt.isPrimaryKeyTable)
-          new GraftSparkTable(bt, snapshot = None, guardFor(ident))
-        else new GraftAppendSparkTable(bt, snapshot = None, guardFor(ident))
+        return GraftSparkTable(gt.branchTable(bName), guard = guardFor(ident))
       }
       val dfFn: () => DataFrame = suffix match {
         case "snapshots" => () => gt.systemSnapshots
@@ -317,12 +318,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         else _ => None
       new GraftSystemTable(s"${gt.path}$$$suffix", dfFn, optsFn)
     } else {
-      val gt = loadGraft(ident)
-      // append tables additionally support group-based row-level SQL
-      // (UPDATE / MERGE / non-translatable DELETE via copy-on-write)
-      if (gt.isPrimaryKeyTable)
-        new GraftSparkTable(gt, snapshot = None, guardFor(ident))
-      else new GraftAppendSparkTable(gt, snapshot = None, guardFor(ident))
+      GraftSparkTable(loadGraft(ident), guard = guardFor(ident))
     }
   }
 
@@ -336,19 +332,18 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .orElse(version.toLongOption)
       .getOrElse {
         if (gt.branches.contains(version))
-          return new GraftSparkTable(gt.branchTable(version), snapshot = None,
-            guardFor(ident))
+          return GraftSparkTable(gt.branchTable(version), guard = guardFor(ident))
         throw new IllegalArgumentException(
           s"VERSION AS OF '$version': not a snapshot id, tag or branch")
       }
-    new GraftSparkTable(gt, snapshot = Some(snapshotId), guardFor(ident))
+    GraftSparkTable(gt, Some(snapshotId), guardFor(ident))
   }
 
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     val gt = loadGraft(ident)
     // DSv2 passes micros; snapshots record millis
     val id = gt.sm.snapshotIdAtTime(timestamp / 1000)
-    new GraftSparkTable(gt, snapshot = id.orElse(Some(-1L)), guardFor(ident))
+    GraftSparkTable(gt, id.orElse(Some(-1L)), guardFor(ident))
   }
 
   override def createTable(
@@ -405,7 +400,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       TableCatalog.PROP_EXTERNAL)
     val gt = GraftTable.create(spark, tablePath(ident), schema,
       partitionKeys = partitionKeys, primaryKeys = primaryKeys, options = options)
-    new GraftSparkTable(gt, None)
+    GraftSparkTable(gt)
   }
 
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
@@ -459,7 +454,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       val gt = loadGraft(ident) // reload: prior change bumped the schema
       apply1(gt, c)
     }
-    new GraftSparkTable(loadGraft(ident), None)
+    GraftSparkTable(loadGraft(ident))
   }
 
   private def loadRehearsal(path: String): graft.table.GraftTable =
@@ -602,7 +597,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * overwrite, and filter-based SQL DELETE routed to the library's
   * three-tier delete (metadata-only / deletion-vector / rewrite). */
 class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long],
-    guard: String => Unit = _ => ())
+    guard: String => Unit, private[sources] val sch: TableSchema)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
@@ -620,7 +615,7 @@ class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long
   // numbers) round-trip exactly.
 
   override lazy val partitionSchema: StructType = StructType(
-    gt.schema.partitionKeys.map(k => schema()(k)))
+    sch.partitionKeys.map(k => schema()(k)))
 
   private def partToRow(p: Map[String, String]): org.apache.spark.sql.catalyst.InternalRow =
     org.apache.spark.sql.catalyst.InternalRow.fromSeq(
@@ -699,7 +694,7 @@ class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long
     * SpecialFields._ROW_ID surfaced through its Spark catalog). */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (!gt.rowTracking) Array.empty
+    if (!GraftTable.tracksRows(sch)) Array.empty
     else Array(new org.apache.spark.sql.connector.catalog.MetadataColumn {
       override def name(): String = GraftTable.RowIdCol
       override def dataType(): org.apache.spark.sql.types.DataType =
@@ -718,12 +713,12 @@ class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long
   }
 
   override def name(): String = gt.path
-  override def schema(): StructType = gt.schema.toStruct
+  private lazy val struct = sch.toStruct
+  override def schema(): StructType = struct
   override def partitioning(): Array[Transform] =
-    gt.schema.partitionKeys.map(k =>
+    sch.partitionKeys.map(k =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(k)).toArray
-  override def properties(): util.Map[String, String] =
-    gt.schema.options.asJava
+  override def properties(): util.Map[String, String] = sch.options.asJava
 
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
@@ -736,7 +731,7 @@ class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long
     // iterate the CaseInsensitiveStringMap itself: its keys are
     // lowercase-normalized, so option("Scan.Max-Rows-Per-Trigger", ...)
     // still matches the lowercase lookups downstream
-    new GraftScanBuilder(gt, snapshot, schema(),
+    new GraftScanBuilder(gt, sch, snapshot,
       options.entrySet().asScala.map(e => e.getKey -> e.getValue).toMap)
   }
 
@@ -746,12 +741,17 @@ class GraftSparkTable(private[sources] val gt: GraftTable, snapshot: Option[Long
   }
 }
 
-class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType,
-    readOptions: Map[String, String] = Map.empty)
+class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long],
+    readOptions: Map[String, String])
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit
     with org.apache.spark.sql.connector.read.SupportsPushDownTopN
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+
+  /** A builder on the table's current schema version, whose struct is `full`. */
+  def this(gt: GraftTable, snapshot0: Option[Long], full: StructType,
+      readOptions: Map[String, String] = Map.empty) =
+    this(gt, gt.schema, snapshot0, readOptions)
 
   /** Time travel via READ OPTIONS (reference: CoreOptions
     * scan.snapshot-id / scan.tag-name / scan.timestamp-millis, the
@@ -804,6 +804,7 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
       .flatMap(_ => gt.sm.snapshotIds.reverse.find(i =>
         gt.sm.snapshot(i).commitKind == graft.core.Meta.KindCompact)))
 
+  private val full: StructType = sch.toStruct
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = full
 
@@ -898,7 +899,7 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
     // manifest stats describe STORED values; a column-patch overlay
     // can change any of them, so MIN/MAX (and defensively COUNT) must
     // run as a real scan on patched tables
-    if (gt.hasColumnPatches()) return false
+    if (gt.hasColumnPatches(sch = sch)) return false
     val entries = gt.sm.latestSnapshot().map(gt.sm.liveEntries).getOrElse(Seq.empty)
     val dvPresent = entries.exists(_.file.dvFile.isDefined)
     val values = agg.aggregateExpressions.toSeq.map {
@@ -1009,17 +1010,16 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
         // pin must error here too, not answer from latest manifests
         GraftScanUtil.assertBatchPin(gt, readOptions)
         new GraftLocalScan(schema, rows)
-      case None if gt.rowTracking &&
+      case None if GraftTable.tracksRows(sch) &&
           required.fieldNames.contains(GraftTable.RowIdCol) => rowIdScan()
       case None =>
         // _ROW_ID conjuncts can reach pushFilters even when the column
         // itself is projected away; they mean nothing to file stats
         val cond = GraftFilters.toCondition(
           pushed.filterNot(_.references.contains(GraftTable.RowIdCol)))
-        val sch = gt.schema
         val entries0 =
           if (snapshot.contains(-1L)) Seq.empty
-          else gt.planEntries(cond, snapshot)
+          else gt.planEntries(cond, snapshot, sch)
         // `scan.file-creation-time-millis`: keep only files written
         // after the cutoff — snapshot-independent, imprecise by design
         // (compaction re-stamps; reference: CoreOptions
@@ -1034,14 +1034,14 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
         def allParquet = entries.forall(_.file.fileName.endsWith(".parquet"))
         // column patches overlay values at read — the raw-file native
         // scan cannot merge them, so patched tables use the fallback
-        val nativeEligible = !gt.isPrimaryKeyTable &&
+        val nativeEligible = sch.primaryKeys.isEmpty &&
           entries.forall(e => e.file.dvFile.isEmpty && e.file.schemaId == sch.id) &&
-          allParquet && !gt.hasColumnPatches(snapshot.filter(_ >= 0))
+          allParquet && !gt.hasColumnPatches(snapshot.filter(_ >= 0), sch)
         // a FULLY-COMPACTED pk table (one level>0 file per bucket, no
         // DVs) is already merged on disk: read raw through the native
         // scan, and report bucket partitioning so PK-PK joins between
         // identically-bucketed tables skip the shuffle
-        val compactedPk = gt.isPrimaryKeyTable && entries.nonEmpty &&
+        val compactedPk = sch.primaryKeys.nonEmpty && entries.nonEmpty &&
           entries.forall(e => e.file.level > 0 && e.file.dvFile.isEmpty &&
             e.file.schemaId == sch.id) &&
           entries.groupBy(e => (e.partition, e.bucket)).forall(_._2.size <= 1) &&
@@ -1055,7 +1055,7 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
         if (nativeEligible) {
           // top-n / limit pushdown: keep only files that can contribute
           val limited = (topN, limit) match {
-            case (Some((c, desc)), Some(n)) => gt.topNEntries(entries, c, n, desc)
+            case (Some((c, desc)), Some(n)) => gt.topNEntries(entries, c, n, desc, sch)
             case (None, Some(n)) =>
               // plain limit: stop planning once enough rows are covered
               var acc = 0L
@@ -1068,123 +1068,115 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
           // tables. Skipped when topN/limit trimmed the entry set (a
           // partial bucket would misreport the partitioning).
           if (sch.isBucketedAppend && topN.isEmpty && limit.isEmpty)
-            new GraftBucketedScan(gt, limited, dataSchema, readData, readPart,
+            new GraftBucketedScan(gt, sch, limited, dataSchema, readData, readPart,
               dataFilters, required, sch.numBuckets, sch.bucketKeys,
               readOptions)
-          else new GraftBatchScan(gt, limited, dataSchema, readData, readPart,
+          else new GraftBatchScan(gt, sch, limited, dataSchema, readData, readPart,
             dataFilters, required, readOptions)
         } else if (compactedPk && !sch.isDynamicBucket) {
-          new GraftBucketedScan(gt, entries, dataSchema, readData, readPart,
+          new GraftBucketedScan(gt, sch, entries, dataSchema, readData, readPart,
             dataFilters, required, sch.effectiveBuckets, sch.bucketKeys,
             readOptions)
         } else if (compactedPk) {
-          new GraftBatchScan(gt, entries, dataSchema, readData, readPart,
+          new GraftBatchScan(gt, sch, entries, dataSchema, readData, readPart,
             dataFilters, required, readOptions)
         } else v1Fallback(cond)
     }
   }
 
+  /** V1 scan over the DataFrame `rows` plans when Spark asks for the
+    * relation's rows. Every pushed filter stays residual (Spark
+    * re-applies them), so the relation only projects to the required
+    * columns — a `dummy` column when none is required. */
+  private class DataFrameScan(rows: () => DataFrame) extends V1Scan {
+    override def readSchema(): StructType = required
+    override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
+        with org.apache.spark.sql.sources.TableScan](context: SQLContext): T =
+      new org.apache.spark.sql.sources.BaseRelation
+          with org.apache.spark.sql.sources.TableScan {
+        override def sqlContext: SQLContext = context
+        override def schema: StructType = required
+        override def buildScan(): RDD[Row] = {
+          val df = rows()
+          (if (required.fieldNames.isEmpty) df.select(lit(1).as("dummy"))
+            else df.select(prunedProjection(df.schema): _*)).rdd
+        }
+      }.asInstanceOf[T]
+  }
+
+  /** V1 scan over a prepared DataFrame (incremental reads). */
+  private def dfScan(df: DataFrame): Scan = new DataFrameScan(() => df)
+
   /** `_ROW_ID` scan: conjunct bounds on the row id prune files by their
     * [firstRowId, firstRowId + rowCount) extent before any is opened;
     * data-column filters prune via stats as usual. Served through the
-    * V1 path with the id computed per row (base + position). All pushed
-    * filters stay residual, so the scan only needs to return a
-    * superset. */
-  private def rowIdScan(): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan](context: SQLContext): T = {
-      val cols = required.fieldNames
-      new org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] = {
-          GraftScanUtil.assertBatchPin(gt, readOptions)
-          val (idFilters, dataFilters) =
-            pushed.partition(_.references.contains(GraftTable.RowIdCol))
-          val cond = GraftFilters.toCondition(dataFilters)
-          // conjunct id bounds → file-extent pruning window [lo, hi)
-          var lo = Long.MinValue
-          var hi = Long.MaxValue
-          def asLong(v: Any): Option[Long] = v match {
-            case n: java.lang.Number => Some(n.longValue)
-            case _ => None
-          }
-          def excl(v: Long): Long = if (v == Long.MaxValue) v else v + 1
-          idFilters.foreach {
-            case org.apache.spark.sql.sources.GreaterThan(_, v) =>
-              asLong(v).foreach(x => lo = math.max(lo, excl(x)))
-            case org.apache.spark.sql.sources.GreaterThanOrEqual(_, v) =>
-              asLong(v).foreach(x => lo = math.max(lo, x))
-            case org.apache.spark.sql.sources.LessThan(_, v) =>
-              asLong(v).foreach(x => hi = math.min(hi, x))
-            case org.apache.spark.sql.sources.LessThanOrEqual(_, v) =>
-              asLong(v).foreach(x => hi = math.min(hi, excl(x)))
-            case org.apache.spark.sql.sources.EqualTo(_, v) =>
-              asLong(v).foreach { x =>
-                lo = math.max(lo, x); hi = math.min(hi, excl(x))
-              }
-            case _ => // disjunctions etc: no window narrowing
-          }
-          val planned = (snapshot match {
-            case Some(id) if id < 0 => Seq.empty
-            case s => gt.planEntries(cond, s)
-          }).filter(e => e.file.firstRowId.exists(f =>
-            f < hi && f + e.file.rowCount > lo))
-          // same file-creation-time cutoff the native path honors —
-          // _ROW_ID projection must not silently widen the read
-          val entries = readOptions.get("scan.file-creation-time-millis")
-            .map(_.toLong) match {
-            case Some(ts) => planned.filter(_.file.creationTime.forall(_ > ts))
-            case None => planned
-          }
-          // the patch overlay rides on top of the pruned row-id read
-          val df = gt.rowIdReadPatched(entries, snapshot.filter(_ >= 0))
-            .filter(cond)
-          val pruned =
-            if (cols.isEmpty) df.select(lit(1).as("dummy"))
-            else df.select(prunedProjection(df.schema): _*)
-          pruned.rdd
-        }
-      }.asInstanceOf[T]
+    * V1 path with the id computed per row (base + position). */
+  private def rowIdScan(): Scan = new DataFrameScan(() => {
+    GraftScanUtil.assertBatchPin(gt, readOptions)
+    val (idFilters, dataFilters) =
+      pushed.partition(_.references.contains(GraftTable.RowIdCol))
+    val cond = GraftFilters.toCondition(dataFilters)
+    // conjunct id bounds → file-extent pruning window [lo, hi)
+    var lo = Long.MinValue
+    var hi = Long.MaxValue
+    def asLong(v: Any): Option[Long] = v match {
+      case n: java.lang.Number => Some(n.longValue)
+      case _ => None
     }
-  }
+    def excl(v: Long): Long = if (v == Long.MaxValue) v else v + 1
+    idFilters.foreach {
+      case org.apache.spark.sql.sources.GreaterThan(_, v) =>
+        asLong(v).foreach(x => lo = math.max(lo, excl(x)))
+      case org.apache.spark.sql.sources.GreaterThanOrEqual(_, v) =>
+        asLong(v).foreach(x => lo = math.max(lo, x))
+      case org.apache.spark.sql.sources.LessThan(_, v) =>
+        asLong(v).foreach(x => hi = math.min(hi, x))
+      case org.apache.spark.sql.sources.LessThanOrEqual(_, v) =>
+        asLong(v).foreach(x => hi = math.min(hi, excl(x)))
+      case org.apache.spark.sql.sources.EqualTo(_, v) =>
+        asLong(v).foreach { x =>
+          lo = math.max(lo, x); hi = math.min(hi, excl(x))
+        }
+      case _ => // disjunctions etc: no window narrowing
+    }
+    val planned = (snapshot match {
+      case Some(id) if id < 0 => Seq.empty
+      case s => gt.planEntries(cond, s, sch)
+    }).filter(e => e.file.firstRowId.exists(f =>
+      f < hi && f + e.file.rowCount > lo))
+    // same file-creation-time cutoff the native path honors —
+    // _ROW_ID projection must not silently widen the read
+    val entries = readOptions.get("scan.file-creation-time-millis")
+      .map(_.toLong) match {
+      case Some(ts) => planned.filter(_.file.creationTime.forall(_ > ts))
+      case None => planned
+    }
+    // the patch overlay rides on top of the pruned row-id read
+    gt.rowIdReadPatched(entries, snapshot.filter(_ >= 0), sch).filter(cond)
+  })
 
   /** Merge-on-read (PK) tables, deletion vectors and mixed-schema file
-    * sets read through the library's DataFrame plan via the V1
-    * fallback — the merge itself is a Spark plan, so codegen still
-    * covers everything above the row conversion. */
-  /** V1 scan over a prepared DataFrame (incremental reads): Spark
-    * re-applies every filter (all stay residual), so the scan only
-    * projects to the required columns. */
-  private def dfScan(df: DataFrame): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan](context: SQLContext): T = {
-      new org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] = {
-          val pruned =
-            if (required.fieldNames.isEmpty) df.select(lit(1).as("dummy"))
-            else df.select(prunedProjection(df.schema): _*)
-          pruned.rdd
-        }
-      }.asInstanceOf[T]
+    * sets read through the library's DataFrame plan — the merge itself
+    * is a Spark plan, so codegen still covers everything above the row
+    * conversion. */
+  private def v1Fallback(cond: Column): Scan = new DataFrameScan(() => {
+    GraftScanUtil.assertBatchPin(gt, readOptions)
+    val fileCutoff =
+      readOptions.get("scan.file-creation-time-millis").map(_.toLong)
+    snapshot match {
+      case Some(id) if id < 0 => gt.read.limit(0) // before first snapshot
+      case Some(id) => gt.versionAsOf(id).filter(cond)
+      case None if fileCutoff.isDefined =>
+        gt.scanFilesCreatedAfter(cond, fileCutoff.get, sch)
+      case None => gt.scan(cond, sch)
     }
-  }
-
-  private def v1Fallback(cond: Column): Scan = new V1Scan
-      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+  }) with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
     /** streaming read (offset = snapshot id) shares the native
       * micro-batch source: PK delta files surface upsert records with
       * hidden columns projected away. */
     override def toMicroBatchStream(checkpointLocation: String)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-      val sch = gt.schema
       val partCols = sch.partitionKeys.toSet
       val dataSchema = StructType(full.fields.filterNot(f => partCols(f.name)))
       val readData = StructType(required.fields.filterNot(f => partCols(f.name)))
@@ -1205,33 +1197,6 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
           java.util.OptionalLong.of(entries.map(e =>
             e.file.rowCount - e.file.dvCardinality.getOrElse(0L)).sum)
       }
-
-    override def readSchema(): StructType = required
-    override def toV1TableScan[T <: org.apache.spark.sql.sources.BaseRelation
-        with org.apache.spark.sql.sources.TableScan](context: SQLContext): T = {
-      val cols = required.fieldNames
-      new org.apache.spark.sql.sources.BaseRelation
-          with org.apache.spark.sql.sources.TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = required
-        override def buildScan(): RDD[Row] = {
-          GraftScanUtil.assertBatchPin(gt, readOptions)
-          val fileCutoff =
-            readOptions.get("scan.file-creation-time-millis").map(_.toLong)
-          val base = snapshot match {
-            case Some(id) if id < 0 => gt.read.limit(0) // before first snapshot
-            case Some(id) => gt.versionAsOf(id).filter(cond)
-            case None if fileCutoff.isDefined =>
-              gt.scanFilesCreatedAfter(cond, fileCutoff.get)
-            case None => gt.scan(cond)
-          }
-          val pruned =
-            if (cols.isEmpty) base.select(lit(1).as("dummy"))
-            else base.select(prunedProjection(base.schema): _*)
-          pruned.rdd
-        }
-      }.asInstanceOf[T]
-    }
   }
 }
 
@@ -1241,8 +1206,8 @@ class GraftScanBuilder(gt: GraftTable, snapshot0: Option[Long], full: StructType
   * library API; filter-translatable DELETEs still take the three-tier
   * metadata route through SupportsDelete). */
 class GraftAppendSparkTable(gt0: GraftTable, snapshot: Option[Long],
-    guard0: String => Unit = _ => ())
-    extends GraftSparkTable(gt0, snapshot, guard0)
+    guard0: String => Unit, sch0: TableSchema)
+    extends GraftSparkTable(gt0, snapshot, guard0, sch0)
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
   override def newRowLevelOperationBuilder(
@@ -1252,9 +1217,19 @@ class GraftAppendSparkTable(gt0: GraftTable, snapshot: Option[Long],
   }
 }
 
-/** Read-only DSv2 table over a metadata DataFrame (the `$`-suffix
-  * system tables). The DataFrame is rebuilt per scan so SQL always
-  * sees current metadata. */
+object GraftSparkTable {
+  /** A handle on `gt` bound to its current schema version, resolved
+    * once here. Current-state handles of append tables also serve
+    * row-level SQL; time travel (`snapshot` set) reads only. */
+  def apply(gt: GraftTable, snapshot: Option[Long] = None,
+      guard: String => Unit = _ => ()): GraftSparkTable = {
+    val sch = gt.schema
+    if (sch.primaryKeys.isEmpty && snapshot.isEmpty)
+      new GraftAppendSparkTable(gt, snapshot, guard, sch)
+    else new GraftSparkTable(gt, snapshot, guard, sch)
+  }
+}
+
 /** Marker metadata for a snapshot-less format table (format-table.json
   * in the table directory). */
 case class FormatTableMeta(
@@ -1358,6 +1333,9 @@ class GraftFormatTable(
     }
 }
 
+/** Read-only DSv2 table over a metadata DataFrame (the `$`-suffix
+  * system tables). The DataFrame is rebuilt per scan so SQL always
+  * sees current metadata. */
 class GraftSystemTable(tableName: String, dfFn: () => DataFrame,
     optsFn: CaseInsensitiveStringMap => Option[DataFrame] = _ => None)
     extends Table with SupportsRead {

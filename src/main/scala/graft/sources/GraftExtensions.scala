@@ -135,7 +135,7 @@ case class GraftUpsertRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def upsertOf(r: DataSourceV2Relation): Option[(Seq[String], Seq[String])] =
     r.table match {
-      case g: GraftSparkTable if g.gt.schema.primaryKeys.isEmpty =>
+      case g: GraftSparkTable if g.sch.primaryKeys.isEmpty =>
         g.gt.schema.options.get("upsert-key").map { uk =>
           (uk.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
             g.gt.schema.sequenceFields)

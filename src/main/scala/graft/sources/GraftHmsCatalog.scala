@@ -745,8 +745,7 @@ class GraftHmsCatalog extends GraftCatalog {
           HmsBridge.dbName(ident.namespace()), ident.name()).getOrElse(throw e)
         if (!GraftTable.exists(path)) throw e
         val gt = GraftTable.load(org.apache.spark.sql.SparkSession.active, path)
-        if (gt.isPrimaryKeyTable) new GraftSparkTable(gt, snapshot = None)
-        else new GraftAppendSparkTable(gt, snapshot = None)
+        GraftSparkTable(gt)
     }
   }
 }

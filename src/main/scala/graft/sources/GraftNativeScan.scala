@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Meta.ManifestEntry
+import graft.core.Meta.{ManifestEntry, TableSchema}
 import graft.table.GraftTable
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -232,15 +232,23 @@ private[sources] class PermutedReaderFactory(
   * .planInputPartitions over DataSplits, with Spark's reader). */
 class GraftBatchScan(
     gt: GraftTable,
+    sch: TableSchema,            // the schema version the scan was planned on
     initialEntries: Seq[ManifestEntry],
     dataSchema: StructType,      // physical file columns (no partition cols)
     readDataSchema: StructType,  // pruned physical columns
     partitionSchema: StructType, // pruned partition columns
     filters: Array[Filter],
     required: StructType,        // pruned schema in the RELATION's order
-    readOptions: Map[String, String] = Map.empty) // per-query reader options
+    readOptions: Map[String, String]) // per-query reader options
     extends Scan with Batch with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+
+  /** A scan on the table's current schema version. */
+  def this(gt: GraftTable, initialEntries: Seq[ManifestEntry], dataSchema: StructType,
+      readDataSchema: StructType, partitionSchema: StructType, filters: Array[Filter],
+      required: StructType, readOptions: Map[String, String] = Map.empty) =
+    this(gt, gt.schema, initialEntries, dataSchema, readDataSchema, partitionSchema,
+      filters, required, readOptions)
 
   private def spark = gt.spark
 
@@ -338,14 +346,14 @@ class GraftBatchScan(
     // (it sorts serialized partition BinaryRows).
     val planned =
       if (readOptions.get("scan.plan-sort-partition")
-          .orElse(gt.schema.options.get("scan.plan-sort-partition"))
+          .orElse(sch.options.get("scan.plan-sort-partition"))
           .contains("true"))
         entries.sortBy(e =>
           partitionSchema.fieldNames.map(e.partition.getOrElse(_, "")).mkString("\u0000")) // NUL: unambiguous join
       else entries
     GraftScanUtil.filePartitions(spark, gt.path, planned, partitionSchema,
-      GraftScanUtil.splitTargetSize(readOptions, gt.schema.options),
-      GraftScanUtil.splitOpenFileCost(readOptions, gt.schema.options))
+      GraftScanUtil.splitTargetSize(readOptions, sch.options),
+      GraftScanUtil.splitOpenFileCost(readOptions, sch.options))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -425,6 +433,7 @@ object GraftScanMetrics {
   * stable between outputPartitioning() and planInputPartitions(). */
 class GraftBucketedScan(
     gt: GraftTable,
+    sch: TableSchema,
     initialEntries: Seq[ManifestEntry],
     dataSchema: StructType,
     readDataSchema: StructType,
@@ -437,7 +446,7 @@ class GraftBucketedScan(
     // still honors per-query streaming options (scan.mode,
     // scan.snapshot-id, admission caps) on bucketed PK tables
     readOptions: Map[String, String] = Map.empty)
-    extends GraftBatchScan(gt, initialEntries, dataSchema, readDataSchema,
+    extends GraftBatchScan(gt, sch, initialEntries, dataSchema, readDataSchema,
       partitionSchema, filters, required, readOptions)
     with SupportsReportPartitioning {
 
@@ -754,7 +763,7 @@ class GraftMicroBatchStream(
       delta.filter(en => en.kind == "ADD" && !deleted.contains(en.file.fileName))
     }
     val base = full.toSeq.flatMap(c =>
-      gt.visibleEntries(sm.liveEntries(sm.snapshot(c))))
+      gt.visibleEntries(sm.liveEntries(sm.snapshot(c)), gt.schema))
     GraftScanUtil.filePartitions(gt.spark, gt.path, base ++ entries,
       partitionSchema,
       GraftScanUtil.splitTargetSize(readOptions, gt.schema.options),

@@ -531,8 +531,7 @@ class GraftRestCatalog extends TableCatalog with SupportsNamespaces {
           new graft.core.LocalFileIO(), uri, token,
           ident.namespace().mkString("/"), ident.name(), path))
       else GraftTable.load(spark, path)
-    if (gt.isPrimaryKeyTable) new GraftSparkTable(gt, snapshot = None)
-    else new GraftAppendSparkTable(gt, snapshot = None)
+    GraftSparkTable(gt)
   }
 
   override def createTable(

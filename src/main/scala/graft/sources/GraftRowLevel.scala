@@ -50,7 +50,7 @@ class GraftRowLevelOperation(
       override def pushedFilters(): Array[Filter] = pushed
       override def build(): Scan = {
         val sch = gt.schema
-        val entries = gt.planEntries(GraftFilters.toCondition(pushed))
+        val entries = gt.planEntries(GraftFilters.toCondition(pushed), sch = sch)
         require(entries.forall(e =>
           e.file.dvFile.isEmpty && e.file.schemaId == sch.id),
           "row-level SQL write over deletion vectors or mixed-schema " +
@@ -60,8 +60,8 @@ class GraftRowLevelOperation(
         val dataSchema = StructType(full.fields.filterNot(f => partCols(f.name)))
         val partSchema = StructType(full.fields.filter(f => partCols(f.name)))
         // file-granular pruning ONLY: no filters reach the reader
-        builtScan = new GraftBatchScan(gt, entries, dataSchema, dataSchema,
-          partSchema, Array.empty, full)
+        builtScan = new GraftBatchScan(gt, sch, entries, dataSchema, dataSchema,
+          partSchema, Array.empty, full, Map.empty)
         builtScan
       }
     }

@@ -329,7 +329,8 @@ object GraftStreaming {
       joinType: String = "left_outer",
       maxBroadcastBytes: Long = 64L << 20): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    val pk = dim.schema.primaryKeys
+    val dimSch = dim.schema
+    val pk = dimSch.primaryKeys
     val liveNow = dim.sm.latestSnapshot()
       .map(dim.sm.liveEntries).getOrElse(Seq.empty)
     if (pk.nonEmpty && pk.forall(keys.contains)) {
@@ -355,8 +356,8 @@ object GraftStreaming {
       partialBatchCache.filterInPlace { case (_, (t, df)) =>
         t.isAlive || { df.unpersist(); false } }
       val entries = dim.entriesForKeys(
-        pinned.select(pk.map(org.apache.spark.sql.functions.col): _*))
-      val slice = dim.mergedFromEntries(entries)
+        pinned.select(pk.map(org.apache.spark.sql.functions.col): _*), dimSch)
+      val slice = dim.mergedFromEntries(entries, dimSch)
       val estBytes = entries.map(_.file.fileSize).sum
       val bc = estBytes <= maxBroadcastBytes
       lastLookupStats = Some(LookupStats("partial", cacheHit = false,

@@ -69,40 +69,38 @@ final class GraftTable private (
     val path: String,
     val sm: SnapshotManager) {
 
+  /** The current schema version: a LIST of the schema directory. Each
+    * public operation resolves it once and passes it down. */
   def schema: TableSchema = sm.latestSchema().get
   def isPrimaryKeyTable: Boolean = schema.primaryKeys.nonEmpty
 
   /** Row tracking: every row gets a stable `_ROW_ID` (append tables
     * only — merge-on-read has no stable physical position). */
-  def rowTracking: Boolean = !isPrimaryKeyTable &&
-    schema.options.get(GraftTable.RowTrackingEnabled).contains("true")
+  def rowTracking: Boolean = GraftTable.tracksRows(schema)
 
-  private def struct: StructType = schema.toStruct
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
-  // per-commit Iceberg metadata export (reference: the commit-callback
-  // shape of IcebergCommitCallback.java:102). Best-effort by contract:
-  // SnapshotManager logs-and-continues if the export fails, so the
-  // graft commit itself never depends on the compat layer.
-  // CAS retry budget for commits issued without an explicit override,
-  // resolved against the CURRENT schema per commit so setOption takes
-  // effect immediately (reference: CoreOptions COMMIT_MAX_RETRIES)
-  sm.commitMaxRetriesProvider = () => sm.latestSchema()
-    .flatMap(_.options.get("commit.max-retries")).map(_.toInt).getOrElse(20)
-
+  // per-commit hook, driven by the options of the schema version the
+  // commit carries. The Iceberg metadata export (reference: the
+  // commit-callback shape of IcebergCommitCallback.java:102) is
+  // best-effort by contract: SnapshotManager logs-and-continues if the
+  // export fails, so the graft commit itself never depends on the
+  // compat layer.
   sm.onCommit { committedId =>
-    if (schema.options.get(GraftTable.IcebergEnabled).contains("true"))
+    val sch = sm.schema(sm.snapshot(committedId).schemaId)
+    val opts = sch.options
+    if (opts.get(GraftTable.IcebergEnabled).contains("true"))
       graft.sources.IcebergCompat.sync(this)
     // periodic auto tags ride the same per-commit hook (reference:
     // TagAutoManager invoked from the table commit path). createTag is
     // a metadata write, not a commit — no re-entrancy.
-    if (schema.options.get(GraftTable.TagAutoMode).exists(_ != "none"))
+    if (opts.get(GraftTable.TagAutoMode).exists(_ != "none"))
       tagAutoCreate()
     // retention-stamped tags expire on the same cadence (reference:
     // TagAutoManager.run → TagTimeExpire). Gated on the options that
     // can produce retained tags, so plain tables pay no tag listing.
-    if (schema.options.contains("tag.default-time-retained") ||
-        schema.options.get(GraftTable.TagAutoMode).exists(_ != "none"))
+    if (opts.contains("tag.default-time-retained") ||
+        opts.get(GraftTable.TagAutoMode).exists(_ != "none"))
       expireTimedOutTags()
     // automatic snapshot expiration — strictly OPT-IN via the
     // retention options (reference expires on every commit by default;
@@ -114,41 +112,41 @@ final class GraftTable private (
     // commit rates a deep retention walk otherwise taxes every commit.
     // One pending run per table: commits landing while a run is queued
     // coalesce into it (expiry is idempotent over the latest state).
-    if (schema.options.get("snapshot.expire.execution-mode").contains("async"))
-      GraftTable.queueAsyncExpire(path, () => { autoExpireSnapshots(); () })
-    else autoExpireSnapshots()
+    if (opts.get("snapshot.expire.execution-mode").contains("async"))
+      GraftTable.queueAsyncExpire(path, () => { autoExpireSnapshots(sch); () })
+    else autoExpireSnapshots(sch)
     // automatic partition expiry rides the commit hook when
     // partition.expiration-time is set (the interval throttle inside
     // also stops the expiry's own DELETE commits from recursing)
-    if (schema.options.contains("partition.expiration-time"))
-      autoExpirePartitions()
+    if (opts.contains("partition.expiration-time"))
+      autoExpirePartitions(sch)
     // idle-partition done markers ride the same hook when configured
     // (each new commit re-evaluates which partitions went quiet)
-    if (schema.options.contains("partition.idle-time-to-done"))
+    if (opts.contains("partition.idle-time-to-done"))
       markIdlePartitionsDone()
     // stale-consumer expiry (reference: CoreOptions
     // CONSUMER_EXPIRATION_TIME → ConsumerManager.expire at commit):
     // a consumer that stopped committing progress must eventually stop
     // pinning snapshots, or retention can never reclaim them
-    if (schema.options.contains("consumer.expiration-time"))
-      expireStaleConsumers()
+    if (opts.contains("consumer.expiration-time"))
+      expireStaleConsumers(sch)
     // Hive Metastore partition sync (reference: the metastore client
     // callbacks behind `metastore.partitioned-table`) — the HMS
     // coordinates were stamped into the options by GraftHmsCatalog.
     // DELTA-ONLY: registers just this commit's touched partitions via
     // a bounded seen-cache (usually zero metastore calls); drops ride
     // the partition-expire paths and CALL sys.sync_hms_partitions.
-    if (schema.options.get("metastore.partitioned-table").contains("true"))
+    if (opts.get("metastore.partitioned-table").contains("true"))
       graft.sources.HmsBridge.syncCommitDelta(this, committedId)
     // `full-compaction.delta-commits`: once N delta commits pile on
     // top of the last full compaction, trigger one (reference:
     // CoreOptions FULL_COMPACTION_DELTA_COMMITS — constantly triggered
     // after delta commits). Guarded against re-entrancy: the compact's
     // own COMPACT commit re-enters this hook and must not recurse.
-    schema.options.get("full-compaction.delta-commits")
+    opts.get("full-compaction.delta-commits")
       .map(_.toInt).filter(_ > 0).foreach { n =>
         val snap = sm.snapshot(committedId)
-        if (!writeOnly && snap.commitKind != Meta.KindCompact &&
+        if (!writeOnly(sch) && snap.commitKind != Meta.KindCompact &&
             !inAutoFullCompact.get()) {
           // bounded walk: reads at most n snapshot files, newest-first
           val since = sm.snapshotIds.filter(_ <= committedId)
@@ -164,12 +162,12 @@ final class GraftTable private (
     // (reference: CoreOptions COMMIT_CALLBACKS + CommitCallback, with
     // `commit.callback.<class>.param` as the optional ctor string).
     // Failures log — the snapshot is already durable.
-    schema.options.get("commit.callbacks").toSeq
+    opts.get("commit.callbacks").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       .foreach { cls =>
         try {
           val c = Class.forName(cls)
-          val param = schema.options.get(s"commit.callback.$cls.param")
+          val param = opts.get(s"commit.callback.$cls.param")
           val cb = param.map(pv =>
               scala.util.Try(c.getConstructor(classOf[String]).newInstance(pv)))
             .getOrElse(scala.util.Try(c.getConstructor().newInstance()))
@@ -197,8 +195,8 @@ final class GraftTable private (
     * but always keep at least the min (default 10) — tag/branch/
     * consumer protection comes from [[SnapshotManager.expireSnapshots]]
     * itself. No-op unless a retention option is set. */
-  private[graft] def autoExpireSnapshots(): Seq[Long] = {
-    val opts = schema.options
+  private[graft] def autoExpireSnapshots(sch: TableSchema): Seq[Long] = {
+    val opts = sch.options
     val maxN = opts.get("snapshot.num-retained.max").map(_.toInt)
     val timeMs = opts.get("snapshot.time-retained")
       .map(GraftTable.parseDurationMillis)
@@ -216,7 +214,7 @@ final class GraftTable private (
     val effMin = math.min(minN, maxAllowed) // max is the hard cap
     val retain = math.max(1,
       math.max(math.min(freshCount, maxAllowed), math.min(effMin, ids.size)))
-    if (retain >= ids.size) Seq.empty else sm.expireSnapshots(retain)
+    if (retain >= ids.size) Seq.empty else sm.expireSnapshots(retain, opts)
   }
   // ================= write =================
 
@@ -277,28 +275,29 @@ final class GraftTable private (
   def write(df: DataFrame, commitIdentifier: Long = -1L): Long = {
     // CHAR/VARCHAR enforcement happens on the shared commit paths
     // (writeKinded / appendCommit), covering DML and CDC too
-    val in = applyColumnDefaults(df, schema)
+    val sch = schema
+    val in = applyColumnDefaults(df, sch)
     val id =
-      if (isPrimaryKeyTable) upsert(in, commitIdentifier)
-      else appendCommit(in, overwrite = false, commitIdentifier)
+      if (sch.primaryKeys.nonEmpty) upsert(in, sch, commitIdentifier)
+      else appendCommit(in, sch, overwrite = false, commitIdentifier)
     // `write-only` (reference: CoreOptions WRITE_ONLY): this writer
     // skips every write-coupled compaction — a dedicated compact job
     // owns maintenance. force-compact and the delta-commits trigger
     // both defer to it.
-    if (schema.options.get("commit.force-compact").contains("true") &&
-        !writeOnly) compact()
+    if (sch.options.get("commit.force-compact").contains("true") &&
+        !writeOnly(sch)) compact()
     // `partition.end-input-to-done` (reference: CoreOptions
     // PARTITION_END_INPUT_TO_DONE — Flink fires it at batch end-input;
     // here a library batch write IS one input): the partitions this
     // commit touched get their done markers + configured actions.
-    if (schema.options.get("partition.end-input-to-done").contains("true") &&
-        schema.partitionKeys.nonEmpty) {
+    if (sch.options.get("partition.end-input-to-done").contains("true") &&
+        sch.partitionKeys.nonEmpty) {
       val parts = sm.snapshot(id).deltaManifest
         .map(sm.readManifest).getOrElse(Seq.empty)
         .map(_.partition).distinct
       parts.foreach { p =>
         graft.sources.MarkDoneActions.fire(this,
-          schema.partitionKeys.map(k => s"$k=${p.getOrElse(k, "")}")
+          sch.partitionKeys.map(k => s"$k=${p.getOrElse(k, "")}")
             .mkString("/"))
       }
     }
@@ -308,8 +307,8 @@ final class GraftTable private (
   /** `write-only`: suppress all write-triggered compaction on this
     * table handle (commit.force-compact, full-compaction.delta-commits);
     * CALL sys.compact and explicit compact() still work. */
-  private def writeOnly: Boolean =
-    schema.options.get("write-only").contains("true")
+  private def writeOnly(sch: TableSchema): Boolean =
+    sch.options.get("write-only").contains("true")
 
   /** Write carrying an event-time watermark persisted on the snapshot
     * (reference: Snapshot.FIELD_WATERMARK). Used by the streaming sink. */
@@ -331,17 +330,17 @@ final class GraftTable private (
     * seq/kind/bucket metadata and stay readable.
     * (reference: PaimonDynamicPartitionOverwriteCommand) */
   def overwrite(df: DataFrame, commitIdentifier: Long = -1L): Long = {
-    val in = applyColumnDefaults(df, schema)
-    if (isPrimaryKeyTable) {
+    val sch = schema
+    val in = applyColumnDefaults(df, sch)
+    if (sch.primaryKeys.nonEmpty) {
       val withKind =
         if (in.columns.contains(KindCol)) in
         else in.withColumn(KindCol, lit(KindInsert).cast("byte"))
-      writeKinded(withKind, commitIdentifier, overwrite = true)
-    } else appendCommit(in, overwrite = true, commitIdentifier)
+      writeKinded(withKind, commitIdentifier, overwrite = true, sch)
+    } else appendCommit(in, sch, overwrite = true, commitIdentifier)
   }
 
-  private def upsert(df: DataFrame, commitIdentifier: Long): Long = {
-    val sch = schema
+  private def upsert(df: DataFrame, sch: TableSchema, commitIdentifier: Long): Long = {
     // rowkind.field (reference: CoreOptions.ROWKIND_FIELD): a data
     // column carries each record's change kind as +I/-U/+U/-D — the
     // standard shape of CDC feeds landed as DataFrames. The column
@@ -372,7 +371,7 @@ final class GraftTable private (
       else if (sch.options.get("ignore-update-before").contains("true"))
         kinded.filter(col(KindCol) =!= KindUpdateBefore)
       else kinded
-    writeKinded(withKind, commitIdentifier)
+    writeKinded(withKind, commitIdentifier, sch = sch)
   }
 
   /** Internal PK write accepting explicit row kinds (used by DML).
@@ -380,9 +379,8 @@ final class GraftTable private (
     * for unpartitioned tables) in the same snapshot. */
   private[graft] def writeKinded(
       df: DataFrame, commitIdentifier: Long = -1L,
-      overwrite: Boolean = false): Long = {
-    require(isPrimaryKeyTable, "kinded writes require a primary-key table")
-    val sch = schema
+      overwrite: Boolean = false, sch: TableSchema = schema): Long = {
+    require(sch.primaryKeys.nonEmpty, "kinded writes require a primary-key table")
     // length semantics enforced HERE, on the shared kinded commit path,
     // so CDC applyChanges and MERGE INTO store the same padded CHAR
     // values as write()/overwrite() — unpadded variants of a CHAR
@@ -488,7 +486,7 @@ final class GraftTable private (
       pinned: Seq[DataFrame])
 
   private def dynIndexStruct(sch: TableSchema): StructType = StructType(
-    sch.primaryKeys.map(k => struct.fields(struct.fieldIndex(k))) :+
+    sch.primaryKeys.map(k => sch.toStruct(k)) :+
       StructField("__bucket", IntegerType, nullable = false))
 
   /** The (pk → bucket) index rows of the sidecar `files` (none: empty). */
@@ -500,16 +498,16 @@ final class GraftTable private (
 
   /** The persisted (pk → bucket) index of a dynamic-bucket table, if
     * sidecars exist. */
-  private[graft] def dynIndexDf: Option[DataFrame] =
-    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map(readDynIndex(_, schema))
+  private def dynIndexDf(sch: TableSchema): Option[DataFrame] =
+    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map(readDynIndex(_, sch))
 
   /** The index pruned to the sidecars that can hold `keyValues`'s entry
     * — the point-lookup path: the key's `__p`/`__r` scope tokens are
     * computed on the driver by [[Buckets.bucketOf]] (the same hash as
     * the Catalyst expressions that laid the files down), so a lookup in
     * a billion-key table opens O(deltas + one range) of index state. */
-  private def dynIndexDfFor(keyValues: Map[String, Any]): Option[DataFrame] = {
-    val sch = schema
+  private def dynIndexDfFor(
+      sch: TableSchema, keyValues: Map[String, Any]): Option[DataFrame] = {
     sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map { files =>
       // tokens use the modulus the sidecars were written with (their
       // directory pin); unpinnable layouts read everything
@@ -799,7 +797,7 @@ final class GraftTable private (
         prevFiles.map(f => scala.util.Try(Files.size(Paths.get(s"$path/$f")))
           .getOrElse(Long.MaxValue / 1024)).sum
       else live.map(_.file.fileSize).sum
-    val latest = idxAll.map(idx => sizeGatedBuildSide(
+    val latest = idxAll.map(idx => sizeGatedBuildSide(sch,
       indexTtlFilter(collapseIndex(idx, sch), sch, passNow)
         .select((pkCols ++ parts.map(c => col(c).as(s"__old_$c")) :+
           lit(true).as("__old_exists")).toIndexedSeq: _*),
@@ -944,7 +942,7 @@ final class GraftTable private (
     def fmtOf(name: String) = name.substring(name.lastIndexOf('.') + 1)
     val groups = entries.groupBy(e => (e.file.schemaId, fmtOf(e.file.fileName)))
       .toSeq.sortBy(_._1).map { case ((sid, fmt), es) =>
-        val fileSch = if (sid == sch.id) sch else schemaOf(sid)
+        val fileSch = sm.schema(sid)
         val byId = fileSch.fields.map(f => f.id -> f).toMap
         val (present, absent) = colIds.partition { case (_, id) => byId.contains(id) }
         val paths = es.map(e => s"$path/${e.file.fileName}")
@@ -1431,7 +1429,7 @@ final class GraftTable private (
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .filter(_.nonEmpty)
     cols match {
-      case Some(cs) if !isPrimaryKeyTable =>
+      case Some(cs) if sch.primaryKeys.isEmpty =>
         val missing = cs.filterNot(df.columns.contains)
         require(missing.isEmpty, s"clustering.columns not in schema: $missing")
         val strategy = sch.options.getOrElse("clustering.strategy", "auto") match {
@@ -1454,8 +1452,7 @@ final class GraftTable private (
   }
 
   private def appendCommit(
-      df: DataFrame, overwrite: Boolean, commitIdentifier: Long): Long = {
-    val sch = schema
+      df: DataFrame, sch: TableSchema, overwrite: Boolean, commitIdentifier: Long): Long = {
     val base = nextSeq()
     // length semantics live on the shared commit path (not only the
     // write()/overwrite() entry points) so every producer — DML,
@@ -1511,7 +1508,7 @@ final class GraftTable private (
     if (overwrite && sch.partitionKeys.nonEmpty) {
       val nowParts = sm.latestSnapshot()
         .map(sm.liveEntries(_).map(_.partition).toSet).getOrElse(Set.empty)
-      mirrorHmsDrops((beforeParts -- nowParts).toSeq)
+      mirrorHmsDrops(sch, (beforeParts -- nowParts).toSeq)
     }
     id
   }
@@ -1747,7 +1744,7 @@ final class GraftTable private (
       globalIndexUpdate = globalIndexUpdate,
       secIndexUpdate = secUpdate,
       secCidsUpdate = secCids,
-      assignRowIds = rowTracking)
+      assignRowIds = GraftTable.tracksRows(sch))
   }
 
   /** Build per-file index sidecars (bloom + bitmap) for the configured
@@ -1883,10 +1880,10 @@ final class GraftTable private (
     * Data files are shared across branches, so the extra entries read
     * through the same table path. */
   private def withFallbackEntries(
-      entries: Seq[ManifestEntry],
+      sch: TableSchema, entries: Seq[ManifestEntry],
       filter: Option[Column] = None): Seq[ManifestEntry] = {
-    val fb = schema.options.get("scan.fallback-branch")
-      .filter(_ => schema.partitionKeys.nonEmpty)
+    val fb = sch.options.get("scan.fallback-branch")
+      .filter(_ => sch.partitionKeys.nonEmpty)
       .filter(branches.contains)
     fb match {
       case None => entries
@@ -1915,20 +1912,21 @@ final class GraftTable private (
   /** Chain composition applies only on the MAIN table handle: branch
     * handles must serve their own data (the snapshot/delta branches ARE
     * the chain's inputs), and SQL reads route here via [[scan]]. */
-  private def isChainMain: Boolean =
+  private def isChainMain(sch: TableSchema): Boolean =
     sm.branch.isEmpty &&
-      schema.options.get("chain-table.enabled").contains("true")
+      sch.options.get("chain-table.enabled").contains("true")
 
   /** Latest-snapshot merged read. */
   def read: DataFrame = {
-    if (isChainMain) return chainRead
-    sm.latestSnapshotId
-      .map(i => mergedFromEntries(withFallbackEntries(sm.liveEntries(sm.snapshot(i)))))
+    val sch = schema
+    if (isChainMain(sch)) return chainReadPlanned(sch, None)
+    sm.latestSnapshot()
+      .map(s => mergedFromEntries(withFallbackEntries(sch, sm.liveEntries(s)), sch))
       .getOrElse {
         // empty current branch: a fallback branch may still serve data
-        if (schema.options.contains("scan.fallback-branch"))
-          mergedFromEntries(withFallbackEntries(Seq.empty))
-        else emptyDf()
+        if (sch.options.contains("scan.fallback-branch"))
+          mergedFromEntries(withFallbackEntries(sch, Seq.empty), sch)
+        else emptyDf(sch)
       }
   }
 
@@ -1964,17 +1962,17 @@ final class GraftTable private (
     * subtrees. Undecodable (debris/null) partitions keep their own
     * self-serving legs — rare by construction, and their rows join the
     * same single merge. */
-  def chainRead: DataFrame = chainReadPlanned(None)
+  def chainRead: DataFrame = chainReadPlanned(schema, None)
 
   /** The conjuncts of `cond` that reference ONLY partition columns,
     * re-parsed from their SQL form so they resolve against any frame
     * carrying the partition columns. None when no conjunct qualifies
     * (or a conjunct's SQL round-trip fails — fail open, never prune
     * on a guess). */
-  private def partitionConjuncts(cond: Column): Option[Column] = {
-    val partCols = schema.partitionKeys.toSet
+  private def partitionConjuncts(sch: TableSchema, cond: Column): Option[Column] = {
+    val partCols = sch.partitionKeys.toSet
     if (partCols.isEmpty) return None
-    val analyzed = emptyDf().filter(cond).queryExecution.analyzed.collectFirst {
+    val analyzed = emptyDf(sch).filter(cond).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.getOrElse(return None)
     val picked = splitConjuncts(analyzed).filter { e =>
@@ -1991,9 +1989,8 @@ final class GraftTable private (
     * partition columns from Catalyst, so a post-compose filter would
     * still scan every branch file. One day out of a thousand then
     * opens that day's chain (base + span) only. */
-  private def chainReadPlanned(partFilter: Option[Column]): DataFrame = {
-    val sch = schema
-    require(isPrimaryKeyTable, "chain tables are primary-key tables")
+  private def chainReadPlanned(sch: TableSchema, partFilter: Option[Column]): DataFrame = {
+    require(sch.primaryKeys.nonEmpty, "chain tables are primary-key tables")
     require(sch.partitionKeys.nonEmpty, "chain tables are partitioned")
     // the reference merges per (partition, bucket) split; this merge is
     // global, so the partition columns must be part of the key — with
@@ -2058,8 +2055,8 @@ final class GraftTable private (
     val keep: Map[String, String] => Boolean = partFilter match {
       case None => _ => true
       case Some(c) =>
-        val partFields = struct.fields.filter(f => pk.contains(f.name))
-        val matching = partitionMapsMatching(
+        val partFields = sch.toStruct.fields.filter(f => pk.contains(f.name))
+        val matching = partitionMapsMatching(sch,
           (complete.toSeq ++ deltaParts).distinct, c)
         p => matching.contains(
           partFields.map(f => f.name -> p.getOrElse(f.name, null)).toMap)
@@ -2133,25 +2130,26 @@ final class GraftTable private (
     }
     val snapSrcParts = snapPairs.map(_._1).toSet
     val deltaSrcParts = deltaPairs.map(_._1).toSet
+    // the branches share this table's schema directory
     val snapLeg = applyEdges(
       snapT.readRaw(snapT.visibleEntries(
-        snapEntries.filter(e => snapSrcParts(e.partition)))),
+        snapEntries.filter(e => snapSrcParts(e.partition)), sch), sch),
       snapPairs.toSeq)
     val deltaLeg = applyEdges(
       deltaT.readRaw(deltaT.visibleEntries(
-        deltaEntries.filter(e => deltaSrcParts(e.partition)))),
+        deltaEntries.filter(e => deltaSrcParts(e.partition)), sch), sch),
       deltaPairs.toSeq)
     // undecodable (null/debris) partitions serve themselves only —
     // they cannot join a typed mapping, so they keep dedicated legs
     // feeding the same single merge
     val debrisLegs = debrisTargets.map { p =>
       relabel(deltaT.readRaw(deltaT.visibleEntries(
-        deltaEntries.filter(_.partition == p))), p)
+        deltaEntries.filter(_.partition == p), sch), sch), p)
     }
     (snapLeg.toSeq ++ deltaLeg.toSeq ++ debrisLegs)
       .reduceOption(_ unionByName _)
       .map(MergeEngine.merge(_, sch))
-      .getOrElse(emptyDf())
+      .getOrElse(emptyDf(sch))
   }
 
   /** Blob columns WITHOUT payload fetch: the physical descriptor
@@ -2167,7 +2165,7 @@ final class GraftTable private (
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], phys)
     spark.read.option("basePath", sm.dataDir).schema(
-      if (isPrimaryKeyTable)
+      if (sch.primaryKeys.nonEmpty)
         StructType(phys.fields
           :+ StructField(SeqCol, LongType, nullable = false)
           :+ StructField(KindCol, ByteType, nullable = false)
@@ -2181,16 +2179,16 @@ final class GraftTable private (
     * against the manifest before any file is opened; the filter is also
     * re-applied in the plan so parquet row-group pushdown still kicks
     * in. */
-  def scan(filter: Column): DataFrame = {
+  def scan(filter: Column): DataFrame = scan(filter, schema)
+
+  /** [[scan]] against the schema version `sch` the caller resolved. */
+  private[graft] def scan(filter: Column, sch: TableSchema): DataFrame = {
     // SQL reads of a chain table (the PK V1 path routes through scan)
     // must see the composed chain, not the (typically empty) main
     // branch; partition pruning applies post-composition via Catalyst
-    if (isChainMain)
-      return chainReadPlanned(partitionConjuncts(filter)).filter(filter)
-    val snap = sm.latestSnapshotId.map(sm.snapshot)
-    val entries = bucketNarrow(
-      snap.map(pruneEntries(_, filter)).getOrElse(Seq.empty), filter)
-    mergedFromEntries(withFallbackEntries(entries, Some(filter))).filter(filter)
+    if (isChainMain(sch))
+      return chainReadPlanned(sch, partitionConjuncts(sch, filter)).filter(filter)
+    mergedFromEntries(planEntries(filter, sch = sch), sch).filter(filter)
   }
 
   /** [[scan]] restricted to data files physically written after `ts`
@@ -2198,31 +2196,38 @@ final class GraftTable private (
     * snapshot-independent, IMPRECISE by contract: compaction re-stamps
     * rewritten rows, and PK merge results reflect only the surviving
     * files). Files from before the creationTime field are kept. */
-  def scanFilesCreatedAfter(filter: Column, ts: Long): DataFrame = {
-    val snap = sm.latestSnapshotId.map(sm.snapshot)
-    val entries = bucketNarrow(
-      snap.map(pruneEntries(_, filter)).getOrElse(Seq.empty), filter)
+  def scanFilesCreatedAfter(filter: Column, ts: Long): DataFrame =
+    scanFilesCreatedAfter(filter, ts, schema)
+
+  private[graft] def scanFilesCreatedAfter(
+      filter: Column, ts: Long, sch: TableSchema): DataFrame = {
+    val snap = sm.latestSnapshot()
+    val entries = bucketNarrow(sch,
+      snap.map(pruneEntries(_, filter, sch)).getOrElse(Seq.empty), filter)
       .filter(_.file.creationTime.forall(_ > ts))
-    mergedFromEntries(withFallbackEntries(entries, Some(filter))).filter(filter)
+    mergedFromEntries(withFallbackEntries(sch, entries, Some(filter)), sch).filter(filter)
   }
 
-  def readSnapshot(id: Option[Long]): DataFrame =
+  def readSnapshot(id: Option[Long]): DataFrame = {
+    val sch = schema
     id.map { i =>
       val snap = sm.snapshot(i)
-      mergedFromEntries(sm.liveEntries(snap), Some(snap))
-    }.getOrElse(emptyDf())
+      mergedFromEntries(sm.liveEntries(snap), sch, Some(snap))
+    }.getOrElse(emptyDf(sch))
+  }
 
   /** Pruned manifest entries for an external planner (the DSv2 scan):
     * same partition/stats/bloom skipping as [[scan]], optionally
     * against a historical snapshot. */
   private[graft] def planEntries(
-      filter: Column, snapshotId: Option[Long] = None): Seq[ManifestEntry] = {
+      filter: Column, snapshotId: Option[Long] = None,
+      sch: TableSchema = schema): Seq[ManifestEntry] = {
     val snap = snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())
-    val planned = snap.map(pruneEntries(_, filter)).getOrElse(Seq.empty)
+    val planned = snap.map(pruneEntries(_, filter, sch)).getOrElse(Seq.empty)
     // fallback-branch partitions only augment CURRENT-state plans;
     // time travel stays exactly the branch's own history
-    bucketNarrow(
-      if (snapshotId.isEmpty) withFallbackEntries(planned, Some(filter)) else planned,
+    bucketNarrow(sch,
+      if (snapshotId.isEmpty) withFallbackEntries(sch, planned, Some(filter)) else planned,
       filter)
   }
 
@@ -2236,8 +2241,8 @@ final class GraftTable private (
     * rescale) also survive: the current hash says nothing about where
     * THEIR rows live, and pruning them would lose rows, not time. */
   private def bucketNarrow(
-      entries: Seq[ManifestEntry], filter: Column): Seq[ManifestEntry] =
-    pkEqualityBucket(filter).fold(entries)(b => entries.filter(mayHoldBucket(schema, Set(b))))
+      sch: TableSchema, entries: Seq[ManifestEntry], filter: Column): Seq[ManifestEntry] =
+    pkEqualityBucket(filter, sch).fold(entries)(b => entries.filter(mayHoldBucket(sch, Set(b))))
 
   /** Whether `e` can hold rows of the buckets in `bs`: files of those
     * buckets, staged/unassigned buckets (< 0), and files written under
@@ -2253,7 +2258,7 @@ final class GraftTable private (
     * schemas count as different (fail open). */
   private def bucketLayoutDiffers(sch: TableSchema, e: ManifestEntry): Boolean =
     e.file.schemaId != sch.id && scala.util.Try {
-      val ws = schemaOf(e.file.schemaId)
+      val ws = sm.schema(e.file.schemaId)
       ws.effectiveBuckets != sch.effectiveBuckets ||
         ws.bucketKeys != sch.bucketKeys
     }.getOrElse(true)
@@ -2272,9 +2277,10 @@ final class GraftTable private (
     * SQL pushdown must then decline rather than run a full scan at
     * planning time. */
   def countRowsFast(): Option[Long] = {
+    val sch = schema
     val entries =
-      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty))
-    if (!isPrimaryKeyTable)
+      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty), sch)
+    if (sch.primaryKeys.isEmpty)
       Some(entries.map(e => e.file.rowCount - e.file.dvCardinality.getOrElse(0L)).sum)
     else if (entries.forall(_.file.level > 0) &&
       entries.groupBy(e => (e.partition, e.bucket)).forall(_._2.size <= 1))
@@ -2287,10 +2293,10 @@ final class GraftTable private (
     * usable stats; None → caller must scan (reference: MinEvaluator /
     * MaxEvaluator). Append tables only — PK merge could drop rows. */
   def statsMinMax(column: String): Option[(String, String)] = {
-    if (isPrimaryKeyTable) return None
+    val sch = schema
+    if (sch.primaryKeys.nonEmpty) return None
     val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(return None)
     if (entries.isEmpty) return None
-    val sch = schema
     // a deleted position could hold the extreme value; and a truncated
     // stat (metadata.stats-mode) is a BOUND, not a value — both make
     // the manifests unusable as exact answers
@@ -2309,7 +2315,7 @@ final class GraftTable private (
     val writtenNonFull = entries.exists { e =>
       modeCache.getOrElseUpdate((e.file.schemaId, e.file.level), {
         scala.util.Try {
-          val ws = if (e.file.schemaId == sch.id) sch else schemaOf(e.file.schemaId)
+          val ws = sm.schema(e.file.schemaId)
           ws.fields.find(_.id == curField.id).map(wf =>
             graft.core.StatsModes.columnModes(ws, e.file.level)
               .getOrElse(wf.name, "full"))
@@ -2319,7 +2325,7 @@ final class GraftTable private (
     if (writtenNonFull) return None
     val stats = entries.flatMap(fileMetaInCurrentNames(_, sch).stats.get(column))
     if (stats.size != entries.size || stats.exists(_.min.isEmpty)) return None
-    val field = struct.fields.find(_.name == column).getOrElse(return None)
+    val field = sch.toStruct.fields.find(_.name == column).getOrElse(return None)
     def cmp(a: String, b: String): Int = field.dataType match {
       case ByteType | ShortType | IntegerType | LongType | DateType |
            TimestampType | TimestampNTZType => java.lang.Long.compare(a.toLong, b.toLong)
@@ -2338,7 +2344,8 @@ final class GraftTable private (
     * (reference: DataTableBatchScan.applyPushDownLimit — counts
     * rawConvertible splits until the limit is reached). Append-only. */
   def readLimit(n: Long): DataFrame = {
-    if (isPrimaryKeyTable) return read.limit(n.toInt)
+    val sch = schema
+    if (sch.primaryKeys.nonEmpty) return read.limit(n.toInt)
     val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
     var acc = 0L
     val taken = entries.takeWhile { e =>
@@ -2346,7 +2353,7 @@ final class GraftTable private (
       acc += e.file.rowCount - e.file.dvCardinality.getOrElse(0L)
       need
     }
-    mergedFromEntries(taken).limit(n.toInt)
+    mergedFromEntries(taken, sch).limit(n.toInt)
   }
 
   /** Entries that can contribute to `ORDER BY column [DESC] LIMIT k`:
@@ -2359,11 +2366,15 @@ final class GraftTable private (
     * contributing file). */
   def topNEntries(
       entries: Seq[ManifestEntry], column: String, k: Int,
-      descending: Boolean): Seq[ManifestEntry] = {
-    if (isPrimaryKeyTable || entries.isEmpty) return entries
+      descending: Boolean): Seq[ManifestEntry] =
+    topNEntries(entries, column, k, descending, schema)
+
+  private[graft] def topNEntries(
+      entries: Seq[ManifestEntry], column: String, k: Int,
+      descending: Boolean, sch: TableSchema): Seq[ManifestEntry] = {
+    if (sch.primaryKeys.nonEmpty || entries.isEmpty) return entries
     if (entries.exists(_.file.dvFile.isDefined)) return entries
-    val field = struct.fields.find(_.name == column)
-    val sch = schema
+    val field = sch.toStruct.fields.find(_.name == column)
     val ranges = entries.map(e =>
       e -> fileMetaInCurrentNames(e, sch).stats.get(column))
     if (field.isEmpty || ranges.exists(r =>
@@ -2415,36 +2426,39 @@ final class GraftTable private (
     * whose [min,max] range can contribute to the global top-k (see
     * [[topNEntries]]); final ordering still happens in the plan. */
   def readTopN(column: String, k: Int, descending: Boolean = true): DataFrame = {
-    val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+    val sch = schema
+    val snap = sm.latestSnapshot()
+    val entries = snap.map(sm.liveEntries).getOrElse(Seq.empty)
     // a column patch can move any value outside the stored stats range,
     // so stats-based candidate selection must not drop files — the
     // overlay + final sort stay correct on the full entry set
     val sorted =
-      if (colPatchesOf(sm.latestSnapshot()).contains(column)) entries
-      else topNEntries(entries, column, k, descending)
+      if (colPatchesOf(sch, snap).contains(column)) entries
+      else topNEntries(entries, column, k, descending, sch)
     val sortCol = if (descending) col(column).desc else col(column).asc
-    mergedFromEntries(sorted).orderBy(sortCol).limit(k)
+    mergedFromEntries(sorted, sch).orderBy(sortCol).limit(k)
   }
 
   /** Primary-key point lookup with bucket pruning: only the one
     * hash-bucket (and stats-matching files in it) is read (reference:
     * LocalTableQuery.java:64 — the KV-service semantics, served by a
     * pruned scan). */
-  def lookup(keyValues: Map[String, Any]): DataFrame = {
-    require(isPrimaryKeyTable, "lookup requires a primary-key table")
-    val sch = schema
+  def lookup(keyValues: Map[String, Any]): DataFrame = lookup(keyValues, schema)
+
+  private def lookup(keyValues: Map[String, Any], sch: TableSchema): DataFrame = {
+    require(sch.primaryKeys.nonEmpty, "lookup requires a primary-key table")
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
     // before any planning, so a key value of the wrong type fails here
     val bucket = directPkBucket(sch, keyValues)
     val filterCond = sch.primaryKeys
       .map(k => col(k) === lit(keyValues(k))).reduce(_ && _)
-    val snap = sm.latestSnapshot().getOrElse(return emptyDf())
-    val pruned = pruneEntries(snap, filterCond)
+    val snap = sm.latestSnapshot().getOrElse(return emptyDf(sch))
+    val pruned = pruneEntries(snap, filterCond, sch)
     // fixed buckets: the key's bucket is hash-derived, prune to it;
     // dynamic buckets: membership lives in the persisted index (a key
     // absent there was never written → empty result, zero data files)
     val entries =
-      if (sch.isDynamicBucket) dynIndexDfFor(keyValues) match {
+      if (sch.isDynamicBucket) dynIndexDfFor(sch, keyValues) match {
         case Some(idx) =>
           idx.filter(filterCond).select("__bucket").collect().headOption match {
             case Some(r) => pruned.filter(_.bucket == r.getInt(0))
@@ -2453,7 +2467,7 @@ final class GraftTable private (
         case None => pruned // pre-index table: stats pruning only
       }
       else bucket.fold(pruned)(b => pruned.filter(mayHoldBucket(sch, Set(b))))
-    val raw = readRaw(entries)
+    val raw = readRaw(entries, sch)
     MergeEngine.merge(raw, sch).filter(filterCond)
   }
 
@@ -2486,10 +2500,7 @@ final class GraftTable private (
     * files with ≤ `lookup.cache-max-file-rows` rows are cached. A
     * bigger file is probed on its key and sequence columns instead and
     * decodes in full only the one row that wins (see [[localLookup]]). */
-  private lazy val lookupCacheMaxFiles: Int =
-    schema.options.getOrElse("lookup.cache-max-files", "32").toInt
-  private lazy val lookupCacheMaxRows: Long =
-    schema.options.getOrElse("lookup.cache-max-file-rows", "65536").toLong
+  @volatile private var lookupCacheMaxFiles: Int = 32
   private[graft] val lookupCacheHits = new java.util.concurrent.atomic.AtomicLong
   private[graft] val lookupCacheMisses = new java.util.concurrent.atomic.AtomicLong
   /** Key-column scans of files over the cache limit, and full-row
@@ -2572,7 +2583,7 @@ final class GraftTable private (
     // one schema for the whole call: a concurrent ALTER must not mix
     // versions between the guards, the pruning and the row layout
     val sch = schema
-    if (!bucketLocal(sch)) return lookup(keyValues).collect().toSeq
+    if (!bucketLocal(sch)) return lookup(keyValues, sch).collect().toSeq
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
     val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
     val bucket = directPkBucket(sch, keyValues)
@@ -2582,7 +2593,9 @@ final class GraftTable private (
     val visible = visibleEntries(sm.liveEntries(snap), sch)
     val bucketEntries = bucket.fold(visible)(b => visible.filter(mayHoldBucket(sch, Set(b))))
     if (bucketEntries.isEmpty) return Seq.empty
-    if (!bucketLocal(sch, bucketEntries)) return lookup(keyValues).collect().toSeq
+    if (!bucketLocal(sch, bucketEntries)) return lookup(keyValues, sch).collect().toSeq
+    lookupCacheMaxFiles = sch.options.getOrElse("lookup.cache-max-files", "32").toInt
+    val maxRows = sch.options.getOrElse("lookup.cache-max-file-rows", "65536").toLong
     val read = bucketRead(sch)
     val st = read.struct
     import read.{partSchema, readData, probeData}
@@ -2593,7 +2606,7 @@ final class GraftTable private (
     // files over the cache limit: a stats/index check on the key may
     // skip their probes. The key conjunction is built directly — a
     // Catalyst analysis of it costs ~10 ms and never prunes more.
-    val big = bucketEntries.filter(_.file.rowCount > lookupCacheMaxRows)
+    val big = bucketEntries.filter(_.file.rowCount > maxRows)
     val probed: Set[String] =
       if (big.isEmpty) Set.empty
       else {
@@ -2605,7 +2618,7 @@ final class GraftTable private (
         pruneAnalyzed(snap, sch, big, keyCond).map(_.file.fileName).toSet
       }
     val candidates = bucketEntries.filter(e =>
-      e.file.rowCount <= lookupCacheMaxRows || probed(e.file.fileName))
+      e.file.rowCount <= maxRows || probed(e.file.fileName))
     if (candidates.isEmpty) return Seq.empty
     val full = read.readerLayout(readData)
     val factory = localFactoryCache.getOrElseUpdate(sch.id,
@@ -2642,7 +2655,7 @@ final class GraftTable private (
         spark, readData, probeData, partSchema, Array.empty))
     val probeKey: Seq[Any] = keyInternal.toSeq
     candidates.foreach { e =>
-      if (e.file.rowCount <= lookupCacheMaxRows) {
+      if (e.file.rowCount <= maxRows) {
         // decode the file ONCE into a key→best map (immutable files,
         // LRU-bounded), then answer by hash
         val mapKey = s"${sch.id}/${e.file.fileName}"
@@ -2730,15 +2743,15 @@ final class GraftTable private (
     sm.tagSnapshot(name)
       // the TAG's own patch registry applies — overlaying today's
       // patches would break tag immutability
-      .map(s => mergedFromEntries(sm.liveEntries(s), Some(s)))
-      .getOrElse(emptyDf())
+      .map(s => mergedFromEntries(sm.liveEntries(s), schema, Some(s)))
+      .getOrElse(emptyDf(schema))
 
   /** Delete consumer files whose progress has not moved within
     * `consumer.expiration-time` (file mtime is the progress clock —
     * every offset write refreshes it). Returns the expired ids. */
   private[graft] def expireStaleConsumers(
-      now: Long = System.currentTimeMillis()): Seq[String] = {
-    val ttl = schema.options.get("consumer.expiration-time")
+      sch: TableSchema, now: Long = System.currentTimeMillis()): Seq[String] = {
+    val ttl = sch.options.get("consumer.expiration-time")
       .map(GraftTable.parseDurationMillis).getOrElse(return Seq.empty)
     val dir = Paths.get(s"$path/consumer")
     if (!Files.isDirectory(dir)) return Seq.empty
@@ -2762,24 +2775,25 @@ final class GraftTable private (
   /** Default retention for NEW tags (reference: CoreOptions
     * `tag.default-time-retained` — applies to both auto-created and
     * manually created tags). */
-  private def tagDefaultRetainedMs: Option[Long] =
-    schema.options.get("tag.default-time-retained")
-      .map(Meta.parseDurationMillis)
+  private def tagDefaultRetainedMs(opts: Map[String, String]): Option[Long] =
+    opts.get("tag.default-time-retained").map(Meta.parseDurationMillis)
 
   def createTag(name: String, timeRetainedMs: Option[Long] = None): Unit = {
+    val opts = schema.options
     sm.createTag(name, sm.latestSnapshotId.getOrElse(
       throw new IllegalStateException("empty table cannot be tagged")),
-      timeRetainedMs.orElse(tagDefaultRetainedMs))
-    notifyTag(name, created = true)
+      timeRetainedMs.orElse(tagDefaultRetainedMs(opts)))
+    notifyTag(name, created = true, opts)
   }
 
   /** Re-point an existing (or new) tag at `snapshotId`, latest when
     * absent (reference: ReplaceTagProcedure). */
   def replaceTag(name: String, snapshotId: Option[Long] = None): Unit = {
+    val opts = schema.options
     sm.createTag(name, snapshotId.orElse(sm.latestSnapshotId).getOrElse(
       throw new IllegalStateException("empty table cannot be tagged")),
-      tagDefaultRetainedMs)
-    notifyTag(name, created = true)
+      tagDefaultRetainedMs(opts))
+    notifyTag(name, created = true, opts)
   }
 
   def deleteTag(name: String): Unit = {
@@ -2792,7 +2806,8 @@ final class GraftTable private (
     * Tags without a stamped create-time/retention never expire.
     * Disabled entirely by `tag.time-expire-enabled=false`. */
   def expireTimedOutTags(): Seq[String] = {
-    if (schema.options.get("tag.time-expire-enabled").contains("false"))
+    val opts = schema.options
+    if (opts.get("tag.time-expire-enabled").contains("false"))
       return Seq.empty
     val now = System.currentTimeMillis()
     val victims = sm.tags.keys.toSeq.filter { name =>
@@ -2800,7 +2815,7 @@ final class GraftTable private (
         t.tagCreateTime.isDefined && t.tagTimeRetained.isDefined &&
           now > t.tagCreateTime.get + t.tagTimeRetained.get)
     }
-    victims.foreach(deleteTag)
+    victims.foreach { n => sm.deleteTag(n); notifyTag(n, created = false, opts) }
     victims
   }
 
@@ -2809,9 +2824,10 @@ final class GraftTable private (
     * synthetic key (reference: AddPartitionTagCallback). Mirror
     * failures log, never fail the tag operation — same posture as the
     * commit-coupled partition sync. */
-  private[graft] def notifyTag(name: String, created: Boolean): Unit = {
+  private[graft] def notifyTag(name: String, created: Boolean,
+      opts: Map[String, String] = schema.options): Unit = {
     val log = org.slf4j.LoggerFactory.getLogger("graft.GraftTable")
-    if (schema.options.contains("metastore.tag-to-partition"))
+    if (opts.contains("metastore.tag-to-partition"))
       try graft.sources.HmsBridge.mirrorTagPartition(this, name, created)
       catch {
         case e: Exception =>
@@ -2821,7 +2837,7 @@ final class GraftTable private (
     // tag-success-file/ with creation + modification times — external
     // schedulers poll it to learn a tag landed (reference:
     // tag/SuccessFileTagCallback.java). Deletion removes it.
-    if (schema.options.get("tag.create-success-file").contains("true")) try {
+    if (opts.get("tag.create-success-file").contains("true")) try {
       val dir = Paths.get(s"$path/tag-success-file")
       val f = dir.resolve(s"${name}_SUCCESS")
       if (created) {
@@ -2843,7 +2859,7 @@ final class GraftTable private (
     // (reference: CoreOptions TAG_CALLBACKS + TagCallback). Classes
     // implement GraftTagCallback with a no-arg or (GraftTable) ctor;
     // failures log, never fail the tag operation.
-    schema.options.get("tag.callbacks").toSeq
+    opts.get("tag.callbacks").toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       .foreach { cls =>
         try {
@@ -2885,7 +2901,7 @@ final class GraftTable private (
     val opts = schema.options
     val mode = opts.getOrElse(GraftTable.TagAutoMode, "none")
     if (mode == "none") return Seq.empty
-    if (mode == "batch") return tagBatchCreate()
+    if (mode == "batch") return tagBatchCreate(opts)
     require(mode == "process-time" || mode == "watermark",
       s"${GraftTable.TagAutoMode} must be process-time|watermark|batch, got $mode")
     // period length: daily | hourly | two-hours, or an arbitrary
@@ -2980,8 +2996,8 @@ final class GraftTable private (
               tagName(nextBoundary.get - periodMs)
             else tagName(periodStart - periodMs)
           if (known.add(name)) {
-            sm.createTag(name, snap.id, tagDefaultRetainedMs)
-            notifyTag(name, created = true)
+            sm.createTag(name, snap.id, tagDefaultRetainedMs(opts))
+            notifyTag(name, created = true, opts)
             created += name
           }
           nextBoundary =
@@ -2995,7 +3011,7 @@ final class GraftTable private (
       val auto = sm.tags.keys.toSeq
         .flatMap(n => parseTag(n).map(n -> _)).sortBy(_._2)
       auto.dropRight(max).foreach { case (n, _) =>
-        sm.deleteTag(n); notifyTag(n, created = false) }
+        sm.deleteTag(n); notifyTag(n, created = false, opts) }
     }
     created.toSeq
   }
@@ -3008,8 +3024,7 @@ final class GraftTable private (
     * REPLACED on every run so it always marks the newest batch write.
     * `tag.num-retained-max` then trims the oldest tags beyond the cap
     * (the reference trims across all tags in batch mode). */
-  private def tagBatchCreate(): Seq[String] = {
-    val opts = schema.options
+  private def tagBatchCreate(opts: Map[String, String]): Seq[String] = {
     val snapId = sm.latestSnapshotId.getOrElse(return Seq.empty)
     val name = opts.get("tag.batch.customized-name").getOrElse {
       val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd")
@@ -3018,13 +3033,13 @@ final class GraftTable private (
         sm.snapshot(snapId).timeMillis))
     }
     val replaced = sm.tags.contains(name)
-    if (replaced) { sm.deleteTag(name); notifyTag(name, created = false) }
-    sm.createTag(name, snapId, tagDefaultRetainedMs)
-    notifyTag(name, created = true)
+    if (replaced) { sm.deleteTag(name); notifyTag(name, created = false, opts) }
+    sm.createTag(name, snapId, tagDefaultRetainedMs(opts))
+    notifyTag(name, created = true, opts)
     opts.get("tag.num-retained-max").map(_.toInt).foreach { max =>
       val bySnap = sm.tags.toSeq.sortBy(_._2)
       bySnap.dropRight(max).foreach { case (n, _) =>
-        sm.deleteTag(n); notifyTag(n, created = false) }
+        sm.deleteTag(n); notifyTag(n, created = false, opts) }
     }
     if (replaced) Seq.empty else Seq(name)
   }
@@ -3038,9 +3053,9 @@ final class GraftTable private (
     * added columns fill with null (reference: SchemaEvolutionUtil +
     * CastExecutors field-id matching). */
   private[graft] def readRaw(
-      entries: Seq[ManifestEntry], captureMeta: Boolean = false): DataFrame = {
-    if (entries.isEmpty) return emptyRawDf()
-    val cur = schema
+      entries: Seq[ManifestEntry], cur: TableSchema = schema,
+      captureMeta: Boolean = false): DataFrame = {
+    if (entries.isEmpty) return emptyRawDf(cur)
     def fmtOf(name: String) = name.substring(name.lastIndexOf('.') + 1)
     // captureMeta: tag each row with its file path and physical row
     // index (`__file`, `__idx`) BEFORE any evolution projection —
@@ -3049,69 +3064,47 @@ final class GraftTable private (
       if (!captureMeta) df
       else df.withColumn("__file", expr("_metadata.file_path"))
         .withColumn("__idx", expr("_metadata.row_index"))
-    def metaCols: Seq[Column] =
+    val metaCols =
       if (captureMeta) Seq(col("__file"), col("__idx")) else Seq.empty
+    // rows of files written under `old`, projected to `cur` by field id
+    def evolved(df: DataFrame, old: TableSchema): DataFrame = {
+      val byId = old.fields.map(f => f.id -> f).toMap
+      val projected = cur.fields.map { f =>
+        val t = sparkTypeOf(f.dataType)
+        byId.get(f.id) match {
+          case Some(o) =>
+            evolveColumn(col(o.name), sparkTypeOf(o.dataType), t).as(f.name)
+          case None => lit(null).cast(t).as(f.name)
+        }
+      }
+      val hidden =
+        if (cur.primaryKeys.nonEmpty) Seq(col(SeqCol), col(KindCol), col("__bucket"))
+        else Seq.empty
+      df.select((projected ++ hidden ++ metaCols).toIndexedSeq: _*)
+    }
     // group by (schema version, storage format): a table whose
     // file.format option changed mid-life mixes parquet and orc files
     val parts = entries.groupBy(e => (e.file.schemaId, fmtOf(e.file.fileName)))
       .toSeq.sortBy(_._1).map {
       case ((sid, fmt), es) =>
         val paths = es.map(e => s"$path/${e.file.fileName}")
+        val fileSch = sm.schema(sid)
         // avro/lance: custom record readers (no spark-avro module; lance
         // is the engine's own random-access columnar format);
         // partition/bucket columns are stored in the records, so no
         // directory-derived columns are needed
-        if (fmt == "avro" || fmt == "lance") {
-          require(!captureMeta,
-            s"row positions need parquet/orc _metadata; $fmt files cannot serve them")
-          val fileSch = if (sid == cur.id) cur else schemaOf(sid)
-          val df =
+        val df =
+          if (fmt == "avro" || fmt == "lance") {
+            require(!captureMeta,
+              s"row positions need parquet/orc _metadata; $fmt files cannot serve them")
             if (fmt == "lance")
               graft.sources.LanceStorage.read(spark, paths, rawSchemaOf(fileSch))
             else graft.sources.AvroStorage.read(spark, paths, rawSchemaOf(fileSch))
-          if (sid == cur.id) df
-          else {
-            val old = schemaOf(sid)
-            val byId = old.fields.map(f => f.id -> f).toMap
-            val projected = cur.fields.map { f =>
-              val t = sparkTypeOf(f.dataType)
-              byId.get(f.id) match {
-                case Some(o) =>
-                  evolveColumn(col(o.name), sparkTypeOf(o.dataType), t).as(f.name)
-                case None => lit(null).cast(t).as(f.name)
-              }
-            }
-            val hidden =
-              if (isPrimaryKeyTable) Seq(col(SeqCol), col(KindCol), col("__bucket"))
-              else Seq.empty
-            df.select((projected ++ hidden).toIndexedSeq: _*)
-          }
-        } else {
-        def inflated(df: DataFrame, of: TableSchema): DataFrame =
-          graft.sources.BlobStorage.inflate(df,
-            graft.sources.BlobStorage.blobColumns(of.options), s"$path/blob")
-        val reader = spark.read.option("basePath", sm.dataDir).format(fmt)
-        if (sid == cur.id)
-          inflated(tagged(reader.schema(rawReadSchema).load(paths: _*)), cur)
-        else {
-          val old = schemaOf(sid)
-          val byId = old.fields.map(f => f.id -> f).toMap
-          val projected = cur.fields.map { f =>
-            val t = sparkTypeOf(f.dataType)
-            byId.get(f.id) match {
-              case Some(o) =>
-                evolveColumn(col(o.name), sparkTypeOf(o.dataType), t).as(f.name)
-              case None => lit(null).cast(t).as(f.name)
-            }
-          }
-          val hidden =
-            if (isPrimaryKeyTable)
-              Seq(col(SeqCol), col(KindCol), col("__bucket"))
-            else Seq.empty
-          inflated(tagged(reader.schema(rawSchemaOf(old)).load(paths: _*)), old)
-            .select((projected ++ hidden ++ metaCols).toIndexedSeq: _*)
-        }
-        }
+          } else graft.sources.BlobStorage.inflate(
+            tagged(spark.read.option("basePath", sm.dataDir).format(fmt)
+              .schema(rawSchemaOf(fileSch)).load(paths: _*)),
+            graft.sources.BlobStorage.blobColumns(fileSch.options), s"$path/blob")
+        if (sid == cur.id) df else evolved(df, fileSch)
     }
     parts.reduce(_ unionAll _)
   }
@@ -3127,59 +3120,51 @@ final class GraftTable private (
   private def evolveColumn(src: Column, from: DataType, to: DataType): Column =
     GraftTable.evolveColumn(src, from, to)
 
-  /** cached historical schema versions (immutable once written) */
-  private val schemaVersionCache =
-    scala.collection.concurrent.TrieMap.empty[Long, TableSchema]
-  private def schemaOf(id: Long): TableSchema =
-    schemaVersionCache.getOrElseUpdate(id, sm.schema(id))
-
   /** File stats/index keys remapped from the file's written schema to
     * current column names via field ids, so pruning evaluates current-
     * name predicates against old files correctly. */
   private def fileMetaInCurrentNames(
       e: ManifestEntry, cur: TableSchema): graft.core.Meta.DataFileMeta =
-    PruneEval.remap(e, cur, schemaOf)
+    PruneEval.remap(e, cur, sm.schema)
 
   /** Drop postpone-staged files (bucket = -2) from a read's entry set:
     * such data is invisible to EVERY query surface until a compaction
     * assigns real buckets (reference: postpone-mode visibility —
     * PostponeUtils.getKnownNumBuckets reads only real buckets).
     * Metadata views ($files, $buckets) intentionally bypass this. */
-  private[graft] def visibleEntries(entries: Seq[ManifestEntry]): Seq[ManifestEntry] =
-    visibleEntries(entries, schema)
-
-  private def visibleEntries(
+  private[graft] def visibleEntries(
       entries: Seq[ManifestEntry], sch: TableSchema): Seq[ManifestEntry] =
     if (!sch.isPostponeBucket) entries
     else entries.filter(_.bucket != GraftTable.PostponeBucket)
 
-  private[graft] def mergedFromEntries(entries: Seq[ManifestEntry]): DataFrame =
-    mergedFromEntries(entries, sm.latestSnapshot())
-
-  /** `patchSnap` pins which snapshot's column-patch registry applies —
-    * time travel reads the patches as of ITS snapshot, not today's. */
+  /** `patchSnap` pins which snapshot's column-patch registry applies
+    * (append tables) — time travel reads the patches as of ITS
+    * snapshot, not today's. */
   private[graft] def mergedFromEntries(
-      entries: Seq[ManifestEntry], patchSnap: Option[Snapshot]): DataFrame =
-    if (isPrimaryKeyTable) MergeEngine.merge(readRaw(visibleEntries(entries)), schema)
+      entries: Seq[ManifestEntry], sch: TableSchema,
+      patchSnap: => Option[Snapshot] = sm.latestSnapshot()): DataFrame =
+    if (sch.primaryKeys.nonEmpty) MergeEngine.merge(readRaw(visibleEntries(entries, sch), sch), sch)
     else {
-      val patches = colPatchesOf(patchSnap)
-      if (patches.isEmpty) readAppendData(entries)
-      else applyColumnPatches(rowIdReadFor(entries), patches)
-        .select(struct.fieldNames.map(col).toIndexedSeq: _*)
+      val patches = colPatchesOf(sch, patchSnap)
+      if (patches.isEmpty) readAppendData(entries, sch)
+      else applyColumnPatches(rowIdReadFor(entries, sch), patches, sch)
+        .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
     }
 
   // ================= data evolution (column patches) =================
 
   /** column → patch files visible at `snap`; columns dropped since a
     * patch was written fall out of the map (their patches are inert). */
-  private def colPatchesOf(snap: Option[Snapshot]): Map[String, Seq[String]] =
+  private def colPatchesOf(
+      sch: TableSchema, snap: Option[Snapshot]): Map[String, Seq[String]] =
     snap.flatMap(_.colPatches).getOrElse(Map.empty)
-      .filter { case (c, _) => struct.fieldNames.contains(c) }
+      .filter { case (c, _) => sch.fields.exists(_.name == c) }
 
   /** Whether the given (or latest) snapshot carries column patches —
     * the DSv2 native scan cannot merge them and must fall back. */
-  private[graft] def hasColumnPatches(snapshotId: Option[Long] = None): Boolean =
-    colPatchesOf(snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())).nonEmpty
+  private[graft] def hasColumnPatches(
+      snapshotId: Option[Long] = None, sch: TableSchema = schema): Boolean =
+    colPatchesOf(sch, snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())).nonEmpty
 
   /** Backfill (or correct) ONE column for existing rows WITHOUT
     * rewriting any data file — the Spark shape of the reference's data
@@ -3196,7 +3181,8 @@ final class GraftTable private (
     * it). At most one value per row id per call. The column is added
     * to the schema if absent. */
   def patchColumn(name: String, values: DataFrame): Long = {
-    require(rowTracking,
+    val sch0 = schema
+    require(GraftTable.tracksRows(sch0),
       s"column patches need row tracking (set ${GraftTable.RowTrackingEnabled})")
     require(!name.contains('.'),
       "patches apply to TOP-LEVEL columns only (a dotted name would be " +
@@ -3212,19 +3198,22 @@ final class GraftTable private (
     require(dup.getLong(0) == dup.getLong(1),
       s"patchColumn: ${dup.getLong(0) - dup.getLong(1)} duplicate $rid " +
         "value(s) in one call — reduce to one value per row id first")
-    if (!schema.fields.exists(_.name == name))
-      addColumn(name, values.schema(name).dataType)
+    // adding the column is a schema change of its own; the commit
+    // carries the version that has it
+    val sch =
+      if (sch0.fields.exists(_.name == name)) sch0
+      else { addColumn(name, values.schema(name).dataType); schema }
     val fieldType = sparkTypeOf(
-      schema.fields.find(_.name == name).get.dataType)
+      sch.fields.find(_.name == name).get.dataType)
     // a patched CHAR(n)/VARCHAR(n) column must store the same
     // padded/length-checked form as every other commit path — otherwise
     // the overlay and the stored values compare unequal at read
     val enforced = enforceCharVarchar(
-      values.withColumn(name, col(name).cast(fieldType)), schema)
+      values.withColumn(name, col(name).cast(fieldType)), sch)
     val files = writePatchFiles(enforced
       .select(col(rid).cast("long").as("_row_id"),
         col(name).as("value")))
-    sm.commit(Seq.empty, KindAppend, schema.id,
+    sm.commit(Seq.empty, KindAppend, sch.id,
       colPatchUpdate = Some(m => m.updated(name, m.getOrElse(name, Seq.empty) ++ files)))
   }
 
@@ -3236,10 +3225,11 @@ final class GraftTable private (
     * swept by remove_orphan_files once no retained snapshot pins them.
     * Returns the new snapshot id, or None when ≤1 generation. */
   def compactColumnPatches(name: String): Option[Long] = {
-    val files = colPatchesOf(sm.latestSnapshot()).getOrElse(name, Seq.empty)
+    val sch = schema
+    val files = colPatchesOf(sch, sm.latestSnapshot()).getOrElse(name, Seq.empty)
     val foldedDirs = files.map(patchDirOf).distinct.toSet
     if (foldedDirs.size <= 1) return None
-    val fieldType = sparkTypeOf(schema.fields.find(_.name == name).get.dataType)
+    val fieldType = sparkTypeOf(sch.fields.find(_.name == name).get.dataType)
     val folded = readPatchGenerations(files, fieldType)
       .groupBy("__patch_rid")
       .agg(max_by(col("__pv"), col("__pg")).as("value"))
@@ -3248,7 +3238,7 @@ final class GraftTable private (
     // CAS-safe fold: keep any generation a CONCURRENT patchColumn
     // appended after our read — replacing the list wholesale would
     // silently drop that writer's committed values
-    Some(sm.commit(Seq.empty, KindCompact, schema.id,
+    Some(sm.commit(Seq.empty, KindCompact, sch.id,
       colPatchUpdate = Some(m => m.updated(name,
         newFiles ++ m.getOrElse(name, Seq.empty)
           .filterNot(f => foldedDirs.contains(patchDirOf(f)))))))
@@ -3293,20 +3283,20 @@ final class GraftTable private (
   /** Pruned row-id read with the patch overlay applied (the DSv2
     * `_ROW_ID` scan's entry point). */
   private[graft] def rowIdReadPatched(
-      entries: Seq[ManifestEntry], snapshotId: Option[Long] = None): DataFrame =
-    applyColumnPatches(rowIdReadFor(entries),
-      colPatchesOf(snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())))
+      entries: Seq[ManifestEntry], snapshotId: Option[Long], sch: TableSchema): DataFrame =
+    applyColumnPatches(rowIdReadFor(entries, sch),
+      colPatchesOf(sch, snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())), sch)
 
   /** Overlay the registered patches onto a row-id-carrying DataFrame.
     * Patch generation = the order of the patch DIRECTORIES in the
     * registry list (append-ordered by the commit CAS), so later
     * patches win per row id with no per-file sequence stored. Output
     * keeps the input's columns. */
-  private def applyColumnPatches(
-      base: DataFrame, patches: Map[String, Seq[String]]): DataFrame = {
+  private def applyColumnPatches(base: DataFrame,
+      patches: Map[String, Seq[String]], sch: TableSchema): DataFrame = {
     val rid = GraftTable.RowIdCol
     patches.toSeq.sortBy(_._1).foldLeft(base) { case (df, (c, files)) =>
-      val fieldType = sparkTypeOf(schema.fields.find(_.name == c).get.dataType)
+      val fieldType = sparkTypeOf(sch.fields.find(_.name == c).get.dataType)
       val latest = readPatchGenerations(files, fieldType)
         .groupBy("__patch_rid")
         .agg(max_by(col("__pv"), col("__pg")).as("__patch"),
@@ -3322,15 +3312,15 @@ final class GraftTable private (
     * DV sidecar are filtered by (file basename, row_index) liveness,
     * each task loading only the sidecars of the files it scans; plain
     * files stream straight through. */
-  private def readAppendData(entries: Seq[ManifestEntry]): DataFrame = {
-    val dataCols = struct.fieldNames.map(col).toIndexedSeq
+  private def readAppendData(entries: Seq[ManifestEntry], sch: TableSchema): DataFrame = {
+    val dataCols = sch.toStruct.fieldNames.map(col).toIndexedSeq
     val (dved, plain) = entries.partition(_.file.dvFile.isDefined)
-    val base = readRaw(plain).select(dataCols: _*)
+    val base = readRaw(plain, sch).select(dataCols: _*)
     if (dved.isEmpty) return base
     val dvPaths = dved.map(e =>
       basename(e.file.fileName) -> e.file.dvFile.get).toMap
     val rowLive = udf(new DvRowFilter(sm.io, path, dvPaths))
-    val filtered = readRaw(dved)
+    val filtered = readRaw(dved, sch)
       .withColumn("__file", expr("_metadata.file_path"))
       .withColumn("__idx", expr("_metadata.row_index"))
       .filter(rowLive(col("__file"), col("__idx")))
@@ -3349,12 +3339,13 @@ final class GraftTable private (
     * (reference: paimon row tracking — SpecialFields._ROW_ID,
     * DataFileMeta.firstRowId). */
   def readWithRowIds(snapshotId: Option[Long] = None): DataFrame = {
-    require(rowTracking,
+    val sch = schema
+    require(GraftTable.tracksRows(sch),
       s"set ${GraftTable.RowTrackingEnabled}=true at table creation")
     val snap = snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())
     applyColumnPatches(
-      rowIdReadFor(snap.map(sm.liveEntries).getOrElse(Seq.empty)),
-      colPatchesOf(snap))
+      rowIdReadFor(snap.map(sm.liveEntries).getOrElse(Seq.empty), sch),
+      colPatchesOf(sch, snap), sch)
   }
 
   /** Rows whose `_ROW_ID` lies in [lo, hi): files are pruned by their
@@ -3363,27 +3354,33 @@ final class GraftTable private (
     * manifest plus only the overlapping files (reference: the
     * row-range reads of ReadBuilder / FileStoreScan.withRowRanges). */
   def readRowRange(lo: Long, hi: Long): DataFrame = {
-    require(rowTracking,
+    val sch = schema
+    require(GraftTable.tracksRows(sch),
       s"set ${GraftTable.RowTrackingEnabled}=true at table creation")
     val c = col(GraftTable.RowIdCol)
+    val snap = sm.latestSnapshot()
     applyColumnPatches(
-      rowIdReadFor(rowRangeEntries(lo, hi)).filter(c >= lo && c < hi),
-      colPatchesOf(sm.latestSnapshot()))
+      rowIdReadFor(rowRangeEntries(snap, lo, hi), sch).filter(c >= lo && c < hi),
+      colPatchesOf(sch, snap), sch)
   }
 
   /** The file-pruning readRowRange applies: entries whose row-id extent
     * intersects [lo, hi). */
   private[graft] def rowRangeEntries(lo: Long, hi: Long): Seq[ManifestEntry] =
-    sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+    rowRangeEntries(sm.latestSnapshot(), lo, hi)
+
+  private def rowRangeEntries(
+      snap: Option[Snapshot], lo: Long, hi: Long): Seq[ManifestEntry] =
+    snap.map(sm.liveEntries).getOrElse(Seq.empty)
       .filter(e => e.file.firstRowId.exists(f => f < hi && f + e.file.rowCount > lo))
 
   /** Read `entries` with `_ROW_ID` = per-file base + physical row
     * index. The per-file bases ride a broadcast join on the file name —
     * O(files) metadata, no data shuffle. */
-  private[graft] def rowIdReadFor(entries: Seq[ManifestEntry]): DataFrame = {
-    val outCols = (struct.fieldNames.toIndexedSeq :+ GraftTable.RowIdCol).map(col)
+  private[graft] def rowIdReadFor(entries: Seq[ManifestEntry], sch: TableSchema): DataFrame = {
+    val outCols = (sch.toStruct.fieldNames.toIndexedSeq :+ GraftTable.RowIdCol).map(col)
     if (entries.isEmpty)
-      return emptyDf().withColumn(GraftTable.RowIdCol, lit(0L)).select(outCols: _*)
+      return emptyDf(sch).withColumn(GraftTable.RowIdCol, lit(0L)).select(outCols: _*)
     val bases = spark.createDataFrame(entries.map { e =>
       val first = e.file.firstRowId.getOrElse(throw new IllegalStateException(
         s"${e.file.fileName} has no firstRowId — written without row tracking?"))
@@ -3392,7 +3389,7 @@ final class GraftTable private (
       org.apache.spark.sql.types.StructField("__fname", org.apache.spark.sql.types.StringType, nullable = false),
       org.apache.spark.sql.types.StructField("__base", LongType, nullable = false))))
     def withIds(es: Seq[ManifestEntry]): DataFrame =
-      readRaw(es, captureMeta = true)
+      readRaw(es, sch, captureMeta = true)
         .withColumn("__fname", expr("element_at(split(__file, '/'), -1)"))
         .join(broadcast(bases), "__fname")
         .withColumn(GraftTable.RowIdCol, col("__base") + col("__idx"))
@@ -3422,7 +3419,7 @@ final class GraftTable private (
   def takeByPosition(positions: Seq[Long], snapshotId: Option[Long] = None)
       : Seq[org.apache.spark.sql.Row] = {
     val sch = schema
-    require(sch.fileFormat == "lance" && !isPrimaryKeyTable,
+    require(sch.fileFormat == "lance" && sch.primaryKeys.isEmpty,
       "positional take requires an append table with file.format=lance")
     if (positions.isEmpty) return Seq.empty
     val entries = snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())
@@ -3434,7 +3431,7 @@ final class GraftTable private (
     val total = exts.last
     positions.foreach(p =>
       require(p >= 0 && p < total, s"position $p out of [0, $total)"))
-    val struct0 = struct
+    val struct0 = sch.toStruct
     val byFile = positions.distinct.groupBy { p =>
       java.util.Arrays.binarySearch(exts, p) match {
         case x if x >= 0 => x
@@ -3454,14 +3451,47 @@ final class GraftTable private (
   /** Changelog view with a `_row_kind` label column (reference:
     * AuditLogTable — table/system/AuditLogTable.java:88). */
   def auditLog: DataFrame = {
-    require(isPrimaryKeyTable, "audit log requires a primary-key table")
+    val sch = schema
+    require(sch.primaryKeys.nonEmpty, "audit log requires a primary-key table")
     val entries =
-      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty))
+      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty), sch)
     // reference AuditLogTable: rowkind + data fields only — the
     // internal sequence column is not part of the relation
-    readRaw(entries)
+    readRaw(entries, sch)
       .withColumn("_row_kind", MergeEngine.kindLabel(col(KindCol)))
       .drop(KindCol, SeqCol, "__bucket")
+  }
+
+  /** Incremental read ending at an AUTO tag, starting from the auto
+    * tag that precedes it (reference: PaimonTableValuedFunctions
+    * .scala:43-49 `paimon_incremental_to_auto_tag` +
+    * IncrementalDiffStartingScanner.toEndAutoTag): the end tag must
+    * match the table's auto-tag period format; a missing end tag or no
+    * earlier auto tag yields an EMPTY result (the reference's
+    * EmptyResultStartingScanner), never an error. Auto-tag names
+    * (`yyyy-MM-dd` daily / `yyyy-MM-dd-HH` hourly, UTC) sort
+    * lexicographically in chronological order, so "latest earlier tag"
+    * is a plain string max. */
+  def incrementalToAutoTag(endTag: String): DataFrame = {
+    val sch = schema
+    val daily =
+      sch.options.getOrElse("tag.creation-period", "daily") == "daily"
+    val pat =
+      if (daily) "\\d{4}-\\d{2}-\\d{2}" else "\\d{4}-\\d{2}-\\d{2}-\\d{2}"
+    require(endTag.matches(pat),
+      s"tag '$endTag' is not an auto-created tag (expected $pat)")
+    def empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      StructType(sch.toStruct.fields :+
+        StructField("_row_kind", org.apache.spark.sql.types.StringType)))
+    val tags = sm.tags
+    if (!tags.contains(endTag)) return empty
+    val prev = tags.keys.filter(n => n.matches(pat) && n < endTag)
+      .maxOption.getOrElse(return empty)
+    (for {
+      from <- sm.tagSnapshot(prev).map(_.id)
+      to <- sm.tagSnapshot(endTag).map(_.id)
+    } yield incrementalRead(from, to, sch)).getOrElse(empty)
   }
 
   /** Rows changed between two snapshots (exclusive, inclusive] — the
@@ -3474,38 +3504,13 @@ final class GraftTable private (
     * Append-table files dropped outright (partition drop / full-file
     * delete) emit their surviving rows as -D. PK-table deletes arrive
     * as -D kinded rows in the delta files themselves. */
-  /** Incremental read ending at an AUTO tag, starting from the auto
-    * tag that precedes it (reference: PaimonTableValuedFunctions
-    * .scala:43-49 `paimon_incremental_to_auto_tag` +
-    * IncrementalDiffStartingScanner.toEndAutoTag): the end tag must
-    * match the table's auto-tag period format; a missing end tag or no
-    * earlier auto tag yields an EMPTY result (the reference's
-    * EmptyResultStartingScanner), never an error. Auto-tag names
-    * (`yyyy-MM-dd` daily / `yyyy-MM-dd-HH` hourly, UTC) sort
-    * lexicographically in chronological order, so "latest earlier tag"
-    * is a plain string max. */
-  def incrementalToAutoTag(endTag: String): DataFrame = {
-    val daily =
-      schema.options.getOrElse("tag.creation-period", "daily") == "daily"
-    val pat =
-      if (daily) "\\d{4}-\\d{2}-\\d{2}" else "\\d{4}-\\d{2}-\\d{2}-\\d{2}"
-    require(endTag.matches(pat),
-      s"tag '$endTag' is not an auto-created tag (expected $pat)")
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(struct.fields :+
-        StructField("_row_kind", org.apache.spark.sql.types.StringType)))
-    val tags = sm.tags
-    if (!tags.contains(endTag)) return empty
-    val prev = tags.keys.filter(n => n.matches(pat) && n < endTag)
-      .maxOption.getOrElse(return empty)
-    (for {
-      from <- sm.tagSnapshot(prev).map(_.id)
-      to <- sm.tagSnapshot(endTag).map(_.id)
-    } yield incrementalRead(from, to)).getOrElse(empty)
-  }
+  def incrementalRead(fromExclusive: Long, toInclusive: Long): DataFrame =
+    incrementalRead(fromExclusive, toInclusive, schema)
 
-  def incrementalRead(fromExclusive: Long, toInclusive: Long): DataFrame = {
+  private def incrementalRead(
+      fromExclusive: Long, toInclusive: Long, sch: TableSchema): DataFrame = {
+    val pkTable = sch.primaryKeys.nonEmpty
+    val names = sch.toStruct.fieldNames
     val ids = sm.snapshotIds.filter(i => i > fromExclusive && i <= toInclusive)
     val idSet = ids.toSet
     // ids in range whose snapshot EXPIRED but whose exact changelog
@@ -3519,11 +3524,11 @@ final class GraftTable private (
     // those directly (zero derivation) and ignore append deltas, which
     // the compaction pairs already summarize (reference: CHANGELOG
     // incremental scan mode over that producer).
-    if (isPrimaryKeyTable && schema.changelogProducer == "full-compaction") {
-      val outCols = (struct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
+    val outCols = (names :+ "_row_kind").map(col).toIndexedSeq
+    if (pkTable && sch.changelogProducer == "full-compaction") {
       val cl = ids.map(sm.snapshot).flatMap(_.changelogManifest) ++
         retainedInRange.map(_.manifest)
-      return readChangelogFiles(cl.flatMap(sm.readManifest)).select(outCols: _*)
+      return readChangelogFiles(cl.flatMap(sm.readManifest), sch).select(outCols: _*)
     }
     val snaps = ids.map(sm.snapshot).filter(_.commitKind != KindCompact)
     // snapshots with a persisted changelog serve exact -U/+U pairs
@@ -3535,26 +3540,24 @@ final class GraftTable private (
       retainedInRange.filter(_.commitKind != KindCompact).map(_.manifest)
     val clRows =
       if (clManifests.isEmpty) None
-      else Some(readChangelogFiles(clManifests.flatMap(sm.readManifest)))
+      else Some(readChangelogFiles(clManifests.flatMap(sm.readManifest), sch))
     val deltas = withoutCl
       .flatMap(s => s.deltaManifest.map(sm.readManifest))
     val addEntries = deltas.flatMap { delta =>
       val deleted = delta.filter(_.kind == "DELETE").map(_.file.fileName).toSet
       delta.filter(e => e.kind == "ADD" && !deleted.contains(e.file.fileName))
     }
-    val outCols = (struct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
-    val raw = readRaw(addEntries)
+    val raw = readRaw(addEntries, sch)
+    val dataCols = names.map(col).toIndexedSeq
     val plusRows =
-      if (isPrimaryKeyTable)
+      if (pkTable)
         raw.withColumn("_row_kind", MergeEngine.kindLabel(col(KindCol)))
           .drop(KindCol, SeqCol, "__bucket")
-      else raw.select(struct.fieldNames.map(col).toIndexedSeq: _*)
-        .withColumn("_row_kind", lit("+I"))
-    if (isPrimaryKeyTable)
+      else raw.select(dataCols: _*).withColumn("_row_kind", lit("+I"))
+    if (pkTable)
       return (Seq(plusRows.select(outCols: _*)) ++
         clRows.map(_.select(outCols: _*))).reduce(_ unionAll _)
     // append tables: derive -D rows for deleted entries
-    val dataCols = struct.fieldNames.map(col).toIndexedSeq
     val minusParts = deltas.flatMap { delta =>
       val readdedDv = delta.collect {
         case e if e.kind == "ADD" && e.file.dvFile.isDefined =>
@@ -3571,7 +3574,7 @@ final class GraftTable private (
     val (grown, dropped) = minusParts.partition(_._2.isDefined)
     def minusOf(entries: Seq[ManifestEntry],
         keep: org.apache.spark.sql.expressions.UserDefinedFunction) =
-      readRaw(entries)
+      readRaw(entries, sch)
         .withColumn("__file", expr("_metadata.file_path"))
         .withColumn("__idx", expr("_metadata.row_index"))
         .filter(keep(col("__file"), col("__idx")))
@@ -3600,15 +3603,16 @@ final class GraftTable private (
     * would silently lose retractions for every key the overwrite
     * dropped. */
   def overwriteChanges(snapshotId: Long): DataFrame = {
-    require(isPrimaryKeyTable, "overwriteChanges requires a primary-key " +
+    val sch = schema
+    require(sch.primaryKeys.nonEmpty, "overwriteChanges requires a primary-key " +
       "table; append tables derive overwrite changes via incrementalRead")
     val sn = sm.snapshot(snapshotId)
     require(sn.commitKind == KindOverwrite,
       s"snapshot $snapshotId is ${sn.commitKind}, not OVERWRITE")
     val delta = sn.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty)
     def merged(entries: Seq[ManifestEntry]): DataFrame =
-      if (entries.isEmpty) emptyDf() else mergedFromEntries(entries)
-    val outCols = (struct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
+      if (entries.isEmpty) emptyDf(sch) else mergedFromEntries(entries, sch)
+    val outCols = (sch.toStruct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
     merged(delta.filter(_.kind == "DELETE"))
       .withColumn("_row_kind", lit("-D")).select(outCols: _*)
       .unionAll(merged(delta.filter(_.kind == "ADD"))
@@ -3620,13 +3624,15 @@ final class GraftTable private (
     * updates, [value] for inserts/deletes (reference:
     * table/system/BinlogTable.java:55). */
   def binlog(fromExclusive: Long, toInclusive: Long): DataFrame = {
-    require(isPrimaryKeyTable, "binlog requires a primary-key table")
-    val pk = schema.primaryKeys
-    val valueCols = struct.fieldNames.filterNot(pk.contains)
+    val sch = schema
+    val pk = sch.primaryKeys
+    require(pk.nonEmpty, "binlog requires a primary-key table")
+    val base = sch.toStruct
+    val valueCols = base.fieldNames.filterNot(pk.contains)
     val ids = sm.snapshotIds.filter(i => i > fromExclusive && i <= toInclusive)
       .filter(i => sm.snapshot(i).commitKind != KindCompact)
     val perSnapshot = ids.map { id =>
-      val chg = incrementalRead(id - 1, id)
+      val chg = incrementalRead(id - 1, id, sch)
       val packed = struct_ord(valueCols.map(col).toIndexedSeq: _*)
       val isBefore = col("_row_kind").isin("-U", "-D")
       val isAfter = col("_row_kind").isin("+U", "+I")
@@ -3646,7 +3652,6 @@ final class GraftTable private (
         pk.map(col) ++: arrays).toIndexedSeq: _*)
     }
     perSnapshot.reduceOption(_ unionAll _).getOrElse {
-      val base = struct
       val fields = StructField("snapshot_id", LongType, nullable = false) +:
         StructField("rowkind", org.apache.spark.sql.types.StringType, nullable = false) +:
         base.fields.filter(f => pk.contains(f.name)) ++:
@@ -3661,13 +3666,11 @@ final class GraftTable private (
   def systemBinlog: DataFrame =
     binlog(-1L, sm.latestSnapshotId.getOrElse(-1L))
 
-  private def rawReadSchema: StructType = rawSchemaOf(schema)
-
   private def rawSchemaOf(sch: TableSchema): StructType = {
     // blob columns store a descriptor struct in the data files
     val base = graft.sources.BlobStorage.physicalSchema(
       sch.toStruct, graft.sources.BlobStorage.blobColumns(sch.options))
-    if (isPrimaryKeyTable)
+    if (sch.primaryKeys.nonEmpty)
       StructType(base.fields
         :+ StructField(SeqCol, LongType, nullable = false)
         :+ StructField(KindCol, ByteType, nullable = false)
@@ -3675,11 +3678,11 @@ final class GraftTable private (
     else base
   }
 
-  private def emptyDf(): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
+  private def emptyDf(sch: TableSchema): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sch.toStruct)
 
-  private def emptyRawDf(): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawReadSchema)
+  private def emptyRawDf(sch: TableSchema): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], rawSchemaOf(sch))
 
   /** Manifest-level pruning: partition values + file stats vs the
     * filter expression.
@@ -3691,8 +3694,8 @@ final class GraftTable private (
     * predicates are applied post-merge by the caller (the reference
     * restricts PK-table skipping to key/partition predicates for the
     * same reason). */
-  private[graft] def pruneEntries(snap: Snapshot, filter: Column): Seq[ManifestEntry] = {
-    val sch = schema
+  private[graft] def pruneEntries(
+      snap: Snapshot, filter: Column, sch: TableSchema = schema): Seq[ManifestEntry] = {
     // resolve the Column against the table schema to get a Catalyst
     // expression with typed attributes/literals. Constant-fold the
     // analyzed condition first: literal-side expressions like
@@ -3700,7 +3703,7 @@ final class GraftTable private (
     // RuntimeReplaceables, which StatsFilter's `r.foldable` guards
     // would otherwise pass over (no pruning). Folding on a one-row
     // wrapper plan turns them into plain Literals.
-    val analyzed = emptyDf().filter(filter).queryExecution.analyzed.collectFirst {
+    val analyzed = emptyDf(sch).filter(filter).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.map(c => invertStringTransforms(foldConstants(c)))
     pruneAnalyzed(snap, sch, visibleEntries(sm.liveEntries(snap), sch), analyzed)
@@ -3762,7 +3765,7 @@ final class GraftTable private (
         // full scans
         var loggedFailure = false
         candidates.filter { e =>
-          try PruneEval.keep(c, e, sch, schemaOf, path, sm.io, sidecarCaches)
+          try PruneEval.keep(c, e, sch, sm.schema, path, sm.io, sidecarCaches)
           catch { case ex: Exception =>
             if (!loggedFailure) {
               loggedFailure = true
@@ -3792,7 +3795,7 @@ final class GraftTable private (
     // pre-resolve the (few) historic schemas on the driver so executors
     // never read schema files
     val byId = entries.map(_.file.schemaId).distinct
-      .filterNot(_ == sch.id).map(id => id -> schemaOf(id)).toMap
+      .filterNot(_ == sch.id).map(id => id -> sm.schema(id)).toMap
     val tp = path
     try {
       val slices = math.min(spark.sparkContext.defaultParallelism,
@@ -3961,7 +3964,7 @@ final class GraftTable private (
     * into level-1 files; deletes are physically dropped. One COMPACT
     * snapshot replacing the inputs (reference:
     * MergeTreeCompactManager + CompactProcedure). */
-  def compact(): Option[Long] = compactEntries(_ => true)
+  def compact(): Option[Long] = compactEntries(schema, _ => true)
 
   /** Partition-scoped compaction: rewrite only partitions matching the
     * predicate — the reference's `CALL sys.compact(..., where => ...)`
@@ -3970,19 +3973,20 @@ final class GraftTable private (
     * over the distinct partition values, so planning is O(partitions)
     * regardless of table size. */
   def compactWhere(cond: Column): Option[Long] = {
+    val sch = schema
     val snap = sm.latestSnapshot().getOrElse(return None)
     // partitionsMatching evaluates cond over ONLY the partition
     // columns, so a predicate touching a data column fails analysis
     val selected =
-      try partitionsMatching(sm.liveEntries(snap), cond)
+      try partitionsMatching(sch, sm.liveEntries(snap), cond)
         .map(_.file.fileName).toSet
       catch { case e: org.apache.spark.sql.AnalysisException =>
         throw new IllegalArgumentException(
           s"compact where-predicate may only use partition columns " +
-            s"${schema.partitionKeys.mkString(",")}: ${e.getMessage}")
+            s"${sch.partitionKeys.mkString(",")}: ${e.getMessage}")
       }
     if (selected.isEmpty) None
-    else compactEntries(e => selected.contains(e.file.fileName))
+    else compactEntries(sch, e => selected.contains(e.file.fileName))
   }
 
   /** Incremental compaction: rewrite only the (partition, bucket)
@@ -4048,8 +4052,8 @@ final class GraftTable private (
     // would create a second level-1 generation and break the
     // full-compaction changelog's before-state; visibility assignment
     // is always a FULL compact
-    else if (schema.isPostponeBucket) compact()
-    else compactEntries(e => hot.contains(e.file.fileName))
+    else if (sch.isPostponeBucket) compactEntries(sch, _ => true)
+    else compactEntries(sch, e => hot.contains(e.file.fileName))
   }
 
   /** Record-level TTL (reference: RecordLevelExpire +
@@ -4064,11 +4068,11 @@ final class GraftTable private (
       dur <- sch.options.get("record-level.expire-time")
       tf <- sch.options.get("record-level.time-field")
     } yield {
-      require(struct.fieldNames.contains(tf),
-        s"record-level.time-field $tf is not a column")
+      val field = sch.toStruct.fields.find(_.name == tf).getOrElse(
+        throw new IllegalArgumentException(s"record-level.time-field $tf is not a column"))
       val cutoffMs = System.currentTimeMillis() - GraftTable.parseDurationMillis(dur)
       val c = col(tf)
-      struct(tf).dataType match {
+      field.dataType match {
         case TimestampType | TimestampNTZType =>
           c.isNull || unix_micros(c.cast(TimestampType)) >= cutoffMs * 1000L
         case _ if sch.options.get("record-level.time-field-unit").contains("millis") =>
@@ -4077,20 +4081,22 @@ final class GraftTable private (
       }
     }
 
-  private def compactEntries(select: ManifestEntry => Boolean): Option[Long] = {
+  private def compactEntries(
+      sch: TableSchema, select: ManifestEntry => Boolean): Option[Long] = {
     // compaction rewrites files, which would re-position rows and break
     // the firstRowId + position identity (the reference likewise
     // restricts compaction on row-tracking tables)
-    require(!rowTracking,
+    require(!GraftTable.tracksRows(sch),
       "row-tracking tables cannot be compacted: rewriting files would reassign _ROW_ID")
     val snap = sm.latestSnapshot().getOrElse(return None)
     val old = sm.liveEntries(snap).filter(select)
     if (old.isEmpty) return None
-    val sch = schema
+    val pkTable = sch.primaryKeys.nonEmpty
+    val cols = sch.toStruct.fieldNames.map(col).toIndexedSeq
     val base = nextSeq()
     val merged =
-      if (isPrimaryKeyTable) {
-        val m0 = MergeEngine.mergeKeepMeta(readRaw(old), sch)
+      if (pkTable) {
+        val m0 = MergeEngine.mergeKeepMeta(readRaw(old, sch), sch)
           // -U winners are retractions too (see MergeEngine.merge) —
           // rewriting one as +I would make the phantom row permanent
           .filter(col(KindCol) =!= KindDelete &&
@@ -4107,7 +4113,7 @@ final class GraftTable private (
           val pk = sch.primaryKeys
           if (m.columns.contains("__bucket")) m
           else {
-            val bucketOf = readRaw(old)
+            val bucketOf = readRaw(old, sch)
               .groupBy(pk.map(col).toIndexedSeq: _*)
               .agg(max(col("__bucket")).as("__bucket"))
             m.join(bucketOf, pk, "left")
@@ -4120,9 +4126,9 @@ final class GraftTable private (
           // bucket-key table re-routes by the SAME columns the writer
           // used)
           Buckets.column(sch, sch.bucketKeys, sch.effectiveBuckets))
-      } else readAppendData(old) // applies deletion vectors before rewrite
+      } else readAppendData(old, sch) // applies deletion vectors before rewrite
     val partitionBy =
-      if (isPrimaryKeyTable) sch.partitionKeys :+ "__bucket" else sch.partitionKeys
+      if (pkTable) sch.partitionKeys :+ "__bucket" else sch.partitionKeys
     // changelog-producer=full-compaction: the compaction itself emits
     // the exact -U/+U/+I/-D rows accumulated since the PREVIOUS full
     // compaction — before = merged state of the level-1 inputs (last
@@ -4133,7 +4139,7 @@ final class GraftTable private (
     // result).
     val producer = sch.changelogProducer
     val changelog =
-      if (!isPrimaryKeyTable || producer != "full-compaction") None
+      if (!pkTable || producer != "full-compaction") None
       else {
         merged.persist()
         val compacted = old.filter(_.file.level >= 1)
@@ -4141,11 +4147,8 @@ final class GraftTable private (
         // one generation per (partition, bucket), keys unique within
         // it, deletes physically dropped — so the before-state is a
         // raw projection, no second full-table merge shuffle
-        val before = readRaw(compacted)
-          .select(struct.fieldNames.map(col).toIndexedSeq: _*)
-        persistChangelog(
-          stateDiff(before, merged.select(struct.fieldNames.map(col).toIndexedSeq: _*)),
-          sch)
+        val before = readRaw(compacted, sch).select(cols: _*)
+        persistChangelog(stateDiff(before, merged.select(cols: _*), sch), sch)
       }
     // `target-file-size` (reference: CoreOptions TARGET_FILE_SIZE):
     // compaction output rolls at ~the target — rows per file derived
@@ -4167,7 +4170,7 @@ final class GraftTable private (
     // (no explicit N → AQE coalesces; deterministic under retry) yields
     // one file per (partition, bucket) with rollAt still bounding size.
     val routed =
-      if (isPrimaryKeyTable && partitionBy.nonEmpty)
+      if (pkTable && partitionBy.nonEmpty)
         merged.repartition(partitionBy.map(col).toIndexedSeq: _*)
       else merged
     try Some(commitFiles(routed, sch, partitionBy, KindCompact, base,
@@ -4301,15 +4304,15 @@ final class GraftTable private (
     require(sch.partitionKeys.contains(column),
       s"$column is not a partition column")
     val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
-    val field = struct.fields.find(_.name == column).get
+    val field = sch.toStruct(column)
     val cond = col(column) < lit(olderThan).cast(field.dataType)
-    val victims = partitionsMatching(sm.liveEntries(snap), cond)
+    val victims = partitionsMatching(sch, sm.liveEntries(snap), cond)
     if (victims.isEmpty) return Seq.empty
     sm.commit(victims.map(_.copy(kind = "DELETE")), KindOverwrite, sch.id,
       conflictCheck = latest => victims.map(_.file.fileName).toSet
         .subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
     val dropped = victims.map(_.partition).distinct
-    mirrorHmsDrops(dropped)
+    mirrorHmsDrops(sch, dropped)
     dropped
   }
 
@@ -4318,9 +4321,9 @@ final class GraftTable private (
     * delta path never lists or drops; expiry and explicit partition
     * drops are where partitions actually disappear). Log-and-continue:
     * metastore unavailability must not fail the table operation. */
-  private def mirrorHmsDrops(parts: Seq[Map[String, String]]): Unit =
+  private def mirrorHmsDrops(sch: TableSchema, parts: Seq[Map[String, String]]): Unit =
     if (parts.nonEmpty &&
-      schema.options.get("metastore.partitioned-table").contains("true"))
+      sch.options.get("metastore.partitioned-table").contains("true"))
       try graft.sources.HmsBridge.dropHmsPartitions(this, parts)
       catch { case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger("graft.GraftTable").warn(
@@ -4401,7 +4404,7 @@ final class GraftTable private (
         conflictCheck = latest => victims.map(_.file.fileName).toSet
           .subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
     }
-    mirrorHmsDrops(chosen)
+    mirrorHmsDrops(sch, chosen)
     chosen
   }
 
@@ -4413,11 +4416,11 @@ final class GraftTable private (
     * groups (default 1000) so one pass over a deep backlog never builds
     * a single giant OVERWRITE). Strategy/formatter/pattern ride the
     * same options as the procedure. */
-  private[graft] def autoExpirePartitions(): Seq[Map[String, String]] = {
-    val opts = schema.options
+  private[graft] def autoExpirePartitions(sch: TableSchema): Seq[Map[String, String]] = {
+    val opts = sch.options
     val ttl = opts.get("partition.expiration-time")
       .map(Meta.parseDurationMillis).getOrElse(return Seq.empty)
-    if (schema.partitionKeys.isEmpty) return Seq.empty
+    if (sch.partitionKeys.isEmpty) return Seq.empty
     // re-entrancy latch: the pass's own DELETE commits re-fire the
     // hook; without it a 0ms check-interval would drain the whole
     // backlog recursively, defeating the per-pass max-num bound
@@ -4535,7 +4538,7 @@ final class GraftTable private (
   def rebuildVectorIndex(
       idCol: String, vecCol: String,
       shards: Int = 4, m: Int = 8, efConstruction: Int = 64): Unit = {
-    require(struct.fieldNames.contains(idCol) && struct.fieldNames.contains(vecCol),
+    require(Seq(idCol, vecCol).forall(c => schema.fields.exists(_.name == c)),
       s"no such columns: $idCol / $vecCol")
     val snap = sm.latestSnapshot().getOrElse(
       throw new IllegalStateException("empty table"))
@@ -4606,15 +4609,16 @@ final class GraftTable private (
     * files) rows, built in one shuffle; the probe reads only the
     * row-groups whose [min,max] token range covers the word. */
   def rebuildTextIndex(column: String): Unit = {
-    require(struct.fieldNames.contains(column), s"no such column: $column")
+    val sch = schema
+    require(sch.fields.exists(_.name == column), s"no such column: $column")
     val snap = sm.latestSnapshot().getOrElse(
       throw new IllegalStateException("empty table"))
-    val entries = visibleEntries(sm.liveEntries(snap)).filter(e =>
+    val entries = visibleEntries(sm.liveEntries(snap), sch).filter(e =>
       e.file.fileName.endsWith(".parquet") || e.file.fileName.endsWith(".orc"))
     val dir = s"index-text/$column"
     val postingsRel = s"$dir/postings-${snap.id}"
     if (entries.nonEmpty)
-      readRaw(entries, captureMeta = true)
+      readRaw(entries, sch, captureMeta = true)
         .select(substring_index(col("__file"), "/", -1).as("f"),
           explode(array_distinct(split(
             coalesce(col(column).cast("string"), lit("")),
@@ -4660,7 +4664,8 @@ final class GraftTable private (
       case None => rebuildTextIndex(column) // nothing to extend
       case Some(s0) =>
         val snap = sm.latestSnapshot().getOrElse(return)
-        val entries = visibleEntries(sm.liveEntries(snap)).filter(e =>
+        val sch = schema
+        val entries = visibleEntries(sm.liveEntries(snap), sch).filter(e =>
           e.file.fileName.endsWith(".parquet") || e.file.fileName.endsWith(".orc"))
         val liveNames = entries.map(e => basename(e.file.fileName))
         val coveredSet = s0.covered.toSet
@@ -4672,7 +4677,7 @@ final class GraftTable private (
           return
         }
         val incRel = s"index-text/$column/postings-${snap.id}-${s0.postings.size}"
-        readRaw(fresh, captureMeta = true)
+        readRaw(fresh, sch, captureMeta = true)
           .select(substring_index(col("__file"), "/", -1).as("f"),
             explode(array_distinct(split(
               coalesce(col(column).cast("string"), lit("")),
@@ -4696,10 +4701,10 @@ final class GraftTable private (
     * granularity — dropping one level file from an LSM merge would
     * resurrect older versions. Fail-open on any index read problem. */
   private[graft] def textCandidates(
-      column: String, word: String,
-      prefixMatch: Boolean = false): Seq[ManifestEntry] =
-    textPrune(column) { postings =>
-      cappedFileHits(postings
+      column: String, word: String, prefixMatch: Boolean = false,
+      sch: TableSchema = schema): Seq[ManifestEntry] =
+    textPrune(sch, column) { postings =>
+      cappedFileHits(sch, postings
         .filter(if (prefixMatch) col("token").startsWith(word)
                 else col("token") === word)
         .select("f").distinct())
@@ -4709,11 +4714,11 @@ final class GraftTable private (
     * survives only if it holds EVERY word (groupBy f + distinct-token
     * count) — tighter than intersecting per-word probes, same single
     * bounded job. */
-  private[graft] def textCandidatesAll(
-      column: String, words: Seq[String]): Seq[ManifestEntry] = {
+  private[graft] def textCandidatesAll(column: String, words: Seq[String],
+      sch: TableSchema = schema): Seq[ManifestEntry] = {
     val distinctWords = words.distinct
-    textPrune(column) { postings =>
-      cappedFileHits(postings
+    textPrune(sch, column) { postings =>
+      cappedFileHits(sch, postings
         .filter(col("token").isin(distinctWords: _*))
         .groupBy("f").agg(countDistinct(col("token")).as("n"))
         .filter(col("n") === distinctWords.size)
@@ -4723,10 +4728,10 @@ final class GraftTable private (
 
   /** Candidates for an OR of whole tokens: union of the per-token
     * posting sets, still one scan (isin + distinct f). */
-  private[graft] def textCandidatesAny(
-      column: String, words: Seq[String]): Seq[ManifestEntry] =
-    textPrune(column) { postings =>
-      cappedFileHits(postings
+  private[graft] def textCandidatesAny(column: String, words: Seq[String],
+      sch: TableSchema = schema): Seq[ManifestEntry] =
+    textPrune(sch, column) { postings =>
+      cappedFileHits(sch, postings
         .filter(col("token").isin(words.distinct: _*))
         .select("f").distinct())
     }
@@ -4738,8 +4743,8 @@ final class GraftTable private (
     * `text-index.max-probe-hits` (default 100k) the probe FAILS OPEN —
     * None keeps every covered candidate, so results never change,
     * only the pruning benefit is forfeited. */
-  private def cappedFileHits(files: DataFrame): Option[Set[String]] = {
-    val cap = schema.options
+  private def cappedFileHits(sch: TableSchema, files: DataFrame): Option[Set[String]] = {
+    val cap = sch.options
       .getOrElse("text-index.max-probe-hits", "100000").toInt
     val rows = files.limit(cap + 1).collect()
     if (rows.length > cap) {
@@ -4753,13 +4758,13 @@ final class GraftTable private (
   /** Shared text-index pruning scaffold: `hitsOf` maps the postings
     * DataFrame to the set of matching file basenames, or None to fail
     * open (probe over the cap → every covered file stays). */
-  private def textPrune(column: String)(
+  private def textPrune(sch: TableSchema, column: String)(
       hitsOf: DataFrame => Option[Set[String]]): Seq[ManifestEntry] = {
     val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
-    val entries = visibleEntries(sm.liveEntries(snap))
+    val entries = visibleEntries(sm.liveEntries(snap), sch)
     // a column patch can rewrite text the write-time postings never
     // saw — the index is stale for patched columns, so fail OPEN
-    if (colPatchesOf(Some(snap)).contains(column)) return entries
+    if (colPatchesOf(sch, Some(snap)).contains(column)) return entries
     val stPath = s"$path/index-text/$column/state.json"
     val st =
       try {
@@ -4781,7 +4786,7 @@ final class GraftTable private (
           val b = basename(e.file.fileName)
           !covered.contains(b) || hits.contains(b)
         }
-        if (isPrimaryKeyTable) {
+        if (sch.primaryKeys.nonEmpty) {
           val units = keep.map(e => (e.partition, e.bucket)).toSet
           entries.filter(e => units.contains((e.partition, e.bucket)))
         } else keep
@@ -4806,11 +4811,12 @@ final class GraftTable private (
   def searchText(column: String, word: String): DataFrame = {
     require(isSearchToken(word),
       "searchText matches a single whole token: [A-Za-z0-9]+")
-    val matched = mergedFromEntries(textCandidates(column, word))
+    val sch = schema
+    val matched = mergedFromEntries(textCandidates(column, word, sch = sch), sch)
       .filter(array_contains(split(
         coalesce(col(column).cast("string"), lit("")),
         GraftTable.TextTokenSplit), word))
-    matched.select(struct.fieldNames.map(col).toIndexedSeq: _*)
+    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Rows whose `column` contains EVERY word in `words` as a whole
@@ -4821,9 +4827,10 @@ final class GraftTable private (
       "searchTextAll takes whole tokens: [A-Za-z0-9]+")
     val tokens = split(
       coalesce(col(column).cast("string"), lit("")), GraftTable.TextTokenSplit)
-    val matched = mergedFromEntries(textCandidatesAll(column, words))
+    val sch = schema
+    val matched = mergedFromEntries(textCandidatesAll(column, words, sch), sch)
       .filter(words.distinct.map(w => array_contains(tokens, w)).reduce(_ && _))
-    matched.select(struct.fieldNames.map(col).toIndexedSeq: _*)
+    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Rows whose `column` contains AT LEAST ONE of `words` as a whole
@@ -4836,9 +4843,10 @@ final class GraftTable private (
       "searchTextAny takes whole tokens: [A-Za-z0-9]+")
     val tokens = split(
       coalesce(col(column).cast("string"), lit("")), GraftTable.TextTokenSplit)
-    val matched = mergedFromEntries(textCandidatesAny(column, words))
+    val sch = schema
+    val matched = mergedFromEntries(textCandidatesAny(column, words, sch), sch)
       .filter(words.distinct.map(w => array_contains(tokens, w)).reduce(_ || _))
-    matched.select(struct.fieldNames.map(col).toIndexedSeq: _*)
+    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Rows whose `column` contains `words` as CONSECUTIVE whole tokens
@@ -4852,9 +4860,10 @@ final class GraftTable private (
       "searchTextPhrase takes whole tokens: [A-Za-z0-9]+")
     val pattern = words.mkString(
       "(^|[^A-Za-z0-9])", "[^A-Za-z0-9]+", "([^A-Za-z0-9]|$)")
-    val matched = mergedFromEntries(textCandidatesAll(column, words))
+    val sch = schema
+    val matched = mergedFromEntries(textCandidatesAll(column, words, sch), sch)
       .filter(coalesce(col(column).cast("string"), lit("")).rlike(pattern))
-    matched.select(struct.fieldNames.map(col).toIndexedSeq: _*)
+    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Rows whose `column` contains a token starting with `prefix`
@@ -4865,12 +4874,13 @@ final class GraftTable private (
   def searchTextPrefix(column: String, prefix: String): DataFrame = {
     require(isSearchToken(prefix),
       "searchTextPrefix takes a token prefix: [A-Za-z0-9]+")
+    val sch = schema
     val matched = mergedFromEntries(
-      textCandidates(column, prefix, prefixMatch = true))
+      textCandidates(column, prefix, prefixMatch = true, sch), sch)
       .filter(exists(split(
         coalesce(col(column).cast("string"), lit("")),
         GraftTable.TextTokenSplit), t => t.startsWith(prefix)))
-    matched.select(struct.fieldNames.map(col).toIndexedSeq: _*)
+    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** Delete files under the table directory that no snapshot of any
@@ -4903,7 +4913,8 @@ final class GraftTable private (
     // the referenced set comes from a distributed scan of the
     // descriptor columns of every referenced parquet file (one job; a
     // driver loop over payload metadata would not survive scale)
-    val blobCols = graft.sources.BlobStorage.blobColumns(schema.options)
+    val sch = schema
+    val blobCols = graft.sources.BlobStorage.blobColumns(sch.options)
     val blobRefs: Set[String] =
       if (blobCols.isEmpty) Set.empty
       else {
@@ -4914,7 +4925,7 @@ final class GraftTable private (
             sm.io.exists(s"$path/$f")).toSeq
         if (dataFiles.isEmpty) Set.empty
         else {
-          val phys = graft.sources.BlobStorage.physicalSchema(struct, blobCols)
+          val phys = graft.sources.BlobStorage.physicalSchema(sch.toStruct, blobCols)
           val descs = spark.read
             .schema(StructType(blobCols.map(c => phys.fields(phys.fieldIndex(c)))))
             .parquet(dataFiles.map(f => s"$path/$f"): _*)
@@ -5054,13 +5065,14 @@ final class GraftTable private (
     * and lookups use the new bucketing. */
   def rescale(newBuckets: Int): Option[Long] = {
     val sch = schema
-    require(isPrimaryKeyTable, "rescale applies to primary-key tables")
+    require(sch.primaryKeys.nonEmpty, "rescale applies to primary-key tables")
     require(!sch.isDynamicBucket, "dynamic-bucket tables size themselves")
     require(newBuckets > 0, "bucket count must be positive")
     if (sch.numBuckets == newBuckets) return None
-    sm.writeSchema(sch.copy(id = sch.id + 1,
-      options = sch.options.updated("bucket", newBuckets.toString)))
-    compact()
+    val rescaled = sch.copy(id = sch.id + 1,
+      options = sch.options.updated("bucket", newBuckets.toString))
+    sm.writeSchema(rescaled)
+    compactEntries(rescaled, _ => true)
   }
 
   /** Rebuild every live file's index sidecars per the CURRENT index
@@ -5093,10 +5105,10 @@ final class GraftTable private (
     * index options, [[rescale]] for bucket count). */
   def setOption(key: String, value: String): Unit = {
     val sch = schema
-    require(key != "bucket" || !isPrimaryKeyTable,
+    require(key != "bucket" || sch.primaryKeys.isEmpty,
       "use rescale() to change the bucket count of a PK table")
     require(key != "file.format" || value == null ||
-      (Set("parquet", "orc").contains(value) && (value == "parquet" || !dvEnabled)),
+      (Set("parquet", "orc").contains(value) && (value == "parquet" || !dvEnabled(sch))),
       "file.format must be parquet or orc; deletion vectors require parquet")
     require(key != DeletionVectors.OptionEnabled || value != "true" ||
       sch.fileFormat == "parquet",
@@ -5117,15 +5129,15 @@ final class GraftTable private (
     */
   def sortCompact(
       strategy: String, cols: Seq[String], targetFiles: Int = 0): Option[Long] = {
-    require(!isPrimaryKeyTable, "sort-compact applies to append tables")
-    require(!rowTracking,
+    val sch = schema
+    require(sch.primaryKeys.isEmpty, "sort-compact applies to append tables")
+    require(!GraftTable.tracksRows(sch),
       "sort-compact reorders rows and would reassign _ROW_ID on a row-tracking table")
     val snap = sm.latestSnapshot().getOrElse(return None)
     val old = sm.liveEntries(snap)
     if (old.isEmpty) return None
-    val sch = schema
     val n = if (targetFiles > 0) targetFiles else math.max(old.size / 2, 1)
-    val data = readAppendData(old)
+    val data = readAppendData(old, sch)
     // bucketed-append: the bucket routing is correctness-bearing (it
     // backs equality pruning), so the sort clusters WITHIN each bucket
     // instead of range-repartitioning globally
@@ -5393,61 +5405,62 @@ final class GraftTable private (
     * rewrite only the files that contain matches (reference:
     * DeleteFromPaimonTableCommand.scala:35). */
   def delete(cond: Column): Long = {
-    if (isPrimaryKeyTable) {
-      val victims = prunedPkRows(cond)
+    val sch = schema
+    if (sch.primaryKeys.nonEmpty) {
+      val victims = prunedPkRows(cond, sch)
         .withColumn(KindCol, lit(KindDelete).cast("byte"))
-      writeKinded(victims)
-    } else if (metadataOnlyDeletableBy(cond)) {
+      writeKinded(victims, sch = sch)
+    } else if (metadataOnlyDeletableBy(sch, cond)) {
       // whole-partition drop: no data file is opened (reference:
       // OptimizeMetadataOnlyDeleteFromPaimonTable.scala:52)
       val snap = sm.latestSnapshot().getOrElse(
         throw new IllegalStateException("empty table"))
-      val victims = partitionsMatching(sm.liveEntries(snap), cond)
+      val victims = partitionsMatching(sch, sm.liveEntries(snap), cond)
       if (victims.isEmpty) snap.id
       else {
-        val id = sm.commit(victims.map(_.copy(kind = "DELETE")), KindOverwrite, schema.id,
+        val id = sm.commit(victims.map(_.copy(kind = "DELETE")), KindOverwrite, sch.id,
           conflictCheck = latest => victims.map(_.file.fileName).toSet
             .subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
-        mirrorHmsDrops(victims.map(_.partition).distinct)
+        mirrorHmsDrops(sch, victims.map(_.partition).distinct)
         id
       }
-    } else if (dvEnabled) {
+    } else if (dvEnabled(sch)) {
       // mark positions instead of rewriting files (reference:
       // SparkDeletionVector write path)
       val snap = sm.latestSnapshot().getOrElse(
         throw new IllegalStateException("empty table"))
-      val touched = pruneEntries(snap, cond)
+      val touched = pruneEntries(snap, cond, sch)
       if (touched.isEmpty) return snap.id
-      val entries = dvEntriesFor(touched, cond)
+      val entries = dvEntriesFor(touched, cond, sch)
       if (entries.isEmpty) return snap.id
       val deletedNames = entries.filter(_.kind == "DELETE").map(_.file.fileName).toSet
-      sm.commit(entries, KindOverwrite, schema.id,
+      sm.commit(entries, KindOverwrite, sch.id,
         conflictCheck = latest =>
           deletedNames.subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
-    } else rewriteFiles(cond, df => df.filter(!coalesce(cond, lit(false))))
+    } else rewriteFiles(sch, cond, df => df.filter(!coalesce(cond, lit(false))))
   }
 
   /** UPDATE t SET assignments WHERE cond (reference:
     * UpdatePaimonTableCommand.scala:37). */
   def update(assignments: Map[String, Column], cond: Column): Long = {
-    if (isPrimaryKeyTable) {
-      val updated = applyAssignments(prunedPkRows(cond), assignments, lit(true))
+    val sch = schema
+    if (sch.primaryKeys.nonEmpty) {
+      val updated = applyAssignments(prunedPkRows(cond, sch), assignments, lit(true))
         .withColumn(KindCol, lit(KindUpdateAfter).cast("byte"))
-      writeKinded(updated)
-    } else if (dvEnabled) {
+      writeKinded(updated, sch = sch)
+    } else if (dvEnabled(sch)) {
       // DV update = mark old positions deleted + append updated rows,
       // one atomic commit
       val snap = sm.latestSnapshot().getOrElse(
         throw new IllegalStateException("empty table"))
-      val touched = pruneEntries(snap, cond)
+      val touched = pruneEntries(snap, cond, sch)
       if (touched.isEmpty) return snap.id
-      val sch = schema
       val updatedRows = applyAssignments(
-        readAppendData(touched).filter(cond), assignments, lit(true))
+        readAppendData(touched, sch).filter(cond), assignments, lit(true))
       val (routed, partitionBy) = routeAppendBuckets(updatedRows, sch)
       commitFilesFn(routed, sch, partitionBy, KindOverwrite,
-        nextSeq(), commitIdentifier = -1L, _ => dvEntriesFor(touched, cond))
-    } else rewriteFiles(cond,
+        nextSeq(), commitIdentifier = -1L, _ => dvEntriesFor(touched, cond, sch))
+    } else rewriteFiles(sch, cond,
       df => applyAssignments(df, assignments, coalesce(cond, lit(false))))
   }
 
@@ -5457,24 +5470,24 @@ final class GraftTable private (
     * a single-key DELETE/UPDATE merges one bucket's files instead of
     * the whole table (reference intent: MergeIntoPaimonTable
     * .findTouchedFiles applied to plain DML). */
-  private[graft] def prunedPkRows(cond: Column): DataFrame =
+  private[graft] def prunedPkRows(cond: Column, sch: TableSchema = schema): DataFrame =
     // planEntries already bucket-narrows (with the layout guard for
     // files written under an older bucket count/key set)
-    mergedFromEntries(planEntries(cond)).filter(cond)
+    mergedFromEntries(planEntries(cond, sch = sch), sch).filter(cond)
 
   /** Bucket id implied by equality conjuncts on every bucket key
     * (fixed-bucket tables), by [[Buckets.bucketOf]]. A value that does
     * not cast to its key's type narrows nothing. */
-  private[graft] def pkEqualityBucket(cond: Column): Option[Int] = {
+  private[graft] def pkEqualityBucket(
+      cond: Column, sch: TableSchema = schema): Option[Int] = {
     import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
-    val sch = schema
     if (sch.isDynamicBucket) return None
     // hashing zero columns would "prune" to bucket hash(seed)=42%n —
     // only tables with a real distribution key participate
     val bk = sch.bucketKeys
     if (bk.isEmpty || (sch.primaryKeys.isEmpty && !sch.isBucketedAppend))
       return None
-    val analyzed = emptyDf().filter(cond).queryExecution.analyzed.collectFirst {
+    val analyzed = emptyDf(sch).filter(cond).queryExecution.analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
     }.getOrElse(return None)
     val eq = splitConjuncts(analyzed).collect {
@@ -5492,10 +5505,10 @@ final class GraftTable private (
   /** A DELETE whose predicate only touches partition columns can be
     * answered by dropping manifest entries — every row of a file shares
     * its partition values, so files match all-or-nothing. */
-  private def metadataOnlyDeletableBy(cond: Column): Boolean = {
-    val partCols = schema.partitionKeys.toSet
+  private def metadataOnlyDeletableBy(sch: TableSchema, cond: Column): Boolean = {
+    val partCols = sch.partitionKeys.toSet
     if (partCols.isEmpty) return false
-    val analyzed = emptyDf().filter(cond).queryExecution.analyzed
+    val analyzed = emptyDf(sch).filter(cond).queryExecution.analyzed
     val refs = analyzed.collectFirst {
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
         f.condition.references.map(_.name).toSet
@@ -5506,10 +5519,10 @@ final class GraftTable private (
   /** Entries whose (constant) partition values satisfy `cond`,
     * evaluated exactly via a local partition-values DataFrame that
     * carries the raw directory strings through the filter. */
-  private def partitionsMatching(
+  private def partitionsMatching(sch: TableSchema,
       entries: Seq[ManifestEntry], cond: Column): Seq[ManifestEntry] = {
-    val partFields = struct.fields.filter(f => schema.partitionKeys.contains(f.name))
-    val matching = partitionMapsMatching(entries.map(_.partition).distinct, cond)
+    val partFields = sch.toStruct.fields.filter(f => sch.partitionKeys.contains(f.name))
+    val matching = partitionMapsMatching(sch, entries.map(_.partition).distinct, cond)
     entries.filter(e => matching.contains(
       partFields.map(f => f.name -> e.partition.getOrElse(f.name, null)).toMap))
   }
@@ -5519,9 +5532,9 @@ final class GraftTable private (
     * carrying both the raw strings and their typed casts. Returned
     * maps are normalized to the partition fields (missing keys →
     * null), so callers must normalize before membership checks. */
-  private def partitionMapsMatching(
+  private def partitionMapsMatching(sch: TableSchema,
       parts: Seq[Map[String, String]], cond: Column): Set[Map[String, String]] = {
-    val partFields = struct.fields.filter(f => schema.partitionKeys.contains(f.name))
+    val partFields = sch.toStruct.fields.filter(f => sch.partitionKeys.contains(f.name))
     if (parts.isEmpty) return Set.empty
     import scala.jdk.CollectionConverters._
     val rows = parts.map(p => org.apache.spark.sql.Row.fromSeq(
@@ -5552,10 +5565,11 @@ final class GraftTable private (
       parts.exists(p => p.forall { case (k, v) =>
         e.partition.get(k).contains(v) }))
     if (victims.isEmpty) return false
-    sm.commit(victims.map(_.copy(kind = "DELETE")), KindOverwrite, schema.id,
+    val sch = schema
+    sm.commit(victims.map(_.copy(kind = "DELETE")), KindOverwrite, sch.id,
       conflictCheck = latest => victims.map(_.file.fileName).toSet
         .subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
-    mirrorHmsDrops(victims.map(_.partition).distinct)
+    mirrorHmsDrops(sch, victims.map(_.partition).distinct)
     true
   }
 
@@ -5576,10 +5590,9 @@ final class GraftTable private (
     * unchanged data never shuffles (vs. diffing two full snapshots,
     * which is three full-table shuffles). */
   def changelogBetween(fromSnapshot: Long, toSnapshot: Long): DataFrame = {
-    require(isPrimaryKeyTable, "changelog requires a primary-key table")
     val sch = schema
     val pk = sch.primaryKeys
-    val cols = struct.fieldNames
+    require(pk.nonEmpty, "changelog requires a primary-key table")
     // postpone tables: data becomes visible AT compaction, so compact
     // deltas are the change events and must seed the touched-key set
     // (for other tables they are pure rewrites and are skipped)
@@ -5589,16 +5602,16 @@ final class GraftTable private (
       .map(sm.snapshot).filter(s => postpone || s.commitKind != KindCompact)
       .flatMap(s => s.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty))
     val touched = deltaEntries.groupBy(_.file.fileName).map(_._2.head).toSeq
-    val touchedKeys = readRaw(touched)
+    val touchedKeys = readRaw(touched, sch)
       .select(pk.map(col).toIndexedSeq: _*).distinct()
     val buckets = touched.map(_.bucket).toSet
     def state(id: Long): DataFrame = {
-      val entries = visibleEntries(sm.liveEntries(sm.snapshot(id)))
+      val entries = visibleEntries(sm.liveEntries(sm.snapshot(id)), sch)
         .filter(e => postpone || buckets.contains(e.bucket))
       MergeEngine.merge(
-        readRaw(entries).join(touchedKeys, pk, "left_semi"), sch)
+        readRaw(entries, sch).join(touchedKeys, pk, "left_semi"), sch)
     }
-    stateDiff(state(fromSnapshot), state(toSnapshot))
+    stateDiff(state(fromSnapshot), state(toSnapshot), sch)
   }
 
   /** -U/+U/+I/-D rows between two merged states (full outer join on
@@ -5609,10 +5622,10 @@ final class GraftTable private (
     * excludes listed columns from the comparison, so a row differing
     * only in e.g. an updated_at timestamp emits nothing (reference:
     * CHANGELOG_PRODUCER_ROW_DEDUPLICATE_IGNORE_FIELDS). */
-  private def stateDiff(before0: DataFrame, after: DataFrame): DataFrame = {
-    val pk = schema.primaryKeys
-    val cols = struct.fieldNames
-    val cmp = LookupChangelog.comparedColumns(schema)
+  private def stateDiff(before0: DataFrame, after: DataFrame, sch: TableSchema): DataFrame = {
+    val pk = sch.primaryKeys
+    val cols = sch.toStruct.fieldNames
+    val cmp = LookupChangelog.comparedColumns(sch)
     val before = before0.select(cols.map(c => col(c).as(s"__b_$c")).toIndexedSeq: _*)
     val joined = after.join(before,
       pk.map(k => col(k) === col(s"__b_$k")).reduce(_ && _), "full_outer")
@@ -5670,25 +5683,25 @@ final class GraftTable private (
     val pk = sch.primaryKeys
     val batchKeys = out.select(pk.map(col).toIndexedSeq: _*).distinct()
     val buckets = out.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
-    val pruned =
-      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty))
-        .filter(e => buckets.contains(e.bucket))
-    val rawOld = readRaw(pruned).join(batchKeys, pk, "left_semi")
+    val rawOld = readRaw(live.filter(e => buckets.contains(e.bucket)), sch)
+      .join(batchKeys, pk, "left_semi")
     // every merge engine here is ASSOCIATIVE (deduplicate/first-row =
     // ordered pick, partial-update = per-field ordered pick,
     // aggregation = combinable states), so the post-state folds the
     // batch onto the ALREADY-MERGED before-state instead of re-merging
     // all raw versions — one full merge of the touched buckets per
     // commit, not two (reference pays this inside compaction's
-    // existing merge: LookupChangelogMergeFunctionWrapper).
-    val before = MergeEngine.merge(rawOld, sch).persist()
+    // existing merge: LookupChangelogMergeFunctionWrapper). Both states
+    // keep their winners' sequences and kinds: a retraction that wins
+    // over a batch row leaves the key absent after the commit too.
+    val before = MergeEngine.mergeKeepMeta(rawOld, sch).persist()
+    def present(state: DataFrame): DataFrame =
+      state.filter(col(KindCol) =!= KindDelete && col(KindCol) =!= KindUpdateBefore)
+        .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
     try {
-      val beforeAsInput = before
-        .withColumn(SeqCol, lit(-1L)) // loses every tie to batch rows
-        .withColumn(KindCol, lit(KindInsert).cast("byte"))
-      val after = MergeEngine.merge(
-        beforeAsInput.unionByName(out, allowMissingColumns = true), sch)
-      persistChangelog(stateDiff(before, after), sch)
+      val after = MergeEngine.mergeKeepMeta(
+        before.unionByName(out, allowMissingColumns = true), sch)
+      persistChangelog(stateDiff(present(before), present(after), sch), sch)
     } finally before.unpersist()
   }
 
@@ -5746,19 +5759,19 @@ final class GraftTable private (
     // back to re-deriving from delta files
     if (entries.forall(_.file.rowCount == 0)) {
       deleteRecursive(Paths.get(s"$path/$clDir"))
-      Some(sm.writeManifest(Seq.empty))
-    } else Some(sm.writeManifest(entries.filter(_.file.rowCount > 0)))
+      Some(sm.writeManifest(Seq.empty, sch.options))
+    } else Some(sm.writeManifest(entries.filter(_.file.rowCount > 0), sch.options))
   }
 
-  /** Changelog rows persisted for a snapshot, if any. */
   /** Exact changelog pairs of one RETAINED (post-expiration)
     * changelog manifest — served to lagging streaming consumers. */
-  private[graft] def readRetainedChangelog(manifest: String): DataFrame =
-    readChangelogFiles(sm.readManifest(manifest))
-      .select((struct.fieldNames :+ "_row_kind").map(col).toIndexedSeq: _*)
+  private[graft] def readRetainedChangelog(
+      manifest: String, sch: TableSchema = schema): DataFrame =
+    readChangelogFiles(sm.readManifest(manifest), sch)
+      .select((sch.toStruct.fieldNames :+ "_row_kind").map(col).toIndexedSeq: _*)
 
-  private def readChangelogFiles(entries: Seq[ManifestEntry]): DataFrame = {
-    val clSchema = StructType(struct.fields :+
+  private def readChangelogFiles(entries: Seq[ManifestEntry], sch: TableSchema): DataFrame = {
+    val clSchema = StructType(sch.toStruct.fields :+
       StructField("_row_kind", org.apache.spark.sql.types.StringType, nullable = false))
     if (entries.isEmpty)
       spark.createDataFrame(
@@ -5768,8 +5781,8 @@ final class GraftTable private (
         .parquet(entries.map(e => s"$path/${e.file.fileName}"): _*)
   }
 
-  private def dvEnabled: Boolean =
-    schema.options.get(DeletionVectors.OptionEnabled).contains("true")
+  private def dvEnabled(sch: TableSchema): Boolean =
+    sch.options.get(DeletionVectors.OptionEnabled).contains("true")
 
   /** DELETE+re-ADD entry pairs attaching (merged) deletion vectors for
     * every touched file; fully-deleted files are just dropped.
@@ -5781,7 +5794,7 @@ final class GraftTable private (
     * through one process (same executor-side-sidecar shape as
     * buildFileIndexes). */
   private def dvEntriesFor(
-      touched: Seq[ManifestEntry], cond: Column): Seq[ManifestEntry] = {
+      touched: Seq[ManifestEntry], cond: Column, sch: TableSchema): Seq[ManifestEntry] = {
     val agg = udaf(new DeletionVectors.BitmapAgg)
     val fileMeta: Map[String, (Long, Option[String])] =
       touched.map(e => basename(e.file.fileName) ->
@@ -5789,7 +5802,7 @@ final class GraftTable private (
     val io = sm.io
     val tableRoot = path
     import spark.implicits._
-    val written: Array[(String, Option[String], Long)] = readRaw(touched)
+    val written: Array[(String, Option[String], Long)] = readRaw(touched, sch)
       .filter(cond)
       .select(expr("_metadata.file_path").as("__f"),
         expr("_metadata.row_index").as("__i"))
@@ -5847,7 +5860,7 @@ final class GraftTable private (
       // append commit uses; the extra rewrite touches only the
       // replaced files' rows.
       val df = spark.read.option("basePath", staging)
-        .schema(struct).parquet(staging)
+        .schema(sch.toStruct).parquet(staging)
       val (routed, partitionBy) = routeAppendBuckets(df, sch)
       val id = commitFiles(routed, sch, partitionBy, KindOverwrite,
         nextSeq(), commitIdentifier = -1L,
@@ -5874,16 +5887,16 @@ final class GraftTable private (
 
   /** Copy-on-write rewrite of the files that contain rows matching
     * `touchCond`; untouched files are carried over unchanged. */
-  private def rewriteFiles(touchCond: Column, transform: DataFrame => DataFrame): Long = {
-    require(!rowTracking, "copy-on-write rewrite would reassign _ROW_ID; " +
+  private def rewriteFiles(
+      sch: TableSchema, touchCond: Column, transform: DataFrame => DataFrame): Long = {
+    require(!GraftTable.tracksRows(sch), "copy-on-write rewrite would reassign _ROW_ID; " +
       s"enable ${DeletionVectors.OptionEnabled} for row-level changes on row-tracking tables")
     val snap = sm.latestSnapshot().getOrElse(
       throw new IllegalStateException("empty table"))
-    val touched = pruneEntries(snap, touchCond)
+    val touched = pruneEntries(snap, touchCond, sch)
     if (touched.isEmpty) return snap.id
-    val sch = schema
-    val rewritten = transform(readRaw(touched)
-      .select(struct.fieldNames.map(col).toIndexedSeq: _*))
+    val rewritten = transform(readRaw(touched, sch)
+      .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*))
     val (routed, partitionBy) = routeAppendBuckets(rewritten, sch)
     commitFiles(routed, sch, partitionBy, KindOverwrite,
       nextSeq(), commitIdentifier = -1L,
@@ -5910,7 +5923,8 @@ final class GraftTable private (
   def applyChanges(
       changes: DataFrame, kindCol: String = "_row_kind",
       commitIdentifier: Long = -1L): Long = {
-    require(isPrimaryKeyTable, "CDC apply requires a primary-key table")
+    val sch0 = schema
+    require(sch0.primaryKeys.nonEmpty, "CDC apply requires a primary-key table")
     require(changes.columns.contains(kindCol),
       s"change batch must carry the '$kindCol' row-kind column")
     // an empty micro-batch (or all-tombstone compacted topic) infers
@@ -5918,24 +5932,27 @@ final class GraftTable private (
     if (!changes.columns.exists(_ != kindCol))
       return sm.latestSnapshotId.getOrElse(-1L)
     val incoming = changes.drop(kindCol).schema
-    schema.primaryKeys.foreach(k => require(incoming.fieldNames.contains(k),
+    sch0.primaryKeys.foreach(k => require(incoming.fieldNames.contains(k),
       s"change batch must carry primary-key column $k"))
     // 1. schema evolution from the batch's shape: new columns are
     // added, widenable types widen; anything else casts to the
     // declared type below (the reference likewise ignores
     // non-convertible changes)
+    var evolved = false
     incoming.fields.foreach { f =>
-      schema.fields.find(_.name == f.name) match {
-        case None => addColumn(f.name, f.dataType)
+      sch0.fields.find(_.name == f.name) match {
+        case None => addColumn(f.name, f.dataType); evolved = true
         case Some(cur0) =>
           val cur = sparkTypeOf(cur0.dataType)
           if (cur != f.dataType && canWiden(cur, f.dataType) &&
-            !schema.primaryKeys.contains(f.name) &&
-            !schema.partitionKeys.contains(f.name))
-            widenColumn(f.name, f.dataType)
+            !sch0.primaryKeys.contains(f.name) &&
+            !sch0.partitionKeys.contains(f.name)) {
+            widenColumn(f.name, f.dataType); evolved = true
+          }
       }
     }
-    val sch = schema
+    // the write commits the version the evolution ended on
+    val sch = if (evolved) schema else sch0
     // 2. kind mapping; before-images drop out
     val k = upper(trim(col(kindCol)))
     val del = k.isin("-D", "D", "DELETE")
@@ -5949,7 +5966,7 @@ final class GraftTable private (
       .withColumn(KindCol,
         when(del, lit(KindDelete)).otherwise(lit(KindUpdateAfter)).cast("byte"))
       .select(cols :+ col(KindCol): _*)
-    writeKinded(kinded, commitIdentifier)
+    writeKinded(kinded, commitIdentifier, sch = sch)
   }
 
   /** MERGE INTO on primary keys (reference:
@@ -5965,10 +5982,10 @@ final class GraftTable private (
       whenMatchedUpdate: Option[Map[String, Column]] = None,
       whenMatchedDelete: Option[Column] = None,
       whenNotMatchedInsert: Boolean = true): Long = {
-    require(isPrimaryKeyTable, "MERGE INTO requires a primary-key table")
     val sch = schema
     val pk = sch.primaryKeys
-    val cols = struct.fieldNames
+    require(pk.nonEmpty, "MERGE INTO requires a primary-key table")
+    val cols = sch.toStruct.fieldNames
     // the source is consumed twice (bucket-set collect + the join) —
     // pin it so an expensive source query computes once
     val src = source.select(cols.map(col).toIndexedSeq: _*).persist()
@@ -5989,8 +6006,8 @@ final class GraftTable private (
     * Threshold: `join.broadcast-max-bytes` (default 64 MB, mirroring
     * lookupJoin's default). */
   private def sizeGatedBuildSide(
-      df: DataFrame, estBytes: Long, site: String): DataFrame = {
-    val maxBytes = schema.options.get("join.broadcast-max-bytes")
+      sch: TableSchema, df: DataFrame, estBytes: Long, site: String): DataFrame = {
+    val maxBytes = sch.options.get("join.broadcast-max-bytes")
       .map(GraftTable.parseBytes).getOrElse(64L << 20)
     val bc = estBytes <= maxBytes
     if (GraftTable.joinGateDecisions.size() > 64)
@@ -6009,8 +6026,8 @@ final class GraftTable private (
     * (plus any [[mayHoldBucket]] keeps, e.g. mid-rescale files). The
     * one job this runs collects BUCKET IDS (bounded by the bucket
     * count), never rows. */
-  private[graft] def entriesForKeys(src: DataFrame): Seq[ManifestEntry] = {
-    val sch = schema
+  private[graft] def entriesForKeys(
+      src: DataFrame, sch: TableSchema = schema): Seq[ManifestEntry] = {
     val pk = sch.primaryKeys
     require(pk.nonEmpty, "key-pruned reads require a primary-key table")
     val liveNow = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
@@ -6022,7 +6039,7 @@ final class GraftTable private (
     val bucketIds =
       if (!sch.isDynamicBucket)
         Some(src.select(Buckets.column(sch, sch.bucketKeys, sch.effectiveBuckets)))
-      else dynIndexDf.map(idx =>
+      else dynIndexDf(sch).map(idx =>
         src.select(pk.map(col).toIndexedSeq: _*).join(idx, pk).select("__bucket"))
     bucketIds.fold(liveNow) { ids =>
       liveNow.filter(mayHoldBucket(sch, ids.distinct().collect().map(_.getInt(0)).toSet))
@@ -6037,15 +6054,15 @@ final class GraftTable private (
     // Bucket-pruned target: a 1%-of-buckets merge pays ~1% of the
     // scan, not 100%. Unmatched target rows are never rewritten, so
     // skipping their files is safe.
-    val touched = entriesForKeys(src)
+    val touched = entriesForKeys(src, sch)
     // manifest-bytes broadcast gate, same policy as the streaming
     // lookup join: Spark's own estimate of the merged slice degrades
     // through the merge aggregation, so decide from the EXACT file
     // sizes the manifests carry — broadcast a small touched slice,
     // pin sort-merge for a wide one (a mis-broadcast decompresses to
     // several× the on-disk bytes and OOMs at scale)
-    val tgt = sizeGatedBuildSide(
-      mergedFromEntries(touched)
+    val tgt = sizeGatedBuildSide(sch,
+      mergedFromEntries(touched, sch)
         .select(cols.map(c => col(c).as(s"__t_$c")).toIndexedSeq: _*),
       touched.map(_.file.fileSize).sum, "merge-into")
     val joined = src.join(tgt,
@@ -6066,7 +6083,7 @@ final class GraftTable private (
       .withColumn(KindCol, kind.cast("byte"))
       .filter(matched || lit(whenNotMatchedInsert))
       .select((cols.map(col) :+ col(KindCol)).toIndexedSeq: _*)
-    writeKinded(actions)
+    writeKinded(actions, sch = sch)
   }
 
   // ================= statistics (ANALYZE) =================
@@ -6078,7 +6095,7 @@ final class GraftTable private (
     val snapId = sm.latestSnapshotId.getOrElse(
       throw new IllegalStateException("empty table"))
     val df = read
-    val fields = struct.fields.toSeq
+    val fields = df.schema.fields.toSeq
     val aggs = fields.flatMap { f =>
       val c = col(f.name)
       val strMinMax = f.dataType match {
@@ -6216,7 +6233,7 @@ final class GraftTable private (
     val ids = sm.io.list(s"$path/schema").map(_.split('/').last)
       .collect { case s if s.startsWith("schema-") && s.endsWith(".json") =>
         s.stripPrefix("schema-").stripSuffix(".json").toLong }.sorted
-    ids.map(schemaOf).map(s =>
+    ids.map(sm.schema).map(s =>
       (s.id, s.fields.map(f => s"${f.id}:${f.name}:${f.dataType}").mkString(","),
         s.partitionKeys.mkString(","), s.primaryKeys.mkString(",")))
       .toDF("schema_id", "fields", "partition_keys", "primary_keys")
@@ -6273,9 +6290,10 @@ final class GraftTable private (
     * (reference: table/system/ReadOptimizedTable.java — "read the
     * files of the highest level only"). */
   def systemReadOptimized: DataFrame = {
-    if (!isPrimaryKeyTable) return read
+    val sch = schema
+    if (sch.primaryKeys.isEmpty) return read
     val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-    mergedFromEntries(entries.filter(_.file.level >= 1))
+    mergedFromEntries(entries.filter(_.file.level >= 1), sch)
   }
 
   /** `$aggregation_fields`: each field's aggregate function under the
@@ -6499,6 +6517,8 @@ object GraftTable {
     * SpecialFields._ROW_ID, Snapshot.nextRowId,
     * DataFileMeta.firstRowId). */
   val RowTrackingEnabled = "row-tracking.enabled"
+  private[graft] def tracksRows(sch: TableSchema): Boolean =
+    sch.primaryKeys.isEmpty && sch.options.get(RowTrackingEnabled).contains("true")
 
   /** Option: export Iceberg-compatible metadata after every commit
     * (reference: metadata.iceberg.storage — IcebergOptions.java:43). */
@@ -6656,11 +6676,7 @@ object GraftTable {
           "NOT readable by lancedb/pylance tooling; for cross-ecosystem " +
           "interop export via ArrowInterchange (see README 'Lance interop')")
 
-  def load(spark: SparkSession, path: String): GraftTable = {
-    val sm = new SnapshotManager(path)
-    require(sm.latestSchema().isDefined, s"no graft table at $path")
-    new GraftTable(spark, path, sm)
-  }
+  def load(spark: SparkSession, path: String): GraftTable = load(spark, path, new LocalFileIO)
 
   /** Load with a caller-supplied FileIO (instrumented IO in tests,
     * alternative stores). */

@@ -205,6 +205,27 @@ class LookupChangelogSpec extends AnyFunSuite {
     assert(bin.localLookup(Map("k" -> Array(1.toByte))).map(_.getString(1)) == Seq("b"))
   }
 
+  test("distributed diff: a batch row that loses on sequence.field to an older " +
+    "retraction persists no change (deletion vectors, older-schema files)") {
+    val dv = create(Seq("id", "sub"), Map("sequence.field" -> "s",
+      "deletion-vectors.enabled" -> "true"))
+    val d0 = dv.bucketLocalChangelogs.get
+    run(dv, seed = 16L, n = 4, fixed = edgeCases)
+    assert(dv.bucketLocalChangelogs.get == d0)
+    // files written before a column was added
+    val evolved = create(Seq("id", "sub"), Map("sequence.field" -> "s"))
+    evolved.write(df(for (id <- 0L until 12L; sub <- 0 until 2)
+      yield ("a", id, sub, "x", "n1", L(2), "+U")))
+    evolved.addColumn("extra", StringType)
+    val e0 = evolved.bucketLocalChangelogs.get
+    edgeCases.zipWithIndex.foreach { case (rows, i) =>
+      evolved.applyChanges(df(rows).withColumnRenamed("_op", "_kind")
+        .withColumn("_op", org.apache.spark.sql.functions.lit("+I")), "_kind")
+      assertLastCommit(evolved, s"evolved edge case $i")
+    }
+    assert(evolved.bucketLocalChangelogs.get == e0)
+  }
+
   test("a 200-row lookup-changelog commit on 4 buckets starts at most 7 Spark jobs") {
     val t = GraftTable.create(spark, tmp(), sch, primaryKeys = Seq("id", "sub"),
       options = Map("changelog-producer" -> "lookup", "bucket" -> "4"))
