@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.Meta.TableSchema
+import graft.core.Meta.{ManifestEntry, Snapshot, TableSchema}
 import graft.table.GraftTable
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog._
@@ -139,9 +139,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   protected def fileIO: graft.core.FileIO = new graft.core.LocalFileIO
 
   private def loadGraft(ident: Identifier): GraftTable =
-    try GraftTable.load(spark, tablePath(ident), fileIO)
-    catch { case _: IllegalArgumentException =>
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
+    loadGraftAt(tablePath(ident),
+      new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
+
+  /** The table at `path` in one load (one schema resolution); `missing`
+    * when no table is there. */
+  private def loadGraftAt(path: String, missing: => Exception): GraftTable =
+    try GraftTable.load(spark, path, fileIO)
+    catch { case _: IllegalArgumentException => throw missing }
+
+  /** `load`, or, for an identifier absent from the warehouse, the table
+    * at the path an external registry (a metastore or JDBC entry) holds
+    * for it. */
+  protected def orRegistered(load: => Table)(registered: => Option[String]): Table =
+    try load
+    catch { case e: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
+      GraftSparkTable(loadGraftAt(registered.getOrElse(throw e), e))
     }
 
   private def formatMarkerPath(ident: Identifier): java.nio.file.Path =
@@ -804,6 +817,33 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
       .flatMap(_ => gt.sm.snapshotIds.reverse.find(i =>
         gt.sm.snapshot(i).commitKind == graft.core.Meta.KindCompact)))
 
+  /** The one snapshot every part of this scan reads: the pin above, or
+    * the latest. None before the first snapshot. */
+  private lazy val snap: Option[Snapshot] = snapshot match {
+    case Some(id) if id < 0 => None
+    case Some(id) => Some(gt.sm.snapshot(id))
+    case None => gt.sm.latestSnapshot()
+  }
+
+  /** The pushed filters as a pruning condition. `_ROW_ID` conjuncts can
+    * reach pushFilters even when the column itself is projected away;
+    * they mean nothing to file stats. */
+  private lazy val cond: Column = GraftFilters.toCondition(
+    pushed.filterNot(_.references.contains(GraftTable.RowIdCol)))
+
+  /** The files this scan reads, planned once from [[snap]] after the
+    * filters are pushed. `scan.file-creation-time-millis` keeps only
+    * files written after the cutoff — snapshot-independent, imprecise
+    * by design (compaction re-stamps; reference: CoreOptions
+    * SCAN_FILE_CREATION_TIME_MILLIS). Pre-field files are kept. */
+  private lazy val entries: Seq[ManifestEntry] = {
+    val planned = gt.planEntries(cond, sch, snap, pinned = snapshot.isDefined)
+    readOptions.get("scan.file-creation-time-millis").map(_.toLong) match {
+      case Some(ts) => planned.filter(_.file.creationTime.forall(_ > ts))
+      case None => planned
+    }
+  }
+
   private val full: StructType = sch.toStruct
   private var pushed: Array[Filter] = Array.empty
   private var required: StructType = full
@@ -899,12 +939,11 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
     // manifest stats describe STORED values; a column-patch overlay
     // can change any of them, so MIN/MAX (and defensively COUNT) must
     // run as a real scan on patched tables
-    if (gt.hasColumnPatches(sch = sch)) return false
-    val entries = gt.sm.latestSnapshot().map(gt.sm.liveEntries).getOrElse(Seq.empty)
+    if (gt.colPatchesOf(sch, snap).nonEmpty) return false
     val dvPresent = entries.exists(_.file.dvFile.isDefined)
     val values = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
-        gt.countRowsFast().map(c =>
+        gt.countRowsFast(sch, snap).map(c =>
           ("count(*)", org.apache.spark.sql.types.LongType: org.apache.spark.sql.types.DataType,
             c.asInstanceOf[Any]))
       case m: Min => statsValue(m.column, isMin = true, dvPresent)
@@ -941,7 +980,7 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
       case _ => return None
     }
     val field = full.fields.find(_.name == name).getOrElse(return None)
-    gt.statsMinMax(name).map { case (mn, mx) =>
+    gt.statsMinMax(name, sch, snap).map { case (mn, mx) =>
       val s = if (isMin) mn else mx
       val v: Any = field.dataType match {
         case ByteType => s.toLong.toByte
@@ -1013,22 +1052,6 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
       case None if GraftTable.tracksRows(sch) &&
           required.fieldNames.contains(GraftTable.RowIdCol) => rowIdScan()
       case None =>
-        // _ROW_ID conjuncts can reach pushFilters even when the column
-        // itself is projected away; they mean nothing to file stats
-        val cond = GraftFilters.toCondition(
-          pushed.filterNot(_.references.contains(GraftTable.RowIdCol)))
-        val entries0 =
-          if (snapshot.contains(-1L)) Seq.empty
-          else gt.planEntries(cond, snapshot, sch)
-        // `scan.file-creation-time-millis`: keep only files written
-        // after the cutoff — snapshot-independent, imprecise by design
-        // (compaction re-stamps; reference: CoreOptions
-        // SCAN_FILE_CREATION_TIME_MILLIS). Pre-field files are kept.
-        val entries = readOptions.get("scan.file-creation-time-millis")
-          .map(_.toLong) match {
-          case Some(ts) => entries0.filter(_.file.creationTime.forall(_ > ts))
-          case None => entries0
-        }
         // the native scan factory is parquet-specific; orc files read
         // through the (still vectorized) DataFrame fallback
         def allParquet = entries.forall(_.file.fileName.endsWith(".parquet"))
@@ -1036,7 +1059,7 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
         // scan cannot merge them, so patched tables use the fallback
         val nativeEligible = sch.primaryKeys.isEmpty &&
           entries.forall(e => e.file.dvFile.isEmpty && e.file.schemaId == sch.id) &&
-          allParquet && !gt.hasColumnPatches(snapshot.filter(_ >= 0), sch)
+          allParquet && gt.colPatchesOf(sch, snap).isEmpty
         // a FULLY-COMPACTED pk table (one level>0 file per bucket, no
         // DVs) is already merged on disk: read raw through the native
         // scan, and report bucket partitioning so PK-PK joins between
@@ -1080,7 +1103,7 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
         } else if (compactedPk) {
           new GraftBatchScan(gt, sch, entries, dataSchema, readData, readPart,
             dataFilters, required, readOptions)
-        } else v1Fallback(cond)
+        } else v1Fallback()
     }
   }
 
@@ -1113,9 +1136,7 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
     * V1 path with the id computed per row (base + position). */
   private def rowIdScan(): Scan = new DataFrameScan(() => {
     GraftScanUtil.assertBatchPin(gt, readOptions)
-    val (idFilters, dataFilters) =
-      pushed.partition(_.references.contains(GraftTable.RowIdCol))
-    val cond = GraftFilters.toCondition(dataFilters)
+    val idFilters = pushed.filter(_.references.contains(GraftTable.RowIdCol))
     // conjunct id bounds → file-extent pruning window [lo, hi)
     var lo = Long.MinValue
     var hi = Long.MaxValue
@@ -1139,37 +1160,20 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
         }
       case _ => // disjunctions etc: no window narrowing
     }
-    val planned = (snapshot match {
-      case Some(id) if id < 0 => Seq.empty
-      case s => gt.planEntries(cond, s, sch)
-    }).filter(e => e.file.firstRowId.exists(f =>
-      f < hi && f + e.file.rowCount > lo))
-    // same file-creation-time cutoff the native path honors —
-    // _ROW_ID projection must not silently widen the read
-    val entries = readOptions.get("scan.file-creation-time-millis")
-      .map(_.toLong) match {
-      case Some(ts) => planned.filter(_.file.creationTime.forall(_ > ts))
-      case None => planned
-    }
     // the patch overlay rides on top of the pruned row-id read
-    gt.rowIdReadPatched(entries, snapshot.filter(_ >= 0), sch).filter(cond)
+    gt.rowIdReadPatched(gt.inRowRange(entries, lo, hi), snap, sch).filter(cond)
   })
 
   /** Merge-on-read (PK) tables, deletion vectors and mixed-schema file
-    * sets read through the library's DataFrame plan — the merge itself
-    * is a Spark plan, so codegen still covers everything above the row
-    * conversion. */
-  private def v1Fallback(cond: Column): Scan = new DataFrameScan(() => {
+    * sets read the planned entries through the library's DataFrame plan
+    * — the merge itself is a Spark plan, so codegen still covers
+    * everything above the row conversion. A chain table's main handle
+    * reads the composed chain. */
+  private def v1Fallback(): Scan = new DataFrameScan(() => {
     GraftScanUtil.assertBatchPin(gt, readOptions)
-    val fileCutoff =
-      readOptions.get("scan.file-creation-time-millis").map(_.toLong)
-    snapshot match {
-      case Some(id) if id < 0 => gt.read.limit(0) // before first snapshot
-      case Some(id) => gt.versionAsOf(id).filter(cond)
-      case None if fileCutoff.isDefined =>
-        gt.scanFilesCreatedAfter(cond, fileCutoff.get, sch)
-      case None => gt.scan(cond, sch)
-    }
+    if (snapshot.isEmpty && gt.isChainMain(sch) &&
+        !readOptions.contains("scan.file-creation-time-millis")) gt.scan(cond, sch, snap)
+    else gt.mergedFromEntries(entries, sch, snap).filter(cond)
   }) with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
     /** streaming read (offset = snapshot id) shares the native
@@ -1185,12 +1189,10 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
         readOptions)
     }
 
-    /** manifest-derived stats feed Spark's join planning (broadcast
-      * decisions) without touching data files. */
+    /** the planned entries' manifest stats feed Spark's join planning
+      * (broadcast decisions) without touching data files. */
     override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
       new org.apache.spark.sql.connector.read.Statistics {
-        private val entries = gt.sm.latestSnapshot()
-          .map(gt.sm.liveEntries).getOrElse(Seq.empty)
         override def sizeInBytes(): java.util.OptionalLong =
           java.util.OptionalLong.of(entries.map(_.file.fileSize).sum)
         override def numRows(): java.util.OptionalLong =

@@ -737,15 +737,7 @@ class GraftHmsCatalog extends GraftCatalog {
     * identifier absent from the warehouse resolves via its HMS entry's
     * `graft.path` — how a brownfield estate points at graft tables
     * living anywhere. */
-  override def loadTable(ident: Identifier): Table = {
-    try super.loadTable(ident)
-    catch {
-      case e: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
-        val path = HmsBridge.tablePath(hmsOpts,
-          HmsBridge.dbName(ident.namespace()), ident.name()).getOrElse(throw e)
-        if (!GraftTable.exists(path)) throw e
-        val gt = GraftTable.load(org.apache.spark.sql.SparkSession.active, path)
-        GraftSparkTable(gt)
-    }
-  }
+  override def loadTable(ident: Identifier): Table =
+    orRegistered(super.loadTable(ident))(
+      HmsBridge.tablePath(hmsOpts, HmsBridge.dbName(ident.namespace()), ident.name()))
 }

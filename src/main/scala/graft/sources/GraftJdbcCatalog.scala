@@ -423,17 +423,9 @@ class GraftJdbcCatalog extends GraftCatalog {
 
   /** Warehouse tables load as usual; identifiers absent from the
     * warehouse resolve via the registry's `table_path`. */
-  override def loadTable(ident: Identifier): Table = {
-    try super.loadTable(ident)
-    catch {
-      case e: org.apache.spark.sql.catalyst.analysis.NoSuchTableException =>
-        val path = JdbcBridge.tablePath(uri, catalogKey,
-          JdbcBridge.dbName(ident.namespace()), ident.name()).getOrElse(throw e)
-        if (!GraftTable.exists(path)) throw e
-        val gt = GraftTable.load(org.apache.spark.sql.SparkSession.active, path)
-        GraftSparkTable(gt)
-    }
-  }
+  override def loadTable(ident: Identifier): Table =
+    orRegistered(super.loadTable(ident))(JdbcBridge.tablePath(
+      uri, catalogKey, JdbcBridge.dbName(ident.namespace()), ident.name()))
 
   /** Registry ∪ warehouse listing: external registered tables appear,
     * warehouse-resident unregistered ones keep appearing. */

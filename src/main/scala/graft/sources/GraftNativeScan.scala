@@ -530,10 +530,14 @@ class GraftMicroBatchStream(
 
   private def sm = gt.sm
 
-  /** per-query reader options override table options (e.g.
-    * spark.readStream.option("scan.max-rows-per-trigger", ...)) */
-  private def streamOpt(key: String): Option[String] =
-    readOptions.get(key).orElse(gt.schema.options.get(key))
+  /** Option lookup for one Spark callback: per-query reader options
+    * (e.g. spark.readStream.option("scan.max-rows-per-trigger", ...))
+    * override table options, and the schema is resolved at most once
+    * per lookup function, on the first key the reader options lack. */
+  private def streamOpts(sch: => TableSchema = gt.schema): String => Option[String] = {
+    lazy val table = sch.options
+    key => readOptions.get(key).orElse(table.get(key))
+  }
 
   /** Startup position (reference: CoreOptions.StartupMode via
     * `scan.mode` + `scan.snapshot-id` / `scan.timestamp-millis` read
@@ -543,8 +547,8 @@ class GraftMicroBatchStream(
     *  - `from-snapshot`: every snapshot from `scan.snapshot-id` on
     *  - `from-timestamp`: every snapshot committed at/after
     *    `scan.timestamp-millis` */
-  private lazy val startOffset: Long = streamOpt("consumer-id")
-    .flatMap(id => graft.streaming.GraftStreaming.consumerOffset(gt, id)) match {
+  private lazy val startOffset: Long = {
+    val opts = streamOpts()
     // `consumer-id` with stored progress: a FRESH query (no Spark
     // checkpoint yet) resumes AFTER the registered consumer's stored
     // progress, and the recorded progress takes PRECEDENCE over any
@@ -553,14 +557,15 @@ class GraftMicroBatchStream(
     // silently skip the snapshots between the consumer's offset and
     // latest). An existing checkpoint never reaches initialOffset, so
     // Spark's own replay semantics stay untouched.
-    case Some(stored) => stored
-    case None => startOffsetFromMode
+    opts("consumer-id")
+      .flatMap(id => graft.streaming.GraftStreaming.consumerOffset(gt, id))
+      .getOrElse(startOffsetFromMode(opts))
   }
 
-  private def startOffsetFromMode: Long = streamOpt("scan.mode") match {
+  private def startOffsetFromMode(opts: String => Option[String]): Long = opts("scan.mode") match {
     case Some("latest") => sm.latestSnapshotId.getOrElse(-1L)
     case Some("from-snapshot") =>
-      streamOpt("scan.snapshot-id").map(_.toLong - 1L).getOrElse(
+      opts("scan.snapshot-id").map(_.toLong - 1L).getOrElse(
         throw new IllegalArgumentException(
           "scan.mode=from-snapshot needs scan.snapshot-id"))
     case Some("from-snapshot-full") =>
@@ -574,12 +579,12 @@ class GraftMicroBatchStream(
       // like latest-full) — merged-on-disk when the snapshot is a
       // compact one; unlike the -1 replay it stays complete after
       // history expiry because it reads the live set, not deltas.
-      val id = streamOpt("scan.snapshot-id").map(_.toLong).getOrElse(
+      val id = opts("scan.snapshot-id").map(_.toLong).getOrElse(
         throw new IllegalArgumentException(
           "scan.mode=from-snapshot-full needs scan.snapshot-id"))
       if (sm.snapshotIds.contains(id)) -(id + 2L) else -1L
     case Some("from-timestamp") =>
-      val ts = streamOpt("scan.timestamp-millis").map(_.toLong).getOrElse(
+      val ts = opts("scan.timestamp-millis").map(_.toLong).getOrElse(
         throw new IllegalArgumentException(
           "scan.mode=from-timestamp needs scan.timestamp-millis"))
       sm.snapshotIdAtTime(ts, inclusive = false).getOrElse(-1L)
@@ -611,17 +616,18 @@ class GraftMicroBatchStream(
     * the query terminates there even while writers keep committing. */
   private var frozenLatest: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    frozenLatest = Some(delayedLatest())
-  private def currentCap(): Long = frozenLatest.getOrElse(delayedLatest())
+    frozenLatest = Some(delayedLatest(streamOpts()))
+  private def currentCap(opts: String => Option[String]): Long =
+    frozenLatest.getOrElse(delayedLatest(opts))
 
   /** `streaming.read.snapshot.delay` (reference: CoreOptions
     * STREAMING_READ_SNAPSHOT_DELAY): the stream only admits snapshots
     * at least this old — headroom for a compaction/changelog job that
     * trails the writer, so readers see settled snapshots. Applied on
     * top of the bounded-watermark cap. */
-  private def delayedLatest(): Long = {
-    val cap = boundedLatest()
-    streamOpt("streaming.read.snapshot.delay")
+  private def delayedLatest(opts: String => Option[String]): Long = {
+    val cap = boundedLatest(opts)
+    opts("streaming.read.snapshot.delay")
       .map(graft.core.Meta.parseDurationMillis) match {
       case None => cap
       case Some(d) =>
@@ -639,9 +645,9 @@ class GraftMicroBatchStream(
     * Trigger.AvailableNow the query drains to that offset and
     * terminates, and the out-of-bound snapshot is neither consumed nor
     * lost. */
-  private def boundedLatest(): Long = {
+  private def boundedLatest(opts: String => Option[String]): Long = {
     val latest = sm.latestSnapshotId.getOrElse(-1L)
-    streamOpt("scan.bounded.watermark").map(_.toLong) match {
+    opts("scan.bounded.watermark").map(_.toLong) match {
       case None => latest
       case Some(bound) =>
         val firstOver = sm.snapshotIds.filter(_ <= latest)
@@ -650,7 +656,7 @@ class GraftMicroBatchStream(
     }
   }
 
-  override def latestOffset(): Offset = GraftOffset(currentCap())
+  override def latestOffset(): Offset = GraftOffset(currentCap(streamOpts()))
 
   /** Admission control (reference: paimon-spark PaimonMicroBatchStream
     * read.stream.maxFilesPerTrigger / maxRowsPerTrigger): without a
@@ -664,10 +670,11 @@ class GraftMicroBatchStream(
   override def getDefaultReadLimit
       : org.apache.spark.sql.connector.read.streaming.ReadLimit = {
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    val opts = streamOpts()
     val limits =
-      streamOpt("scan.max-files-per-trigger").map(_.toInt)
+      opts("scan.max-files-per-trigger").map(_.toInt)
         .map(ReadLimit.maxFiles).toSeq ++
-      streamOpt("scan.max-rows-per-trigger").map(_.toLong)
+      opts("scan.max-rows-per-trigger").map(_.toLong)
         .map(ReadLimit.maxRows).toSeq
     limits match {
       case Seq() => ReadLimit.allAvailable()
@@ -681,7 +688,9 @@ class GraftMicroBatchStream(
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): Offset = {
     import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, ReadMaxFiles, ReadMaxRows}
     val startId = start.asInstanceOf[GraftOffset].snapshotId
-    val cap = currentCap()
+    lazy val sch = gt.schema
+    val opts = streamOpts(sch)
+    val cap = currentCap(opts)
     // caps come EXCLUSIVELY from the ReadLimit (Trigger.AvailableNow
     // fetches its drain target with allAvailable — applying the table
     // options there would truncate the drain to one batch)
@@ -695,7 +704,7 @@ class GraftMicroBatchStream(
     val optRows = leaves.collectFirst { case r: ReadMaxRows => r.maxRows() }
     // bytes have no ReadLimit representation — the table option paces
     // directly (manifest fileSize sums, same admission loop)
-    val optBytes = streamOpt("scan.max-bytes-per-trigger").map(_.toLong)
+    val optBytes = opts("scan.max-bytes-per-trigger").map(_.toLong)
     if (optFiles.isEmpty && optRows.isEmpty && optBytes.isEmpty)
       return GraftOffset(cap)
     var files = 0L
@@ -711,7 +720,7 @@ class GraftMicroBatchStream(
     sm.snapshotIds.filter(i => i > effStart && i <= cap).foreach { id =>
       val sn = sm.snapshot(id)
       if (sn.commitKind == graft.core.Meta.KindCompact ||
-        (sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites)) {
+        (sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites(sch, opts))) {
         // no logical change: absorbing it is free, but only up to the
         // last admitted data snapshot boundary
         if (!admittedData || end == id - 1) end = id
@@ -741,10 +750,10 @@ class GraftMicroBatchStream(
     * reference's append-table option behavior; exact -D retractions
     * for removed PK rows are the library changelog API's job
     * (GraftTable.overwriteChanges). */
-  private def skipOverwrites: Boolean =
-    streamOpt("streaming-read-overwrite").contains("false") ||
-      (!gt.isPrimaryKeyTable &&
-        streamOpt("streaming-read-append-overwrite").contains("false"))
+  private def skipOverwrites(sch: => TableSchema, opts: String => Option[String]): Boolean =
+    opts("streaming-read-overwrite").contains("false") ||
+      (sch.primaryKeys.isEmpty &&
+        opts("streaming-read-append-overwrite").contains("false"))
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[GraftOffset].snapshotId
@@ -753,21 +762,23 @@ class GraftMicroBatchStream(
     // compact snapshot, with deltas strictly after it on top
     val full = fullStartAt(s0)
     val s = full.getOrElse(s0)
+    val sch = gt.schema
+    val opts = streamOpts(sch)
     val deltas = sm.snapshotIds.filter(i => i > s && i <= e)
       .map(sm.snapshot)
       .filter(sn => sn.commitKind != graft.core.Meta.KindCompact &&
-        !(sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites))
+        !(sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites(sch, opts)))
       .flatMap(sn => sn.deltaManifest.map(sm.readManifest))
     val entries = deltas.flatMap { delta =>
       val deleted = delta.filter(_.kind == "DELETE").map(_.file.fileName).toSet
       delta.filter(en => en.kind == "ADD" && !deleted.contains(en.file.fileName))
     }
     val base = full.toSeq.flatMap(c =>
-      gt.visibleEntries(sm.liveEntries(sm.snapshot(c)), gt.schema))
+      gt.visibleEntries(sm.liveEntries(sm.snapshot(c)), sch))
     GraftScanUtil.filePartitions(gt.spark, gt.path, base ++ entries,
       partitionSchema,
-      GraftScanUtil.splitTargetSize(readOptions, gt.schema.options),
-      GraftScanUtil.splitOpenFileCost(readOptions, gt.schema.options))
+      GraftScanUtil.splitTargetSize(readOptions, sch.options),
+      GraftScanUtil.splitOpenFileCost(readOptions, sch.options))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -785,7 +796,7 @@ class GraftMicroBatchStream(
     * conservative in the right direction (never pins less, never
     * resumes past data the checkpoint owns). */
   override def commit(end: Offset): Unit =
-    streamOpt("consumer-id").foreach { id =>
+    streamOpts()("consumer-id").foreach { id =>
       val off = end.asInstanceOf[GraftOffset].snapshotId
       // full-start markers encode -(c+2); progress is the compact id
       val resolved = if (off < -1L) -off - 2L else off

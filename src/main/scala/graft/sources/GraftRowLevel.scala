@@ -50,7 +50,8 @@ class GraftRowLevelOperation(
       override def pushedFilters(): Array[Filter] = pushed
       override def build(): Scan = {
         val sch = gt.schema
-        val entries = gt.planEntries(GraftFilters.toCondition(pushed), sch = sch)
+        val entries = gt.planEntries(
+          GraftFilters.toCondition(pushed), sch, gt.sm.latestSnapshot())
         require(entries.forall(e =>
           e.file.dvFile.isEmpty && e.file.schemaId == sch.id),
           "row-level SQL write over deletion vectors or mixed-schema " +

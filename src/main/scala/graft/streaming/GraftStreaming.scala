@@ -156,15 +156,16 @@ object GraftStreaming {
     * effect) surface in the exact diff the next full compaction
     * persists — emitting overwriteChanges as well would double-emit. */
   private def overwriteBatch(table: GraftTable, id: Long): Option[DataFrame] = {
-    val opts = table.schema.options
+    val sch = table.schema
+    val opts = sch.options
+    val pkTable = sch.primaryKeys.nonEmpty
     // append tables also honor the reference's separate key
     // (CoreOptions STREAMING_READ_APPEND_OVERWRITE)
     val off = opts.get("streaming-read-overwrite").contains("false") ||
-      (!table.isPrimaryKeyTable &&
-        opts.get("streaming-read-append-overwrite").contains("false"))
+      (!pkTable && opts.get("streaming-read-append-overwrite").contains("false"))
     if (off) None
-    else if (table.isPrimaryKeyTable) {
-      if (table.schema.changelogProducer == "full-compaction") None
+    else if (pkTable) {
+      if (sch.changelogProducer == "full-compaction") None
       else Some(table.overwriteChanges(id))
     } else Some(table.incrementalRead(id - 1, id))
   }
@@ -331,8 +332,10 @@ object GraftStreaming {
     import org.apache.spark.sql.functions.broadcast
     val dimSch = dim.schema
     val pk = dimSch.primaryKeys
-    val liveNow = dim.sm.latestSnapshot()
-      .map(dim.sm.liveEntries).getOrElse(Seq.empty)
+    // one dim snapshot per call: the bucket slice, its patches and the
+    // full-dim cache key all read it
+    val snap = dim.sm.latestSnapshot()
+    val liveNow = snap.toSeq.flatMap(dim.sm.liveEntries)
     if (pk.nonEmpty && pk.forall(keys.contains)) {
       // partial: resolve only the buckets the epoch's keys hash into.
       // The batch is persisted for the epoch — the bucket collect and
@@ -356,8 +359,8 @@ object GraftStreaming {
       partialBatchCache.filterInPlace { case (_, (t, df)) =>
         t.isAlive || { df.unpersist(); false } }
       val entries = dim.entriesForKeys(
-        pinned.select(pk.map(org.apache.spark.sql.functions.col): _*), dimSch)
-      val slice = dim.mergedFromEntries(entries, dimSch)
+        pinned.select(pk.map(org.apache.spark.sql.functions.col): _*), dimSch, snap)
+      val slice = dim.mergedFromEntries(entries, dimSch, snap)
       val estBytes = entries.map(_.file.fileSize).sum
       val bc = estBytes <= maxBroadcastBytes
       lastLookupStats = Some(LookupStats("partial", cacheHit = false,
@@ -366,11 +369,11 @@ object GraftStreaming {
     } else {
       // full: whole-dim resolve, snapshot-cached across epochs
       val cacheKey = dimCacheKey(dim)
-      val snapId = dim.sm.latestSnapshotId.getOrElse(-1L)
+      val snapId = snap.map(_.id).getOrElse(-1L)
       val (dimDf, hit) = fullDimCache.get(cacheKey) match {
         case Some((id, df)) if id == snapId => (df, true)
         case _ =>
-          val df = dim.read.persist()
+          val df = dim.readAt(dimSch, snap).persist()
           // unpersist whatever this put DISPLACED — the stale snapshot
           // or a racing stream's duplicate — never the df returned: an
           // eager pre-put unpersist would leak the race loser's blocks

@@ -400,7 +400,10 @@ final class GraftTable private (
     val preMerged =
       if (sch.isPostponeBucket) withArrival
       else MergeEngine.preMergeBatch(withArrival, sch, "__arrival")
-    val base = nextSeq()
+    // the state this commit builds on: its sequence base, the bucket
+    // assignment and the changelog diff all read this one snapshot
+    val snap = sm.latestSnapshot()
+    val base = nextSeq(snap)
     // fixed buckets route by Buckets.route, one task (one file per
     // commit) per bucket; HASH_DYNAMIC (bucket = -1) goes through the
     // index-preserving assigner, which counts the batch, so pin it for
@@ -412,13 +415,13 @@ final class GraftTable private (
     val out =
       if (sch.isDynamicBucket) {
         val batch = preMerged.withColumn(SeqCol, lit(base)).persist()
-        val a = assignDynamicBuckets(batch, sch)
+        val a = assignDynamicBuckets(batch, sch, snap)
         pinned = batch +: a.pinned
         dynUpdate = Some(a.indexUpdate)
         a.out
       } else if (isCrossPartition(sch)) {
         val batch = preMerged.persist()
-        val a = crossPartitionAssign(batch, sch, base)
+        val a = crossPartitionAssign(batch, sch, base, snap)
         pinned = batch +: a.pinned
         globalUpdate = Some(a.indexUpdate)
         seqMax = base + 1 // retractions at base, data rows at base+1
@@ -457,7 +460,7 @@ final class GraftTable private (
     val withChangelog = !overwrite && clProducer == "lookup"
     if (withChangelog) out.persist()
     try {
-      val changelog = if (withChangelog) buildChangelog(sch, out) else None
+      val changelog = if (withChangelog) buildChangelog(sch, out, snap) else None
       commitFilesFn(out, sch, sch.partitionKeys :+ "__bucket",
         if (overwrite) KindOverwrite else KindAppend, base, commitIdentifier,
         deletesFor, changelogManifest = changelog, dynIndexUpdate = dynUpdate,
@@ -498,17 +501,17 @@ final class GraftTable private (
 
   /** The persisted (pk → bucket) index of a dynamic-bucket table, if
     * sidecars exist. */
-  private def dynIndexDf(sch: TableSchema): Option[DataFrame] =
-    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map(readDynIndex(_, sch))
+  private def dynIndexDf(sch: TableSchema, snap: Snapshot): Option[DataFrame] =
+    snap.dynIndex.filter(_.nonEmpty).map(readDynIndex(_, sch))
 
   /** The index pruned to the sidecars that can hold `keyValues`'s entry
     * — the point-lookup path: the key's `__p`/`__r` scope tokens are
     * computed on the driver by [[Buckets.bucketOf]] (the same hash as
     * the Catalyst expressions that laid the files down), so a lookup in
     * a billion-key table opens O(deltas + one range) of index state. */
-  private def dynIndexDfFor(
-      sch: TableSchema, keyValues: Map[String, Any]): Option[DataFrame] = {
-    sm.latestSnapshot().flatMap(_.dynIndex).filter(_.nonEmpty).map { files =>
+  private def dynIndexDfFor(sch: TableSchema, snap: Snapshot,
+      keyValues: Map[String, Any]): Option[DataFrame] = {
+    snap.dynIndex.filter(_.nonEmpty).map { files =>
       // tokens use the modulus the sidecars were written with (their
       // directory pin); unpinnable layouts read everything
       val toks = pinnedDynRanges(files, sch).flatMap { ranges =>
@@ -540,9 +543,9 @@ final class GraftTable private (
     * no dedup shuffle. Tables written before the index existed
     * bootstrap it once from the table's own (pk, bucket) projection. */
   private def assignDynamicBuckets(
-      batch: DataFrame, sch: TableSchema): DynAssignment = {
+      batch: DataFrame, sch: TableSchema, snap: Option[Snapshot]): DynAssignment = {
     val pk = sch.primaryKeys
-    val live = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+    val live = snap.toSeq.flatMap(sm.liveEntries)
     val liveRows = live.map(_.file.rowCount).sum
     val maxBucket = live.map(_.bucket).maxOption.getOrElse(-1)
     val batchRows = batch.count() // caller has persisted the batch
@@ -578,7 +581,7 @@ final class GraftTable private (
         scoped = scopeRewrites, sch)
       return DynAssignment(out, keepUnseen(Set.empty, files), Seq(out))
     }
-    val prevFiles = sm.latestSnapshot().flatMap(_.dynIndex).getOrElse(Seq.empty)
+    val prevFiles = snap.flatMap(_.dynIndex).getOrElse(Seq.empty)
     val compactTrigger = sch.options
       .getOrElse("dynamic-bucket.index.compact-trigger", "32").toInt
     // full rewrite when bootstrapping (no sidecars yet) or the DELTA
@@ -744,8 +747,8 @@ final class GraftTable private (
     *
     * Assumes per-key non-decreasing sequence values (the CDC case);
     * deduplicate merge engine only. */
-  private def crossPartitionAssign(
-      batch: DataFrame, sch: TableSchema, base: Long): DynAssignment = {
+  private def crossPartitionAssign(batch: DataFrame, sch: TableSchema, base: Long,
+      snap: Option[Snapshot]): DynAssignment = {
     require(sch.mergeEngine == "deduplicate",
       "cross-partition upsert requires merge-engine=deduplicate")
     val pk = sch.primaryKeys
@@ -754,7 +757,6 @@ final class GraftTable private (
     // single clock read for the pass: index stamps and the TTL cutoff
     // must be mutually consistent (see indexTtlFilter)
     val passNow = System.currentTimeMillis()
-    val snap = sm.latestSnapshot()
     val prevFiles = snap.flatMap(_.globalIndex).getOrElse(Seq.empty)
     val live = snap.map(sm.liveEntries).getOrElse(Seq.empty)
     val trigger = sch.options.getOrElse("global-index.compact-trigger", "32").toInt
@@ -1453,7 +1455,7 @@ final class GraftTable private (
 
   private def appendCommit(
       df: DataFrame, sch: TableSchema, overwrite: Boolean, commitIdentifier: Long): Long = {
-    val base = nextSeq()
+    val base = nextSeq(sm.latestSnapshot())
     // length semantics live on the shared commit path (not only the
     // write()/overwrite() entry points) so every producer — DML,
     // streaming sink, procedures — stores consistent CHAR padding
@@ -1864,9 +1866,9 @@ final class GraftTable private (
       graft.core.FsUtil.walkAll(p).reverse.foreach(Files.deleteIfExists(_))
     }
 
-  private def nextSeq(): Long =
-    sm.latestSnapshot()
-      .map(s => sm.liveEntries(s).map(_.file.maxSeq).foldLeft(-1L)(math.max) + 1)
+  /** The sequence number above every row live in `snap`. */
+  private def nextSeq(snap: Option[Snapshot]): Long =
+    snap.map(s => sm.liveEntries(s).map(_.file.maxSeq).foldLeft(-1L)(math.max) + 1)
       .getOrElse(0L)
 
   // ================= read =================
@@ -1880,7 +1882,7 @@ final class GraftTable private (
     * Data files are shared across branches, so the extra entries read
     * through the same table path. */
   private def withFallbackEntries(
-      sch: TableSchema, entries: Seq[ManifestEntry],
+      sch: TableSchema, snap: Option[Snapshot], entries: Seq[ManifestEntry],
       filter: Option[Column] = None): Seq[ManifestEntry] = {
     val fb = sch.options.get("scan.fallback-branch")
       .filter(_ => sch.partitionKeys.nonEmpty)
@@ -1893,9 +1895,7 @@ final class GraftTable private (
         // live entry set: a partition whose files were all stats-pruned
         // by the caller's filter still EXISTS on the current branch and
         // must not be served (stale) from the fallback branch.
-        val mainParts = sm.latestSnapshot()
-          .map(s => sm.liveEntries(s).map(_.partition).toSet)
-          .getOrElse(Set.empty[Map[String, String]])
+        val mainParts = snap.toSeq.flatMap(sm.liveEntries).map(_.partition).toSet
         val branchSnap = bt.sm.latestSnapshot()
         val branchLive = branchSnap.map { s =>
           // the caller's filter prunes the fallback side too — same
@@ -1912,23 +1912,20 @@ final class GraftTable private (
   /** Chain composition applies only on the MAIN table handle: branch
     * handles must serve their own data (the snapshot/delta branches ARE
     * the chain's inputs), and SQL reads route here via [[scan]]. */
-  private def isChainMain(sch: TableSchema): Boolean =
+  private[graft] def isChainMain(sch: TableSchema): Boolean =
     sm.branch.isEmpty &&
       sch.options.get("chain-table.enabled").contains("true")
 
   /** Latest-snapshot merged read. */
-  def read: DataFrame = {
-    val sch = schema
-    if (isChainMain(sch)) return chainReadPlanned(sch, None)
-    sm.latestSnapshot()
-      .map(s => mergedFromEntries(withFallbackEntries(sch, sm.liveEntries(s)), sch))
-      .getOrElse {
-        // empty current branch: a fallback branch may still serve data
-        if (sch.options.contains("scan.fallback-branch"))
-          mergedFromEntries(withFallbackEntries(sch, Seq.empty), sch)
-        else emptyDf(sch)
-      }
-  }
+  def read: DataFrame = readAt(schema, sm.latestSnapshot())
+
+  /** [[read]] of the current state `snap` (None: no snapshot yet, where
+    * a fallback branch may still serve data). */
+  private[graft] def readAt(sch: TableSchema, snap: Option[Snapshot]): DataFrame =
+    if (isChainMain(sch)) chainReadPlanned(sch, None)
+    else if (snap.isEmpty && !sch.options.contains("scan.fallback-branch")) emptyDf(sch)
+    else mergedFromEntries(
+      withFallbackEntries(sch, snap, snap.toSeq.flatMap(sm.liveEntries)), sch, snap)
 
   /** Chain-table batch read (reference: ChainGroupReadTable.java:63 +
     * ChainTableUtils — the lambda-architecture composition of a
@@ -2179,55 +2176,44 @@ final class GraftTable private (
     * against the manifest before any file is opened; the filter is also
     * re-applied in the plan so parquet row-group pushdown still kicks
     * in. */
-  def scan(filter: Column): DataFrame = scan(filter, schema)
+  def scan(filter: Column): DataFrame = scan(filter, schema, sm.latestSnapshot())
 
-  /** [[scan]] against the schema version `sch` the caller resolved. */
-  private[graft] def scan(filter: Column, sch: TableSchema): DataFrame = {
+  /** [[scan]] of the current state `snap` under the schema version
+    * `sch` the caller resolved. */
+  private[graft] def scan(
+      filter: Column, sch: TableSchema, snap: Option[Snapshot]): DataFrame = {
     // SQL reads of a chain table (the PK V1 path routes through scan)
     // must see the composed chain, not the (typically empty) main
     // branch; partition pruning applies post-composition via Catalyst
     if (isChainMain(sch))
       return chainReadPlanned(sch, partitionConjuncts(sch, filter)).filter(filter)
-    mergedFromEntries(planEntries(filter, sch = sch), sch).filter(filter)
+    mergedFromEntries(planEntries(filter, sch, snap), sch, snap).filter(filter)
   }
 
-  /** [[scan]] restricted to data files physically written after `ts`
-    * (reference: CoreOptions SCAN_FILE_CREATION_TIME_MILLIS —
-    * snapshot-independent, IMPRECISE by contract: compaction re-stamps
-    * rewritten rows, and PK merge results reflect only the surviving
-    * files). Files from before the creationTime field are kept. */
-  def scanFilesCreatedAfter(filter: Column, ts: Long): DataFrame =
-    scanFilesCreatedAfter(filter, ts, schema)
+  def readSnapshot(id: Option[Long]): DataFrame = readPinned(id.map(sm.snapshot))
 
-  private[graft] def scanFilesCreatedAfter(
-      filter: Column, ts: Long, sch: TableSchema): DataFrame = {
-    val snap = sm.latestSnapshot()
-    val entries = bucketNarrow(sch,
-      snap.map(pruneEntries(_, filter, sch)).getOrElse(Seq.empty), filter)
-      .filter(_.file.creationTime.forall(_ > ts))
-    mergedFromEntries(withFallbackEntries(sch, entries, Some(filter)), sch).filter(filter)
-  }
-
-  def readSnapshot(id: Option[Long]): DataFrame = {
+  /** The merged state of `snap` (time travel), under its own column
+    * patches. */
+  private def readPinned(snap: Option[Snapshot]): DataFrame = {
     val sch = schema
-    id.map { i =>
-      val snap = sm.snapshot(i)
-      mergedFromEntries(sm.liveEntries(snap), sch, Some(snap))
-    }.getOrElse(emptyDf(sch))
+    snap.fold(emptyDf(sch))(s => mergedFromEntries(sm.liveEntries(s), sch, snap))
   }
 
-  /** Pruned manifest entries for an external planner (the DSv2 scan):
-    * same partition/stats/bloom skipping as [[scan]], optionally
-    * against a historical snapshot. */
+  /** Pruned manifest entries of the latest snapshot, as [[scan]] plans
+    * them. */
+  private[graft] def planEntries(filter: Column): Seq[ManifestEntry] =
+    planEntries(filter, schema, sm.latestSnapshot())
+
+  /** Pruned manifest entries of `snap` for an external planner (the
+    * DSv2 scan): same partition/stats/bloom skipping as [[scan]].
+    * Fallback-branch partitions only augment a current-state plan;
+    * time travel (`pinned`) stays exactly the branch's own history. */
   private[graft] def planEntries(
-      filter: Column, snapshotId: Option[Long] = None,
-      sch: TableSchema = schema): Seq[ManifestEntry] = {
-    val snap = snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())
+      filter: Column, sch: TableSchema, snap: Option[Snapshot],
+      pinned: Boolean = false): Seq[ManifestEntry] = {
     val planned = snap.map(pruneEntries(_, filter, sch)).getOrElse(Seq.empty)
-    // fallback-branch partitions only augment CURRENT-state plans;
-    // time travel stays exactly the branch's own history
     bucketNarrow(sch,
-      if (snapshotId.isEmpty) withFallbackEntries(sch, planned, Some(filter)) else planned,
+      if (pinned) planned else withFallbackEntries(sch, snap, planned, Some(filter)),
       filter)
   }
 
@@ -2270,16 +2256,20 @@ final class GraftTable private (
     * paimon-spark .../aggregate/AggregatePushDownUtils.scala:36-106,
     * guarded by mergedRowCountAvailable for PK tables). PK tables
     * without a guaranteed merged count fall back to a real scan. */
-  def countRows(): Long = countRowsFast().getOrElse(read.count())
+  def countRows(): Long = {
+    val sch = schema
+    val snap = sm.latestSnapshot()
+    countRowsFast(sch, snap).getOrElse(readAt(sch, snap).count())
+  }
 
   /** countRows when answerable from manifests alone — zero jobs. None
     * → an actual merge scan is required (non-compacted PK table); the
     * SQL pushdown must then decline rather than run a full scan at
     * planning time. */
-  def countRowsFast(): Option[Long] = {
-    val sch = schema
-    val entries =
-      visibleEntries(sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty), sch)
+  def countRowsFast(): Option[Long] = countRowsFast(schema, sm.latestSnapshot())
+
+  private[graft] def countRowsFast(sch: TableSchema, snap: Option[Snapshot]): Option[Long] = {
+    val entries = visibleEntries(snap.toSeq.flatMap(sm.liveEntries), sch)
     if (sch.primaryKeys.isEmpty)
       Some(entries.map(e => e.file.rowCount - e.file.dvCardinality.getOrElse(0L)).sum)
     else if (entries.forall(_.file.level > 0) &&
@@ -2292,10 +2282,13 @@ final class GraftTable private (
   /** MIN/MAX of a column from manifest stats when every live file has
     * usable stats; None → caller must scan (reference: MinEvaluator /
     * MaxEvaluator). Append tables only — PK merge could drop rows. */
-  def statsMinMax(column: String): Option[(String, String)] = {
-    val sch = schema
+  def statsMinMax(column: String): Option[(String, String)] =
+    statsMinMax(column, schema, sm.latestSnapshot())
+
+  private[graft] def statsMinMax(
+      column: String, sch: TableSchema, snap: Option[Snapshot]): Option[(String, String)] = {
     if (sch.primaryKeys.nonEmpty) return None
-    val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(return None)
+    val entries = snap.toSeq.flatMap(sm.liveEntries)
     if (entries.isEmpty) return None
     // a deleted position could hold the extreme value; and a truncated
     // stat (metadata.stats-mode) is a BOUND, not a value — both make
@@ -2345,15 +2338,16 @@ final class GraftTable private (
     * rawConvertible splits until the limit is reached). Append-only. */
   def readLimit(n: Long): DataFrame = {
     val sch = schema
-    if (sch.primaryKeys.nonEmpty) return read.limit(n.toInt)
-    val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+    val snap = sm.latestSnapshot()
+    if (sch.primaryKeys.nonEmpty) return readAt(sch, snap).limit(n.toInt)
+    val entries = snap.toSeq.flatMap(sm.liveEntries)
     var acc = 0L
     val taken = entries.takeWhile { e =>
       val need = acc < n
       acc += e.file.rowCount - e.file.dvCardinality.getOrElse(0L)
       need
     }
-    mergedFromEntries(taken, sch).limit(n.toInt)
+    mergedFromEntries(taken, sch, snap).limit(n.toInt)
   }
 
   /** Entries that can contribute to `ORDER BY column [DESC] LIMIT k`:
@@ -2436,29 +2430,31 @@ final class GraftTable private (
       if (colPatchesOf(sch, snap).contains(column)) entries
       else topNEntries(entries, column, k, descending, sch)
     val sortCol = if (descending) col(column).desc else col(column).asc
-    mergedFromEntries(sorted, sch).orderBy(sortCol).limit(k)
+    mergedFromEntries(sorted, sch, snap).orderBy(sortCol).limit(k)
   }
 
   /** Primary-key point lookup with bucket pruning: only the one
     * hash-bucket (and stats-matching files in it) is read (reference:
     * LocalTableQuery.java:64 — the KV-service semantics, served by a
     * pruned scan). */
-  def lookup(keyValues: Map[String, Any]): DataFrame = lookup(keyValues, schema)
+  def lookup(keyValues: Map[String, Any]): DataFrame =
+    lookup(keyValues, schema, sm.latestSnapshot())
 
-  private def lookup(keyValues: Map[String, Any], sch: TableSchema): DataFrame = {
+  private def lookup(
+      keyValues: Map[String, Any], sch: TableSchema, snap0: Option[Snapshot]): DataFrame = {
     require(sch.primaryKeys.nonEmpty, "lookup requires a primary-key table")
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
     // before any planning, so a key value of the wrong type fails here
     val bucket = directPkBucket(sch, keyValues)
     val filterCond = sch.primaryKeys
       .map(k => col(k) === lit(keyValues(k))).reduce(_ && _)
-    val snap = sm.latestSnapshot().getOrElse(return emptyDf(sch))
+    val snap = snap0.getOrElse(return emptyDf(sch))
     val pruned = pruneEntries(snap, filterCond, sch)
     // fixed buckets: the key's bucket is hash-derived, prune to it;
     // dynamic buckets: membership lives in the persisted index (a key
     // absent there was never written → empty result, zero data files)
     val entries =
-      if (sch.isDynamicBucket) dynIndexDfFor(sch, keyValues) match {
+      if (sch.isDynamicBucket) dynIndexDfFor(sch, snap, keyValues) match {
         case Some(idx) =>
           idx.filter(filterCond).select("__bucket").collect().headOption match {
             case Some(r) => pruned.filter(_.bucket == r.getInt(0))
@@ -2583,9 +2579,10 @@ final class GraftTable private (
     // one schema for the whole call: a concurrent ALTER must not mix
     // versions between the guards, the pruning and the row layout
     val sch = schema
-    if (!bucketLocal(sch)) return lookup(keyValues, sch).collect().toSeq
+    val latest = sm.latestSnapshot()
+    if (!bucketLocal(sch)) return lookup(keyValues, sch, latest).collect().toSeq
     require(sch.primaryKeys.toSet == keyValues.keySet, "must bind every primary key")
-    val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
+    val snap = latest.getOrElse(return Seq.empty)
     val bucket = directPkBucket(sch, keyValues)
     // old-layout files (mid-rescale) survive the narrowing so the
     // schema-mismatch fallback below can see them and route the
@@ -2593,7 +2590,7 @@ final class GraftTable private (
     val visible = visibleEntries(sm.liveEntries(snap), sch)
     val bucketEntries = bucket.fold(visible)(b => visible.filter(mayHoldBucket(sch, Set(b))))
     if (bucketEntries.isEmpty) return Seq.empty
-    if (!bucketLocal(sch, bucketEntries)) return lookup(keyValues, sch).collect().toSeq
+    if (!bucketLocal(sch, bucketEntries)) return lookup(keyValues, sch, latest).collect().toSeq
     lookupCacheMaxFiles = sch.options.getOrElse("lookup.cache-max-files", "32").toInt
     val maxRows = sch.options.getOrElse("lookup.cache-max-file-rows", "65536").toLong
     val read = bucketRead(sch)
@@ -2740,11 +2737,9 @@ final class GraftTable private (
   /** Time travel: tag. Reads through the tag's own snapshot copy, so
     * it survives expiration of the original snapshot. */
   def readTag(name: String): DataFrame =
-    sm.tagSnapshot(name)
-      // the TAG's own patch registry applies — overlaying today's
-      // patches would break tag immutability
-      .map(s => mergedFromEntries(sm.liveEntries(s), schema, Some(s)))
-      .getOrElse(emptyDf(schema))
+    // the TAG's own patch registry applies — overlaying today's
+    // patches would break tag immutability
+    readPinned(sm.tagSnapshot(name))
 
   /** Delete consumer files whose progress has not moved within
     * `consumer.expiration-time` (file mtime is the progress clock —
@@ -3137,15 +3132,15 @@ final class GraftTable private (
     if (!sch.isPostponeBucket) entries
     else entries.filter(_.bucket != GraftTable.PostponeBucket)
 
-  /** `patchSnap` pins which snapshot's column-patch registry applies
-    * (append tables) — time travel reads the patches as of ITS
-    * snapshot, not today's. */
+  /** The rows of `entries`, planned from `snap`: merged on primary-key
+    * tables, with `snap`'s column-patch registry applied on append
+    * tables — time travel reads the patches as of ITS snapshot, and a
+    * current read the patches of the snapshot its files came from. */
   private[graft] def mergedFromEntries(
-      entries: Seq[ManifestEntry], sch: TableSchema,
-      patchSnap: => Option[Snapshot] = sm.latestSnapshot()): DataFrame =
+      entries: Seq[ManifestEntry], sch: TableSchema, snap: Option[Snapshot]): DataFrame =
     if (sch.primaryKeys.nonEmpty) MergeEngine.merge(readRaw(visibleEntries(entries, sch), sch), sch)
     else {
-      val patches = colPatchesOf(sch, patchSnap)
+      val patches = colPatchesOf(sch, snap)
       if (patches.isEmpty) readAppendData(entries, sch)
       else applyColumnPatches(rowIdReadFor(entries, sch), patches, sch)
         .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
@@ -3154,17 +3149,12 @@ final class GraftTable private (
   // ================= data evolution (column patches) =================
 
   /** column → patch files visible at `snap`; columns dropped since a
-    * patch was written fall out of the map (their patches are inert). */
-  private def colPatchesOf(
+    * patch was written fall out of the map (their patches are inert).
+    * The DSv2 native scan cannot merge patches and falls back. */
+  private[graft] def colPatchesOf(
       sch: TableSchema, snap: Option[Snapshot]): Map[String, Seq[String]] =
     snap.flatMap(_.colPatches).getOrElse(Map.empty)
       .filter { case (c, _) => sch.fields.exists(_.name == c) }
-
-  /** Whether the given (or latest) snapshot carries column patches —
-    * the DSv2 native scan cannot merge them and must fall back. */
-  private[graft] def hasColumnPatches(
-      snapshotId: Option[Long] = None, sch: TableSchema = schema): Boolean =
-    colPatchesOf(sch, snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())).nonEmpty
 
   /** Backfill (or correct) ONE column for existing rows WITHOUT
     * rewriting any data file — the Spark shape of the reference's data
@@ -3283,9 +3273,8 @@ final class GraftTable private (
   /** Pruned row-id read with the patch overlay applied (the DSv2
     * `_ROW_ID` scan's entry point). */
   private[graft] def rowIdReadPatched(
-      entries: Seq[ManifestEntry], snapshotId: Option[Long], sch: TableSchema): DataFrame =
-    applyColumnPatches(rowIdReadFor(entries, sch),
-      colPatchesOf(sch, snapshotId.map(sm.snapshot).orElse(sm.latestSnapshot())), sch)
+      entries: Seq[ManifestEntry], snap: Option[Snapshot], sch: TableSchema): DataFrame =
+    applyColumnPatches(rowIdReadFor(entries, sch), colPatchesOf(sch, snap), sch)
 
   /** Overlay the registered patches onto a row-id-carrying DataFrame.
     * Patch generation = the order of the patch DIRECTORIES in the
@@ -3360,19 +3349,20 @@ final class GraftTable private (
     val c = col(GraftTable.RowIdCol)
     val snap = sm.latestSnapshot()
     applyColumnPatches(
-      rowIdReadFor(rowRangeEntries(snap, lo, hi), sch).filter(c >= lo && c < hi),
+      rowIdReadFor(inRowRange(snap.toSeq.flatMap(sm.liveEntries), lo, hi), sch)
+        .filter(c >= lo && c < hi),
       colPatchesOf(sch, snap), sch)
   }
 
   /** The file-pruning readRowRange applies: entries whose row-id extent
     * intersects [lo, hi). */
   private[graft] def rowRangeEntries(lo: Long, hi: Long): Seq[ManifestEntry] =
-    rowRangeEntries(sm.latestSnapshot(), lo, hi)
+    inRowRange(sm.latestSnapshot().toSeq.flatMap(sm.liveEntries), lo, hi)
 
-  private def rowRangeEntries(
-      snap: Option[Snapshot], lo: Long, hi: Long): Seq[ManifestEntry] =
-    snap.map(sm.liveEntries).getOrElse(Seq.empty)
-      .filter(e => e.file.firstRowId.exists(f => f < hi && f + e.file.rowCount > lo))
+  /** The `entries` whose row-id extent intersects [lo, hi). */
+  private[graft] def inRowRange(
+      entries: Seq[ManifestEntry], lo: Long, hi: Long): Seq[ManifestEntry] =
+    entries.filter(e => e.file.firstRowId.exists(f => f < hi && f + e.file.rowCount > lo))
 
   /** Read `entries` with `_ROW_ID` = per-file base + physical row
     * index. The per-file bases ride a broadcast join on the file name —
@@ -3611,7 +3601,7 @@ final class GraftTable private (
       s"snapshot $snapshotId is ${sn.commitKind}, not OVERWRITE")
     val delta = sn.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty)
     def merged(entries: Seq[ManifestEntry]): DataFrame =
-      if (entries.isEmpty) emptyDf(sch) else mergedFromEntries(entries, sch)
+      if (entries.isEmpty) emptyDf(sch) else mergedFromEntries(entries, sch, Some(sn))
     val outCols = (sch.toStruct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
     merged(delta.filter(_.kind == "DELETE"))
       .withColumn("_row_kind", lit("-D")).select(outCols: _*)
@@ -3964,7 +3954,7 @@ final class GraftTable private (
     * into level-1 files; deletes are physically dropped. One COMPACT
     * snapshot replacing the inputs (reference:
     * MergeTreeCompactManager + CompactProcedure). */
-  def compact(): Option[Long] = compactEntries(schema, _ => true)
+  def compact(): Option[Long] = compactEntries(schema, sm.latestSnapshot(), _ => true)
 
   /** Partition-scoped compaction: rewrite only partitions matching the
     * predicate — the reference's `CALL sys.compact(..., where => ...)`
@@ -3986,7 +3976,7 @@ final class GraftTable private (
             s"${sch.partitionKeys.mkString(",")}: ${e.getMessage}")
       }
     if (selected.isEmpty) None
-    else compactEntries(sch, e => selected.contains(e.file.fileName))
+    else compactEntries(sch, Some(snap), e => selected.contains(e.file.fileName))
   }
 
   /** Incremental compaction: rewrite only the (partition, bucket)
@@ -4052,8 +4042,8 @@ final class GraftTable private (
     // would create a second level-1 generation and break the
     // full-compaction changelog's before-state; visibility assignment
     // is always a FULL compact
-    else if (sch.isPostponeBucket) compactEntries(sch, _ => true)
-    else compactEntries(sch, e => hot.contains(e.file.fileName))
+    else if (sch.isPostponeBucket) compactEntries(sch, Some(snap), _ => true)
+    else compactEntries(sch, Some(snap), e => hot.contains(e.file.fileName))
   }
 
   /** Record-level TTL (reference: RecordLevelExpire +
@@ -4081,19 +4071,19 @@ final class GraftTable private (
       }
     }
 
-  private def compactEntries(
-      sch: TableSchema, select: ManifestEntry => Boolean): Option[Long] = {
+  private def compactEntries(sch: TableSchema, snap0: Option[Snapshot],
+      select: ManifestEntry => Boolean): Option[Long] = {
     // compaction rewrites files, which would re-position rows and break
     // the firstRowId + position identity (the reference likewise
     // restricts compaction on row-tracking tables)
     require(!GraftTable.tracksRows(sch),
       "row-tracking tables cannot be compacted: rewriting files would reassign _ROW_ID")
-    val snap = sm.latestSnapshot().getOrElse(return None)
+    val snap = snap0.getOrElse(return None)
     val old = sm.liveEntries(snap).filter(select)
     if (old.isEmpty) return None
     val pkTable = sch.primaryKeys.nonEmpty
     val cols = sch.toStruct.fieldNames.map(col).toIndexedSeq
-    val base = nextSeq()
+    val base = nextSeq(Some(snap))
     val merged =
       if (pkTable) {
         val m0 = MergeEngine.mergeKeepMeta(readRaw(old, sch), sch)
@@ -4538,7 +4528,8 @@ final class GraftTable private (
   def rebuildVectorIndex(
       idCol: String, vecCol: String,
       shards: Int = 4, m: Int = 8, efConstruction: Int = 64): Unit = {
-    require(Seq(idCol, vecCol).forall(c => schema.fields.exists(_.name == c)),
+    val sch = schema
+    require(Seq(idCol, vecCol).forall(c => sch.fields.exists(_.name == c)),
       s"no such columns: $idCol / $vecCol")
     val snap = sm.latestSnapshot().getOrElse(
       throw new IllegalStateException("empty table"))
@@ -4549,11 +4540,12 @@ final class GraftTable private (
     // non-compacted PK table, which only errs toward MORE shards) and
     // dim from a limit-1 probe, so the merged read is scanned exactly
     // once — by the build itself.
-    val cnt = countRowsFast().getOrElse(snap.totalRecordCount)
-    val dim = read.select(size(col(vecCol)).as("d"))
+    val cnt = countRowsFast(sch, Some(snap)).getOrElse(snap.totalRecordCount)
+    val rows = readAt(sch, Some(snap))
+    val dim = rows.select(size(col(vecCol)).as("d"))
       .filter(col("d").isNotNull).head(1).headOption.map(_.getInt(0)).getOrElse(0)
     val effShards = graft.operators.Similarity.buildHnswIndex(
-      read.select(col(idCol), col(vecCol)), s"$path/$dir",
+      rows.select(col(idCol), col(vecCol)), s"$path/$dir",
       idCol, vecCol, shards, m, efConstruction,
       knownCount = Some(cnt), knownDim = Some(dim))
     sm.io.writeString(s"$path/$dir/state.json", Json.write(
@@ -4576,7 +4568,8 @@ final class GraftTable private (
             classOf[GraftTable.VectorIndexState]))
         else None
       } catch { case scala.util.control.NonFatal(_) => None }
-    st.filter(s => sm.latestSnapshotId.contains(s.snapshotId) &&
+    val snap = sm.latestSnapshot()
+    st.filter(s => snap.exists(_.id == s.snapshotId) &&
         s.idCol == idCol && s.vecCol == vecCol) match {
       case Some(_) =>
         graft.operators.Similarity.hnswIndexTopK(
@@ -4585,7 +4578,7 @@ final class GraftTable private (
         val p = st.getOrElse(
           GraftTable.VectorIndexState(idCol, vecCol, -1L, 4, 8, 64))
         graft.operators.Similarity.hnswTopK(
-          read.select(col(idCol), col(vecCol)), queries, idCol, vecCol,
+          readAt(schema, snap).select(col(idCol), col(vecCol)), queries, idCol, vecCol,
           kNeighbors, p.shards, p.m, p.efConstruction, efSearch)
     }
   }
@@ -4701,40 +4694,41 @@ final class GraftTable private (
     * granularity — dropping one level file from an LSM merge would
     * resurrect older versions. Fail-open on any index read problem. */
   private[graft] def textCandidates(
-      column: String, word: String, prefixMatch: Boolean = false,
-      sch: TableSchema = schema): Seq[ManifestEntry] =
-    textPrune(sch, column) { postings =>
-      cappedFileHits(sch, postings
-        .filter(if (prefixMatch) col("token").startsWith(word)
-                else col("token") === word)
-        .select("f").distinct())
-    }
+      column: String, word: String, prefixMatch: Boolean = false): Seq[ManifestEntry] =
+    textPrune(schema, sm.latestSnapshot(), column)(tokenHits(word, prefixMatch))
 
-  /** Candidates for an AND of whole tokens: one postings scan, a file
-    * survives only if it holds EVERY word (groupBy f + distinct-token
-    * count) — tighter than intersecting per-word probes, same single
-    * bounded job. */
-  private[graft] def textCandidatesAll(column: String, words: Seq[String],
-      sch: TableSchema = schema): Seq[ManifestEntry] = {
+  /** Candidates for an AND of whole tokens (see [[allTokenHits]]). */
+  private[graft] def textCandidatesAll(column: String, words: Seq[String]): Seq[ManifestEntry] =
+    textPrune(schema, sm.latestSnapshot(), column)(allTokenHits(words))
+
+  /** Candidates for an OR of whole tokens (see [[anyTokenHits]]). */
+  private[graft] def textCandidatesAny(column: String, words: Seq[String]): Seq[ManifestEntry] =
+    textPrune(schema, sm.latestSnapshot(), column)(anyTokenHits(words))
+
+  /** Files (`f`) whose postings hold `word`, or a token starting with
+    * it under `prefixMatch`. */
+  private def tokenHits(word: String, prefixMatch: Boolean)(postings: DataFrame): DataFrame =
+    postings
+      .filter(if (prefixMatch) col("token").startsWith(word) else col("token") === word)
+      .select("f").distinct()
+
+  /** Files holding EVERY word: one postings scan, a file survives only
+    * if it holds every word (groupBy f + distinct-token count) —
+    * tighter than intersecting per-word probes, same single bounded
+    * job. */
+  private def allTokenHits(words: Seq[String])(postings: DataFrame): DataFrame = {
     val distinctWords = words.distinct
-    textPrune(sch, column) { postings =>
-      cappedFileHits(sch, postings
-        .filter(col("token").isin(distinctWords: _*))
-        .groupBy("f").agg(countDistinct(col("token")).as("n"))
-        .filter(col("n") === distinctWords.size)
-        .select("f"))
-    }
+    postings
+      .filter(col("token").isin(distinctWords: _*))
+      .groupBy("f").agg(countDistinct(col("token")).as("n"))
+      .filter(col("n") === distinctWords.size)
+      .select("f")
   }
 
-  /** Candidates for an OR of whole tokens: union of the per-token
+  /** Files holding at least one word: the union of the per-token
     * posting sets, still one scan (isin + distinct f). */
-  private[graft] def textCandidatesAny(column: String, words: Seq[String],
-      sch: TableSchema = schema): Seq[ManifestEntry] =
-    textPrune(sch, column) { postings =>
-      cappedFileHits(sch, postings
-        .filter(col("token").isin(words.distinct: _*))
-        .select("f").distinct())
-    }
+  private def anyTokenHits(words: Seq[String])(postings: DataFrame): DataFrame =
+    postings.filter(col("token").isin(words.distinct: _*)).select("f").distinct()
 
   /** Collect a probe's matching-file set, CAPPED like the global
     * secondary index's probes (`secondary-index.max-probe-hits`
@@ -4755,16 +4749,17 @@ final class GraftTable private (
     } else Some(rows.map(_.getString(0)).toSet)
   }
 
-  /** Shared text-index pruning scaffold: `hitsOf` maps the postings
-    * DataFrame to the set of matching file basenames, or None to fail
-    * open (probe over the cap → every covered file stays). */
-  private def textPrune(sch: TableSchema, column: String)(
-      hitsOf: DataFrame => Option[Set[String]]): Seq[ManifestEntry] = {
-    val snap = sm.latestSnapshot().getOrElse(return Seq.empty)
+  /** Shared text-index pruning scaffold over `snap`'s files: `hitsOf`
+    * maps the postings DataFrame to the matching file basenames (`f`),
+    * collected under the probe cap (over the cap → every covered file
+    * stays). */
+  private def textPrune(sch: TableSchema, snap0: Option[Snapshot], column: String)(
+      hitsOf: DataFrame => DataFrame): Seq[ManifestEntry] = {
+    val snap = snap0.getOrElse(return Seq.empty)
     val entries = visibleEntries(sm.liveEntries(snap), sch)
     // a column patch can rewrite text the write-time postings never
     // saw — the index is stale for patched columns, so fail OPEN
-    if (colPatchesOf(sch, Some(snap)).contains(column)) return entries
+    if (colPatchesOf(sch, snap0).contains(column)) return entries
     val stPath = s"$path/index-text/$column/state.json"
     val st =
       try {
@@ -4779,7 +4774,8 @@ final class GraftTable private (
         val hits: Set[String] =
           try {
             if (s0.postings.isEmpty) Set.empty
-            else hitsOf(spark.read.parquet(s0.postings.map(p => s"$path/$p"): _*))
+            else cappedFileHits(sch,
+              hitsOf(spark.read.parquet(s0.postings.map(p => s"$path/$p"): _*)))
               .getOrElse(covered) // over-cap probe: keep all covered
           } catch { case scala.util.control.NonFatal(_) => covered }
         val keep = entries.filter { e =>
@@ -4792,6 +4788,17 @@ final class GraftTable private (
         } else keep
       case None => entries
     }
+  }
+
+  /** Rows of the files a text probe keeps, filtered by `cond` and
+    * projected to the table's columns: the index only PRUNES files,
+    * `cond` decides membership. */
+  private def textMatches(column: String, hitsOf: DataFrame => DataFrame)(
+      cond: Column): DataFrame = {
+    val sch = schema
+    val snap = sm.latestSnapshot()
+    mergedFromEntries(textPrune(sch, snap, column)(hitsOf), sch, snap).filter(cond)
+      .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   /** A valid search token for the ASCII tokenizer ([[GraftTable
@@ -4811,12 +4818,8 @@ final class GraftTable private (
   def searchText(column: String, word: String): DataFrame = {
     require(isSearchToken(word),
       "searchText matches a single whole token: [A-Za-z0-9]+")
-    val sch = schema
-    val matched = mergedFromEntries(textCandidates(column, word, sch = sch), sch)
-      .filter(array_contains(split(
-        coalesce(col(column).cast("string"), lit("")),
-        GraftTable.TextTokenSplit), word))
-    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+    textMatches(column, tokenHits(word, prefixMatch = false))(array_contains(split(
+      coalesce(col(column).cast("string"), lit("")), GraftTable.TextTokenSplit), word))
   }
 
   /** Rows whose `column` contains EVERY word in `words` as a whole
@@ -4827,10 +4830,8 @@ final class GraftTable private (
       "searchTextAll takes whole tokens: [A-Za-z0-9]+")
     val tokens = split(
       coalesce(col(column).cast("string"), lit("")), GraftTable.TextTokenSplit)
-    val sch = schema
-    val matched = mergedFromEntries(textCandidatesAll(column, words, sch), sch)
-      .filter(words.distinct.map(w => array_contains(tokens, w)).reduce(_ && _))
-    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+    textMatches(column, allTokenHits(words))(
+      words.distinct.map(w => array_contains(tokens, w)).reduce(_ && _))
   }
 
   /** Rows whose `column` contains AT LEAST ONE of `words` as a whole
@@ -4843,10 +4844,8 @@ final class GraftTable private (
       "searchTextAny takes whole tokens: [A-Za-z0-9]+")
     val tokens = split(
       coalesce(col(column).cast("string"), lit("")), GraftTable.TextTokenSplit)
-    val sch = schema
-    val matched = mergedFromEntries(textCandidatesAny(column, words, sch), sch)
-      .filter(words.distinct.map(w => array_contains(tokens, w)).reduce(_ || _))
-    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+    textMatches(column, anyTokenHits(words))(
+      words.distinct.map(w => array_contains(tokens, w)).reduce(_ || _))
   }
 
   /** Rows whose `column` contains `words` as CONSECUTIVE whole tokens
@@ -4860,10 +4859,8 @@ final class GraftTable private (
       "searchTextPhrase takes whole tokens: [A-Za-z0-9]+")
     val pattern = words.mkString(
       "(^|[^A-Za-z0-9])", "[^A-Za-z0-9]+", "([^A-Za-z0-9]|$)")
-    val sch = schema
-    val matched = mergedFromEntries(textCandidatesAll(column, words, sch), sch)
-      .filter(coalesce(col(column).cast("string"), lit("")).rlike(pattern))
-    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+    textMatches(column, allTokenHits(words))(
+      coalesce(col(column).cast("string"), lit("")).rlike(pattern))
   }
 
   /** Rows whose `column` contains a token starting with `prefix`
@@ -4874,13 +4871,9 @@ final class GraftTable private (
   def searchTextPrefix(column: String, prefix: String): DataFrame = {
     require(isSearchToken(prefix),
       "searchTextPrefix takes a token prefix: [A-Za-z0-9]+")
-    val sch = schema
-    val matched = mergedFromEntries(
-      textCandidates(column, prefix, prefixMatch = true, sch), sch)
-      .filter(exists(split(
-        coalesce(col(column).cast("string"), lit("")),
-        GraftTable.TextTokenSplit), t => t.startsWith(prefix)))
-    matched.select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+    textMatches(column, tokenHits(prefix, prefixMatch = true))(exists(split(
+      coalesce(col(column).cast("string"), lit("")),
+      GraftTable.TextTokenSplit), t => t.startsWith(prefix)))
   }
 
   /** Delete files under the table directory that no snapshot of any
@@ -5072,7 +5065,7 @@ final class GraftTable private (
     val rescaled = sch.copy(id = sch.id + 1,
       options = sch.options.updated("bucket", newBuckets.toString))
     sm.writeSchema(rescaled)
-    compactEntries(rescaled, _ => true)
+    compactEntries(rescaled, sm.latestSnapshot(), _ => true)
   }
 
   /** Rebuild every live file's index sidecars per the CURRENT index
@@ -5152,7 +5145,7 @@ final class GraftTable private (
         case other => throw new IllegalArgumentException(s"unknown order strategy: $other")
       }, sch.partitionKeys)
     Some(commitFiles(clustered, sch, partitionBy, KindCompact,
-      nextSeq(), commitIdentifier = -1L, deletes = old.map(_.copy(kind = "DELETE")),
+      nextSeq(Some(snap)), commitIdentifier = -1L, deletes = old.map(_.copy(kind = "DELETE")),
       level = 1))
   }
 
@@ -5406,15 +5399,15 @@ final class GraftTable private (
     * DeleteFromPaimonTableCommand.scala:35). */
   def delete(cond: Column): Long = {
     val sch = schema
+    val latest = sm.latestSnapshot()
+    lazy val snap = latest.getOrElse(throw new IllegalStateException("empty table"))
     if (sch.primaryKeys.nonEmpty) {
-      val victims = prunedPkRows(cond, sch)
+      val victims = prunedPkRows(cond, sch, latest)
         .withColumn(KindCol, lit(KindDelete).cast("byte"))
       writeKinded(victims, sch = sch)
     } else if (metadataOnlyDeletableBy(sch, cond)) {
       // whole-partition drop: no data file is opened (reference:
       // OptimizeMetadataOnlyDeleteFromPaimonTable.scala:52)
-      val snap = sm.latestSnapshot().getOrElse(
-        throw new IllegalStateException("empty table"))
       val victims = partitionsMatching(sch, sm.liveEntries(snap), cond)
       if (victims.isEmpty) snap.id
       else {
@@ -5427,8 +5420,6 @@ final class GraftTable private (
     } else if (dvEnabled(sch)) {
       // mark positions instead of rewriting files (reference:
       // SparkDeletionVector write path)
-      val snap = sm.latestSnapshot().getOrElse(
-        throw new IllegalStateException("empty table"))
       val touched = pruneEntries(snap, cond, sch)
       if (touched.isEmpty) return snap.id
       val entries = dvEntriesFor(touched, cond, sch)
@@ -5437,30 +5428,30 @@ final class GraftTable private (
       sm.commit(entries, KindOverwrite, sch.id,
         conflictCheck = latest =>
           deletedNames.subsetOf(sm.liveEntries(latest).map(_.file.fileName).toSet))
-    } else rewriteFiles(sch, cond, df => df.filter(!coalesce(cond, lit(false))))
+    } else rewriteFiles(sch, snap, cond, df => df.filter(!coalesce(cond, lit(false))))
   }
 
   /** UPDATE t SET assignments WHERE cond (reference:
     * UpdatePaimonTableCommand.scala:37). */
   def update(assignments: Map[String, Column], cond: Column): Long = {
     val sch = schema
+    val latest = sm.latestSnapshot()
+    lazy val snap = latest.getOrElse(throw new IllegalStateException("empty table"))
     if (sch.primaryKeys.nonEmpty) {
-      val updated = applyAssignments(prunedPkRows(cond, sch), assignments, lit(true))
+      val updated = applyAssignments(prunedPkRows(cond, sch, latest), assignments, lit(true))
         .withColumn(KindCol, lit(KindUpdateAfter).cast("byte"))
       writeKinded(updated, sch = sch)
     } else if (dvEnabled(sch)) {
       // DV update = mark old positions deleted + append updated rows,
       // one atomic commit
-      val snap = sm.latestSnapshot().getOrElse(
-        throw new IllegalStateException("empty table"))
       val touched = pruneEntries(snap, cond, sch)
       if (touched.isEmpty) return snap.id
       val updatedRows = applyAssignments(
         readAppendData(touched, sch).filter(cond), assignments, lit(true))
       val (routed, partitionBy) = routeAppendBuckets(updatedRows, sch)
       commitFilesFn(routed, sch, partitionBy, KindOverwrite,
-        nextSeq(), commitIdentifier = -1L, _ => dvEntriesFor(touched, cond, sch))
-    } else rewriteFiles(sch, cond,
+        nextSeq(latest), commitIdentifier = -1L, _ => dvEntriesFor(touched, cond, sch))
+    } else rewriteFiles(sch, snap, cond,
       df => applyAssignments(df, assignments, coalesce(cond, lit(false))))
   }
 
@@ -5470,10 +5461,13 @@ final class GraftTable private (
     * a single-key DELETE/UPDATE merges one bucket's files instead of
     * the whole table (reference intent: MergeIntoPaimonTable
     * .findTouchedFiles applied to plain DML). */
-  private[graft] def prunedPkRows(cond: Column, sch: TableSchema = schema): DataFrame =
+  private[graft] def prunedPkRows(cond: Column): DataFrame =
+    prunedPkRows(cond, schema, sm.latestSnapshot())
+
+  private def prunedPkRows(cond: Column, sch: TableSchema, snap: Option[Snapshot]): DataFrame =
     // planEntries already bucket-narrows (with the layout guard for
     // files written under an older bucket count/key set)
-    mergedFromEntries(planEntries(cond, sch = sch), sch).filter(cond)
+    mergedFromEntries(planEntries(cond, sch, snap), sch, snap).filter(cond)
 
   /** Bucket id implied by equality conjuncts on every bucket key
     * (fixed-bucket tables), by [[Buckets.bucketOf]]. A value that does
@@ -5664,9 +5658,9 @@ final class GraftTable private (
     * listing, no merge and no join. Other tables diff the pre-image
     * state of the batch's keys (bucket-pruned + semi-joined, never a
     * full scan) against the post-merge state. */
-  private def buildChangelog(sch: TableSchema, out: DataFrame): Option[String] = {
-    val live = visibleEntries(
-      sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty), sch)
+  private def buildChangelog(
+      sch: TableSchema, out: DataFrame, snap: Option[Snapshot]): Option[String] = {
+    val live = visibleEntries(snap.toSeq.flatMap(sm.liveEntries), sch)
     if (bucketLocal(sch, live)) {
       bucketLocalChangelogs.incrementAndGet()
       val read = bucketRead(sch)
@@ -5863,7 +5857,7 @@ final class GraftTable private (
         .schema(sch.toStruct).parquet(staging)
       val (routed, partitionBy) = routeAppendBuckets(df, sch)
       val id = commitFiles(routed, sch, partitionBy, KindOverwrite,
-        nextSeq(), commitIdentifier = -1L,
+        nextSeq(sm.latestSnapshot()), commitIdentifier = -1L,
         deletes = replaced.map(_.copy(kind = "DELETE")))
       try { // staged files were copied, not adopted — sweep them
         graft.core.FsUtil.walkAll(Paths.get(staging)).sortBy(-_.getNameCount)
@@ -5871,7 +5865,7 @@ final class GraftTable private (
         Files.deleteIfExists(Paths.get(staging))
       } catch { case _: Exception => () }
       id
-    } else commitStagedDir(staging, sch, KindOverwrite, nextSeq(),
+    } else commitStagedDir(staging, sch, KindOverwrite, nextSeq(sm.latestSnapshot()),
       commitIdentifier = -1L, _ => replaced.map(_.copy(kind = "DELETE")))
   }
 
@@ -5887,19 +5881,17 @@ final class GraftTable private (
 
   /** Copy-on-write rewrite of the files that contain rows matching
     * `touchCond`; untouched files are carried over unchanged. */
-  private def rewriteFiles(
-      sch: TableSchema, touchCond: Column, transform: DataFrame => DataFrame): Long = {
+  private def rewriteFiles(sch: TableSchema, snap: => Snapshot, touchCond: Column,
+      transform: DataFrame => DataFrame): Long = {
     require(!GraftTable.tracksRows(sch), "copy-on-write rewrite would reassign _ROW_ID; " +
       s"enable ${DeletionVectors.OptionEnabled} for row-level changes on row-tracking tables")
-    val snap = sm.latestSnapshot().getOrElse(
-      throw new IllegalStateException("empty table"))
     val touched = pruneEntries(snap, touchCond, sch)
     if (touched.isEmpty) return snap.id
     val rewritten = transform(readRaw(touched, sch)
       .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*))
     val (routed, partitionBy) = routeAppendBuckets(rewritten, sch)
     commitFiles(routed, sch, partitionBy, KindOverwrite,
-      nextSeq(), commitIdentifier = -1L,
+      nextSeq(Some(snap)), commitIdentifier = -1L,
       deletes = touched.map(_.copy(kind = "DELETE")))
   }
 
@@ -5989,7 +5981,7 @@ final class GraftTable private (
     // the source is consumed twice (bucket-set collect + the join) —
     // pin it so an expensive source query computes once
     val src = source.select(cols.map(col).toIndexedSeq: _*).persist()
-    try mergeIntoPinned(src, sch, pk, cols,
+    try mergeIntoPinned(src, sch, sm.latestSnapshot(), pk, cols,
       whenMatchedUpdate, whenMatchedDelete, whenNotMatchedInsert)
     finally src.unpersist()
   }
@@ -6027,10 +6019,10 @@ final class GraftTable private (
     * one job this runs collects BUCKET IDS (bounded by the bucket
     * count), never rows. */
   private[graft] def entriesForKeys(
-      src: DataFrame, sch: TableSchema = schema): Seq[ManifestEntry] = {
+      src: DataFrame, sch: TableSchema, snap: Option[Snapshot]): Seq[ManifestEntry] = {
     val pk = sch.primaryKeys
     require(pk.nonEmpty, "key-pruned reads require a primary-key table")
-    val liveNow = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+    val liveNow = snap.toSeq.flatMap(sm.liveEntries)
     // dynamic buckets: a key's bucket is index-assigned, not hash-
     // derivable — but the persisted index answers which buckets hold
     // source keys (source keys absent from it can't match any target;
@@ -6039,7 +6031,7 @@ final class GraftTable private (
     val bucketIds =
       if (!sch.isDynamicBucket)
         Some(src.select(Buckets.column(sch, sch.bucketKeys, sch.effectiveBuckets)))
-      else dynIndexDf(sch).map(idx =>
+      else snap.flatMap(dynIndexDf(sch, _)).map(idx =>
         src.select(pk.map(col).toIndexedSeq: _*).join(idx, pk).select("__bucket"))
     bucketIds.fold(liveNow) { ids =>
       liveNow.filter(mayHoldBucket(sch, ids.distinct().collect().map(_.getInt(0)).toSet))
@@ -6047,14 +6039,15 @@ final class GraftTable private (
   }
 
   private def mergeIntoPinned(
-      src: DataFrame, sch: TableSchema, pk: Seq[String], cols: Array[String],
+      src: DataFrame, sch: TableSchema, snap: Option[Snapshot], pk: Seq[String],
+      cols: Array[String],
       whenMatchedUpdate: Option[Map[String, Column]],
       whenMatchedDelete: Option[Column],
       whenNotMatchedInsert: Boolean): Long = {
     // Bucket-pruned target: a 1%-of-buckets merge pays ~1% of the
     // scan, not 100%. Unmatched target rows are never rewritten, so
     // skipping their files is safe.
-    val touched = entriesForKeys(src, sch)
+    val touched = entriesForKeys(src, sch, snap)
     // manifest-bytes broadcast gate, same policy as the streaming
     // lookup join: Spark's own estimate of the merged slice degrades
     // through the merge aggregation, so decide from the EXACT file
@@ -6062,7 +6055,7 @@ final class GraftTable private (
     // pin sort-merge for a wide one (a mis-broadcast decompresses to
     // several× the on-disk bytes and OOMs at scale)
     val tgt = sizeGatedBuildSide(sch,
-      mergedFromEntries(touched, sch)
+      mergedFromEntries(touched, sch, snap)
         .select(cols.map(c => col(c).as(s"__t_$c")).toIndexedSeq: _*),
       touched.map(_.file.fileSize).sum, "merge-into")
     val joined = src.join(tgt,
@@ -6292,8 +6285,8 @@ final class GraftTable private (
   def systemReadOptimized: DataFrame = {
     val sch = schema
     if (sch.primaryKeys.isEmpty) return read
-    val entries = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-    mergedFromEntries(entries.filter(_.file.level >= 1), sch)
+    val snap = sm.latestSnapshot()
+    mergedFromEntries(snap.toSeq.flatMap(sm.liveEntries).filter(_.file.level >= 1), sch, snap)
   }
 
   /** `$aggregation_fields`: each field's aggregate function under the

@@ -23,6 +23,10 @@ final class CountingFileIO(inner: FileIO = new LocalFileIO) extends FileIO {
   /** LISTs of `<table>/schema` since the last reset. */
   def schemaLists(table: String): Int =
     Option(lists.get(s"$table/schema")).map(_.get).getOrElse(0)
+  /** Reads of `<table>/snapshot/<file>` since the last reset (`LATEST`
+    * is read once per resolution of the latest snapshot). */
+  def snapshotReads(table: String, file: String = "LATEST"): Int =
+    Option(reads.get(s"$table/snapshot/$file")).map(_.get).getOrElse(0)
   /** Reads of each `<table>/schema/schema-N.json` since the last reset. */
   def schemaReads(table: String): Map[String, Int] =
     reads.asScala.collect { case (p, n) if p.startsWith(s"$table/schema/") =>
@@ -72,7 +76,10 @@ class CountingCatalog extends graft.sources.GraftCatalog {
   * of `<table>/schema` per read, write, lookup or CDC apply (two for a
   * SQL query: catalog load plus the table handle), each schema file
   * parsed at most once per table handle, and a schema change landing
-  * mid-write does not leak into that write. */
+  * mid-write does not leak into that write. Each read resolves its
+  * snapshot once too: one read of `snapshot/LATEST` (none under
+  * `VERSION AS OF`), and a commit landing mid-read does not leak into
+  * that read. */
 class SchemaPinSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -185,5 +192,198 @@ class SchemaPinSpec extends AnyFunSuite {
     val opts = b.schema.options
     assert(opts.get("k.one").contains("1") && !opts.contains("k.two"), opts)
     assert(b.schema.id == 1L)
+  }
+
+  private val rtSch = StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("v", StringType, nullable = true)))
+
+  private def rtRows(ids: Seq[Long], tag: String): DataFrame =
+    spark.createDataFrame(ids.map(i => Row(i, s"$tag$i")).asJava, rtSch).coalesce(1)
+
+  /** A row-tracking append table of three one-file writes. */
+  private def rowTrackingTable(dir: String): Unit = {
+    GraftTable.create(spark, dir, rtSch, options = Map(GraftTable.RowTrackingEnabled -> "true"))
+    val t = GraftTable.load(spark, dir)
+    (0 until 3).foreach(i => t.write(rtRows(i * 100L until (i + 1) * 100L, s"w$i")))
+  }
+
+  /** A fresh warehouse behind a [[CountingCatalog]] named `name` (a
+    * catalog binds its warehouse when first used). */
+  private def countingCatalog(name: String): String = {
+    val wh = Files.createTempDirectory("graft-pin-wh").toString
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[CountingCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.warehouse", wh)
+    wh
+  }
+
+  test("each read resolves the latest snapshot once: SQL ranges, aggregate " +
+    "pushdown, countRows, API scan and read") {
+    val wh = countingCatalog("latestcat")
+    val pk = s"$wh/db/pk"
+    lookupTable(pk)
+    val pt = GraftTable.load(spark, pk)
+    (0 until 3).foreach(i => pt.write(rows(i * 100L until (i + 1) * 100L, s"w$i")))
+    val ap = s"$wh/db/ap"
+    rowTrackingTable(ap)
+    val io = CountingCatalog.io
+    def latest(table: String)(f: => Any): Int = {
+      io.reset(); f; io.snapshotReads(table)
+    }
+    val pkApi = GraftTable.load(spark, pk, io)
+    val apApi = GraftTable.load(spark, ap, io)
+    val counts = Seq(
+      "SQL range, PK" -> latest(pk)(spark.sql(
+        "SELECT k, v FROM latestcat.db.pk WHERE k BETWEEN 10 AND 40").collect()),
+      "SQL range, append" -> latest(ap)(spark.sql(
+        "SELECT k, v FROM latestcat.db.ap WHERE k BETWEEN 10 AND 40").collect()),
+      "SQL count/min/max, append" -> latest(ap)(spark.sql(
+        "SELECT count(*), min(k), max(k) FROM latestcat.db.ap").collect()),
+      "SQL count, PK" -> latest(pk)(spark.sql("SELECT count(*) FROM latestcat.db.pk").collect()),
+      "countRows, PK" -> latest(pk)(pkApi.countRows()),
+      "countRows, append" -> latest(ap)(apApi.countRows()),
+      "scan, PK" -> latest(pk)(pkApi.scan(col("k").between(10, 40)).collect()),
+      "read, PK" -> latest(pk)(pkApi.read.collect()),
+      "scan, append" -> latest(ap)(apApi.scan(col("k").between(10, 40)).collect()),
+      "read, append" -> latest(ap)(apApi.read.collect()))
+    info(s"snapshot/LATEST reads per operation: $counts")
+    counts.foreach { case (op, n) => assert(n == 1, s"$op read snapshot/LATEST $n times") }
+    // the pushed-down answers still hold
+    val agg = spark.sql("SELECT count(*), min(k), max(k) FROM latestcat.db.ap").head()
+    assert((agg.getLong(0), agg.getLong(1), agg.getLong(2)) == ((300L, 0L, 299L)))
+    assert(spark.sql("SELECT count(*) FROM latestcat.db.pk").head().getLong(0) == 300L)
+    // a commit re-resolves the latest snapshot on purpose (CAS retries)
+    val writes = Seq(
+      "write, PK" -> latest(pk)(pkApi.write(rows(0L until 50L, "x"))),
+      "applyChanges, PK" -> latest(pk)(
+        pkApi.applyChanges(rows(0L until 50L by 5, "y", "+U"), "_op")))
+    info(s"snapshot/LATEST reads per write: $writes")
+    writes.foreach { case (op, n) => assert(n <= 3, s"$op read snapshot/LATEST $n times") }
+  }
+
+  test("a PK VERSION AS OF range plans once against its own snapshot and " +
+    "opens only the files planEntries kept") {
+    val wh = countingCatalog("versioncat")
+    val dir = s"$wh/db/t"
+    lookupTable(dir)
+    val t = GraftTable.load(spark, dir)
+    (0 until 3).foreach(i => t.write(rows(i * 100L until (i + 1) * 100L, s"w$i")))
+    val v = t.sm.snapshotIds(1)
+    val sch = t.schema
+    val pinned = t.sm.snapshot(v)
+    val cond = col("k").between(10, 40)
+    val kept = t.planEntries(cond, sch, Some(pinned), pinned = true).map(_.file.fileName).toSet
+    val live = t.sm.liveEntries(pinned).map(_.file.fileName).toSet
+    assert(kept.nonEmpty && kept.size < live.size, s"kept $kept of $live")
+    // the files the plan pruned are gone: a read that opened any of
+    // them would fail
+    (live -- kept).foreach(f => Files.delete(java.nio.file.Paths.get(s"$dir/$f")))
+    val io = CountingCatalog.io
+    io.reset()
+    val got = spark.sql(s"SELECT k, v FROM versioncat.db.t VERSION AS OF $v " +
+      "WHERE k BETWEEN 10 AND 40").collect().map(_.getLong(0)).sorted.toSeq
+    assert(got == (10L to 40L))
+    assert(io.snapshotReads(dir) == 0, "VERSION AS OF read snapshot/LATEST")
+    assert(io.snapshotReads(dir, s"snapshot-$v.json") == 1,
+      s"snapshot-$v.json read ${io.snapshotReads(dir, s"snapshot-$v.json")} times")
+  }
+
+  test("a write and a column patch landing mid-read do not tear scan or read: " +
+    "the files and the patches come from one snapshot") {
+    Seq[(String, GraftTable => DataFrame)](
+      "scan" -> (_.scan(col("k") < 250L)),
+      "read" -> (_.read)).foreach { case (op, readOf) =>
+      val dir = Files.createTempDirectory("graft-pin-torn").toString + "/t"
+      rowTrackingTable(dir)
+      def state(df: DataFrame): Set[(Long, String)] =
+        df.filter(col("k") < 250L).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      val before = state(GraftTable.load(spark, dir).read)
+      val io = new CountingFileIO
+      val t = GraftTable.load(spark, dir, io)
+      // the read opens its first manifest; a second handle then commits
+      // a write (inside the filter) and a patch of `v` over every row
+      io.onFirst("/manifest/") {
+        val other = GraftTable.load(spark, dir)
+        other.write(rtRows(-10L until 0L, "late"))
+        other.patchColumn("v", other.readWithRowIds()
+          .select(col(GraftTable.RowIdCol), org.apache.spark.sql.functions.lit("patched").as("v")))
+      }
+      val got = state(readOf(t))
+      val after = state(GraftTable.load(spark, dir).read)
+      assert(after != before && after.forall(_._2 == "patched"), s"$op: the commits landed")
+      if (got != before && got != after)
+        fail(s"$op mixed snapshots: ${got.count(_._2 == "patched")} patched of ${got.size} rows")
+    }
+  }
+
+  test("a VERSION AS OF scan reports the size and rows of its own snapshot") {
+    val dir = Files.createTempDirectory("graft-pin-stats").toString + "/t"
+    lookupTable(dir)
+    val t = GraftTable.load(spark, dir)
+    t.write(rows(0L until 100L, "a"))
+    val v1 = t.sm.latestSnapshotId.get
+    t.write(rows(100L until 400L, "b"))
+    def stats(snapshot: Option[Long]) =
+      graft.sources.GraftSparkTable(t, snapshot)
+        .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+        .build().asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+        .estimateStatistics()
+    val pinned = stats(Some(v1))
+    val current = stats(None)
+    assert(pinned.numRows().getAsLong == 100L)
+    assert(current.numRows().getAsLong == 400L)
+    assert(pinned.sizeInBytes().getAsLong < current.sizeInBytes().getAsLong)
+  }
+
+  test("a Trigger.AvailableNow stream reads the schema once per Spark callback, " +
+    "not once per option") {
+    val wh = countingCatalog("streamcat")
+    val dir = s"$wh/db/t"
+    GraftTable.create(spark, dir, rtSch)
+    val t = GraftTable.load(spark, dir)
+    (0 until 3).foreach(i => t.write(rtRows(i * 100L until (i + 1) * 100L, s"w$i")))
+    val io = CountingCatalog.io
+    io.reset()
+    val got = new java.util.concurrent.atomic.AtomicLong
+    val batches = new java.util.concurrent.atomic.AtomicInteger
+    // one file per trigger: three batches, each planned and committed
+    val q = spark.readStream
+      .option("scan.max-files-per-trigger", "1")
+      .option("consumer-id", "pin")
+      .table("streamcat.db.t")
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-pin-ck").toString)
+      .foreachBatch { (df: DataFrame, _: Long) =>
+        batches.incrementAndGet(); got.addAndGet(df.count()): Unit
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000))
+    val n = io.schemaLists(dir)
+    info(s"schema LISTs over a ${batches.get}-batch AvailableNow read: $n")
+    assert(got.get == 300L && batches.get == 3)
+    // 22-23: catalog load 2, stream set-up 4, then one per call of
+    // latestOffset and planInputPartitions (Spark plans each batch 4
+    // times); 36 when every option read listed the schema dir
+    assert(n <= 28, s"the stream listed the schema dir $n times")
+    // per callback, on a stream built directly: at most one LIST each
+    val stream = graft.sources.GraftSparkTable(GraftTable.load(spark, dir, io))
+      .newScanBuilder(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        Map("consumer-id" -> "pin2").asJava))
+      .build().toMicroBatchStream(Files.createTempDirectory("graft-pin-ck").toString)
+    val admission = stream.asInstanceOf[
+      org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl]
+    val start = stream.initialOffset()
+    var end: org.apache.spark.sql.connector.read.streaming.Offset = null
+    def lists(f: => Any): Int = { io.reset(); f; io.schemaLists(dir) }
+    val perCall = Seq(
+      "latestOffset" -> lists {
+        end = admission.latestOffset(start,
+          org.apache.spark.sql.connector.read.streaming.ReadLimit.maxFiles(1))
+      },
+      "planInputPartitions" -> lists(stream.planInputPartitions(start, end)),
+      "commit" -> lists(stream.commit(end)))
+    info(s"schema LISTs per stream callback: $perCall")
+    perCall.foreach { case (c, k) => assert(k <= 1, s"$c listed the schema dir $k times") }
   }
 }
