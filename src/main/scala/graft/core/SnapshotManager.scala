@@ -176,6 +176,12 @@ final class SnapshotManager(
 
   def latestSnapshot(): Option[Snapshot] = latestSnapshotId.map(snapshot)
 
+  /** The latest COMPACT snapshot: the compaction-settled state that
+    * compacted-full reads and streams start from, and whose level>=1
+    * output an Iceberg export of a PK table exposes. */
+  def latestCompactSnapshot(): Option[Snapshot] =
+    snapshotIds.reverseIterator.map(snapshot).find(_.commitKind == Meta.KindCompact)
+
   /** Latest snapshot committed at or before `epochMillis`
     * (strictly before with `inclusive = false`) — the single
     * timestamp→snapshot resolution shared by TIMESTAMP AS OF, the

@@ -814,8 +814,7 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
     // compaction-settled state (no level-0 churn). No compact snapshot
     // yet → the current state, like the reference's fallback scanner.
     .orElse(readOptions.get("scan.mode").filter(_ == "compacted-full")
-      .flatMap(_ => gt.sm.snapshotIds.reverse.find(i =>
-        gt.sm.snapshot(i).commitKind == graft.core.Meta.KindCompact)))
+      .flatMap(_ => gt.sm.latestCompactSnapshot().map(_.id)))
 
   /** The one snapshot every part of this scan reads: the pin above, or
     * the latest. None before the first snapshot. */

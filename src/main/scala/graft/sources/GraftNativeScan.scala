@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.core.Meta.{ManifestEntry, TableSchema}
-import graft.table.GraftTable
+import graft.table.{Changes, GraftTable}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -594,9 +594,7 @@ class GraftMicroBatchStream(
       // Encoded as -(c+2) so the checkpointed offset round-trips
       // (plain -1 keeps meaning "full from replayed history"); no
       // compact snapshot yet degrades to latest-full.
-      sm.snapshotIds.reverse.find(i =>
-        sm.snapshot(i).commitKind == graft.core.Meta.KindCompact)
-        .map(c => -(c + 2L)).getOrElse(-1L)
+      sm.latestCompactSnapshot().map(c => -(c.id + 2L)).getOrElse(-1L)
     case Some("latest-full") | None => -1L
     case Some(other) => throw new IllegalArgumentException(
       s"unsupported scan.mode: $other")
@@ -715,64 +713,53 @@ class GraftMicroBatchStream(
     // the deltas AFTER it (ending below it would double-read those
     // snapshots' deltas on the next trigger)
     val effStart = fullStartAt(startId).getOrElse(startId)
-    var end = effStart // marker start: advance at least to the compact id
     var admittedData = false
-    sm.snapshotIds.filter(i => i > effStart && i <= cap).foreach { id =>
-      val sn = sm.snapshot(id)
-      if (sn.commitKind == graft.core.Meta.KindCompact ||
-        (sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites(sch, opts))) {
-        // no logical change: absorbing it is free, but only up to the
-        // last admitted data snapshot boundary
-        if (!admittedData || end == id - 1) end = id
-      } else {
-        val adds = sn.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty)
-          .filter(_.kind == "ADD")
+    new Changes(sm, sch, opts).steps(effStart, cap).foreach { step =>
+      // costs count the files a batch reads: a step without any (a
+      // compaction, a skipped overwrite, a deletion-vector-only delete)
+      // rides along for free; at least one step with files per batch,
+      // so the stream always progresses
+      val adds = step.adds
+      if (adds.nonEmpty) {
         val f = adds.size.toLong
         val r = adds.map(_.file.rowCount).sum
         val b = adds.map(_.file.fileSize).sum
         val wouldExceed =
           optFiles.exists(files + f > _) || optRows.exists(rows + r > _) ||
             optBytes.exists(bytes + b > _)
-        if (admittedData && wouldExceed) return GraftOffset(end)
-        files += f; rows += r; bytes += b; end = id; admittedData = true
+        if (admittedData && wouldExceed) return GraftOffset(step.id - 1)
+        files += f; rows += r; bytes += b; admittedData = true
       }
     }
-    GraftOffset(end)
+    GraftOffset(math.max(effStart, cap))
   }
 
   override def deserializeOffset(json: String): Offset =
     GraftOffset(json.trim.toLong)
 
-  /** streaming-read-overwrite=false (the reference's DEFAULT posture:
-    * DataTableStreamScan skips OVERWRITE snapshots unless the option is
-    * on) treats overwrite commits as out-of-band backfills. This
-    * reader's default emits the overwrite's ADDed files — the
-    * reference's append-table option behavior; exact -D retractions
-    * for removed PK rows are the library changelog API's job
-    * (GraftTable.overwriteChanges). */
-  private def skipOverwrites(sch: => TableSchema, opts: String => Option[String]): Boolean =
-    opts("streaming-read-overwrite").contains("false") ||
-      (sch.primaryKeys.isEmpty &&
-        opts("streaming-read-append-overwrite").contains("false"))
+  /** Spark plans one micro-batch several times (4 calls per batch); the
+    * plan of the last (start, end) offset pair is kept. */
+  @volatile private var lastPlan: Option[((Long, Long), Array[InputPartition])] = None
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val s0 = start.asInstanceOf[GraftOffset].snapshotId
-    val e = end.asInstanceOf[GraftOffset].snapshotId
+    val key = (start.asInstanceOf[GraftOffset].snapshotId, end.asInstanceOf[GraftOffset].snapshotId)
+    lastPlan.collect { case (k, plan) if k == key => plan }.getOrElse {
+      val plan = planBatch(key._1, key._2); lastPlan = Some(key -> plan); plan
+    }
+  }
+
+  /** The files of the batch (s0, e]: the ADDs of its change steps. An
+    * OVERWRITE contributes its ADDed files (the reference's append-table
+    * behavior) unless `streaming-read-overwrite=false` skips it; exact
+    * -D retractions for removed PK rows are the library changelog API's
+    * job (GraftTable.overwriteChanges). */
+  private def planBatch(s0: Long, e: Long): Array[InputPartition] = {
     // compacted-full start: the first batch is the LIVE state at the
     // compact snapshot, with deltas strictly after it on top
     val full = fullStartAt(s0)
     val s = full.getOrElse(s0)
     val sch = gt.schema
-    val opts = streamOpts(sch)
-    val deltas = sm.snapshotIds.filter(i => i > s && i <= e)
-      .map(sm.snapshot)
-      .filter(sn => sn.commitKind != graft.core.Meta.KindCompact &&
-        !(sn.commitKind == graft.core.Meta.KindOverwrite && skipOverwrites(sch, opts)))
-      .flatMap(sn => sn.deltaManifest.map(sm.readManifest))
-    val entries = deltas.flatMap { delta =>
-      val deleted = delta.filter(_.kind == "DELETE").map(_.file.fileName).toSet
-      delta.filter(en => en.kind == "ADD" && !deleted.contains(en.file.fileName))
-    }
+    val entries = new Changes(sm, sch, streamOpts(sch)).steps(s, e).flatMap(_.adds)
     val base = full.toSeq.flatMap(c =>
       gt.visibleEntries(sm.liveEntries(sm.snapshot(c)), sch))
     GraftScanUtil.filePartitions(gt.spark, gt.path, base ++ entries,

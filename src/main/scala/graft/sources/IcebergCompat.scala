@@ -122,7 +122,7 @@ object IcebergCompat {
     // stamp the export with THAT generation, not the latest snapshot
     val exposedSnap: Snapshot =
       if (isPk && all.exists(_.file.level == 0))
-        lastCompactSnapshot(t).getOrElse(latest)
+        t.sm.latestCompactSnapshot().getOrElse(latest)
       else latest
     val metaDir = new File(s"${t.path}/metadata")
     metaDir.mkdirs()
@@ -228,13 +228,6 @@ object IcebergCompat {
       SyncState(version, Some(dataRef), deleteRef, fileInfo, dvInfo, dvOf, newWritten)))
     Some(mdFile.getAbsolutePath)
   }
-
-  /** Latest snapshot with commitKind=COMPACT — the generation whose
-    * level>=1 output a PK export actually exposes. */
-  private def lastCompactSnapshot(t: GraftTable): Option[Snapshot] =
-    t.sm.snapshotIds.reverseIterator
-      .map(t.sm.snapshot)
-      .find(_.commitKind == graft.core.Meta.KindCompact)
 
   // ---------- external-reader walk (generic avro/json only) ----------
 

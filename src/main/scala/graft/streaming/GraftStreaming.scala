@@ -1,7 +1,7 @@
 package graft.streaming
 
-import graft.core.Meta
-import graft.table.GraftTable
+import graft.core.Meta.TableSchema
+import graft.table.{Changes, GraftTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -96,79 +96,64 @@ object GraftStreaming {
   def processChangelog(
       table: GraftTable,
       checkpointPath: String,
-      process: (DataFrame, Long) => Unit): Seq[Long] = {
+      process: (DataFrame, Long) => Unit): Seq[Long] =
+    drain(table, checkpointPath, None, process)._1
+
+  /** Bounded-stream variant (reference: scan.bounded.watermark /
+    * BoundedChecker): drain snapshots UP TO the first whose persisted
+    * watermark exceeds the bound, then STOP — the offset is not
+    * advanced past the bound, so the out-of-bound snapshot is neither
+    * consumed nor lost (a later unbounded drain picks it up). Retained
+    * changelogs of expired snapshots carry no watermark and pass.
+    *
+    * @return (snapshot ids processed this call, reachedBound) —
+    *         reachedBound=true means the stream is complete */
+  def processChangelogBounded(
+      table: GraftTable,
+      checkpointPath: String,
+      boundedWatermark: Long,
+      process: (DataFrame, Long) => Unit): (Seq[Long], Boolean) =
+    drain(table, checkpointPath, Some(boundedWatermark), process)
+
+  /** The one drain: resolves the schema and the steps of (offset,
+    * latest] once, then processes each change event and advances the
+    * offset past every id, stopping before the first snapshot whose
+    * watermark exceeds `bound`. */
+  private def drain(
+      table: GraftTable,
+      checkpointPath: String,
+      bound: Option[Long],
+      process: (DataFrame, Long) => Unit): (Seq[Long], Boolean) = {
     val from = readOffset(checkpointPath).getOrElse(-1L)
     val to = table.sm.latestSnapshotId.getOrElse {
-      touchOffset(checkpointPath); return Seq.empty
+      touchOffset(checkpointPath); return (Seq.empty, false)
     }
-    val live = table.sm.snapshotIds.filter(i => i > from && i <= to)
-    val liveSet = live.toSet
-    // snapshots expiration removed but whose exact changelog was
-    // retained (changelog.num-retained / time-retained) still serve a
-    // lagging consumer — their ids interleave before the live ones
-    // retained entries always carry a changelog manifest (only such
-    // snapshots are retained), so they always emit — matching the live
-    // rule below, where a COMPACT snapshot emits iff it carries a
-    // changelog (changelog-producer=full-compaction attaches the exact
-    // -U/+U pairs to the COMPACT snapshot itself; other producers'
-    // compactions are pure rewrites and emit nothing)
-    val retained = table.sm.retainedChangelogs
-      .filter(r => r.snapshotId > from && r.snapshotId <= to &&
-        !liveSet.contains(r.snapshotId))
-      .map(r => r.snapshotId -> r.manifest).toMap
-    val ids = (live ++ retained.keys).distinct.sorted
-    if (ids.isEmpty) { touchOffset(checkpointPath); return Seq.empty }
-    ids.foreach { id =>
-      retained.get(id) match {
-        case Some(manifest) =>
-          process(table.readRetainedChangelog(manifest), id)
-        case None =>
-          val snap = table.sm.snapshot(id)
-          if (snap.commitKind == Meta.KindOverwrite)
-            overwriteBatch(table, id).foreach(process(_, id))
-          else if (snap.commitKind != Meta.KindCompact ||
-              snap.changelogManifest.isDefined) {
-            process(table.incrementalRead(id - 1, id), id)
-          }
-      }
-      writeOffset(checkpointPath, id) // advance after each snapshot
+    val sch = table.schema
+    val steps = new Changes(table.sm, sch, sch.options.get).steps(from, to)
+    if (steps.isEmpty) touchOffset(checkpointPath)
+    val processed = scala.collection.mutable.ArrayBuffer.empty[Long]
+    steps.foreach { step =>
+      if (bound.exists(b => step.watermark.exists(_ > b))) return (processed.toSeq, true)
+      if (step.event) changelogBatch(table, sch, step).foreach(process(_, step.id))
+      writeOffset(checkpointPath, step.id) // advance after each snapshot
+      processed += step.id
     }
-    ids
+    (processed.toSeq, false)
   }
 
-  /** What an OVERWRITE snapshot contributes to a changelog stream
-    * (reference: CoreOptions.STREAMING_READ_OVERWRITE gating
-    * DataTableStreamScan.handleOverwriteSnapshot → readChanges).
-    *
-    * Default here is EXACT changes — this engine derives them cheaply,
-    * so consumers see retractions for every row an INSERT OVERWRITE /
-    * metadata-DELETE / partition-expiration removed: primary-key
-    * tables diff through [[GraftTable.overwriteChanges]] (-D for the
-    * merged removed files, +I for the added), append tables through
-    * [[GraftTable.incrementalRead]] (which also diffs deletion
-    * vectors). Setting `streaming-read-overwrite=false` skips
-    * overwrite snapshots entirely — the reference's DEFAULT posture,
-    * for consumers that treat overwrites as out-of-band backfills.
-    * None = skip (option set to false).
-    *
-    * changelog-producer=full-compaction tables skip here too: their
-    * contract is that ALL changes (including an overwrite's net
-    * effect) surface in the exact diff the next full compaction
-    * persists — emitting overwriteChanges as well would double-emit. */
-  private def overwriteBatch(table: GraftTable, id: Long): Option[DataFrame] = {
-    val sch = table.schema
-    val opts = sch.options
-    val pkTable = sch.primaryKeys.nonEmpty
-    // append tables also honor the reference's separate key
-    // (CoreOptions STREAMING_READ_APPEND_OVERWRITE)
-    val off = opts.get("streaming-read-overwrite").contains("false") ||
-      (!pkTable && opts.get("streaming-read-append-overwrite").contains("false"))
-    if (off) None
-    else if (pkTable) {
-      if (sch.changelogProducer == "full-compaction") None
-      else Some(table.overwriteChanges(id))
-    } else Some(table.incrementalRead(id - 1, id))
-  }
+  /** What one change event contributes to a drain. An OVERWRITE on a
+    * primary-key table yields EXACT changes through
+    * [[GraftTable.overwriteChanges]] — -D for the merged removed files,
+    * +I for the added (reference: DataTableStreamScan
+    * .handleOverwriteSnapshot → readChanges); append tables diff it like
+    * any step, deletion vectors included. None on full-compaction
+    * tables: the next full compaction's exact diff carries an
+    * overwrite's net effect, so emitting it here would double-emit. */
+  private def changelogBatch(
+      table: GraftTable, sch: TableSchema, step: Changes.Step): Option[DataFrame] =
+    if (!step.overwrite || sch.primaryKeys.isEmpty) Some(table.changeRows(Seq(step), sch))
+    else if (sch.changelogProducer == "full-compaction") None
+    else Some(table.overwriteChanges(step.snapshot.get, step.delta, sch))
 
   /** Startup modes for changelog consumption (reference: CoreOptions
     * scan modes — latest-full / latest / from-snapshot /
@@ -238,9 +223,7 @@ object GraftStreaming {
           val before = table.sm.snapshotIdAtTime(ts, inclusive = false)
           writeOffset(checkpointPath, before.getOrElse(-1L))
         case CompactedFull =>
-          val compactId = table.sm.snapshotIds.reverse.find(i =>
-            table.sm.snapshot(i).commitKind == graft.core.Meta.KindCompact)
-          compactId.orElse(latest) match {
+          table.sm.latestCompactSnapshot().map(_.id).orElse(latest) match {
             case Some(id) =>
               process(table.versionAsOf(id).withColumn("_row_kind",
                 org.apache.spark.sql.functions.lit("+I")), id)
@@ -387,57 +370,6 @@ object GraftStreaming {
         liveNow.size, liveNow.size, bc))
       batch.join(if (bc) broadcast(dimDf) else dimDf, keys, joinType)
     }
-  }
-
-  /** Bounded-stream variant (reference: scan.bounded.watermark /
-    * BoundedChecker): drain snapshots UP TO the first whose persisted
-    * watermark exceeds the bound, then STOP — the offset is not
-    * advanced past the bound, so the out-of-bound snapshot is neither
-    * consumed nor lost (a later unbounded drain picks it up).
-    *
-    * @return (snapshot ids processed this call, reachedBound) —
-    *         reachedBound=true means the stream is complete */
-  def processChangelogBounded(
-      table: GraftTable,
-      checkpointPath: String,
-      boundedWatermark: Long,
-      process: (DataFrame, Long) => Unit): (Seq[Long], Boolean) = {
-    val from = readOffset(checkpointPath).getOrElse(-1L)
-    val to = table.sm.latestSnapshotId.getOrElse {
-      touchOffset(checkpointPath); return (Seq.empty, false)
-    }
-    val live = table.sm.snapshotIds.filter(i => i > from && i <= to)
-    val liveSet = live.toSet
-    // same retained-changelog handling as the unbounded drain: a
-    // lagging bounded consumer must not silently skip snapshots whose
-    // exact changelogs outlived expiration (retained entries carry no
-    // watermark — they pass the bound check like live snapshots
-    // without one)
-    val retained = table.sm.retainedChangelogs
-      .filter(r => r.snapshotId > from && r.snapshotId <= to &&
-        !liveSet.contains(r.snapshotId))
-      .map(r => r.snapshotId -> r.manifest).toMap
-    val ids = (live ++ retained.keys).distinct.sorted
-    if (ids.isEmpty) touchOffset(checkpointPath)
-    val processed = scala.collection.mutable.ArrayBuffer.empty[Long]
-    ids.foreach { id =>
-      retained.get(id) match {
-        case Some(manifest) =>
-          process(table.readRetainedChangelog(manifest), id)
-        case None =>
-          val snap = table.sm.snapshot(id)
-          if (snap.watermark.exists(_ > boundedWatermark))
-            return (processed.toSeq, true)
-          if (snap.commitKind == Meta.KindOverwrite)
-            overwriteBatch(table, id).foreach(process(_, id))
-          else if (snap.commitKind != Meta.KindCompact ||
-              snap.changelogManifest.isDefined)
-            process(table.incrementalRead(id - 1, id), id)
-      }
-      writeOffset(checkpointPath, id)
-      processed += id
-    }
-    (processed.toSeq, false)
   }
 
   /** Liveness heartbeat: a CAUGHT-UP consumer writes no offsets, but

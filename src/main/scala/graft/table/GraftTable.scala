@@ -3498,88 +3498,53 @@ final class GraftTable private (
     incrementalRead(fromExclusive, toInclusive, schema)
 
   private def incrementalRead(
-      fromExclusive: Long, toInclusive: Long, sch: TableSchema): DataFrame = {
+      fromExclusive: Long, toInclusive: Long, sch: TableSchema): DataFrame =
+    changeRows(new Changes(sm, sch, Changes.NoOptions).steps(fromExclusive, toInclusive), sch)
+
+  /** The changelog rows (`_row_kind` last) of change steps. Steps with
+    * a persisted changelog serve its exact pairs; the others derive
+    * rows from their delta files. changelog-producer=full-compaction:
+    * changes surface ONLY at full compactions, which persist the exact
+    * accumulated pairs, so only changelogs are served and append deltas
+    * (which the compaction pairs already summarize) are ignored
+    * (reference: CHANGELOG incremental scan mode over that producer). */
+  private[graft] def changeRows(steps: Seq[Changes.Step], sch: TableSchema): DataFrame = {
     val pkTable = sch.primaryKeys.nonEmpty
     val names = sch.toStruct.fieldNames
-    val ids = sm.snapshotIds.filter(i => i > fromExclusive && i <= toInclusive)
-    val idSet = ids.toSet
-    // ids in range whose snapshot EXPIRED but whose exact changelog
-    // was retained (changelog.num-retained / time-retained): their
-    // pairs still serve — a lagging reader loses nothing
-    val retainedInRange = sm.retainedChangelogs.filter(r =>
-      r.snapshotId > fromExclusive && r.snapshotId <= toInclusive &&
-        !idSet.contains(r.snapshotId))
-    // changelog-producer=full-compaction: changes surface ONLY at full
-    // compactions, which persist the exact accumulated pairs — serve
-    // those directly (zero derivation) and ignore append deltas, which
-    // the compaction pairs already summarize (reference: CHANGELOG
-    // incremental scan mode over that producer).
     val outCols = (names :+ "_row_kind").map(col).toIndexedSeq
-    if (pkTable && sch.changelogProducer == "full-compaction") {
-      val cl = ids.map(sm.snapshot).flatMap(_.changelogManifest) ++
-        retainedInRange.map(_.manifest)
-      return readChangelogFiles(cl.flatMap(sm.readManifest), sch).select(outCols: _*)
-    }
-    val snaps = ids.map(sm.snapshot).filter(_.commitKind != KindCompact)
-    // snapshots with a persisted changelog serve exact -U/+U pairs
-    // directly (changelog-producer=lookup); the rest derive from deltas
-    val (withCl, withoutCl) = snaps.partition(_.changelogManifest.isDefined)
-    val clManifests = withCl.flatMap(_.changelogManifest) ++
-      // mirror the live filter: compact snapshots' changelogs are not
-      // served by this branch
-      retainedInRange.filter(_.commitKind != KindCompact).map(_.manifest)
-    val clRows =
-      if (clManifests.isEmpty) None
-      else Some(readChangelogFiles(clManifests.flatMap(sm.readManifest), sch))
-    val deltas = withoutCl
-      .flatMap(s => s.deltaManifest.map(sm.readManifest))
-    val addEntries = deltas.flatMap { delta =>
-      val deleted = delta.filter(_.kind == "DELETE").map(_.file.fileName).toSet
-      delta.filter(e => e.kind == "ADD" && !deleted.contains(e.file.fileName))
-    }
-    val raw = readRaw(addEntries, sch)
-    val dataCols = names.map(col).toIndexedSeq
-    val plusRows =
-      if (pkTable)
-        raw.withColumn("_row_kind", MergeEngine.kindLabel(col(KindCol)))
-          .drop(KindCol, SeqCol, "__bucket")
-      else raw.select(dataCols: _*).withColumn("_row_kind", lit("+I"))
-    if (pkTable)
-      return (Seq(plusRows.select(outCols: _*)) ++
-        clRows.map(_.select(outCols: _*))).reduce(_ unionAll _)
-    // append tables: derive -D rows for deleted entries
-    val minusParts = deltas.flatMap { delta =>
-      val readdedDv = delta.collect {
-        case e if e.kind == "ADD" && e.file.dvFile.isDefined =>
-          e.file.fileName -> e.file.dvFile.get
-      }.toMap
-      delta.filter(_.kind == "DELETE").map { e =>
-        readdedDv.get(e.file.fileName) match {
-          case Some(newDv) => (e, Some((e.file.dvFile, newDv)))  // DV growth
-          case None => (e, None)                                  // file dropped
-        }
-      }
-    }
-    if (minusParts.isEmpty) return plusRows
-    val (grown, dropped) = minusParts.partition(_._2.isDefined)
+    val changelogs = steps.flatMap(_.changelog)
+    val clRows = readChangelogFiles(changelogs.flatMap(sm.readManifest), sch).select(outCols: _*)
+    if (pkTable && sch.changelogProducer == "full-compaction") return clRows
+    val derived = steps.filter(_.changelog.isEmpty)
+    val plusRows = Some(derived.flatMap(_.adds)).filter(_.nonEmpty).map(readRaw(_, sch)
+      .withColumn("_row_kind",
+        if (pkTable) MergeEngine.kindLabel(col(KindCol)) else lit("+I"))
+      .select(outCols: _*))
+    // append tables: -D rows for deleted entries (PK-table deletes are
+    // -D kinded rows in the delta files themselves). A file re-ADDed
+    // with a grown deletion vector emits only its newly-deleted
+    // positions; a file dropped outright emits its surviving rows
+    val (grown, dropped) =
+      (if (pkTable) Nil else derived.flatMap(_.deletes)).partition(_._2.isDefined)
     def minusOf(entries: Seq[ManifestEntry],
         keep: org.apache.spark.sql.expressions.UserDefinedFunction) =
       readRaw(entries, sch)
         .withColumn("__file", expr("_metadata.file_path"))
         .withColumn("__idx", expr("_metadata.row_index"))
         .filter(keep(col("__file"), col("__idx")))
-        .select(dataCols: _*)
+        .select(names.map(col).toIndexedSeq: _*)
         .withColumn("_row_kind", lit("-D"))
     val minusGrown =
       if (grown.isEmpty) None
       else Some(minusOf(grown.map(_._1), udf(new DvDiffFilter(sm.io, path,
-        grown.map { case (e, d) => basename(e.file.fileName) -> d.get }.toMap))))
+        grown.map { case (e, dv) => basename(e.file.fileName) -> (e.file.dvFile, dv.get) }.toMap))))
     val minusDropped =
       if (dropped.isEmpty) None
       else Some(minusOf(dropped.map(_._1), udf(new DvRowFilter(sm.io, path,
-        dropped.flatMap { case (e, _) =>
-          e.file.dvFile.map(basename(e.file.fileName) -> _) }.toMap))))
-    (Seq(plusRows) ++ minusGrown ++ minusDropped).reduce(_ unionAll _)
+        dropped.flatMap { case (e, _) => e.file.dvFile.map(basename(e.file.fileName) -> _) }.toMap))))
+    val parts = plusRows.toSeq ++ (if (changelogs.isEmpty) None else Some(clRows)) ++
+      minusGrown ++ minusDropped
+    parts.reduceOption(_ unionAll _).getOrElse(clRows)
   }
 
   /** Exact row-level changes of an OVERWRITE snapshot on a primary-key
@@ -3599,7 +3564,13 @@ final class GraftTable private (
     val sn = sm.snapshot(snapshotId)
     require(sn.commitKind == KindOverwrite,
       s"snapshot $snapshotId is ${sn.commitKind}, not OVERWRITE")
-    val delta = sn.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty)
+    overwriteChanges(sn, sn.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty), sch)
+  }
+
+  /** [[overwriteChanges]] of the OVERWRITE snapshot `sn` whose delta
+    * entries are `delta`. */
+  private[graft] def overwriteChanges(
+      sn: Snapshot, delta: Seq[ManifestEntry], sch: TableSchema): DataFrame = {
     def merged(entries: Seq[ManifestEntry]): DataFrame =
       if (entries.isEmpty) emptyDf(sch) else mergedFromEntries(entries, sch, Some(sn))
     val outCols = (sch.toStruct.fieldNames :+ "_row_kind").map(col).toIndexedSeq
@@ -3619,10 +3590,10 @@ final class GraftTable private (
     require(pk.nonEmpty, "binlog requires a primary-key table")
     val base = sch.toStruct
     val valueCols = base.fieldNames.filterNot(pk.contains)
-    val ids = sm.snapshotIds.filter(i => i > fromExclusive && i <= toInclusive)
-      .filter(i => sm.snapshot(i).commitKind != KindCompact)
-    val perSnapshot = ids.map { id =>
-      val chg = incrementalRead(id - 1, id, sch)
+    // one block per live snapshot that is not a compaction
+    val perSnapshot = new Changes(sm, sch, Changes.NoOptions).steps(fromExclusive, toInclusive)
+      .filter(s => s.snapshot.isDefined && !s.compaction).map { step =>
+      val chg = changeRows(Seq(step), sch)
       val packed = struct_ord(valueCols.map(col).toIndexedSeq: _*)
       val isBefore = col("_row_kind").isin("-U", "-D")
       val isAfter = col("_row_kind").isin("+U", "+I")
@@ -3638,7 +3609,7 @@ final class GraftTable private (
           .when(hasA, array(col(s"__after.$c")))
           .otherwise(array(col(s"__before.$c"))).as(c)
       }
-      agged.select((lit(id).as("snapshot_id") +: rowkind.as("rowkind") +:
+      agged.select((lit(step.id).as("snapshot_id") +: rowkind.as("rowkind") +:
         pk.map(col) ++: arrays).toIndexedSeq: _*)
     }
     perSnapshot.reduceOption(_ unionAll _).getOrElse {
@@ -5587,21 +5558,15 @@ final class GraftTable private (
     val sch = schema
     val pk = sch.primaryKeys
     require(pk.nonEmpty, "changelog requires a primary-key table")
-    // postpone tables: data becomes visible AT compaction, so compact
-    // deltas are the change events and must seed the touched-key set
-    // (for other tables they are pure rewrites and are skipped)
-    val postpone = sch.isPostponeBucket
-    val deltaEntries = sm.snapshotIds
-      .filter(i => i > fromSnapshot && i <= toSnapshot)
-      .map(sm.snapshot).filter(s => postpone || s.commitKind != KindCompact)
-      .flatMap(s => s.deltaManifest.map(sm.readManifest).getOrElse(Seq.empty))
-    val touched = deltaEntries.groupBy(_.file.fileName).map(_._2.head).toSeq
+    val touched = new Changes(sm, sch, Changes.NoOptions).touchedFiles(fromSnapshot, toSnapshot)
     val touchedKeys = readRaw(touched, sch)
       .select(pk.map(col).toIndexedSeq: _*).distinct()
     val buckets = touched.map(_.bucket).toSet
+    // postpone tables: compaction moves rows out of the postpone
+    // bucket, so a state spans every bucket
     def state(id: Long): DataFrame = {
       val entries = visibleEntries(sm.liveEntries(sm.snapshot(id)), sch)
-        .filter(e => postpone || buckets.contains(e.bucket))
+        .filter(e => sch.isPostponeBucket || buckets.contains(e.bucket))
       MergeEngine.merge(
         readRaw(entries, sch).join(touchedKeys, pk, "left_semi"), sch)
     }
@@ -5757,13 +5722,7 @@ final class GraftTable private (
     } else Some(sm.writeManifest(entries.filter(_.file.rowCount > 0), sch.options))
   }
 
-  /** Exact changelog pairs of one RETAINED (post-expiration)
-    * changelog manifest — served to lagging streaming consumers. */
-  private[graft] def readRetainedChangelog(
-      manifest: String, sch: TableSchema = schema): DataFrame =
-    readChangelogFiles(sm.readManifest(manifest), sch)
-      .select((sch.toStruct.fieldNames :+ "_row_kind").map(col).toIndexedSeq: _*)
-
+  /** Rows of persisted changelog files (`_row_kind` last). */
   private def readChangelogFiles(entries: Seq[ManifestEntry], sch: TableSchema): DataFrame = {
     val clSchema = StructType(sch.toStruct.fields :+
       StructField("_row_kind", org.apache.spark.sql.types.StringType, nullable = false))

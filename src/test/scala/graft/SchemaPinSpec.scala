@@ -23,6 +23,9 @@ final class CountingFileIO(inner: FileIO = new LocalFileIO) extends FileIO {
   /** LISTs of `<table>/schema` since the last reset. */
   def schemaLists(table: String): Int =
     Option(lists.get(s"$table/schema")).map(_.get).getOrElse(0)
+  /** LISTs of `<table>/<dir>` since the last reset. */
+  def dirLists(table: String, dir: String): Int =
+    Option(lists.get(s"$table/$dir")).map(_.get).getOrElse(0)
   /** Reads of `<table>/snapshot/<file>` since the last reset (`LATEST`
     * is read once per resolution of the latest snapshot). */
   def snapshotReads(table: String, file: String = "LATEST"): Int =
@@ -385,5 +388,54 @@ class SchemaPinSpec extends AnyFunSuite {
       "commit" -> lists(stream.commit(end)))
     info(s"schema LISTs per stream callback: $perCall")
     perCall.foreach { case (c, k) => assert(k <= 1, s"$c listed the schema dir $k times") }
+  }
+
+  test("a processChangelog drain lists the snapshot directory once and reads " +
+    "each new snapshot once") {
+    val dir = Files.createTempDirectory("graft-pin").toString + "/t"
+    lookupTable(dir)
+    val io = new CountingFileIO
+    val t = GraftTable.load(spark, dir, io)
+    t.write(rows(0L until 100L, "a"))
+    val ck = Files.createTempDirectory("graft-pin-ck").toString + "/offset"
+    graft.streaming.GraftStreaming.processChangelog(t, ck, (df, _) => df.collect(): Unit)
+    (1 to 3).foreach(i => t.write(rows(i * 30L until i * 30L + 50L, s"w$i")))
+    io.reset()
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    graft.streaming.GraftStreaming.processChangelog(t, ck, (df, id) => {
+      df.collect(); seen += id; ()
+    })
+    assert(seen == Seq(1L, 2L, 3L))
+    val snapshotLists = io.dirLists(dir, "snapshot")
+    val schemaLists = io.schemaLists(dir)
+    val reads = (1 to 3).map(i => io.snapshotReads(dir, s"snapshot-$i.json"))
+    info(s"drain over 3 snapshots: snapshot/ LISTs $snapshotLists, schema/ LISTs " +
+      s"$schemaLists, snapshot-N.json reads $reads")
+    assert(snapshotLists == 1, s"the drain listed snapshot/ $snapshotLists times")
+    assert(schemaLists <= 1, s"the drain listed schema/ $schemaLists times")
+    assert(reads.forall(_ == 1), s"snapshot-N.json reads: $reads")
+  }
+
+  test("a micro-batch is planned once: Spark's repeated planInputPartitions calls " +
+    "read each snapshot file of the batch once") {
+    val dir = Files.createTempDirectory("graft-pin").toString + "/t"
+    GraftTable.create(spark, dir, rtSch)
+    val t = GraftTable.load(spark, dir)
+    (0 until 3).foreach(i => t.write(rtRows(i * 100L until (i + 1) * 100L, s"w$i")))
+    val io = new CountingFileIO
+    val stream = graft.sources.GraftSparkTable(GraftTable.load(spark, dir, io))
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().toMicroBatchStream(Files.createTempDirectory("graft-pin-ck").toString)
+    // Spark plans each batch 4 times; two batches: (-1, 0] and (0, 2]
+    Seq(-1L -> 0L, 0L -> 2L).foreach { case (s, e) =>
+      io.reset()
+      val plans = (1 to 4).map(_ => stream.planInputPartitions(
+        graft.sources.GraftOffset(s), graft.sources.GraftOffset(e)))
+      assert(plans.map(_.length).distinct.size == 1)
+      val reads = (0 to 2).map(i => io.snapshotReads(dir, s"snapshot-$i.json"))
+      info(s"snapshot-N.json reads planning ($s, $e] 4 times: $reads")
+      assert(reads == (0 to 2).map(i => if (i > s && i <= e) 1 else 0),
+        s"planning ($s, $e] read the snapshot files $reads times")
+    }
   }
 }
