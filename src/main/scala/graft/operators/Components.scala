@@ -35,17 +35,25 @@ object Components {
       pairs: DataFrame,
       aCol: String = "id_a",
       bCol: String = "id_b",
-      maxIter: Int = 25): DataFrame = {
-    // each round references the previous label table TWICE (self-join
-    // for the pointer jump), so carrying lineage across rounds grows
-    // the logical plan exponentially — the labels MUST be re-rooted on
-    // materialized data every round. checkpoint() when a checkpoint
-    // dir is configured (survives executor loss — the right choice on
-    // a real cluster), localCheckpoint() otherwise.
-    def cut(df: DataFrame): DataFrame =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
+      maxIter: Int = 25): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter, materialize)
+
+  // each round references the previous label table TWICE (self-join
+  // for the pointer jump), so carrying lineage across rounds grows
+  // the logical plan exponentially — the labels MUST be re-rooted on
+  // materialized data every round. checkpoint() when a checkpoint
+  // dir is configured (survives executor loss — the right choice on
+  // a real cluster), localCheckpoint() otherwise.
+  private def materialize(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
+      df.checkpoint(eager = true)
+    else df.localCheckpoint(eager = true)
+
+  /** [[connectedComponents]] with the per-round materialization `cut`
+    * (tests substitute one that also re-runs an earlier round). */
+  private[graft] def connectedComponents(
+      pairs: DataFrame, aCol: String, bCol: String, maxIter: Int,
+      cut: DataFrame => DataFrame): DataFrame = {
     val half = pairs
       .select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull &&
@@ -64,8 +72,10 @@ object Components {
     // drives the loop (exact under task retries — a retried task can
     // re-add, inflating the count, but never fabricates a move from
     // zero); the WARN therefore reports the count as approximate.
-    val movedAcc = pairs.sparkSession.sparkContext
-      .longAccumulator("graft.components.moved")
+    // Each round registers its own accumulator: an update from an
+    // earlier round's tasks (late, or a recomputation of its lineage)
+    // lands in that round's accumulator, never in the current one.
+    val sc = pairs.sparkSession.sparkContext
     var iter = 0
     var changed = 1L
     while (iter < maxIter && changed > 0) {
@@ -83,11 +93,11 @@ object Components {
       // pointer jump: follow the label one hop (labels are node ids,
       // so every label has a row). Doubles effective propagation
       // distance per round.
+      val movedAcc = sc.longAccumulator("graft.components.moved")
       val probe = udf { (o: Long, c: Long) =>
         if (o != c) movedAcc.add(1L)
         true
       }.asNondeterministic() // must not be deduplicated or reordered
-      movedAcc.reset()
       val jumped = cut(prop
         .join(prop.select(col("id").as("comp"), col("comp").as("cc")), Seq("comp"), "left")
         .select(col("id"), col("old"),

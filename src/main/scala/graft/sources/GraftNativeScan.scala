@@ -415,16 +415,26 @@ object GraftScanMetrics {
     }
 }
 
-/** Native scan over a FULLY-COMPACTED fixed-bucket primary-key table:
-  * one level>0 file per (partition, bucket), no deletion vectors —
-  * the merge is already materialized, so files read raw through the
-  * vectorized reader (hidden seq/kind columns clipped away by the
-  * requested schema).
+/** Native scan that serves all files of one bucket in one input
+  * partition. Three readers use it:
+  *  - a FULLY-COMPACTED fixed-bucket primary-key table (one level>0
+  *    file per (partition, bucket), no deletion vectors): the merge is
+  *    already materialized, so files read raw through the vectorized
+  *    reader (hidden seq/kind columns clipped away by the requested
+  *    schema);
+  *  - a bucketed append table;
+  *  - merge-on-read of an uncompacted primary-key table
+  *    ([[BucketRuns]]): every live run of a (partition, bucket) lands
+  *    in one input partition with `_graft_seq`/`_graft_kind`, and
+  *    `leadingKeys` (the table's partition columns) lead the reported
+  *    key, so the merge aggregate over the key runs in the task with
+  *    no Exchange.
   *
   * Reports `KeyGroupedPartitioning(bucket(n, pk...))` with one
   * InputPartition per bucket carrying its bucket id as the partition
-  * key, so equi-joins between identically-bucketed graft tables run
-  * as storage-partitioned joins with NO Exchange on either side
+  * key (led by the partition values with `leadingKeys`), so equi-joins
+  * between identically-bucketed graft tables run as storage-partitioned
+  * joins with NO Exchange on either side
   * (reference: PaimonScan.outputPartitioning, paimon-spark
   * .../PaimonScan.scala:139-146; enable
   * `spark.sql.sources.v2.bucketing.enabled`). At warehouse scale this
@@ -445,34 +455,49 @@ class GraftBucketedScan(
     // threaded to GraftBatchScan so the inherited toMicroBatchStream
     // still honors per-query streaming options (scan.mode,
     // scan.snapshot-id, admission caps) on bucketed PK tables
-    readOptions: Map[String, String] = Map.empty)
+    readOptions: Map[String, String] = Map.empty,
+    // table partition columns reported ahead of the bucket: one input
+    // partition per (partition, bucket) instead of per bucket
+    leadingKeys: StructType = new StructType())
     extends GraftBatchScan(gt, sch, initialEntries, dataSchema, readDataSchema,
       partitionSchema, filters, required, readOptions)
     with SupportsReportPartitioning {
 
-  private lazy val byBucket: Seq[(Int, Seq[ManifestEntry])] =
-    currentEntries.groupBy(_.bucket).toSeq.sortBy(_._1)
+  /** (reported key, files) per input partition, in key order. */
+  private lazy val groups: Seq[(InternalRow, Seq[ManifestEntry])] = {
+    def values(e: ManifestEntry): Seq[String] =
+      leadingKeys.fieldNames.toSeq.map(e.partition.get(_).orNull)
+    currentEntries.groupBy(e => (values(e), e.bucket)).toSeq
+      .sortBy { case ((vs, b), _) => (vs.mkString("\u0000"), b) } // NUL: unambiguous join
+      .map { case ((vs, b), es) =>
+        val lead = leadingKeys.fields.toSeq.zip(vs).map { case (f, v) =>
+          GraftScanUtil.partitionValue(v, f.dataType) }
+        (InternalRow.fromSeq(lead :+ b), es)
+      }
+  }
 
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     Array.empty // keep partition count stable for the reported keys
 
   override def planInputPartitions(): Array[InputPartition] =
-    byBucket.zipWithIndex.map { case ((b, es), i) =>
+    groups.zipWithIndex.map { case ((key, es), i) =>
       new GraftBucketPartition(i,
         es.map(GraftScanUtil.partitionedFile(gt.path, _, partitionSchema)).toArray,
-        InternalRow(b))
+        key)
     }.toArray
 
   override def outputPartitioning()
-      : org.apache.spark.sql.connector.read.partitioning.Partitioning =
+      : org.apache.spark.sql.connector.read.partitioning.Partitioning = {
+    import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
     new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-      Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(
-        numBuckets, bucketKeys: _*)),
-      byBucket.size)
+      leadingKeys.fieldNames.map(c => Expressions.identity(c): Expression) :+
+        Expressions.bucket(numBuckets, bucketKeys: _*),
+      groups.size)
+  }
 
   override def description(): String =
-    s"GraftBucketedScan(buckets=${byBucket.size}, files=${currentEntries.size}, " +
+    s"GraftBucketedScan(buckets=${groups.size}, files=${currentEntries.size}, " +
       s"pushed=[${filters.mkString(", ")}])"
 }
 

@@ -3138,8 +3138,15 @@ final class GraftTable private (
     * current read the patches of the snapshot its files came from. */
   private[graft] def mergedFromEntries(
       entries: Seq[ManifestEntry], sch: TableSchema, snap: Option[Snapshot]): DataFrame =
-    if (sch.primaryKeys.nonEmpty) MergeEngine.merge(readRaw(visibleEntries(entries, sch), sch), sch)
-    else {
+    if (sch.primaryKeys.nonEmpty) {
+      // inside the bucket-local gate a bucket's runs merge in one task
+      // (no shuffle, only the used columns read); elsewhere readRaw's
+      // shuffle merge
+      val visible = visibleEntries(entries, sch)
+      if (visible.nonEmpty && bucketLocal(sch, visible))
+        MergeEngine.mergeKeyGrouped(graft.sources.BucketRuns.read(this, sch, visible), sch)
+      else MergeEngine.merge(readRaw(visible, sch), sch)
+    } else {
       val patches = colPatchesOf(sch, snap)
       if (patches.isEmpty) readAppendData(entries, sch)
       else applyColumnPatches(rowIdReadFor(entries, sch), patches, sch)

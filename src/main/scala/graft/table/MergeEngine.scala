@@ -11,10 +11,19 @@ import org.apache.spark.sql.functions._
   * pluggable MergeFunction (paimon-core .../mergetree/compact/
   * MergeFunction.java + DeduplicateMergeFunction / FirstRowMergeFunction /
   * PartialUpdateMergeFunction / AggregateMergeFunction). In Spark the
-  * same semantics are a single shuffle: groupBy(primary key) with
-  * ordered aggregates — partial aggregation gives the map-side
-  * combine, the sort-based shuffle replaces the k-way merge, and the
-  * plan stays inside whole-stage codegen.
+  * same semantics are a groupBy(primary key) with ordered aggregates,
+  * and the plan stays inside whole-stage codegen:
+  *  - reads of tables inside the bucket-local gate (deduplicate, fixed
+  *    buckets, parquet files on the current schema, no deletion
+  *    vectors) group a bucket's runs in one task
+  *    ([[graft.sources.BucketRuns]]), so the aggregate needs no
+  *    shuffle — SortAggregate → Sort → scan, the reference's
+  *    per-bucket merge ([[mergeKeyGrouped]]);
+  *  - every other read (other merge engines, dynamic/postpone/
+  *    cross-partition buckets, deletion vectors, older-schema or
+  *    non-parquet files), compaction and the write path keep a single
+  *    shuffle: partial aggregation gives the map-side combine and the
+  *    sort-based shuffle replaces the k-way merge.
   *
   * Two call sites, mirroring the reference's two merge points:
   *  - [[preMergeBatch]]: inside the write path, reducing duplicate keys
@@ -37,7 +46,30 @@ object MergeEngine {
     * landed under another key, routed in via rowkind.field) is as
     * dead as a -D winner: both kinds are retractions. */
   def merge(raw: DataFrame, schema: TableSchema): DataFrame =
-    mergeKeepMeta(raw, schema)
+    live(mergeKeepMeta(raw, schema), schema)
+
+  /** [[merge]] of a deduplicate table from a relation whose partitions
+    * already hold every version of their keys
+    * ([[graft.sources.BucketRuns]]). The pick is one
+    * `max_by(column, order)` per column over the
+    * same total (sequence.field, _graft_seq) order — `_graft_seq` is
+    * unique per row, so the picks cannot mix rows — and Catalyst prunes
+    * the picks a query does not use, and with them the scan's columns.
+    * Each pick carries the order in its aggregate buffer, so across a
+    * shuffle the packed whole-row pick of [[merge]] moves fewer bytes;
+    * with no Exchange below, nothing is moved. */
+  def mergeKeyGrouped(raw: DataFrame, schema: TableSchema): DataFrame = {
+    require(schema.mergeEngine == "deduplicate", "the per-column pick is deduplicate's")
+    val ord = ordering(schema, arrivalTiebreak = None)
+    val picks = raw.columns.filterNot(schema.primaryKeys.contains)
+      .map(c => max_by(col(c), ord).as(c))
+    live(raw.groupBy(schema.primaryKeys.map(col): _*)
+      .agg(picks.head, picks.tail.toIndexedSeq: _*), schema)
+  }
+
+  /** Drop retractions and the hidden columns from merged rows. */
+  private def live(merged: DataFrame, schema: TableSchema): DataFrame =
+    merged
       .filter(col(Meta.KindCol) =!= Meta.KindDelete &&
         col(Meta.KindCol) =!= Meta.KindUpdateBefore)
       .select(schema.toStruct.fieldNames.map(col).toIndexedSeq: _*)

@@ -56,6 +56,33 @@ class ComponentsSpec extends AnyFunSuite {
     assert(got.size == 200 && got.values.forall(_ == 0L))
   }
 
+  test("an earlier round re-evaluated during a later one does not count toward its convergence") {
+    import spark.implicits._
+    val edges = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    def run(replay: Boolean): (Map[Long, Long], Int) = {
+      var rounds = 0
+      var previous: Option[org.apache.spark.sql.DataFrame] = None
+      // materialize each round, first re-running the previous round's
+      // un-cut plan (its probe fires again) when `replay` is set
+      val cut = (df: org.apache.spark.sql.DataFrame) => {
+        if (replay) previous.foreach(_.collect())
+        previous = Some(df)
+        rounds += 1
+        df.localCheckpoint(eager = true)
+      }
+      val got = Components.connectedComponents(edges, "id_a", "id_b", 25, cut)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (got, rounds)
+    }
+    val (plain, plainRounds) = run(replay = false)
+    val (replayed, replayedRounds) = run(replay = true)
+    assert(plain.size == 41 && plain.values.forall(_ == 0L))
+    assert(replayed == plain)
+    // a shared accumulator reset per round counts the replayed round's
+    // moves in the next one and runs an extra round
+    assert(replayedRounds == plainRounds, s"$replayedRounds vs $plainRounds")
+  }
+
   test("minhash pairs -> components collapses transitive near-dup chains") {
     import spark.implicits._
     import graft.operators.Dedup
