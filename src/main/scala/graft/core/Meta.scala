@@ -411,6 +411,9 @@ object Meta {
   /** Hidden columns on primary-key table data files. */
   val SeqCol = "_graft_seq"
   val KindCol = "_graft_kind"
+  /** A read-only column of merge-on-read relations: the row's bucket
+    * id (graft.sources.BucketRuns). Never stored in a file. */
+  val BucketCol = "_graft_bucket"
   /** RowKind byte values (reference: paimon RowKind.java:29-56). */
   val KindInsert: Byte = 0 // +I
   val KindUpdateBefore: Byte = 1 // -U

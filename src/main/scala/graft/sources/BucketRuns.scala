@@ -7,23 +7,23 @@ import graft.core.Meta.{ManifestEntry, TableSchema}
 import graft.table.GraftTable
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, GraftDatasets, SparkSession}
-import org.apache.spark.sql.connector.catalog.{FunctionCatalog, Identifier, TableCapability}
-import org.apache.spark.sql.connector.catalog.functions.UnboundFunction
+import org.apache.spark.sql.connector.catalog.TableCapability
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FileTable}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{ByteType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The live runs of a primary-key table as one key-grouped relation:
   * every file of a (partition, bucket) is read by one task, with the
-  * hidden `_graft_seq`/`_graft_kind` columns, and the scan reports
-  * that grouping (`KeyGroupedPartitioning` over the partition columns
-  * and `bucket(n, bucket-key)`). A `groupBy(primary key)` over it —
-  * the [[graft.table.MergeEngine]] aggregate — then plans as
+  * hidden `_graft_seq`/`_graft_kind` columns and the bucket id as
+  * [[Meta.BucketCol]], and the scan reports that grouping
+  * (`KeyGroupedPartitioning` over the partition columns and the bucket
+  * column). A `groupBy(primary key, bucket)` over it — the
+  * [[graft.table.MergeEngine]] aggregate — then plans as
   * SortAggregate → Sort → BatchScan with no Exchange, the Spark shape
   * of the reference's per-bucket merge-on-read split reader.
   *
@@ -33,23 +33,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 private[graft] object BucketRuns {
 
   /** The relation over `entries` (non-empty, all inside the gate). */
-  def read(gt: GraftTable, sch: TableSchema, entries: Seq[ManifestEntry]): DataFrame = {
-    val table = new BucketRunsTable(gt, sch, entries)
+  def read(gt: GraftTable, sch: TableSchema, entries: Seq[ManifestEntry]): DataFrame =
     GraftDatasets.ofRows(gt.spark, DataSourceV2Relation.create(
-      table, Some(BucketFunctionCatalog), None, CaseInsensitiveStringMap.empty()))
-  }
-}
-
-/** Resolves the `bucket` transform the scan reports (Spark binds it
-  * through the relation's catalog) to the writer's bucket function. */
-private[sources] object BucketFunctionCatalog extends FunctionCatalog {
-  override def name(): String = "graft_bucket_runs"
-  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = ()
-  override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(Array.empty, "bucket"))
-  override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.name() == "bucket") GraftFunctions.BucketFunction
-    else throw new org.apache.spark.sql.catalyst.analysis.NoSuchFunctionException(ident)
+      new BucketRunsTable(gt, sch, entries), None, None, CaseInsensitiveStringMap.empty()))
 }
 
 /** A `FileTable` so that `Dataset.inputFiles` lists exactly the
@@ -58,10 +44,12 @@ private[sources] class BucketRunsTable(
     gt: GraftTable, sch: TableSchema, entries: Seq[ManifestEntry])
     extends FileTable(gt.spark, CaseInsensitiveStringMap.empty(), Seq.empty, None) {
 
-  /** Table columns, then the hidden sequence and row-kind columns. */
+  /** Table columns, then the hidden sequence, row-kind and bucket
+    * columns. */
   private val full: StructType = StructType(sch.toStruct.fields ++ Seq(
     StructField(Meta.SeqCol, LongType, nullable = false),
-    StructField(Meta.KindCol, ByteType, nullable = false)))
+    StructField(Meta.KindCol, ByteType, nullable = false),
+    StructField(Meta.BucketCol, IntegerType, nullable = false)))
 
   override lazy val fileIndex: PartitioningAwareFileIndex =
     new ManifestFileIndex(gt.spark, gt.path, entries)
@@ -89,13 +77,13 @@ private[sources] class BucketRunsTable(
       override def pruneColumns(requiredSchema: StructType): Unit =
         required = requiredSchema
       override def build(): Scan = {
-        val partCols = sch.partitionKeys.toSet
-        def data(s: StructType) = StructType(s.fields.filterNot(f => partCols(f.name)))
-        new GraftBucketedScan(gt, sch, entries, data(full), data(required),
-          StructType(required.fields.filter(f => partCols(f.name))),
-          pushed.filter(_.references.forall(r => !partCols(r))), required,
+        // partition values and the bucket id come from the entry
+        val entryCols = sch.partitionKeys.toSet + Meta.BucketCol
+        val (data, readData, readPart) = GraftScanUtil.splitColumns(full, required, entryCols)
+        new GraftBucketedScan(gt, sch, entries, data, readData, readPart,
+          GraftScanUtil.fileFilters(pushed, entryCols), required,
           sch.effectiveBuckets, sch.bucketKeys,
-          leadingKeys = StructType(sch.partitionKeys.map(full(_))))
+          leadingKeys = StructType(sch.partitionKeys.map(full(_))), bucketColumn = true)
       }
     }
 }

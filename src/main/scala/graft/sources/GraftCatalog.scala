@@ -1068,12 +1068,9 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
             e.file.schemaId == sch.id) &&
           entries.groupBy(e => (e.partition, e.bucket)).forall(_._2.size <= 1) &&
           allParquet
-        lazy val partCols = sch.partitionKeys.toSet
-        lazy val dataSchema = StructType(full.fields.filterNot(f => partCols(f.name)))
-        lazy val readData = StructType(required.fields.filterNot(f => partCols(f.name)))
-        lazy val readPart = StructType(required.fields.filter(f => partCols(f.name)))
-        lazy val dataFilters = pushed.filter(
-          _.references.forall(r => !partCols(r)))
+        lazy val (dataSchema, readData, readPart) =
+          GraftScanUtil.splitColumns(full, required, sch.partitionKeys.toSet)
+        lazy val dataFilters = GraftScanUtil.fileFilters(pushed, sch.partitionKeys.toSet)
         if (nativeEligible) {
           // top-n / limit pushdown: keep only files that can contribute
           val limited = (topN, limit) match {
@@ -1180,10 +1177,8 @@ class GraftScanBuilder(gt: GraftTable, sch: TableSchema, snapshot0: Option[Long]
       * hidden columns projected away. */
     override def toMicroBatchStream(checkpointLocation: String)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-      val partCols = sch.partitionKeys.toSet
-      val dataSchema = StructType(full.fields.filterNot(f => partCols(f.name)))
-      val readData = StructType(required.fields.filterNot(f => partCols(f.name)))
-      val readPart = StructType(required.fields.filter(f => partCols(f.name)))
+      val (dataSchema, readData, readPart) =
+        GraftScanUtil.splitColumns(full, required, sch.partitionKeys.toSet)
       new GraftMicroBatchStream(gt, dataSchema, readData, readPart, required,
         readOptions)
     }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Meta
 import graft.core.Meta.{ManifestEntry, TableSchema}
 import graft.table.{Changes, GraftTable}
 import org.apache.spark.paths.SparkPath
@@ -56,11 +57,26 @@ private[graft] object GraftScanUtil {
     }
   }
 
+  /** A relation's columns split for the native file scans: the file
+    * columns of `full`, the required file columns, and the required
+    * columns that come from the manifest entry instead of the file
+    * (`entryCols`: partition columns, and [[Meta.BucketCol]]). */
+  def splitColumns(full: StructType, required: StructType, entryCols: Set[String])
+      : (StructType, StructType, StructType) =
+    (StructType(full.fields.filterNot(f => entryCols(f.name))),
+      StructType(required.fields.filterNot(f => entryCols(f.name))),
+      StructType(required.fields.filter(f => entryCols(f.name))))
+
+  /** The pushed filters a file can evaluate: those on its own columns. */
+  def fileFilters(pushed: Array[Filter], entryCols: Set[String]): Array[Filter] =
+    pushed.filter(_.references.forall(r => !entryCols(r)))
+
   def partitionedFile(
       tablePath: String, e: ManifestEntry,
       partitionSchema: StructType): PartitionedFile = {
     val pv = InternalRow.fromSeq(partitionSchema.fields.toSeq.map { f =>
-      partitionValue(e.partition.get(f.name).orNull, f.dataType)
+      if (f.name == Meta.BucketCol) e.bucket
+      else partitionValue(e.partition.get(f.name).orNull, f.dataType)
     })
     PartitionedFile(pv,
       SparkPath.fromPathString(s"$tablePath/${e.file.fileName}"),
@@ -425,10 +441,13 @@ object GraftScanMetrics {
   *  - a bucketed append table;
   *  - merge-on-read of an uncompacted primary-key table
   *    ([[BucketRuns]]): every live run of a (partition, bucket) lands
-  *    in one input partition with `_graft_seq`/`_graft_kind`, and
+  *    in one input partition with `_graft_seq`/`_graft_kind`,
   *    `leadingKeys` (the table's partition columns) lead the reported
-  *    key, so the merge aggregate over the key runs in the task with
-  *    no Exchange.
+  *    key, and `bucketColumn` reports the bucket as the
+  *    [[Meta.BucketCol]] column instead of a `bucket` transform — Spark
+  *    takes a transform as key grouping only over one column, and a
+  *    primary key is often several — so the merge aggregate over the
+  *    key and that column runs in the task with no Exchange.
   *
   * Reports `KeyGroupedPartitioning(bucket(n, pk...))` with one
   * InputPartition per bucket carrying its bucket id as the partition
@@ -458,7 +477,9 @@ class GraftBucketedScan(
     readOptions: Map[String, String] = Map.empty,
     // table partition columns reported ahead of the bucket: one input
     // partition per (partition, bucket) instead of per bucket
-    leadingKeys: StructType = new StructType())
+    leadingKeys: StructType = new StructType(),
+    // report the bucket as the Meta.BucketCol column of the scan
+    bucketColumn: Boolean = false)
     extends GraftBatchScan(gt, sch, initialEntries, dataSchema, readDataSchema,
       partitionSchema, filters, required, readOptions)
     with SupportsReportPartitioning {
@@ -492,7 +513,8 @@ class GraftBucketedScan(
     import org.apache.spark.sql.connector.expressions.{Expression, Expressions}
     new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
       leadingKeys.fieldNames.map(c => Expressions.identity(c): Expression) :+
-        Expressions.bucket(numBuckets, bucketKeys: _*),
+        (if (bucketColumn) Expressions.identity(Meta.BucketCol)
+         else Expressions.bucket(numBuckets, bucketKeys: _*)),
       groups.size)
   }
 

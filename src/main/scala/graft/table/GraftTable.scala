@@ -3140,12 +3140,12 @@ final class GraftTable private (
       entries: Seq[ManifestEntry], sch: TableSchema, snap: Option[Snapshot]): DataFrame =
     if (sch.primaryKeys.nonEmpty) {
       // inside the bucket-local gate a bucket's runs merge in one task
-      // (no shuffle, only the used columns read); elsewhere readRaw's
-      // shuffle merge
+      // (no shuffle); elsewhere across readRaw's shuffle
       val visible = visibleEntries(entries, sch)
-      if (visible.nonEmpty && bucketLocal(sch, visible))
-        MergeEngine.mergeKeyGrouped(graft.sources.BucketRuns.read(this, sch, visible), sch)
-      else MergeEngine.merge(readRaw(visible, sch), sch)
+      MergeEngine.merge(
+        if (visible.nonEmpty && bucketLocal(sch, visible))
+          graft.sources.BucketRuns.read(this, sch, visible)
+        else readRaw(visible, sch), sch)
     } else {
       val patches = colPatchesOf(sch, snap)
       if (patches.isEmpty) readAppendData(entries, sch)

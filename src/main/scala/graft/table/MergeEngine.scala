@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *    vectors) group a bucket's runs in one task
   *    ([[graft.sources.BucketRuns]]), so the aggregate needs no
   *    shuffle — SortAggregate → Sort → scan, the reference's
-  *    per-bucket merge ([[mergeKeyGrouped]]);
+  *    per-bucket merge;
   *  - every other read (other merge engines, dynamic/postpone/
   *    cross-partition buckets, deletion vectors, older-schema or
   *    non-parquet files), compaction and the write path keep a single
@@ -46,33 +46,39 @@ object MergeEngine {
     * landed under another key, routed in via rowkind.field) is as
     * dead as a -D winner: both kinds are retractions. */
   def merge(raw: DataFrame, schema: TableSchema): DataFrame =
-    live(mergeKeepMeta(raw, schema), schema)
-
-  /** [[merge]] of a deduplicate table from a relation whose partitions
-    * already hold every version of their keys
-    * ([[graft.sources.BucketRuns]]). The pick is one
-    * `max_by(column, order)` per column over the
-    * same total (sequence.field, _graft_seq) order — `_graft_seq` is
-    * unique per row, so the picks cannot mix rows — and Catalyst prunes
-    * the picks a query does not use, and with them the scan's columns.
-    * Each pick carries the order in its aggregate buffer, so across a
-    * shuffle the packed whole-row pick of [[merge]] moves fewer bytes;
-    * with no Exchange below, nothing is moved. */
-  def mergeKeyGrouped(raw: DataFrame, schema: TableSchema): DataFrame = {
-    require(schema.mergeEngine == "deduplicate", "the per-column pick is deduplicate's")
-    val ord = ordering(schema, arrivalTiebreak = None)
-    val picks = raw.columns.filterNot(schema.primaryKeys.contains)
-      .map(c => max_by(col(c), ord).as(c))
-    live(raw.groupBy(schema.primaryKeys.map(col): _*)
-      .agg(picks.head, picks.tail.toIndexedSeq: _*), schema)
-  }
-
-  /** Drop retractions and the hidden columns from merged rows. */
-  private def live(merged: DataFrame, schema: TableSchema): DataFrame =
-    merged
+    (if (schema.mergeEngine == "deduplicate") pickEach(raw, schema)
+     else mergeKeepMeta(raw, schema))
       .filter(col(Meta.KindCol) =!= Meta.KindDelete &&
         col(Meta.KindCol) =!= Meta.KindUpdateBefore)
       .select(schema.toStruct.fieldNames.map(col).toIndexedSeq: _*)
+
+  /** deduplicate at read: one `max_by(column, order)` per column over
+    * the (sequence.field, _graft_seq) order, so Catalyst prunes
+    * the picks a query does not use, and with them the scan's columns.
+    *
+    * The picks cannot mix two rows of a key. `_graft_seq` is per
+    * commit, not per row, but the write path's pre-merge leaves one
+    * row per key per commit, so (key, order) is unique unless two
+    * commits raced to one sequence number. Even then every pick of a
+    * key folds the key's rows in the same order — the picks share one
+    * aggregate buffer per key, merged whole — and `max_by` keeps the
+    * first of equal orders, so all picks take the same row.
+    *
+    * A relation carrying [[Meta.BucketCol]] ([[graft.sources.BucketRuns]])
+    * is grouped by it too: its scan reports its grouping on that
+    * column, and the bucket is a function of the key, so no group of
+    * the key is split. */
+  private def pickEach(raw: DataFrame, schema: TableSchema): DataFrame = {
+    // with no sequence field the order is `_graft_seq` alone, as a bare
+    // long: a one-field struct is built, compared and buffered by every
+    // pick, which made full reads slower than the whole-row pick
+    val ord =
+      if (schema.sequenceFields.isEmpty) col(Meta.SeqCol)
+      else ordering(schema, arrivalTiebreak = None)
+    val keys = schema.primaryKeys ++ raw.columns.filter(_ == Meta.BucketCol)
+    val picks = raw.columns.filterNot(keys.contains).map(c => max_by(col(c), ord).as(c))
+    raw.groupBy(keys.map(col): _*).agg(picks.head, picks.tail.toIndexedSeq: _*)
+  }
 
   /** Merge retaining _graft_seq/_graft_kind (used by compaction, which
     * must preserve sequence info in rewritten files). */
@@ -155,7 +161,8 @@ object MergeEngine {
     }
   }
 
-  /** deduplicate / first-row: whole-row pick by ordering key. */
+  /** deduplicate (compaction, write path) / first-row: whole-row pick
+    * by ordering key. */
   private def pickByOrd(
       raw: DataFrame, schema: TableSchema, ord: Column, latest: Boolean): DataFrame = {
     val pkCols = schema.primaryKeys.map(col)

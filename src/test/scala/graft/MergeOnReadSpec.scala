@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meta
 import graft.table.{GraftTable, MergeEngine}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
@@ -16,8 +17,8 @@ import scala.jdk.CollectionConverters._
   * each (partition, bucket)'s runs are read by one task of a
   * key-grouped scan and merged with no Exchange, reading only the
   * columns a query uses. Every read surface must return what the
-  * shuffle merge over `readRaw` returns; tables outside the gate keep
-  * the shuffle merge. */
+  * whole-row pick across a shuffle over `readRaw` returns; tables
+  * outside the gate keep the shuffle merge. */
 class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val warehouse: String = Files.createTempDirectory("graft-mor").toString
@@ -45,11 +46,15 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  /** The shuffle merge over every live file: the reference result. */
+  /** The reference result: the whole-row pick (`mergeKeepMeta`, what
+    * compaction keeps) across a shuffle over every live file, with
+    * retractions and hidden columns dropped. */
   private def reference(t: GraftTable): DataFrame = {
     val sch = t.schema
-    MergeEngine.merge(t.readRaw(t.visibleEntries(
+    MergeEngine.mergeKeepMeta(t.readRaw(t.visibleEntries(
       t.sm.latestSnapshot().toSeq.flatMap(t.sm.liveEntries), sch), sch), sch)
+      .filter(!col(Meta.KindCol).isin(Meta.KindUpdateBefore, Meta.KindDelete))
+      .select(sch.toStruct.fieldNames.map(col).toIndexedSeq: _*)
   }
 
   private def scans(df: DataFrame): Seq[BatchScanExec] =
@@ -73,18 +78,17 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.sparkContext.addSparkListener(listener)
     try {
       val r = f
-      Thread.sleep(500) // listener events arrive asynchronously
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       (r, jobs.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** `t.read`, `scan(filter)` and SQL `SELECT *`, projection and range
-    * all agree with [[reference]]; the API reads plan key-grouped
-    * unless `grouped` is false. */
+    * all agree with [[reference]]; the API reads plan key-grouped. */
   private def assertAgrees(t: GraftTable, sqlName: String, filter: org.apache.spark.sql.Column,
-      filterSql: String, proj: Seq[String], grouped: Boolean = true): Unit = {
+      filterSql: String, proj: Seq[String]): Unit = {
     val ref = reference(t)
-    assert(keyGrouped(t.read) == grouped, t.read.queryExecution.executedPlan.toString)
+    assert(keyGrouped(t.read), t.read.queryExecution.executedPlan.toString)
     assert(rows(t.read) == rows(ref))
     assert(rows(t.scan(filter)) == rows(ref.filter(filter)))
     assert(rows(t.read.select(proj.map(col): _*)) == rows(ref.select(proj.map(col): _*)))
@@ -131,11 +135,10 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(got.contains(("y", 1L, 1)))
   }
 
-  test("an INT partition column leads the reported key; a composite bucket key still shuffles") {
-    // Spark accepts only one-column bucket transforms as key grouping,
-    // so a bucket key of (b, a) — the default, the primary key — gets an
-    // Exchange below the merge; the rows are the same either way
-    for ((bucketKey, grouped) <- Seq(Map("bucket-key" -> "a") -> true, Map.empty[String, String] -> false)) {
+  test("an INT partition column leads the reported key; one- and several-column bucket keys") {
+    // a bucket key of (b, a) — the default, the primary key — groups
+    // like a one-column one: the scan reports the bucket as a column
+    for (bucketKey <- Seq(Map("bucket-key" -> "a"), Map.empty[String, String])) {
       val (path, name) = tablePath()
       val t = GraftTable.create(spark, path, kinded,
         partitionKeys = Seq("b"), primaryKeys = Seq("b", "a"),
@@ -144,8 +147,21 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       t.write(kdf((for (b <- 0 until 3; a <- 0L until 20L by 3)
         yield ("x", a, b, s"w$b-$a", 1L, if (a % 2 == 0) "+U" else "-D")): _*))
       assertAgrees(t, name, col("b") === 1 && col("a") > 4L, "b = 1 AND a > 4",
-        Seq("b", "a", "v"), grouped)
+        Seq("b", "a", "v"))
     }
+  }
+
+  test("a several-column primary key without bucket-key, unpartitioned") {
+    val (path, name) = tablePath()
+    val t = GraftTable.create(spark, path, kinded, primaryKeys = Seq("a", "b"),
+      options = Map("bucket" -> "3", "rowkind.field" -> "_op"))
+    t.write(kdf((for (a <- 0L until 25L; b <- 0 until 3) yield ("x", a, b, s"v$a-$b", 0L, "+I")): _*))
+    t.write(kdf((for (a <- 0L until 25L by 2; b <- 0 until 2)
+      yield ("y", a, b, s"w$a-$b", 1L, if (b == 0) "+U" else "-D")): _*))
+    assertAgrees(t, name, col("a") <= 7L && col("b") =!= 2, "a <= 7 AND b != 2", Seq("a", "v"))
+    val proj = t.read.select("a", "b", "v")
+    assert(scans(proj).map(_.scan.readSchema().fieldNames.toSet) ==
+      Seq(Set("a", "b", "v", "_graft_seq", "_graft_kind", "_graft_bucket")))
   }
 
   test("sequence.field ascending and descending; equal sequence values fall to commit order") {
@@ -195,7 +211,7 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val proj = t.read.select("k", "c1")
     assert(keyGrouped(proj), proj.queryExecution.executedPlan.toString)
     assert(scans(proj).map(_.scan.readSchema().fieldNames.toSet) ==
-      Seq(Set("k", "c1", "_graft_seq", "_graft_kind")))
+      Seq(Set("k", "c1", "_graft_seq", "_graft_kind", "_graft_bucket")))
     assert(rows(proj) == rows(reference(t).select("k", "c1")))
     // the V1 bridge no longer runs the merge while Spark plans
     val range = spark.sql(s"SELECT * FROM $name WHERE k BETWEEN 10 AND 40")
