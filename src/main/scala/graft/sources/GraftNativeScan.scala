@@ -149,7 +149,9 @@ private[graft] object GraftScanUtil {
 
   def readerFactory(
       spark: SparkSession, dataSchema: StructType, readDataSchema: StructType,
-      partitionSchema: StructType, filters: Array[Filter]): PartitionReaderFactory = {
+      partitionSchema: StructType, filters: Array[Filter],
+      /** rows per decoded columnar batch; None = the session's */
+      batchSize: Option[Int] = None): PartitionReaderFactory = {
     import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
     val conf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     val sqlConf = spark.sessionState.conf
@@ -175,8 +177,13 @@ private[graft] object GraftScanUtil {
     conf.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key,
       sqlConf.parquetFieldIdReadEnabled)
     val bc = spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    val readerConf = batchSize.fold(SQLConf.get) { n =>
+      val c = SQLConf.get.clone()
+      c.setConf(SQLConf.PARQUET_VECTORIZED_READER_BATCH_SIZE, n)
+      c
+    }
     ParquetPartitionReaderFactory(
-      SQLConf.get, bc, dataSchema, readDataSchema, partitionSchema,
+      readerConf, bc, dataSchema, readDataSchema, partitionSchema,
       filters, None, new ParquetOptions(Map.empty[String, String], SQLConf.get))
   }
 

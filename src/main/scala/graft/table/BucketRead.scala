@@ -1,12 +1,11 @@
 package graft.table
 
 import graft.core.Meta.{KindCol, KindDelete, KindUpdateBefore, SeqCol, TableSchema}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.connector.read.PartitionReaderFactory
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.mutable
@@ -16,12 +15,21 @@ import scala.collection.mutable
   * `sequence.field.sort-order=descending` flips each component after
   * the null handling, so the SMALLEST sequence wins. This is
   * [[MergeEngine]]'s `(sequence.field, _graft_seq)` struct order, for
-  * readers that pick a key's winner row by row. The per-type orderings
-  * are rebuilt wherever the order is deserialized. */
+  * readers that pick a key's winner row by row. A descending FLOAT or
+  * DOUBLE field ranks NaN below null too (the merge's leading isnan
+  * flag). The per-type orderings are rebuilt wherever the order is
+  * deserialized. */
 private[graft] final class VersionOrder(sfTypes: Array[DataType], descending: Boolean)
     extends Serializable {
   @transient private lazy val orderings: Array[Ordering[Any]] = sfTypes.map(dt =>
     TypeUtils.getInterpretedOrdering(dt).asInstanceOf[Ordering[Any]])
+  private val nanLowest = sfTypes.map(dt =>
+    descending && (dt == FloatType || dt == DoubleType))
+  private def isNaN(v: Any): Boolean = v match {
+    case d: Double => d.isNaN
+    case f: Float => f.isNaN
+    case _ => false
+  }
 
   /** Lexicographic compare of sequence-field vectors (per-element
     * nulls); a single-field table is the 1-element case. */
@@ -29,6 +37,8 @@ private[graft] final class VersionOrder(sfTypes: Array[DataType], descending: Bo
     var i = 0
     while (i < orderings.length) {
       val c = (a(i), b(i)) match {
+        case (x, y) if nanLowest(i) && (isNaN(x) || isNaN(y)) =>
+          if (!isNaN(x)) 1 else if (!isNaN(y)) -1 else 0
         case (null, null) => 0
         case (null, _) => -1
         case (_, null) => 1
@@ -115,7 +125,87 @@ private[graft] final class BucketRead(sch: TableSchema) extends Serializable {
   * per-bucket tasks (reference: LookupChangelogMergeFunctionWrapper over
   * LookupLevels — each bucket writer looks a key's previous value up in
   * that bucket's files, so the changelog needs no cross-bucket
-  * shuffle). */
+  * shuffle). Built on the driver over the commit's live `files` (keyed
+  * by typed partition values and bucket), read through `factory` (a
+  * reader over `read.readData`); [[BucketWriter]]'s tasks call
+  * [[changes]]. Table files must be parquet files of `sch` without
+  * deletion vectors, and the table a deduplicate one. */
+private[graft] final class LookupChangelog(
+    sch: TableSchema, read: BucketRead, factory: PartitionReaderFactory,
+    files: Map[(Seq[Any], Int), Seq[PartitionedFile]]) extends Serializable {
+  import LookupChangelog._
+  private val st = read.struct
+  private val colTypes = st.fields.map(_.dataType)
+  private val before = read.readerLayout(read.readData)
+  // where a before-image keeps each table column
+  private val beforeOrds = st.fieldNames.map(before.out.fieldIndex)
+  private val cmp = comparedColumns(sch).map(st.fieldIndex).toArray
+  @transient private lazy val equiv =
+    cmp.map(i => TypeUtils.getInterpretedOrdering(colTypes(i)))
+  /** The changelog rows: table columns, then `_row_kind`. */
+  val schema: StructType = StructType(st.fields :+
+    StructField(RowKindCol, StringType, nullable = false))
+
+  private def retraction(kind: Byte) = kind == KindDelete || kind == KindUpdateBefore
+  private def emit(row: InternalRow, ords: Int => Int, kind: String): InternalRow =
+    new GenericInternalRow(colTypes.indices.map(i =>
+      row.get(ords(i), colTypes(i))).toArray[Any] :+ UTF8String.fromString(kind))
+  private def changed(b: InternalRow, a: InternalRow): Boolean = cmp.indices.exists { j =>
+    val c = cmp(j)
+    val (x, y) = (b.get(beforeOrds(c), colTypes(c)), a.get(c, colTypes(c)))
+    if (x == null || y == null) (x == null) != (y == null)
+    else equiv(j).compare(x, y) != 0
+  }
+
+  /** The changelog rows of one (partition, bucket) `group`, whose
+    * pre-merged batch rows `batch` holds by key in the layout `after`
+    * (table columns first). Reads only the group's files, keeps each
+    * batch key's winning old version and emits `+I` for a key without
+    * a before-image, `-D` when a retraction wins over one, `-U` then
+    * `+U` when the row changed, and nothing when the after-image is
+    * the before-image (an older version winning on `sequence.field`,
+    * or a change only in ignored columns). */
+  def changes(group: (Seq[Any], Int), batch: collection.Map[Seq[Any], InternalRow],
+      after: BucketRead#Layout): Iterator[InternalRow] = {
+    val order = read.order
+    // the winning old version of each batch key: (row, seq, sf)
+    val best = mutable.HashMap.empty[Seq[Any], (InternalRow, Long, Any)]
+    files.getOrElse(group, Nil).foreach { f =>
+      val reader = factory.createReader(FilePartition(0, Array(f)))
+      try while (reader.next()) {
+        val r = reader.get()
+        val k = before.keyOf(r)
+        if (batch.contains(k)) {
+          val s = r.getLong(before.seqOrd)
+          if (best.get(k).forall { case (_, bs, bsf) =>
+            order.betterThan(before.sfOf(r), s, bsf, bs, hasBest = true)
+          }) {
+            // copy: vectorized rows alias the batch's column memory
+            val row = r.copy()
+            best(before.keyOf(row)) = (row, s, before.sfOf(row))
+          }
+        }
+      } finally reader.close()
+    }
+    batch.iterator.flatMap { case (k, a) =>
+      val aKind = a.getByte(after.kindOrd)
+      val old = best.get(k)
+      val wins = old.forall { case (_, s, sf) =>
+        order.betterThan(after.sfOf(a), a.getLong(after.seqOrd), sf, s, hasBest = true)
+      }
+      val b = old.map(_._1).filterNot(o => retraction(o.getByte(before.kindOrd)))
+      if (!wins) Iterator.empty
+      else (b, retraction(aKind)) match {
+        case (None, false) => Iterator(emit(a, identity, "+I"))
+        case (Some(o), true) => Iterator(emit(o, beforeOrds(_), "-D"))
+        case (Some(o), false) if changed(o, a) =>
+          Iterator(emit(o, beforeOrds(_), "-U"), emit(a, identity, "+U"))
+        case _ => Iterator.empty
+      }
+    }
+  }
+}
+
 private[graft] object LookupChangelog {
   val RowKindCol = "_row_kind"
 
@@ -129,100 +219,5 @@ private[graft] object LookupChangelog {
       .getOrElse(Set.empty[String])
     sch.toStruct.fieldNames.toSeq
       .filterNot(c => ignore.contains(c) && !sch.primaryKeys.contains(c))
-  }
-
-  /** The changelog rows (table columns, then `_row_kind`) of the
-    * routed, pre-merged `batch`: one row per key, carrying the table's
-    * columns, `_graft_seq`, `_graft_kind` and `__bucket`. Each task
-    * groups its rows by (partition, bucket), reads only those buckets'
-    * files from `files` (keyed by typed partition values and bucket)
-    * through `factory` (a reader over `read.readData`), keeps each
-    * batch key's winning old version and emits `+I` for a key without
-    * a before-image, `-D` when a retraction wins over one, `-U` then
-    * `+U` when the row changed, and nothing when the after-image is
-    * the before-image (an older version winning on `sequence.field`,
-    * or a change only in ignored columns). Table files must be parquet
-    * files of `sch` without deletion vectors, and the table a
-    * deduplicate one. */
-  def diff(
-      spark: SparkSession, batch: DataFrame, sch: TableSchema, read: BucketRead,
-      factory: PartitionReaderFactory,
-      files: Map[(Seq[Any], Int), Seq[PartitionedFile]]): DataFrame = {
-    val st = read.struct
-    val colTypes = st.fields.map(_.dataType)
-    val in = batch.select((st.fieldNames :+ SeqCol :+ KindCol :+ "__bucket")
-      .map(col).toIndexedSeq: _*)
-    val after = new read.Layout(in.schema)
-    val bucketOrd = st.length + 2
-    val partOrds = sch.partitionKeys.map(st.fieldIndex).toArray
-    val before = read.readerLayout(read.readData)
-    // where a before-image keeps each table column
-    val beforeOrds = st.fieldNames.map(before.out.fieldIndex)
-    val cmp = comparedColumns(sch).map(st.fieldIndex).toArray
-    val order = read.order
-    val outSchema = StructType(st.fields :+
-      StructField(RowKindCol, StringType, nullable = false))
-    val rows = in.queryExecution.toRdd.mapPartitions { it =>
-      val toScala = CatalystTypeConverters.createToScalaConverter(outSchema)
-      val equiv = cmp.map(i => TypeUtils.getInterpretedOrdering(colTypes(i)))
-      def retraction(kind: Byte) = kind == KindDelete || kind == KindUpdateBefore
-      def emit(row: InternalRow, ords: Int => Int, kind: String) =
-        toScala(InternalRow.fromSeq(colTypes.indices.map(i =>
-          row.get(ords(i), colTypes(i))) :+ UTF8String.fromString(kind)))
-          .asInstanceOf[org.apache.spark.sql.Row]
-      def changed(b: InternalRow, a: InternalRow): Boolean = cmp.indices.exists { j =>
-        val c = cmp(j)
-        val (x, y) = (b.get(beforeOrds(c), colTypes(c)), a.get(c, colTypes(c)))
-        if (x == null || y == null) (x == null) != (y == null)
-        else equiv(j).compare(x, y) != 0
-      }
-      // the batch rows of each (partition, bucket), by key
-      val groups = mutable.LinkedHashMap.empty[
-        (Seq[Any], Int), mutable.LinkedHashMap[Seq[Any], InternalRow]]
-      it.foreach { r =>
-        val row = r.copy()
-        val part: Seq[Any] = partOrds.map(i => row.get(i, colTypes(i))).toVector
-        val group = (part, row.getInt(bucketOrd))
-        groups.getOrElseUpdate(group, mutable.LinkedHashMap.empty)(after.keyOf(row)) = row
-      }
-      groups.iterator.flatMap { case (group, batchRows) =>
-        // the winning old version of each batch key: (row, seq, sf)
-        val best = mutable.HashMap.empty[Seq[Any], (InternalRow, Long, Any)]
-        files.getOrElse(group, Nil).foreach { f =>
-          val reader = factory.createReader(FilePartition(0, Array(f)))
-          try while (reader.next()) {
-            val r = reader.get()
-            val k = before.keyOf(r)
-            if (batchRows.contains(k)) {
-              val s = r.getLong(before.seqOrd)
-              if (best.get(k).forall { case (_, bs, bsf) =>
-                order.betterThan(before.sfOf(r), s, bsf, bs, hasBest = true)
-              }) {
-                // copy: vectorized rows alias the batch's column memory
-                val row = r.copy()
-                best(before.keyOf(row)) = (row, s, before.sfOf(row))
-              }
-            }
-          } finally reader.close()
-        }
-        batchRows.iterator.flatMap { case (k, a) =>
-          val aKind = a.getByte(after.kindOrd)
-          val old = best.get(k)
-          val wins = old.forall { case (_, s, sf) =>
-            order.betterThan(after.sfOf(a), a.getLong(after.seqOrd), sf, s, hasBest = true)
-          }
-          val b = old.map(_._1).filterNot(o => retraction(o.getByte(before.kindOrd)))
-          if (!wins) Iterator.empty
-          else (b, retraction(aKind)) match {
-            case (None, false) => Iterator(emit(a, identity, "+I"))
-            case (Some(o), true) => Iterator(emit(o, beforeOrds(_), "-D"))
-            case (Some(o), false) if changed(o, a) =>
-              Iterator(emit(o, beforeOrds(_), "-U"), emit(a, identity, "+U"))
-            case _ => Iterator.empty
-          }
-        }
-      }
-    }
-    spark.createDataFrame(rows, outSchema)
   }
 }

@@ -390,7 +390,31 @@ final class GraftTable private (
     // engine — the reference's in-memory write-buffer merge. Arrival
     // order must be materialized as a column (non-deterministic
     // expressions can't appear inside an aggregate).
-    val withArrival = in.withColumn("__arrival", monotonically_increasing_id())
+    val withArrival = in.withColumn(BucketWriter.ArrivalCol, monotonically_increasing_id())
+    // the state this commit builds on: its sequence base, the bucket
+    // assignment and the changelog diff all read this one snapshot
+    val snap = sm.latestSnapshot()
+    val base = nextSeq(snap)
+    val deletesFor: Seq[ManifestEntry] => Seq[ManifestEntry] = added => {
+      if (!overwrite) Seq.empty
+      else {
+        val live = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
+        val newParts = added.map(_.partition).toSet
+        val victims =
+          if (sch.partitionKeys.isEmpty) live
+          else live.filter(e => newParts.contains(e.partition))
+        victims.map(_.copy(kind = "DELETE"))
+      }
+    }
+    // lookup pays the exact-pair diff per commit; full-compaction defers
+    // it to compact() (cheap writes, coarser changelog granularity —
+    // reference: CoreOptions.ChangelogProducer semantics)
+    val withChangelog = !overwrite && sch.changelogProducer == "lookup"
+    lazy val live = visibleEntries(snap.toSeq.flatMap(sm.liveEntries), sch)
+    if (bucketLocal(sch) && sch.fileFormatFor(0) == "parquet" &&
+        (!withChangelog || bucketLocal(sch, live)))
+      return writeBuckets(withArrival, sch, if (withChangelog) Some(live) else None,
+        base, if (overwrite) KindOverwrite else KindAppend, commitIdentifier, deletesFor)
     // postpone mode skips the pre-merge: its groupBy would shuffle,
     // and zero-shuffle staging is the mode's whole point — duplicate
     // keys stay in the staged files and the arrival index folded into
@@ -399,11 +423,7 @@ final class GraftTable private (
     // within its local buffer; per-record sequences order the rest)
     val preMerged =
       if (sch.isPostponeBucket) withArrival
-      else MergeEngine.preMergeBatch(withArrival, sch, "__arrival")
-    // the state this commit builds on: its sequence base, the bucket
-    // assignment and the changelog diff all read this one snapshot
-    val snap = sm.latestSnapshot()
-    val base = nextSeq(snap)
+      else MergeEngine.preMergeBatch(withArrival, sch, BucketWriter.ArrivalCol)
     // fixed buckets route by Buckets.route, one task (one file per
     // commit) per bucket; HASH_DYNAMIC (bucket = -1) goes through the
     // index-preserving assigner, which counts the batch, so pin it for
@@ -437,30 +457,14 @@ final class GraftTable private (
         // base stays strictly above every staged row.
         seqMax = base + postponeSeqSpan(preMerged)
         preMerged
-          .withColumn(SeqCol, lit(base) + col("__arrival"))
-          .drop("__arrival")
+          .withColumn(SeqCol, lit(base) + col(BucketWriter.ArrivalCol))
+          .drop(BucketWriter.ArrivalCol)
           .withColumn("__bucket", lit(GraftTable.PostponeBucket))
       } else Buckets.route(preMerged.withColumn(SeqCol, lit(base)),
         sch, sch.bucketKeys, sch.numBuckets)
-    val deletesFor: Seq[ManifestEntry] => Seq[ManifestEntry] = added => {
-      if (!overwrite) Seq.empty
-      else {
-        val live = sm.latestSnapshot().map(sm.liveEntries).getOrElse(Seq.empty)
-        val newParts = added.map(_.partition).toSet
-        val victims =
-          if (sch.partitionKeys.isEmpty) live
-          else live.filter(e => newParts.contains(e.partition))
-        victims.map(_.copy(kind = "DELETE"))
-      }
-    }
-    // lookup pays the exact-pair diff per commit; full-compaction defers
-    // it to compact() (cheap writes, coarser changelog granularity —
-    // reference: CoreOptions.ChangelogProducer semantics)
-    val clProducer = sch.changelogProducer
-    val withChangelog = !overwrite && clProducer == "lookup"
     if (withChangelog) out.persist()
     try {
-      val changelog = if (withChangelog) buildChangelog(sch, out, snap) else None
+      val changelog = if (withChangelog) buildChangelog(sch, out, live) else None
       commitFilesFn(out, sch, sch.partitionKeys :+ "__bucket",
         if (overwrite) KindOverwrite else KindAppend, base, commitIdentifier,
         deletesFor, changelogManifest = changelog, dynIndexUpdate = dynUpdate,
@@ -470,6 +474,112 @@ final class GraftTable private (
       pinned.foreach(_.unpersist())
     }
   }
+
+  /** A primary-key commit inside the [[bucketLocal]] gate whose level-0
+    * files are parquet: one exchange by bucket, then one job whose
+    * per-bucket tasks pre-merge, build the lookup changelog against
+    * `live` (present for `changelog-producer=lookup`), write both files
+    * and read their footers ([[BucketWriter]]); the driver adopts the
+    * staged files and commits. */
+  private def writeBuckets(
+      withArrival: DataFrame, sch: TableSchema, live: Option[Seq[ManifestEntry]],
+      base: Long, kind: String, commitIdentifier: Long,
+      deletesFor: Seq[ManifestEntry] => Seq[ManifestEntry]): Long = {
+    val read = bucketRead(sch)
+    // every table column in its declared type (omitted ones NULL), as
+    // the files' schema expects
+    val aligned = withArrival.select((read.struct.fields.map { f =>
+      if (withArrival.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    } :+ col(KindCol) :+ col(BucketWriter.ArrivalCol)).toIndexedSeq: _*)
+    val routed = Buckets.route(aligned.withColumn(SeqCol, lit(base)),
+      sch, sch.bucketKeys, sch.numBuckets)
+    val lookup = live.map { entries =>
+      bucketLocalChangelogs.incrementAndGet()
+      val files = entries.map { e =>
+        val f = graft.sources.GraftScanUtil.partitionedFile(path, e, read.partSchema)
+        (f.partitionValues.toSeq(read.partSchema).toVector: Seq[Any], e.bucket) -> f
+      }.groupMap(_._1)(_._2)
+      // decode batches sized to the largest file, not Spark's 4096 rows:
+      // a level-0 file of a small commit holds a few hundred
+      val rows = entries.map(_.file.rowCount).maxOption.getOrElse(1L)
+      val batch = math.min(spark.sessionState.conf.parquetVectorizedReaderBatchSize,
+        java.lang.Long.highestOneBit(math.max(rows - 1L, 1L)) * 2L).toInt
+      val factory = taskFactoryCache.getOrElseUpdate((sch.id, batch),
+        graft.sources.GraftScanUtil.readerFactory(spark, read.readData, read.readData,
+          read.partSchema, Array.empty, batchSize = Some(batch)))
+      val changes = new LookupChangelog(sch, read, factory, files)
+      (changes, parquetOutput(changelogWriteOptions(sch), changes.schema))
+    }
+    val staging = s"$path/staging/${UUID.randomUUID()}"
+    val clStaging = s"$path/staging/${UUID.randomUUID()}"
+    // an empty batch stages nothing but still commits
+    Files.createDirectories(Paths.get(staging))
+    try {
+      val staged = BucketWriter.write(routed, sch, read,
+        parquetOutput(dataWriteOptions(sch, 0), nullable(read.readData)), lookup,
+        staging, clStaging, base, spark.sessionState.conf.sessionLocalTimeZone)
+      stagedHook.foreach(_(staging, clStaging))
+      val (cl, data) = staged.partition(_.changelog)
+      val changelog = lookup.flatMap(_ => adoptChangelog(clStaging,
+        cl.map(s => s.rel -> s.meta).toMap, sch))
+      commitStagedDir(staging, sch, kind, base, commitIdentifier, deletesFor,
+        changelogManifest = changelog, stagedMetas = data.map(s => s.rel -> s.meta).toMap)
+    } finally {
+      deleteRecursive(Paths.get(staging))
+      deleteRecursive(Paths.get(clStaging))
+    }
+  }
+
+  /** Called with the data and changelog staging directories of a
+    * [[writeBuckets]] job before its commit adopts them: a fault
+    * injection point (a second completed attempt of a task). */
+  @volatile private[graft] var stagedHook: Option[(String, String) => Unit] = None
+
+  /** `schema` with every field nullable, as DataFrameWriter writes files. */
+  private def nullable(schema: StructType): StructType =
+    StructType(schema.fields.map(_.copy(nullable = true)))
+
+  /** Spark's parquet writer for files of `schema`, prepared as
+    * DataFrameWriter prepares it with `options` (micros timestamps). */
+  private def parquetOutput(
+      options: Map[String, String], schema: StructType): BucketWriter.Output =
+    withMicrosTimestamps {
+      val job = org.apache.hadoop.mapreduce.Job.getInstance(
+        spark.sessionState.newHadoopConfWithOptions(options))
+      job.setOutputKeyClass(classOf[Void])
+      job.setOutputValueClass(classOf[org.apache.spark.sql.catalyst.InternalRow])
+      val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+        .prepareWrite(spark, job, options, schema)
+      BucketWriter.Output(factory,
+        new org.apache.spark.util.SerializableConfiguration(job.getConfiguration), schema)
+    }
+
+  /** Writer options of a data file at `level`: `file.compression`
+    * (or its `file.compression.per.level` entry) and `file.block-size`. */
+  private def dataWriteOptions(sch: TableSchema, level: Int): Map[String, String] = {
+    // honor file.compression / file.compression.per.level (reference:
+    // CoreOptions FILE_COMPRESSION + FILE_COMPRESSION_PER_LEVEL,
+    // "level:codec" pairs — e.g. cheap lz4 level-0, zstd compacted);
+    // absent = Spark's codec default
+    val perLevelCodec = sch.options.get("file.compression.per.level")
+      .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty).flatMap { kv =>
+        val i = kv.indexOf(':')
+        if (i <= 0) None
+        else scala.util.Try(
+          kv.substring(0, i).trim.toInt -> kv.substring(i + 1).trim).toOption
+      }.toMap.get(level))
+    // file.block-size → parquet row-group / orc stripe size
+    // (reference: CoreOptions FILE_BLOCK_SIZE)
+    perLevelCodec.orElse(sch.options.get("file.compression"))
+      .map("compression" -> _).toMap ++
+      sch.options.get("file.block-size").map(GraftTable.parseBytes).toSeq.flatMap(b =>
+        Seq("parquet.block.size" -> b.toString, "orc.stripe.size" -> b.toString))
+  }
+
+  /** Writer options of a changelog file: `changelog-file.compression`. */
+  private def changelogWriteOptions(sch: TableSchema): Map[String, String] =
+    sch.options.get("changelog-file.compression").map("compression" -> _).toMap
 
   /** Upper bound on `monotonically_increasing_id` values for a frame —
     * (partitions + 1) << 33 — computed from the plan, no job. Bounds
@@ -1559,34 +1669,38 @@ final class GraftTable private (
     else if (fmt == "lance")
       graft.sources.LanceStorage.writeStaged(outB, partitionBy, staging)
     else withMicrosTimestamps {
-      var writer = outB.write.mode("overwrite")
-      // honor file.compression / file.compression.per.level (reference:
-      // CoreOptions FILE_COMPRESSION + FILE_COMPRESSION_PER_LEVEL,
-      // "level:codec" pairs — e.g. cheap lz4 level-0, zstd compacted);
-      // absent = Spark's codec default
-      val perLevelCodec = sch.options.get("file.compression.per.level")
-        .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty).flatMap { kv =>
-          val i = kv.indexOf(':')
-          if (i <= 0) None
-          else scala.util.Try(
-            kv.substring(0, i).trim.toInt -> kv.substring(i + 1).trim).toOption
-        }.toMap.get(level))
-      perLevelCodec.orElse(sch.options.get("file.compression"))
-        .foreach(c => writer = writer.option("compression", c))
-      // file.block-size → parquet row-group / orc stripe size
-      // (reference: CoreOptions FILE_BLOCK_SIZE)
-      sch.options.get("file.block-size").map(GraftTable.parseBytes).foreach { b =>
-        writer = writer.option("parquet.block.size", b.toString)
-          .option("orc.stripe.size", b.toString)
-      }
-      maxRecordsPerFile.foreach(n =>
-        writer = writer.option("maxRecordsPerFile", n.toString))
+      val writer = outB.write.mode("overwrite").options(dataWriteOptions(sch, level))
+        .options(maxRecordsPerFile.map(n => "maxRecordsPerFile" -> n.toString).toMap)
       (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
         .format(fmt).save(staging)
     }
     commitStagedDir(staging, sch, kind, seqBase, commitIdentifier,
       deletesFor, level, changelogManifest, dynIndexUpdate,
       globalIndexUpdate, seqMax)
+  }
+
+  /** One file per task of `files`: staged files named
+    * `part-<task>-<attempt>.<ext>` (renamed from a hidden temporary name
+    * only when their attempt completed — AvroStorage/LanceStorage
+    * .writeStaged, [[BucketWriter]]) keep the latest completed attempt
+    * of each task and directory, as speculation or a retry can complete
+    * two (their content is the same row set either way). Files of
+    * Spark's own committer, which resolves attempts itself, pass. */
+  private def adoptAttempts(files: Seq[java.nio.file.Path]): Seq[java.nio.file.Path] = {
+    val AttemptRe = """part-(\d+)-(\d+)\.(avro|lance|parquet)""".r
+    files.groupBy { p =>
+      p.getFileName.toString match {
+        case AttemptRe(pid, _, ext) => (p.getParent.toString, s"$pid.$ext")
+        case other => (p.getParent.toString, other)
+      }
+    }.values.map(_.maxBy { p =>
+      // numeric attempt compare — lexicographic would rank attempt 9
+      // above 10, adopting an arbitrary rather than the latest attempt
+      p.getFileName.toString match {
+        case AttemptRe(_, attempt, _) => attempt.toLong
+        case _ => Long.MinValue
+      }
+    }).toSeq
   }
 
   /** Table files must store timestamps as annotated micros (INT96 has
@@ -1618,35 +1732,17 @@ final class GraftTable private (
       /** highest per-row _graft_seq in this commit when it exceeds
         * seqBase (cross-partition commits write retractions at seqBase
         * and data rows at seqBase+1); -1 = same as seqBase. */
-      seqMax: Long = -1L): Long = {
+      seqMax: Long = -1L,
+      /** footer metadata the writing tasks read, by path relative to
+        * `staging`; other adopted files have their footers read here */
+      stagedMetas: Map[String, DataFileMeta] = Map.empty): Long = {
     val sMax = if (seqMax < 0) seqBase else seqMax
     val stagingPath = Paths.get(staging)
-    val dataFiles0 = graft.core.FsUtil.walkAll(stagingPath).iterator
+    val dataFiles = adoptAttempts(graft.core.FsUtil.walkAll(stagingPath).iterator
       .filter(p => (p.toString.endsWith(".parquet") || p.toString.endsWith(".orc")
         || p.toString.endsWith(".avro") || p.toString.endsWith(".lance"))
         && Files.isRegularFile(p))
-      .toSeq
-    // avro/lance staged files are attempt-suffixed
-    // (part-<pid>-<attempt>.<ext>, renamed from tmp only on attempt
-    // success — AvroStorage/LanceStorage.writeStaged); when
-    // speculation/retry completes two attempts of the same partition,
-    // adopt exactly one (content is the same row set either way).
-    // Parquet/ORC staging goes through Spark's own committer, which
-    // already resolves attempts.
-    val AttemptRe = """part-(\d+)-(\d+)\.(avro|lance)""".r
-    val dataFiles = dataFiles0.groupBy { p =>
-      p.getFileName.toString match {
-        case AttemptRe(pid, _, ext) => (p.getParent.toString, s"$pid.$ext")
-        case other => (p.getParent.toString, other)
-      }
-    }.values.map(_.maxBy { p =>
-      // numeric attempt compare — lexicographic would rank attempt 9
-      // above 10, adopting an arbitrary rather than the latest attempt
-      p.getFileName.toString match {
-        case AttemptRe(_, attempt, _) => attempt.toLong
-        case _ => Long.MinValue
-      }
-    }).toSeq
+      .toSeq)
     // phase 1 (driver, metadata-only): adopt staged files into the
     // table directory
     val moved = dataFiles.map { p =>
@@ -1664,7 +1760,7 @@ final class GraftTable private (
       val targetRel = (dirs :+ s"$prefix${UUID.randomUUID()}.$ext").mkString("/")
       val targetAbs = s"${sm.dataDir}/$targetRel"
       sm.io.rename(p.toString, targetAbs)
-      (partition, bucket, targetAbs, s"data/$targetRel")
+      (partition, bucket, targetAbs, s"data/$targetRel", stagedMetas.get(rel))
     }
     deleteRecursive(stagingPath)
     // phase 2: footer stats (format-matched reader). Driver-serial IO
@@ -1678,35 +1774,38 @@ final class GraftTable private (
     // (plain string map — executor-safe); every file in one staged
     // commit shares `level`
     val colModes = graft.core.StatsModes.columnModes(sch, level)
+    def withModes(m: DataFileMeta): DataFileMeta =
+      if (colModes.isEmpty) m
+      else m.copy(stats = graft.core.StatsModes.apply(m.stats, colModes))
     def statsOf(conf: org.apache.hadoop.conf.Configuration,
-        abs: String, rel: String, lvl: Int, sb: Long, sx: Long): DataFileMeta = {
-      val m =
+        abs: String, rel: String, lvl: Int, sb: Long, sx: Long): DataFileMeta =
+      withModes(
         if (abs.endsWith(".orc")) OrcStats.read(conf, abs, rel, lvl, sb, sx)
         else if (abs.endsWith(".avro"))
           graft.sources.AvroStorage.stats(abs, rel, lvl, sb, sx)
         else if (abs.endsWith(".lance"))
           graft.sources.LanceStorage.stats(abs, rel, lvl, sb, sx)
-        else ParquetStats.read(conf, abs, rel, lvl, sb, sx)
-      if (colModes.isEmpty) m
-      else m.copy(stats = graft.core.StatsModes.apply(m.stats, colModes))
-    }
-    val metas: Seq[DataFileMeta] =
-      if (moved.size <= 16)
-        moved.map { case (_, _, abs, rel) =>
-          statsOf(hadoopConf, abs, rel, level, seqBase, sMax).copy(schemaId = schId)
-        }
+        else ParquetStats.read(conf, abs, rel, lvl, sb, sx))
+    val unknown = moved.filter(_._5.isEmpty)
+    val read: Map[String, DataFileMeta] =
+      if (unknown.size <= 16)
+        unknown.map { case (_, _, abs, rel, _) =>
+          abs -> statsOf(hadoopConf, abs, rel, level, seqBase, sMax)
+        }.toMap
       else {
         val conf = new SerializableHadoopConf(hadoopConf)
         val (lvl, sb, sx) = (level, seqBase, sMax)
         spark.sparkContext
-          .parallelize(moved.map { case (_, _, abs, rel) => (abs, rel) },
-            math.min(moved.size, 32))
-          .map { case (abs, rel) =>
-            statsOf(conf.value, abs, rel, lvl, sb, sx).copy(schemaId = schId)
-          }
-          .collect().toSeq
+          .parallelize(unknown.map { case (_, _, abs, rel, _) => (abs, rel) },
+            math.min(unknown.size, 32))
+          .map { case (abs, rel) => abs -> statsOf(conf.value, abs, rel, lvl, sb, sx) }
+          .collect().toMap
       }
-    val added = moved.zip(metas).map { case ((partition, bucket, _, _), meta) =>
+    val metas = moved.map { case (_, _, abs, rel, known) =>
+      known.map(m => withModes(m.copy(fileName = rel, level = level,
+        minSeq = seqBase, maxSeq = sMax))).getOrElse(read(abs)).copy(schemaId = schId)
+    }
+    val added = moved.zip(metas).map { case ((partition, bucket, _, _, _), meta) =>
       ManifestEntry("ADD", partition, bucket, meta)
     }
     val indexed = buildFileIndexes(sch, added)
@@ -2470,15 +2569,15 @@ final class GraftTable private (
   /** cached reader factories per schema version (building one costs a
     * broadcast; lookups reuse it): full rows, and the probe projection
     * of key, sequence and meta columns, both opened on the driver; and
-    * full rows for the lookup changelog's tasks, never opened on the
-    * driver (a factory that has read a file holds its reader's state
-    * and no longer serializes) */
+    * full rows for the lookup changelog's tasks per decode batch size,
+    * never opened on the driver (a factory that has read a file holds
+    * its reader's state and no longer serializes) */
   private val localFactoryCache = scala.collection.concurrent.TrieMap
     .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
   private val localProbeFactoryCache = scala.collection.concurrent.TrieMap
     .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
   private val taskFactoryCache = scala.collection.concurrent.TrieMap
-    .empty[Long, org.apache.spark.sql.connector.read.PartitionReaderFactory]
+    .empty[(Long, Int), org.apache.spark.sql.connector.read.PartitionReaderFactory]
   /** [[BucketRead]] per schema version: building one parses every
     * column type, which a point lookup must not pay per call */
   private val bucketReads = scala.collection.concurrent.TrieMap.empty[Long, BucketRead]
@@ -2527,8 +2626,9 @@ final class GraftTable private (
     else Buckets.bucketOf(sch, sch.bucketKeys, keyValues, sch.effectiveBuckets)
 
   /** Can one bucket's files, read on their own, give a key's merged
-    * version? The gate of both bucket-local readers, the point lookup
-    * ([[localLookup]]) and the lookup changelog ([[buildChangelog]]):
+    * version? The gate of the bucket-local readers, the point lookup
+    * ([[localLookup]]), merge-on-read and the bucket writer's lookup
+    * changelog ([[writeBuckets]]):
     * a deduplicate primary-key table in fixed buckets (not dynamic,
     * postpone or cross-partition) without blob columns, deletion
     * vectors or BINARY key columns (their values match by content,
@@ -5624,28 +5724,13 @@ final class GraftTable private (
     * LookupMergeTreeCompactRewriter — the lookup cost is paid once at
     * write time).
     *
-    * Within the [[bucketLocal]] gate (checked on every live file) the
-    * routed batch's own per-bucket tasks look the keys up in their
-    * buckets' files ([[LookupChangelog.diff]]): no bucket collect, no
-    * listing, no merge and no join. Other tables diff the pre-image
+    * Tables inside the [[bucketLocal]] gate build it in the bucket
+    * writer's tasks instead ([[writeBuckets]]). Here the pre-image
     * state of the batch's keys (bucket-pruned + semi-joined, never a
-    * full scan) against the post-merge state. */
+    * full scan) of the `live` files is diffed against the post-merge
+    * state. */
   private def buildChangelog(
-      sch: TableSchema, out: DataFrame, snap: Option[Snapshot]): Option[String] = {
-    val live = visibleEntries(snap.toSeq.flatMap(sm.liveEntries), sch)
-    if (bucketLocal(sch, live)) {
-      bucketLocalChangelogs.incrementAndGet()
-      val read = bucketRead(sch)
-      val files = live.map { e =>
-        val f = graft.sources.GraftScanUtil.partitionedFile(path, e, read.partSchema)
-        (f.partitionValues.toSeq(read.partSchema).toVector: Seq[Any], e.bucket) -> f
-      }.groupMap(_._1)(_._2)
-      val factory = taskFactoryCache.getOrElseUpdate(sch.id,
-        graft.sources.GraftScanUtil.readerFactory(
-          spark, read.readData, read.readData, read.partSchema, Array.empty))
-      return persistChangelog(
-        LookupChangelog.diff(spark, out, sch, read, factory, files), sch)
-    }
+      sch: TableSchema, out: DataFrame, live: Seq[ManifestEntry]): Option[String] = {
     val pk = sch.primaryKeys
     val batchKeys = out.select(pk.map(col).toIndexedSeq: _*).distinct()
     val buckets = out.select("__bucket").distinct().collect().map(_.getInt(0)).toSet
@@ -5690,19 +5775,46 @@ final class GraftTable private (
     // AQE-coalesces to the advisory partition size — one file at gate
     // scale, 64 MB-sized files at real scale.
     val sized = diff.repartition(sch.primaryKeys.map(col).toIndexedSeq: _*)
-    val writer = sch.options.get("changelog-file.compression")
-      .foldLeft(sized.write)((w, c) => w.option("compression", c))
-    withMicrosTimestamps { writer.parquet(s"$path/$clDir") }
-    val files0 = graft.core.FsUtil.walkAll(Paths.get(s"$path/$clDir")).iterator
+    withMicrosTimestamps {
+      sized.write.options(changelogWriteOptions(sch)).parquet(s"$path/$clDir")
+    }
+    val files = graft.core.FsUtil.walkAll(Paths.get(s"$path/$clDir")).iterator
       .filter(p => p.toString.endsWith(".parquet") && Files.isRegularFile(p))
       .toSeq
+    changelogManifest(sch, clDir, files.map(_ -> None))
+  }
+
+  /** Move the changelog files a [[writeBuckets]] job staged in
+    * `clStaging` (one attempt per task) into a changelog directory and
+    * write their manifest from the tasks' `metas` (by staged name). */
+  private def adoptChangelog(
+      clStaging: String, metas: Map[String, DataFileMeta], sch: TableSchema): Option[String] = {
+    val clDir = s"changelog/${UUID.randomUUID()}"
+    val dir = Paths.get(clStaging)
+    val staged = if (!Files.isDirectory(dir)) Seq.empty else adoptAttempts(
+      graft.core.FsUtil.walkAll(dir).filter(p =>
+        p.toString.endsWith(".parquet") && Files.isRegularFile(p)))
+    changelogManifest(sch, clDir, staged.map { p =>
+      val name = p.getFileName.toString
+      val target = Paths.get(s"$path/$clDir/$name")
+      sm.io.rename(p.toString, target.toString)
+      target -> metas.get(name)
+    })
+  }
+
+  /** The manifest of the changelog `files` in `clDir`, each with its
+    * metadata when known (its footer is read otherwise).
+    * `changelog-file.prefix` renames them and `changelog-file.stats-mode`
+    * bounds their stats. */
+  private def changelogManifest(sch: TableSchema, clDir: String,
+      files0: Seq[(java.nio.file.Path, Option[DataFileMeta])]): Option[String] = {
     // prefix renames keep the uuid (collision-free) behind the
     // operator-visible marker, like data-file.prefix does
     val files = sch.options.get("changelog-file.prefix") match {
-      case Some(prefix) => files0.map { p =>
+      case Some(prefix) => files0.map { case (p, m) =>
         val renamed = p.resolveSibling(prefix + p.getFileName.toString)
         sm.io.rename(p.toString, renamed.toString)
-        renamed
+        renamed -> m
       }
       case None => files0
     }
@@ -5712,10 +5824,11 @@ final class GraftTable private (
       // the changelog's extra string column follows the same mode
       if (m.isEmpty) m else m + ("_row_kind" -> clMode.trim)
     }
-    val entries = files.map { p =>
+    val entries = files.map { case (p, known) =>
       val rel = s"$clDir/${p.getFileName}"
-      val m = ParquetStats.read(hadoopConf, p.toString, rel, level = 0,
-        minSeq = 0L, maxSeq = 0L).copy(schemaId = sch.id)
+      val m = known.getOrElse(ParquetStats.read(hadoopConf, p.toString, rel, level = 0,
+        minSeq = 0L, maxSeq = 0L)).copy(fileName = rel, minSeq = 0L, maxSeq = 0L,
+        schemaId = sch.id)
       if (clModes.isEmpty) ManifestEntry("ADD", Map.empty, 0, m)
       else ManifestEntry("ADD", Map.empty, 0,
         m.copy(stats = graft.core.StatsModes.apply(m.stats, clModes)))

@@ -194,23 +194,6 @@ class BucketKeySpec extends AnyFunSuite {
       t.scan(lit(true)).inputFiles.length)
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500) // listener events arrive asynchronously
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private val longKeyed = StructType(Seq(
     StructField("k", LongType, nullable = false),
     StructField("v", StringType, nullable = true)))
@@ -280,7 +263,7 @@ class BucketKeySpec extends AnyFunSuite {
   test("lookup() finds the key's bucket on the driver: no Spark job before " +
     "its action") {
     val t = longKeyTable()
-    val (df, jobs) = jobsDuring(t.lookup(Map("k" -> 7L)))
+    val (df, jobs) = SparkJobs.during(spark)(t.lookup(Map("k" -> 7L)))
     assert(jobs == 0, s"lookup ran $jobs Spark job(s) before its action")
     assert(df.collect().map(_.getString(1)).toSeq == Seq("v7"))
   }

@@ -22,23 +22,6 @@ class LocalLookupSpec extends AnyFunSuite {
 
   def tmp(): String = Files.createTempDirectory("graft-lkp").toString + "/t"
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500) // listener events arrive asynchronously
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("every file probed: partitioned composite key, descending multi-field " +
     "sequence, -D/-U winners, absent keys; agrees with lookup(), zero jobs") {
     val sch = StructType(Seq(
@@ -78,7 +61,7 @@ class LocalLookupSpec extends AnyFunSuite {
     val keys = for (dt <- Seq("a", "b", "c", "zz"); id <- Seq(0L, 1L, 2L, 3L, 4L,
       5L, 6L, 7L, 8L, 39L, 40L, 1000L)) yield Map[String, Any]("dt" -> dt, "id" -> id)
     val probes0 = t.lookupProbeScans.get
-    val (local, jobs) = jobsDuring(keys.map(k => k -> t.localLookup(k)))
+    val (local, jobs) = SparkJobs.during(spark)(keys.map(k => k -> t.localLookup(k)))
     assert(jobs == 0, s"localLookup ran $jobs Spark job(s)")
     assert(t.lookupProbeScans.get > probes0)
     assert(t.lookupCacheMisses.get == 0 && t.lookupCacheHits.get == 0,
@@ -122,7 +105,7 @@ class LocalLookupSpec extends AnyFunSuite {
       40L -> Some("bulk40"), 998L -> Some("bulk998"), 512L -> Some("bulk512"),
       100L -> None,  // the -D in a small file wins
       501L -> None)  // never written, inside the big file's key range
-    val (got, jobs) = jobsDuring {
+    val (got, jobs) = SparkJobs.during(spark) {
       val probes0 = t.lookupProbeScans.get
       val fetches0 = t.lookupRowFetches.get
       val r = keys.map { case (k, _) => t.localLookup(Map("k" -> k)).map(_.getString(1)) }

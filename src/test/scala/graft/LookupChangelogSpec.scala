@@ -171,7 +171,8 @@ class LookupChangelogSpec extends AnyFunSuite {
     val engines = Seq(
       Map("merge-engine" -> "partial-update"),
       Map("merge-engine" -> "first-row"),
-      Map("deletion-vectors.enabled" -> "true"))
+      Map("deletion-vectors.enabled" -> "true"),
+      Map("file.format" -> "orc"))
     engines.zipWithIndex.foreach { case (opts, i) =>
       val t = create(Seq("id", "sub"), opts)
       val c0 = t.bucketLocalChangelogs.get
@@ -226,7 +227,7 @@ class LookupChangelogSpec extends AnyFunSuite {
     assert(evolved.bucketLocalChangelogs.get == e0)
   }
 
-  test("a 200-row lookup-changelog commit on 4 buckets starts at most 7 Spark jobs") {
+  test("a 200-row lookup-changelog commit on 4 buckets starts at most 2 Spark jobs") {
     val t = GraftTable.create(spark, tmp(), sch, primaryKeys = Seq("id", "sub"),
       options = Map("changelog-producer" -> "lookup", "bucket" -> "4"))
     val rnd = new scala.util.Random(40L)
@@ -237,25 +238,23 @@ class LookupChangelogSpec extends AnyFunSuite {
     // warm up: the first commits create the table's files and reader conf
     (0 until 2).foreach(_ => t.applyChanges(changes(200), "_op"))
     val batch = changes(200)
-    val (_, jobs) = jobsDuring(t.applyChanges(batch, "_op"))
-    assert(jobs <= 7, s"applyChanges started $jobs Spark jobs")
+    val (_, jobs) = SparkJobs.during(spark)(t.applyChanges(batch, "_op"))
+    assert(jobs <= 2, s"applyChanges started $jobs Spark jobs")
     assertLastCommit(t, "job-count commit")
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      Thread.sleep(500) // listener events arrive asynchronously
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
+  test("a plain 200-row write on 4 buckets starts at most 2 Spark jobs") {
+    val t = GraftTable.create(spark, tmp(), sch, primaryKeys = Seq("id", "sub"),
+      options = Map("bucket" -> "4", "rowkind.field" -> "_op"))
+    val rnd = new scala.util.Random(41L)
+    def rows(n: Int) = df(rnd.shuffle((0L until 500L).toList).take(n).map { id =>
+      ("a", id, 0, rnd.alphanumeric.take(3).mkString, "n", L(rnd.nextInt(9)), "+U")
+    })
+    (0 until 2).foreach(_ => t.write(rows(200)))
+    val batch = rows(200)
+    val (_, jobs) = SparkJobs.during(spark)(t.write(batch))
+    assert(jobs <= 2, s"write started $jobs Spark jobs")
+    assert(t.read.count() == t.read.select("id").distinct().count())
   }
+
 }

@@ -105,26 +105,12 @@ class LookupServiceSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll
 
   test("lookup runs zero Spark jobs (driver-local fast path)") {
     seed()
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      // warm once (the reader-factory build may broadcast)
-      GraftLookupClient.lookup(
-        server.uri, "kv-secret", "db", "users", Map("id" -> "3"))
-      Thread.sleep(500)
-      val warm = jobs.get()
-      (0 until 5).foreach(i => GraftLookupClient.lookup(
-        server.uri, "kv-secret", "db", "users", Map("id" -> i.toString)))
-      Thread.sleep(500)
-      assert(jobs.get() == warm,
-        s"steady-state lookups scheduled ${jobs.get() - warm} Spark jobs")
-    } finally sc.removeSparkListener(listener)
+    // warm once (the reader-factory build may broadcast)
+    GraftLookupClient.lookup(
+      server.uri, "kv-secret", "db", "users", Map("id" -> "3"))
+    val (_, jobs) = SparkJobs.during(spark)((0 until 5).foreach(i => GraftLookupClient.lookup(
+      server.uri, "kv-secret", "db", "users", Map("id" -> i.toString))))
+    assert(jobs == 0, s"steady-state lookups scheduled $jobs Spark jobs")
   }
 
   test("a key value of the wrong type is a 400 naming the key, not a 500") {

@@ -67,22 +67,6 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     scans(df).exists(_.scan.description().startsWith("GraftBucketedScan")) &&
       exchanges(df.queryExecution.executedPlan).isEmpty
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val r = f
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (r, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   /** `t.read`, `scan(filter)` and SQL `SELECT *`, projection and range
     * all agree with [[reference]]; the API reads plan key-grouped. */
   private def assertAgrees(t: GraftTable, sqlName: String, filter: org.apache.spark.sql.Column,
@@ -195,7 +179,7 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     assert(t.sm.liveEntries(t.sm.latestSnapshot().get).size > 32)
     // no file listing: past 32 paths Spark's InMemoryFileIndex lists in a job
-    assert(jobsDuring(t.read)._2 == 0)
+    assert(SparkJobs.during(spark)(t.read)._2 == 0)
     assertAgrees(t, name, col("a") >= 20L, "a >= 20", Seq("a", "b"))
   }
 
@@ -215,12 +199,12 @@ class MergeOnReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(rows(proj) == rows(reference(t).select("k", "c1")))
     // the V1 bridge no longer runs the merge while Spark plans
     val range = spark.sql(s"SELECT * FROM $name WHERE k BETWEEN 10 AND 40")
-    val (_, planJobs) = jobsDuring(range.queryExecution.executedPlan)
+    val (_, planJobs) = SparkJobs.during(spark)(range.queryExecution.executedPlan)
     assert(planJobs == 0)
     assert(rows(range) == rows(reference(t).filter(col("k").between(10, 40))))
     val sqlProj = spark.sql(s"SELECT k, c1 FROM $name")
     assert(exchanges(sqlProj.queryExecution.executedPlan).isEmpty)
-    val (_, projJobs) = jobsDuring(sqlProj.collect())
+    val (_, projJobs) = SparkJobs.during(spark)(sqlProj.collect())
     assert(projJobs == 1)
     // scan(filter) lists exactly the pruned files
     val filter = col("k") === 17

@@ -481,22 +481,15 @@ class PushdownSpec extends AnyFunSuite {
     t.delete(col("k") === 5L)
     // warm the factory (first call broadcasts the reader conf)
     assert(t.localLookup(Map("k" -> 0L)).nonEmpty)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = SparkJobs.during(spark) {
       val hit = t.localLookup(Map("k" -> 7L))
       assert(hit.map(r => (r.getLong(0), r.getDouble(1))) == Seq((7L, 107.0)))
       val old = t.localLookup(Map("k" -> 33L))
       assert(old.map(r => (r.getLong(0), r.getDouble(1))) == Seq((33L, 33.0)))
       assert(t.localLookup(Map("k" -> 5L)).isEmpty)   // deleted
       assert(t.localLookup(Map("k" -> 999L)).isEmpty) // never existed
-      Thread.sleep(500)
-      assert(jobs == 0, s"localLookup ran $jobs Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"localLookup ran $jobs Spark job(s)")
     // agrees with the distributed lookup on the same keys
     (0L until 10L).foreach { k =>
       val local = t.localLookup(Map("k" -> k)).map(_.toString)
@@ -569,18 +562,11 @@ class PushdownSpec extends AnyFunSuite {
     assert(gt.countRowsFast().isEmpty)
     val builder = new graft.sources.GraftScanBuilder(gt, None, gt.schema.toStruct)
     val agg = new Aggregation(Array(new CountStar()), Array.empty)
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = SparkJobs.during(spark) {
       assert(!builder.supportCompletePushDown(agg))
       assert(!builder.pushAggregation(agg)) // memoized second call
-      Thread.sleep(500) // listener bus is async
-      assert(jobs == 0, s"declining the pushdown ran $jobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs == 0, s"declining the pushdown ran $jobs job(s)")
     // the query itself still answers correctly through the merge scan
     val q = spark.sql("SELECT count(*) FROM graft_cnt.db.t")
     assert(!q.queryExecution.executedPlan.toString.contains("LocalTableScan"))
